@@ -41,18 +41,6 @@ def entry(spark: SparkSession) -> DataFrame:
 def _wrap(fn: Callable) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         configure_session(spark)
-        # r14: release the previous key's persisted share frames at
-        # every top-level build (the e2e discipline, applied uniformly).
-        # Keys persist intermediates for WITHIN-action branch sharing;
-        # releasing here bounds live cache to one key's shares and
-        # guarantees a repeated build recomputes from the parquet inputs
-        # instead of cache-hitting its previous invocation via
-        # CacheManager plan-matching. Nested key-in-key calls go direct
-        # (not through queries()), so a composite key's internal shares
-        # survive its own build.
-        from data_transform_spark.pipeline.e2e import _release_prior_shares
-
-        _release_prior_shares()
         return fn(spark, sf_dir)
 
     return run

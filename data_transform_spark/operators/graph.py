@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import release, share
 
 PR_ITERS = 3
 PR_DAMP = 0.85
@@ -319,36 +320,6 @@ def graph_triangles(spark, sf_dir):
     )
 
 
-def _persistent_rdd_ids(spark) -> set:
-    """IDs of RDDs currently pinned in this session's block manager
-    (JavaSparkContext.getPersistentRDDs) — eager localCheckpoint persists
-    its RDD there, and nothing releases it automatically, so iterative
-    loops must track and free superseded checkpoints themselves."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
-
-
-def _checkpoint_rdd_id(df):
-    """Persistent-RDD id backing an eagerly localCheckpoint-ed frame: its
-    analyzed plan is a LogicalRDD wrapping the checkpoint RDD. Exact
-    PER-FRAME tracking — reading the id off the frame itself (never by
-    diffing the session-global persistent map) means concurrent work on
-    the same SparkSession can checkpoint freely without this loop ever
-    releasing a block it does not own."""
-    try:
-        return int(df._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:  # non-LogicalRDD plan (not a checkpointed frame)
-        return None
-
-
-def _release_rdds(spark, ids) -> None:
-    """Unpersist (async) the given persistent-RDD ids if still pinned."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
-
-
 def pagerank_converged(
     spark,
     sf_dir,
@@ -415,10 +386,11 @@ def pagerank_converged(
     """
     e = _edges(spark, sf_dir) if edges is None else edges
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_df = (
-        e.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .localCheckpoint(eager=True)  # feeds every iteration: build once
+    edges_df = share(  # feeds every iteration: build once
+        e.join(out_w, "src").select(
+            "src", "dst", (F.col("w") / F.col("out_w")).alias("share")
+        ),
+        eager=True,
     )
     if edges is None:
         nodes = load_table(spark, sf_dir, "nation").select(
@@ -434,14 +406,9 @@ def pagerank_converged(
             .distinct()
         )
         n_nodes = None  # counted after the checkpoint below
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = share(nodes, eager=True)
     if n_nodes is None:
         n_nodes = nodes.count()
-    setup_ids = {
-        rid
-        for rid in (_checkpoint_rdd_id(edges_df), _checkpoint_rdd_id(nodes))
-        if rid is not None
-    }
     rank = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     # dangling vertices: in the universe but never a src (no out-edges);
     # their rank mass would otherwise vanish each iteration
@@ -450,7 +417,7 @@ def pagerank_converged(
     )
 
     iters, delta = 0, float("inf")
-    live_ids: set = set()
+    live = []  # the loop checkpoint the current rank reads, once there is one
     for i in range(max_iters):
         contrib = (
             edges_df.join(rank, edges_df.src == rank.node)
@@ -489,11 +456,9 @@ def pagerank_converged(
                 ).alias("rank"),
             )
         )
-        fresh_ids = None
+        fresh = None
         if (i + 1) % checkpoint_every == 0:
-            new_rank = new_rank.localCheckpoint(eager=True)
-            rid = _checkpoint_rdd_id(new_rank)
-            fresh_ids = {rid} if rid is not None else set()
+            new_rank = fresh = share(new_rank, eager=True)
         d = (
             new_rank.alias("n")
             .join(rank.alias("o"), "node")
@@ -509,17 +474,17 @@ def pagerank_converged(
         delta = float(d) if d is not None else 0.0
         rank = new_rank
         iters = i + 1
-        if fresh_ids is not None:
+        if fresh is not None:
             # the delta aggregate above was the last reader of the previous
             # checkpoint's chain — safe to release it now
-            _release_rdds(spark, live_ids)
-            live_ids = fresh_ids
+            release(*live)
+            live = [fresh]
         if delta < tol:
             break
     # Pin the final rank in its own block, then release everything else this
     # call persisted — the returned frame depends on no other block.
-    rank = rank.localCheckpoint(eager=True)
-    _release_rdds(spark, live_ids | setup_ids)
+    rank = share(rank, eager=True)
+    release(*live, edges_df, nodes)
     return rank, iters, delta
 
 

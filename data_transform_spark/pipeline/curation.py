@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import fill, share
 
 NGRAM_N = 8  # decontamination n-gram width (tokens)
 CHUNK_SIZE = 50  # rag chunk width (tokens)
@@ -682,9 +683,7 @@ def _nb_fit(d):
     # broadcast crossJoin (no runtime exchange reuse) — unshared, the
     # token explode + train join + vocab count ran twice per fit.
     # Vocab-sized, so the cache is broadcast-scale at any corpus size.
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cls = _persist_share(
+    cls = share(
         ttr.groupBy("tok").agg(
             F.sum(F.when(F.col("label"), 1).otherwise(0)).cast("long").alias("cp"),
             F.sum(F.when(F.col("label"), 0).otherwise(1)).cast("long").alias("cn"),
@@ -755,11 +754,9 @@ def _held_ranked(held):
     min/max aggregate AND the banding select, which meet at a broadcast
     crossJoin where runtime exchange reuse does not fire (the e2e
     ReusedExchange=0 measurement): unshared, the classifier trained and
-    scored TWICE per curve/threshold. Lazily persisted (_persist_share,
-    released at the next top-level key build)."""
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    held = _persist_share(held, eager=True)
+    scored TWICE per curve/threshold. Shared as an eager checkpoint,
+    released at the next registered-key build."""
+    held = share(held, eager=True)
     mm = held.agg(F.max("logit_u").alias("hi"), F.min("logit_u").alias("lo"))
     keyed = held.crossJoin(F.broadcast(mm)).withColumn(
         "bkt",
@@ -792,12 +789,10 @@ def _nb_threshold(scored):
     values as the old global row_number — the held-out md5 split is
     ~half the corpus, so the retired 'eval-set-bounded' single-partition
     window did not actually bound anything."""
-    from data_transform_spark.pipeline.e2e import _persist_share
-
     # same sharing note as quality_pr_curve: ranked meets its own 1-row
     # count at a broadcast crossJoin, so unshared it would run the band
     # window (and everything under it) twice.
-    ranked = _persist_share(
+    ranked = share(
         _held_ranked(scored.filter(~F.col("is_train"))).select(
             "label", "logit_u", "rn"
         ),
@@ -919,13 +914,11 @@ def quality_pr_curve(spark, sf_dir):
     # ordering — a hash PASS is the equivalence proof). Plan-pinned:
     # tests assert the only SinglePartition window input is the band
     # count table, and the held-out filter is still pushed to the scan.
-    from data_transform_spark.pipeline.e2e import _persist_share
-
     # ranked feeds the 1-row count aggregate and the bucket select
     # across a broadcast crossJoin (no runtime exchange reuse there —
     # the _held_ranked rationale); persisting it keeps the band
     # window single-run per action.
-    ranked = _persist_share(_held_ranked(scored).select("label", "rn"), eager=True)
+    ranked = share(_held_ranked(scored).select("label", "rn"), eager=True)
     n = ranked.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.when(F.col("label"), 1).otherwise(0)).alias("npos"),
@@ -1091,9 +1084,7 @@ def _dsir_fit(lab):
     # projection, which meet at a broadcast crossJoin — BUCKETS-sized
     # (<= 1024 rows), lineage = the whole corpus explode, so the eager
     # checkpoint rule applies (the _nb_fit cls precedent).
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cnt = _persist_share(cnt, eager=True)
+    cnt = share(cnt, eager=True)
     tot = cnt.agg(F.sum("cr").cast("long").alias("nr")).crossJoin(
         F.broadcast(cnt.agg(F.sum("ct").cast("long").alias("nt")))
     )
@@ -1559,15 +1550,13 @@ def quality_ensemble(spark, sf_dir):
     independently auditable (this op adds no new scoring logic — reuse,
     not re-derivation; the joins are three doc_id-keyed hash joins over
     the member outputs)."""
-    from data_transform_spark.pipeline.e2e import _fill_concurrently
-
     g = quality_gopher(spark, sf_dir).select(
         "doc_id", F.col("kept").alias("gopher_keep")
     )
     # the NB and DSIR members each run an eager fit fill at construction
     # (cls / bucket counts) — independent, so build them on concurrent
     # driver threads (r15, guide §2.6); gopher is map-only and stays lazy
-    nb, ds = _fill_concurrently(
+    nb, ds = fill(
         lambda: quality_nb(spark, sf_dir).select(
             "doc_id", F.col("pred").alias("nb_keep")
         ),

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table, spread
 from data_transform_spark.registry import register
+from data_transform_spark.shares import release, share
 
 # ---------------------------------------------------------------- exact
 
@@ -358,7 +359,7 @@ def _minhash_candidates(docs):
         # sig feeds three plans (bands + both rejoin sides): checkpoint so
         # the 48-aggregate signature job runs once. Eager — the lazy variant
         # races AQE and spams "non-existent accumulator" warnings.
-        sig = sig.localCheckpoint(eager=True)
+        sig = share(sig, eager=True)
     bands = _sig_bands(sig)
 
     a = bands.alias("a")
@@ -504,39 +505,7 @@ def cc_survivor_ids(nodes, pairs):
     ``nodes``: DF with doc_id; ``pairs``: DF with (doc_a, doc_b) edges.
     Raises if the component diameter exceeds MAX_CC_ROUNDS instead of
     silently returning unmerged clusters."""
-    # undirected edges both ways + self-loops seed labels = own id
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=True)
-    labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
-    converged = False
-    for _ in range(MAX_CC_ROUNDS):
-        neighbor_min = (
-            edges.join(labels, edges.doc_b == labels.doc_id)
-            .groupBy("doc_a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.doc_id == neighbor_min.doc_a, "left")
-            .select(
-                "doc_id",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias("label"),
-            )
-            # cut lineage every round: without this, iteration i re-executes
-            # all i-1 previous joins (exponential plan growth)
-            .localCheckpoint(eager=True)
-        )
-        if new_labels.exceptAll(labels).isEmpty():
-            labels = new_labels
-            converged = True
-            break
-        labels = new_labels
-    if not converged:
-        raise RuntimeError(
-            f"connected components did not converge in {MAX_CC_ROUNDS} rounds "
-            "— component diameter exceeds the bound; raise MAX_CC_ROUNDS or "
-            "switch to large-star/small-star"
-        )
+    labels = cc_labels(nodes, pairs)
     return labels.filter(F.col("doc_id") == F.col("label")).select("doc_id")
 
 
@@ -580,19 +549,22 @@ def cc_survivor_ids_star(nodes, pairs):
         ).select(F.col("src2").alias("src"), F.col("dst2").alias("dst"))
         return canon(out)
 
-    edges = canon(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = share(
+        canon(pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))),
+        eager=True,
+    )
     converged = False
     for _ in range(MAX_CC_ROUNDS):
-        after = star_round(star_round(edges, large=True), large=False).localCheckpoint(
-            eager=True
+        after = share(
+            star_round(star_round(edges, large=True), large=False), eager=True
         )
-        if after.exceptAll(edges).isEmpty() and edges.exceptAll(after).isEmpty():
-            converged = True
-            edges = after
-            break
+        converged = (
+            after.exceptAll(edges).isEmpty() and edges.exceptAll(after).isEmpty()
+        )
+        release(edges)  # superseded by the checkpointed round
         edges = after
+        if converged:
+            break
     if not converged:
         raise RuntimeError(
             f"star CC did not converge in {MAX_CC_ROUNDS} rounds"
@@ -1043,13 +1015,19 @@ def dedup_priority_source(spark, sf_dir):
 def cc_labels(nodes, pairs):
     """Min-label propagation to FIXPOINT → (doc_id, label) per node.
 
-    Same loop as cc_survivor_ids but returns the full labeling instead of
-    only the surviving ids (kept separate: that function backs two
-    driver-green keys whose behavior the source-hash guard cannot see
-    through helpers, so it stays untouched)."""
-    edges = pairs.union(
-        pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).localCheckpoint(eager=True)
+    Each node repeatedly adopts the smallest label among its neighbors;
+    every round's labels are an eager checkpoint (without it, round i
+    re-executes all i-1 previous joins), and the round it supersedes is
+    released as soon as the fixpoint test has read it. Raises if the
+    component diameter exceeds MAX_CC_ROUNDS instead of silently
+    returning unmerged clusters."""
+    # undirected edges both ways; labels start at each node's own id
+    edges = share(
+        pairs.union(
+            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        ),
+        eager=True,
+    )
     labels = nodes.select("doc_id", F.col("doc_id").alias("label"))
     for _ in range(MAX_CC_ROUNDS):
         neighbor_min = (
@@ -1057,21 +1035,26 @@ def cc_labels(nodes, pairs):
             .groupBy("doc_a")
             .agg(F.min("label").alias("nbr_label"))
         )
-        new_labels = (
+        new_labels = share(
             labels.join(neighbor_min, labels.doc_id == neighbor_min.doc_a, "left")
             .select(
                 "doc_id",
                 F.least(
                     F.col("label"), F.coalesce("nbr_label", F.col("label"))
                 ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
-        if new_labels.exceptAll(labels).isEmpty():
-            return new_labels
+        done = new_labels.exceptAll(labels).isEmpty()
+        release(labels)
         labels = new_labels
+        if done:
+            release(edges)
+            return labels
     raise RuntimeError(
-        f"connected components did not converge in {MAX_CC_ROUNDS} rounds"
+        f"connected components did not converge in {MAX_CC_ROUNDS} rounds "
+        "— component diameter exceeds the bound; raise MAX_CC_ROUNDS or "
+        "switch to large-star/small-star"
     )
 
 
@@ -1262,9 +1245,7 @@ def dedup_containment(spark, sf_dir):
     # sh feeds FIVE subtrees (sizes, df, prefix, full index, exact verify):
     # checkpoint eagerly so the tokenize+explode runs once, not five times
     # (same discipline as dedup_near_minhash's signature reuse).
-    sh = _kgrams(
-        load_table(spark, sf_dir, "documents"), CONTAIN_K
-    ).localCheckpoint(eager=True)
+    sh = share(_kgrams(load_table(spark, sf_dir, "documents"), CONTAIN_K), eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
 
@@ -1938,18 +1919,9 @@ def dedup_bakeoff(spark, sf_dir):
         )
         .select("doc_a", "doc_b")
     )
-    # Register the truth cache with the shared release mechanism (r12
-    # ADVICE): persist() is lazy so the key keeps its zero-driver-jobs
-    # contract, and the NEXT share-persisting key (this one or an e2e
-    # capstone) releases these blocks instead of them pinning the session
-    # cache for the rest of a multi-key sweep process.
-    from data_transform_spark.pipeline.e2e import (
-        _persist_share,
-        _release_prior_shares,
-    )
-
-    _release_prior_shares()
-    truth = _persist_share(truth, eager=True)
+    # truth feeds every method's hit join and the n_truth count: share it,
+    # so the exact shingle-Jaccard pass runs once per build.
+    truth = share(truth, eager=True)
 
     h = docs.select("doc_id", F.md5("text").alias("h"))
     ex = (

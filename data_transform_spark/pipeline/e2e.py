@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import release, share, submit
 
 
 @register(
@@ -276,131 +277,12 @@ def _e2e_llm_oracle() -> str:
     """
 
 
-# Share-point caches for pipeline_e2e_llm (r9 VERDICT #5): the funnel's
-# six stage-count branches each re-derive the pipeline prefix, and AQE's
-# runtime exchange reuse does NOT fire across the broadcast branches (they
-# execute as separate broadcast jobs — measured ReusedExchange=0). persist()
-# is lazy, so the key keeps its zero-driver-jobs contract; the cache
-# materializes during the single final action and every later branch scans
-# it. Each invocation releases the PREVIOUS invocation's blocks, bounding
-# live cache to one key's share frames (the graph.py release discipline,
-# DataFrame-tier).
-_E2E_PERSISTED: list = []
-# Eager localCheckpoint shares, tracked separately (r15, VERDICT #6 /
-# ADVICE): their blocks are RDD-cached, not CacheManager entries, so
-# unpersist() on the DataFrame cannot free them — _release_prior_shares
-# unpersists the checkpointed RDD itself (LogicalRDD.rdd) and drops the
-# reference, keeping executor storage flat across a 394-key session
-# instead of waiting on Python GC -> ContextCleaner. Local-mode note:
-# a localCheckpoint truncates lineage, so these frames are NOT
-# recomputable after executor/block loss — acceptable here because the
-# engine runs local[N] where executor loss is process death anyway; a
-# cluster deployment would flip these to reliable checkpoints.
-_E2E_EAGER: list = []
-
-# One small shared driver-thread pool for concurrent share fills (r15,
-# VERDICT #5; guide §2.6 "overlap independent jobs"): each eager fill is
-# its own Spark action, and filling independent shares sequentially
-# leaves most of the cluster idle during every fill's tail. Only
-# top-level key bodies submit (helpers never do), so the pool can never
-# deadlock on nested submissions. Job groups/descriptions are
-# thread-local per guide §2.6 — labels stay correct per fill.
-_FILL_POOL = None
-
-
-def _submit_fill(thunk):
-    """Run ``thunk`` (which builds AND eagerly fills a share frame) on the
-    shared fill pool; returns a Future. The caller must .result() before
-    its key returns, so fills never outlive their invocation."""
-    global _FILL_POOL
-    if _FILL_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _FILL_POOL = ThreadPoolExecutor(
-            max_workers=4, thread_name_prefix="share-fill"
-        )
-    return _FILL_POOL.submit(thunk)
-
-
-def _fill_concurrently(*thunks):
-    """Fill several INDEPENDENT share frames as concurrent Spark actions;
-    returns their results in submission order (guide §2.6: the scheduler
-    back-fills idle cores across the overlapping fills)."""
-    futs = [_submit_fill(t) for t in thunks]
-    return [f.result() for f in futs]
-
-
-def _persist_share(df, eager: bool = False):
-    """Register a shared frame in the release-tracked cache.
-
-    ``eager=True`` (r14, guide §5): additionally fill the cache NOW with
-    one count(). Lazy persist is enough when the consumers are
-    shuffle-separated subtrees of ONE job — but the capstone funnel rows
-    meet at ~10 broadcast crossJoins whose subtrees Spark materializes
-    on CONCURRENT broadcast threads, and branches racing a still-cold
-    share each recompute its entire lineage (the stage_e2e_prefix
-    diagnosis; the A/B is in OPTIMIZATION_r14.md). The fills run the
-    work the final action needs anyway, merely re-SEQUENCED in
-    dependency order, so nothing is precomputed across bench reps —
-    each invocation still recomputes from parquet (the release
-    discipline is unchanged)."""
-    from pyspark import StorageLevel
-
-    if eager:
-        # Eager shares use localCheckpoint, not persist+count: a cached
-        # frame's tasks still SERIALIZE the whole recompute lineage (the
-        # InMemoryRelation child plan) into every task binary — measured
-        # on v3: ~1 MB binaries, 23 s/invocation of task deserialization
-        # + 20 s GC on 34 s of actual executor CPU. localCheckpoint
-        # truncates the lineage, so downstream branch tasks carry a bare
-        # RDD scan (the sim_ann_graph Fix C mechanism, funnel-tier).
-        # Blocks are invocation-local RDDs — CacheManager can never serve
-        # them to a later invocation, so the no-cross-rep-caching
-        # discipline holds by construction; _release_prior_shares frees
-        # the blocks explicitly at the next top-level key build (r15).
-        ck = df.localCheckpoint(eager=True)
-        _E2E_EAGER.append(ck)
-        return ck
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _E2E_PERSISTED.append(df)
-    return df
-
-
-def _free_local_checkpoint(df) -> None:
-    """Explicitly drop a localCheckpoint's RDD blocks. The checkpointed
-    data is RDD-cached (not a CacheManager entry), reachable only through
-    the LogicalRDD at the plan root — DataFrame.unpersist() is a no-op on
-    it. Best-effort: any py4j/plan-shape surprise just falls back to the
-    old GC -> ContextCleaner path."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-def _release_prior_shares() -> None:
-    # Best-effort: handles here are bound to the SparkSession that cached
-    # them — if that session was stopped and a new one started in the same
-    # process, unpersist raises on the dead SparkContext. The blocks died
-    # with their session, so swallowing is correct, not lossy (r10 ADVICE).
-    while _E2E_PERSISTED:
-        try:
-            _E2E_PERSISTED.pop().unpersist(False)
-        except Exception:
-            pass
-    while _E2E_EAGER:
-        _free_local_checkpoint(_E2E_EAGER.pop())
-
-
 def _e2e_prefix(spark, sf_dir):
     """Funnel stages 1-3 — substring dedup → near-dup removal → benchmark
     decontamination — shared verbatim by pipeline_e2e_llm and
     pipeline_e2e_llm_v3 (the two capstones differ only in their quality
-    gate and everything downstream of it). Releases the PREVIOUS
-    invocation's share-point caches, then persists this run's three share
-    frames (cleaned / surv / decon)."""
+    gate and everything downstream of it). Shares its three frames
+    (cleaned / surv / decon)."""
     from data_transform_spark.pipeline.curation import NGRAM_N
     from data_transform_spark.pipeline.dedup import (
         MINHASH_EXACT_TAU,
@@ -411,7 +293,6 @@ def _e2e_prefix(spark, sf_dir):
 
     from data_transform_spark.io import spread
 
-    _release_prior_shares()
     d = spread(load_table(spark, sf_dir, "documents"))
 
     # 1. substring-level dedup; drop fully-removed docs (exact duplicates)
@@ -420,7 +301,7 @@ def _e2e_prefix(spark, sf_dir):
     # generator, the exact-Jaccard verifier, the survivor anti join AND the
     # c1 funnel count — persisting it executes the substring-fingerprint
     # window exactly once
-    cleaned = _persist_share(
+    cleaned = share(
         clean.join(d.select("doc_id", "source"), "doc_id").select(
             "doc_id",
             "source",
@@ -439,7 +320,7 @@ def _e2e_prefix(spark, sf_dir):
     # SHARE POINT: surv feeds the bench-gram explode, the decon anti join
     # and the c2 count — caching it runs the LSH candidate join + exact
     # Jaccard verify once instead of three times
-    surv = _persist_share(cleaned.join(victims, "doc_id", "left_anti"))
+    surv = share(cleaned.join(victims, "doc_id", "left_anti"))
 
     # 3. benchmark decontamination (8-gram overlap, broadcast bench set)
     t = F.split("text", " ")
@@ -467,7 +348,7 @@ def _e2e_prefix(spark, sf_dir):
     )
     # contaminated-doc set is corpus-scaled in the worst case: keyed anti
     # join, no hint (AQE broadcasts it when it is actually small)
-    decon = _persist_share(
+    decon = share(
         surv.filter(F.col("doc_id") % 97 != 0).join(
             contaminated, "doc_id", "left_anti"
         )
@@ -555,7 +436,7 @@ def stage_e2e_prefix(spark, sf_dir) -> str:
                 fh.write("ok")
 
         _stage_atomic(staged, _build, marker=E2E_PREFIX_MARKER)
-        _release_prior_shares()  # the build's caches are now redundant
+        release(cleaned, surv, decon)  # the build's shares are now redundant
     return staged
 
 
@@ -647,7 +528,7 @@ def pipeline_e2e_llm(spark, sf_dir):
     # funnel branch. Measured r14: the eager-checkpoint variant is +33%
     # CPU here — the gate lineage above the staged prefix is shallow, so
     # the lazy persist wins (unlike the v3/v4 NB chains).
-    gated = _persist_share(
+    gated = share(
         base.join(top_bi, "doc_id", "left")
         .filter(
             F.col("n_tok").between(E2E_MIN_TOK, E2E_MAX_TOK)
@@ -960,8 +841,8 @@ def pipeline_e2e_llm_v3(spark, sf_dir):
     # thread CONCURRENTLY with the fit/threshold fills below (r15,
     # guide §2.6 "overlap independent jobs": the serial fills left most
     # of the box idle; same work, overlapped actions).
-    lgate_f = _submit_fill(
-        lambda: _persist_share(
+    lgate_f = submit(
+        lambda: share(
             decon.filter(F.col("n_tok").between(E2E_MIN_TOK, E2E_MAX_TOK)),
             eager=True,
         )
@@ -973,7 +854,7 @@ def pipeline_e2e_llm_v3(spark, sf_dir):
     # SHARE POINT: w feeds the held-out calibration scoring AND the
     # cleaned-corpus gate scoring — persist or the fit aggregate runs twice.
     # Eager (r14): the funnel's broadcast branches race cold caches.
-    w = _persist_share(w, eager=True)
+    w = share(w, eager=True)
     score = (
         tok.join(F.broadcast(w), "tok", "left")
         .groupBy("doc_id")
@@ -991,7 +872,7 @@ def pipeline_e2e_llm_v3(spark, sf_dir):
     )
     # SHARE POINT: the 1-row threshold — its lineage is the whole held-out
     # scoring pass; persisting collapses that to one execution
-    thr = _persist_share(_nb_threshold(scored), eager=True)
+    thr = share(_nb_threshold(scored), eager=True)
 
     lgate = lgate_f.result()
 
@@ -1002,7 +883,7 @@ def pipeline_e2e_llm_v3(spark, sf_dir):
         .groupBy("doc_id")
         .agg(F.sum(F.coalesce("wu", F.lit(0))).cast("long").alias("su"))
     )
-    mgate = _persist_share(
+    mgate = share(
         lgate.join(cscore, "doc_id")
         .crossJoin(F.broadcast(prior))
         .crossJoin(F.broadcast(thr))
@@ -1283,8 +1164,8 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
     # length gate (stage 4) and the DSIR fit (member 3's weights) are both
     # independent of the NB chain — fill them on driver threads
     # CONCURRENTLY with the fit/threshold fills below (r15, guide §2.6).
-    lgate_f = _submit_fill(
-        lambda: _persist_share(
+    lgate_f = submit(
+        lambda: share(
             decon.filter(F.col("n_tok").between(E2E_MIN_TOK, E2E_MAX_TOK)),
             eager=True,
         )
@@ -1301,14 +1182,14 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
         # the whole DSIR fit runs on this thread: _dsir_fit's internal
         # bucket-count fill (r15) plus the weight checkpoint
         _, dw0 = _dsir_fit(dlab)
-        return _persist_share(dw0, eager=True)
+        return share(dw0, eager=True)
 
-    dw_f = _submit_fill(_dw_fill)
+    dw_f = submit(_dw_fill)
 
     # NB fit on the raw corpus + PR-curve threshold (v3's stage 5a)
     d0 = d.select("doc_id", F.split("text", " ").alias("toks"))
     lab, tok, w, prior = _nb_fit(d0)
-    w = _persist_share(w, eager=True)
+    w = share(w, eager=True)
     score = (
         tok.join(F.broadcast(w), "tok", "left")
         .groupBy("doc_id")
@@ -1322,7 +1203,7 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
             (F.col("su") + F.col("pu")).cast("long").alias("logit_u"),
         )
     )
-    thr = _persist_share(_nb_threshold(scored), eager=True)
+    thr = share(_nb_threshold(scored), eager=True)
 
     lgate = lgate_f.result()
 
@@ -1342,7 +1223,7 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
     ctok = lgate.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     # SHARE POINT (r14/r15): the combined score frame feeds the committee
     # join AND the g1/g3 count branches.
-    mscore = _persist_share(
+    mscore = share(
         ctok.select("doc_id", "tok", _dsir_bucket("tok").alias("b"))
         .join(F.broadcast(w), "tok", "left")
         .join(F.broadcast(dw.withColumnRenamed("wu", "dwu")), "b", "left")
@@ -1395,7 +1276,7 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
         + F.when(F.col("pass_rules"), 1).otherwise(0)
         + F.when(F.col("sd") >= 0, 1).otherwise(0)
     )
-    cgate = _persist_share(
+    cgate = share(
         lgate.join(m_nb, "doc_id")
         .join(m_rules, "doc_id")
         .join(dscore, "doc_id")

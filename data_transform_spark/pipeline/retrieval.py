@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import share
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -261,7 +262,7 @@ def _rrf_rankings(spark, sf_dir):
     noise cannot reorder; RRF terms divide integers (IEEE-identical both
     engines) and sum in fixed order."""
     # r14 note: persisting the corpus join + postings frame here was
-    # A/B-measured (profile_bench, 4 reps each way) at NO win — unlike
+    # A/B-measured (wall clock, 4 reps each way) at NO win — unlike
     # the broadcast-separated ANN summaries, the rrf subtrees meet at
     # shuffle joins where Spark's exchange reuse already deduplicates —
     # so the frames stay unpersisted.
@@ -496,9 +497,7 @@ def _mmr_rerank(e, cand):
     # persist the |Q|·MMR_CAND-row frame so whatever produced it (the
     # exact broadcast scan here, the ANN serve path at 100 TB) runs once
     # per action instead of three times.
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cand = _persist_share(cand, eager=True)
+    cand = share(cand, eager=True)
 
     # fresh column objects for the self-join (failAmbiguousSelfJoin trap)
     a = cand.select(F.col("qid").alias("qa"), F.col("id").alias("ia")).select(

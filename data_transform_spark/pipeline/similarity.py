@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import share, submit
 
 TOPK = 5
 N_QUERIES = 20  # vec_id < 20 are the query vectors
@@ -492,10 +493,8 @@ def ivf_index(e):
     # Lloyd chain. Eager localCheckpoint since the r14 optimization
     # round (see _pq_train_encode — the lineage-truncation rationale and
     # the subtree-CPU A/B: sim_ann_ivf 18.4 -> 11.5 CPU-s).
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cent = _persist_share(cent, eager=True)
-    assign = _persist_share(
+    cent = share(cent, eager=True)
+    assign = share(
         _nearest_centroid(e.select("vec_id", "emb"), cent, "vec_id", "list_id"),
         eager=True,
     )
@@ -553,22 +552,7 @@ def sim_ann_ivf_topk(spark, sf_dir, probes: int = IVF_PROBES):
     )
 
 
-def _fresh_shares() -> None:
-    """Release the previous key's persisted share frames (the e2e
-    discipline) at registered-key entry. Every ANN key persists its
-    shared intermediates (trained index frames, the summary's pair
-    frames) for WITHIN-action branch sharing; releasing at entry keeps
-    live cache bounded to one key's shares AND guarantees each
-    invocation recomputes from the parquet inputs — a repeated build in
-    one session must never serve a prior build's cache via
-    CacheManager plan-matching (that would turn a timed rep into a
-    cache read)."""
-    from data_transform_spark.pipeline.e2e import _release_prior_shares
-
-    _release_prior_shares()
-
-
-def _ann_recall_summary(ann, exact, recall_bound: float, eager: bool = True):
+def _ann_recall_summary(ann, exact_f, recall_bound: float):
     """One-row verification summary: result counts + a recall bound check.
 
     ANN recall < 1 by design, so the hashable contract is the bound: the
@@ -577,10 +561,10 @@ def _ann_recall_summary(ann, exact, recall_bound: float, eager: bool = True):
     against the exact top-k. Measured recall floors across sf0.001/0.01/0.1
     are recorded in the key docstrings.
 
-    r14 (guide §2.4/§5): ``ann`` and ``exact`` each feed TWO branches
-    (their own count + the hit join), and the three 1-row frames meet as
-    broadcast crossJoins — which execute as separate broadcast jobs
-    where AQE's runtime exchange reuse does NOT fire (the e2e
+    r14 (guide §2.4/§5): ``ann`` and the exact pairs each feed TWO
+    branches (their own count + the hit join), and the three 1-row frames
+    meet as broadcast crossJoins — which execute as separate broadcast
+    jobs where AQE's runtime exchange reuse does NOT fire (the e2e
     measurement: ReusedExchange=0 across broadcast branches). Without
     sharing, every ANN key re-ran its ENTIRE index build + serve
     pipeline and the brute-force check twice each. Both frames are
@@ -588,48 +572,13 @@ def _ann_recall_summary(ann, exact, recall_bound: float, eager: bool = True):
     optimization round: their lineage is the ENTIRE serve pipeline, and
     the lazy persist's consumers serialized it into every count-branch
     task (the v3 deser/GC mechanism, OPTIMIZATION_r14.md wave 4/5 —
-    subtree-CPU A/B: lsh 14.6 -> 10.0 CPU-s from this change alone)."""
-    from concurrent.futures import Future
+    subtree-CPU A/B: lsh 14.6 -> 10.0 CPU-s from this change alone).
 
-    from data_transform_spark.pipeline.e2e import (
-        _fill_concurrently,
-        _persist_share,
-    )
-
-    # eager=False for the STAGED-serve keys (persist/append/compact/
-    # graph): their pipelines are parquet reads + a shallow probe, so
-    # there is no duplicated deep chain for the fill to save and the
-    # serialized fill phases just idle the cores — paired A/B measured
-    # sim_ann_persist wall 3.3 -> 9.4 s with eager fills, CPU flat. The
-    # in-plan-training keys keep eager (ivfpq 51.9 -> 15.8 CPU-s).
-    #
-    # r15 (guide §2.6): the two fills are INDEPENDENT actions (the ANN
-    # serve probe vs the brute-force check), so the eager path fills them
-    # concurrently instead of back-to-back; the in-plan-training keys go
-    # further and pass ``exact`` as a Future submitted BEFORE their index
-    # training, overlapping the brute-force pass with the training fills
-    # (_overlapped_exact_fill below).
-    if isinstance(exact, Future):
-        ann_pairs = _persist_share(
-            ann.select("query_id", "neighbor_id"), eager=eager
-        )
-        exact_pairs = exact.result()
-    elif eager:
-        exact_pairs, ann_pairs = _fill_concurrently(
-            lambda: _persist_share(
-                exact.select("query_id", "neighbor_id"), eager=True
-            ),
-            lambda: _persist_share(
-                ann.select("query_id", "neighbor_id"), eager=True
-            ),
-        )
-    else:
-        exact_pairs = _persist_share(
-            exact.select("query_id", "neighbor_id"), eager=False
-        )
-        ann_pairs = _persist_share(
-            ann.select("query_id", "neighbor_id"), eager=False
-        )
+    ``exact_f`` is the Future of _overlapped_exact_fill, which the caller
+    submits BEFORE building its index, so the brute-force pass overlaps
+    the index work (r15, guide §2.6); it is resolved after the ANN fill."""
+    ann_pairs = share(ann.select("query_id", "neighbor_id"), eager=True)
+    exact_pairs = exact_f.result()
     counts = ann_pairs.agg(
         F.count(F.lit(1)).alias("n_results"),
         F.countDistinct("query_id").alias("n_queries"),
@@ -662,10 +611,8 @@ def _overlapped_exact_fill(spark, sf_dir):
     independent of the index, so its corpus scan overlaps the training
     fills the caller runs next instead of serializing after them.
     _ann_recall_summary resolves the Future after filling the ANN side."""
-    from data_transform_spark.pipeline.e2e import _persist_share, _submit_fill
-
-    return _submit_fill(
-        lambda: _persist_share(
+    return submit(
+        lambda: share(
             sim_topk_bruteforce(spark, sf_dir).select(
                 "query_id", "neighbor_id"
             ),
@@ -678,7 +625,6 @@ def _overlapped_exact_fill(spark, sf_dir):
 def sim_ann_ivf(spark, sf_dir):
     """IVF-Flat ANN, bounds-checked: recall vs exact top-5 must be >= 0.45
     (measured 0.57–0.63 across sf0.001/0.01/0.1 with K=16, 4 probes)."""
-    _fresh_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     return _ann_recall_summary(sim_ann_ivf_topk(spark, sf_dir), exact_f, 0.45)
 
@@ -693,7 +639,6 @@ def sim_ann_lsh(spark, sf_dir):
     0.35–0.37 at ~13% for the old 8×6 single-probe config, and vs IVF's
     0.57–0.63 at ~25% with 4/16 probes; full measured grid in SCALING.md
     "Round-8 LSH retune")."""
-    _fresh_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     return _ann_recall_summary(sim_ann_lsh_topk(spark, sf_dir), exact_f, 0.45)
 
@@ -856,10 +801,8 @@ def _pq_train_encode(e):
     # A/B that kept lazy persist could not see that through host noise;
     # the subtree-CPU A/B did: sim_ann_pq 30.6 -> 12.8 CPU-s, ivfpq
     # 51.9 -> 15.8.
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cent = _persist_share(cent, eager=True)
-    codes = _persist_share(
+    cent = share(cent, eager=True)
+    codes = share(
         _pq_assign(cent, sub).select("vec_id", "m", F.col("c_id").alias("code")),
         eager=True,
     )
@@ -1020,7 +963,6 @@ def sim_ann_pq(spark, sf_dir):
     row per (vector, subspace) — corpus × PQ_M — and a full M × Ks
     codebook (no empty-cluster collapse; min cluster membership measured
     9/12/68 at the three SFs)."""
-    _fresh_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -1188,7 +1130,6 @@ def sim_ann_ivfpq(spark, sf_dir):
     code rows, the full M×Ks residual codebook (no empty-cluster
     collapse; min membership 13/14/24 at the three SFs), and all IVF_K
     coarse lists materialized."""
-    _fresh_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -1325,22 +1266,18 @@ def sim_ann_persist(spark, sf_dir):
     all IVF_K lists for THIS SF: an index from another SF (different
     corpus count) can neither live at this dir name (SF-namespaced,
     content-fingerprinted) nor pass the n_code_rows pin."""
-    _fresh_shares()
+    # The staged serve is a shallow parquet probe: r14 measured SEQUENTIAL
+    # eager fills at wall 3.3 -> 9.4 s, but the overlapped exact fill
+    # measures flat against lazy pair persists (A/B in CHANGES.md), so the
+    # key takes the one summary path every ANN key uses.
+    exact_f = _overlapped_exact_fill(spark, sf_dir)
     staged = ivfpq_stage_index(spark, sf_dir)
     cent, books, codes_l = ivfpq_read_index(spark, staged)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-    # stays lazy (eager=False): the staged serve is a shallow parquet
-    # probe — r14 measured sequential eager fills at wall 3.3 -> 9.4 s,
-    # and the r15 overlapped-concurrent variant re-measured FLAT
-    # (3.34/23.6 vs 3.29/22.9 CPU-s interleaved), so the simpler lazy
-    # shape keeps the key.
     summary = _ann_recall_summary(
-        _ivfpq_topk(e, cent, books, codes_l),
-        sim_topk_bruteforce(spark, sf_dir),
-        0.45,
-        eager=False,
+        _ivfpq_topk(e, cent, books, codes_l), exact_f, 0.45
     )
     shape = (
         codes_l.agg(F.count(F.lit(1)).alias("n_code_rows"))
@@ -1714,7 +1651,6 @@ def sim_ann_index_append(spark, sf_dir):
     ×M staged code rows, batch ×M appended rows, full codebook, all
     lists. At 100 TB this is how the index grows nightly: the training
     job never re-runs; each crawl batch pays one assignment scan."""
-    _fresh_shares()
     # r15 (profiled): unlike sim_ann_persist's shallow staged probe, the
     # append serve chain carries the batch ENCODE + the merged-codes ADC
     # scan (~12 of the key's ~26 CPU-s), and with lazy pair persists the
@@ -1906,7 +1842,7 @@ def graph_stage_index(spark, sf_dir) -> str:
     return staged
 
 
-def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool = True):
+def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS):
     """ANN top-k by beam search over the staged kNN graph.
 
     Entry points are GRAPH_SEEDS evenly spaced vec_ids (step = ⌊N/S⌋
@@ -1936,16 +1872,6 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
     stays lazy so the returned frame's plan still shows the staged
     adjacency scan (plan-pinned by the serve-plan test); the 3-way
     intra-round sharing rides the checkpoint scan."""
-    from data_transform_spark.pipeline.e2e import (
-        _persist_share,
-        _release_prior_shares,
-    )
-
-    # release=False when the caller already released at key entry AND has
-    # a concurrent share fill in flight that a release here would free
-    # from under it (the sim_ann_graph body, r15).
-    if release:
-        _release_prior_shares()
     staged = graph_stage_index(spark, sf_dir)
     adj = spark.read.parquet(f"{staged}/adjacency")
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -1964,8 +1890,7 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
     score = F.round(_cos(F.col("q_emb"), F.col("n_emb")), 4)
-    # via _persist_share so the round checkpoints are release-tracked (r15)
-    visited = _persist_share(
+    visited = share(
         q.crossJoin(F.broadcast(seeds)).select(
             "query_id", "node", score.alias("score")
         ),
@@ -2004,7 +1929,7 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
         )
         visited = visited.unionByName(scored_new)
         if r < rounds - 1:
-            visited = _persist_share(visited, eager=True)
+            visited = share(visited, eager=True)
     return (
         visited.filter(F.col("node") != F.col("query_id"))
         .withColumn("rn", F.row_number().over(w_beam))
@@ -2026,14 +1951,11 @@ def sim_ann_graph(spark, sf_dir):
     indexes; per-SF numbers in SCALING.md). The build is staged
     train-once/serve-many (graph_stage_index); this key serves from the
     staged adjacency."""
-    # (graph keeps the eager fill: unlike persist/append/compact its
-    # serve+verify chains measured 6.8 vs 9.8 CPU-s in its favor with
-    # walls equal — the beam rounds re-run per branch without it.)
-    _fresh_shares()
+    # (the eager fill pays here: the serve+verify chains measured 6.8 vs
+    # 9.8 CPU-s against lazy pair persists with walls equal — the beam
+    # rounds re-run per branch without it.)
     exact_f = _overlapped_exact_fill(spark, sf_dir)
-    return _ann_recall_summary(
-        sim_ann_graph_topk(spark, sf_dir, release=False), exact_f, 0.45
-    )
+    return _ann_recall_summary(sim_ann_graph_topk(spark, sf_dir), exact_f, 0.45)
 
 
 # --- index compaction + staleness (r10 VERDICT #3) ------------------------
@@ -2176,7 +2098,6 @@ def sim_ann_index_compact(spark, sf_dir):
     staleness probe is one assignment scan over the appended slice — both
     are the nightly maintenance cost, and historical raw vectors are
     never re-read."""
-    _fresh_shares()
     staged = ivfpq_stage_compact(spark, sf_dir)
     appends = ivfpq_stage_appends(spark, sf_dir)
     hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
@@ -2750,7 +2671,6 @@ def sim_ann_recall_curve(spark, sf_dir):
     per level. Scale: candidate volume is |Q|·(N/K)·max_probes rows and
     the exact side |Q|·N — both linear in the corpus for a fixed query
     panel, shuffled once each."""
-    _fresh_shares()
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -2813,21 +2733,19 @@ def sim_ann_recall_curve(spark, sf_dir):
     # counts) and exact feeds two (n_exact + hit join) across broadcast
     # crossJoins where exchange reuse does not fire — persist both tiny
     # frames (≤ levels·|Q|·TOPK rows) so the probed scan and the exact
-    # top-k run once per action (_fresh_shares at entry releases them).
-    from data_transform_spark.pipeline.e2e import _persist_share
-
+    # top-k run once per action (released at the next key's entry).
     # (r14 A/B: the EAGER checkpoint variant measured 2x CPU here —
     # 3.9 -> 7.5 CPU-s — unlike the trained-index keys: this frame's
     # single consumer pair shares exchanges within one action, so the
     # fill only added jobs. Lazy persist stays.)
-    ann = _persist_share(
+    ann = share(
         cand.join(F.broadcast(levels), F.col("probe_rank") <= F.col("probes"))
         .withColumn("rn", F.row_number().over(wl))
         .filter(F.col("rn") <= TOPK)
         .select("probes", "query_id", "neighbor_id")
     )
     we = Window.partitionBy("query_id").orderBy(F.col("sim_u").desc(), "neighbor_id")
-    exact = _persist_share(
+    exact = share(
         F.broadcast(q)
         .join(e_n, F.col("query_id") != F.col("vec_id"))
         .select(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_events, load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import release, share
 
 # Content-stable bucket in [0, 100): first 8 md5 hex chars of the id.
 # A 32-bit prefix makes the %100 folding bias ~2e-8 (vs 0.15% with the old
@@ -1003,21 +1004,16 @@ def _bpe_train(spark, sf_dir, rounds: int = BPE_ROUNDS, seq0=None):
     sequences as a literal replace. The word table is eagerly
     localCheckpoint-ed once (ONE corpus scan for the whole training run;
     each round's job re-reads the vocabulary-sized checkpoint, never the
-    corpus) and released before returning (graph.py block hygiene).
+    corpus) and released before returning (shares.release).
     Returns [(merge_round, a, b, merged, pair_count), ...] as plain
     literals, so callers build plans with no dependency on the
     checkpoint."""
-    from data_transform_spark.operators.graph import (
-        _checkpoint_rdd_id,
-        _release_rdds,
+    words = share(
+        _bpe_words(spark, sf_dir).withColumn(
+            "seq", (seq0 or _bpe_seq0)(F.col("word"))
+        ),
+        eager=True,
     )
-
-    words = (
-        _bpe_words(spark, sf_dir)
-        .withColumn("seq", (seq0 or _bpe_seq0)(F.col("word")))
-        .localCheckpoint(eager=True)
-    )
-    rid = _checkpoint_rdd_id(words)
     merges = []
     seq = F.col("seq")
     try:
@@ -1034,8 +1030,7 @@ def _bpe_train(spark, sf_dir, rounds: int = BPE_ROUNDS, seq0=None):
             merges.append((r, a, b, a + b, pc))
             seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
     finally:
-        if rid is not None:
-            _release_rdds(spark, {rid})
+        release(words)
     return merges
 
 
@@ -1313,17 +1308,12 @@ def _bpe_train_batched(
     Returns [(round, cand_rank, a, b, merged, pair_count), ...];
     pair_count is the start-of-round count (exact for every accepted pair
     — disjointness means no earlier merge in the round changed it)."""
-    from data_transform_spark.operators.graph import (
-        _checkpoint_rdd_id,
-        _release_rdds,
+    words = share(
+        _bpe_words(spark, sf_dir).withColumn(
+            "seq", (seq0 or _bpe_seq0)(F.col("word"))
+        ),
+        eager=True,
     )
-
-    words = (
-        _bpe_words(spark, sf_dir)
-        .withColumn("seq", (seq0 or _bpe_seq0)(F.col("word")))
-        .localCheckpoint(eager=True)
-    )
-    rids = {_checkpoint_rdd_id(words)}
     cand = BPE_BATCH_CAND_FACTOR * batch
     merges = []
     seq = F.col("seq")
@@ -1373,13 +1363,12 @@ def _bpe_train_batched(
                 # pair-count pass O(batch). Measured on the 280k-word
                 # scale corpus: round walls flat (~1.3 s/round) instead
                 # of growing with the cumulative chain (tools/scale_r14).
-                words = words.withColumn("seq", seq).localCheckpoint(
-                    eager=True
-                )
-                rids.add(_checkpoint_rdd_id(words))
+                prev = words
+                words = share(words.withColumn("seq", seq), eager=True)
+                release(prev)
                 seq = F.col("seq")
     finally:
-        _release_rdds(spark, {r for r in rids if r is not None})
+        release(words)
     return merges
 
 
@@ -1653,13 +1642,7 @@ def _uni_train(spark, sf_dir):
     distributed segmentation pass + a vocab-sized usage aggregate whose
     collect (<= UNI_SEED + alphabet rows) is the per-round driver sync —
     the same bounded decision collect as BPE's 1-row merge pick."""
-    from data_transform_spark.operators.graph import (
-        _checkpoint_rdd_id,
-        _release_rdds,
-    )
-
-    words = _bpe_words(spark, sf_dir).localCheckpoint(eager=True)
-    rid = _checkpoint_rdd_id(words)
+    words = share(_bpe_words(spark, sf_dir), eager=True)
     try:
         pos = words.select(
             "word", "cnt",
@@ -1714,8 +1697,7 @@ def _uni_train(spark, sf_dir):
             usage_final = v
         return usage_final, cost
     finally:
-        if rid is not None:
-            _release_rdds(spark, {rid})
+        release(words)
 
 
 def _uni_round_cte(r: int, ns: str = "") -> str:
@@ -1952,17 +1934,10 @@ def _wp_train(spark, sf_dir, rounds: int = WP_ROUNDS):
     score join, 1-row argmax collect (a training decision is a driver
     decision — the vocab_bpe precedent), literal replace. Returns
     [(round, a, b, merged, pc, ca, cb, score_u), ...] as plain literals."""
-    from data_transform_spark.operators.graph import (
-        _checkpoint_rdd_id,
-        _release_rdds,
+    words = share(
+        _bpe_words(spark, sf_dir).withColumn("seq", _wp_seq0(F.col("word"))),
+        eager=True,
     )
-
-    words = (
-        _bpe_words(spark, sf_dir)
-        .withColumn("seq", _wp_seq0(F.col("word")))
-        .localCheckpoint(eager=True)
-    )
-    rid = _checkpoint_rdd_id(words)
     merges = []
     seq = F.col("seq")
     try:
@@ -2008,8 +1983,7 @@ def _wp_train(spark, sf_dir, rounds: int = WP_ROUNDS):
                 seq, F.lit(f" {a}  {b} "), F.lit(f" {_wp_merged(a, b)} ")
             )
     finally:
-        if rid is not None:
-            _release_rdds(spark, {rid})
+        release(words)
     return merges
 
 

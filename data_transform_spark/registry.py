@@ -1,7 +1,11 @@
 """Central operator registry.
 
 Every operator from SURVEY.md §2 registers itself here via the ``register``
-decorator. ``QUERIES[name]`` is a callable ``(spark, sf_dir) -> DataFrame``;
+decorator. ``QUERIES[name]`` is a callable ``(spark, sf_dir) -> DataFrame``
+that releases the previous build's share frames (``shares.release_all``)
+and then builds the key; the decorated module-level function stays raw, so
+a key body that calls another key directly keeps its own shares alive.
+``inspect.unwrap(QUERIES[name])`` is the key body.
 ``ORACLES[name]`` (when present) is the equivalent DuckDB SQL string the
 driver hash-compares against. Keys without an oracle get the driver's weaker
 rows-only check — only used for genuinely non-SQL-expressible ops.
@@ -9,8 +13,11 @@ rows-only check — only used for genuinely non-SQL-expressible ops.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import Optional
+
+from data_transform_spark.shares import release_all
 
 QUERIES: dict[str, Callable] = {}
 ORACLES: dict[str, str] = {}
@@ -22,7 +29,13 @@ def register(name: str, oracle: Optional[str] = None):
     def deco(fn):
         if name in QUERIES:
             raise ValueError(f"duplicate operator key: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def dispatch(spark, sf_dir):
+            release_all()
+            return fn(spark, sf_dir)
+
+        QUERIES[name] = dispatch
         if oracle is not None:
             ORACLES[name] = oracle.strip()
         return fn

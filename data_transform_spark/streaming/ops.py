@@ -29,6 +29,7 @@ from data_transform_spark.operators.scans import SCRATCH
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
 from data_transform_spark.pipeline.text import PII_SCRUB_ORACLE, pii_plant, pii_scrub
 from data_transform_spark.registry import register
+from data_transform_spark.shares import release
 
 
 def _source_stamp(src: str) -> str:
@@ -661,9 +662,10 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         s = batch_df.sparkSession
         # r14 (guide §3.3/§5): the body runs THREE write actions per
         # micro-batch and the batch band/digest frames feed all of them —
-        # eager localCheckpoints run the shingle explode + 48-min
-        # signature aggregate once per batch AND truncate the lineage the
-        # downstream join tasks would otherwise serialize per task (the
+        # local checkpoints (filled by the first write) run the shingle
+        # explode + 48-min signature aggregate once per batch AND truncate
+        # the lineage the downstream join tasks would otherwise serialize
+        # per task (the
         # capstone-share mechanism; plain lazy/eager PERSIST variants
         # measured SLOWER here — OPTIMIZATION_r14.md wave 3/6).
         bands_b = _sig_bands(minhash_signatures(batch_df)).localCheckpoint()
@@ -703,10 +705,7 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         # writes are done — otherwise they accumulate across micro-batches
         # until Python GC lets ContextCleaner at them, a slow executor
         # storage leak on a long-running stream.
-        from data_transform_spark.pipeline.e2e import _free_local_checkpoint
-
-        _free_local_checkpoint(bands_b)
-        _free_local_checkpoint(sh_b)
+        release(bands_b, sh_b)
 
     q = (
         spark.readStream.schema(schema)

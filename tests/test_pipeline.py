@@ -506,16 +506,14 @@ class TestPagerankConverged:
         checkpoint blocks for the session lifetime. Per-call residue is
         exactly ONE persistent RDD (the block backing the returned frame);
         edges, nodes, and every superseded loop checkpoint are released."""
-        from data_transform_spark.operators.graph import (
-            _persistent_rdd_ids,
-            pagerank_converged,
-        )
+        from data_transform_spark.operators.graph import pagerank_converged
 
-        before = len(_persistent_rdd_ids(spark))
+        jsc = spark.sparkContext._jsc
+        before = jsc.getPersistentRDDs().size()
         for _ in range(2):
             rank, _iters, _delta = pagerank_converged(spark, sf_dir)
             assert rank.count() == 25
-        after = len(_persistent_rdd_ids(spark))
+        after = jsc.getPersistentRDDs().size()
         assert after - before <= 2, (
             f"checkpoint blocks leaked: {after - before} new persistent RDDs "
             "after 2 calls (expected <=1 per call)"

@@ -928,7 +928,7 @@ def test_pr_curve_rank_is_two_phase_and_held_out_filter_pushed(
     pushed to the scan side.
 
     Since the r14 optimization round the share frames are EAGER
-    localCheckpoints (lineage truncation — see _persist_share), so the
+    localCheckpoints (lineage truncation — see shares.share), so the
     registered key's returned plan is a read over the checkpointed rank:
     the two-phase shape executes inside the fill. The pins therefore
     drive the SAME builder chain the key runs (_nb_scored → held filter

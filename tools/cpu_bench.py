@@ -25,15 +25,24 @@ _TICK = os.sysconf("SC_CLK_TCK")
 
 
 def _subtree_pids(root: int) -> list[int]:
+    """``root`` and every live descendant. Children are listed per THREAD
+    (/proc/<p>/task/<t>/children), and the JVM forks the pyspark.daemon
+    worker tree from a non-main thread, so every task of every process is
+    read."""
     pids, stack = [], [root]
     while stack:
         p = stack.pop()
         pids.append(p)
         try:
-            with open(f"/proc/{p}/task/{p}/children") as fh:
-                stack.extend(int(c) for c in fh.read().split())
+            tids = os.listdir(f"/proc/{p}/task")
         except OSError:
-            pass
+            continue
+        for tid in tids:
+            try:
+                with open(f"/proc/{p}/task/{tid}/children") as fh:
+                    stack.extend(int(c) for c in fh.read().split())
+            except OSError:
+                pass
     return pids
 
 

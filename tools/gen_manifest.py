@@ -45,11 +45,10 @@ _PKG = "data_transform_spark"
 _MUTABLE_STATE = {
     f"{_PKG}.registry.QUERIES",
     f"{_PKG}.registry.ORACLES",
-    # r10: pipeline_e2e_llm's share-point cache — empty at import, holds
-    # DataFrames after an invocation, so its repr is run-state-dependent
-    # (stable "[]" before the first call, unstable after) and must never
-    # join the key's hash
-    f"{_PKG}.pipeline.e2e._E2E_PERSISTED",
+    # the tracked share frames — empty at import, holds DataFrames after a
+    # build, so its repr is run-state-dependent (stable "[]" before the
+    # first call, unstable after) and must never join the key's hash
+    f"{_PKG}.shares._HELD",
 }
 
 # Constant leaves whose repr is deterministic across processes. Containers
@@ -99,10 +98,12 @@ def closure_sources(fn) -> dict[str, str]:
     Resolution is by bare global name through each function's __globals__ —
     exactly how the reference will be looked up at run time — so an edit to
     any reachable helper (or to a module-level constant's VALUE) changes the
-    closure and therefore the manifest hash of every dependent key.
+    closure and therefore the manifest hash of every dependent key. A
+    ``QUERIES`` entry is unwrapped from its registry dispatch wrapper to
+    the key body.
     """
     items: dict[str, str] = {}
-    _walk(fn, items)
+    _walk(inspect.unwrap(fn), items)
     return items
 
 
@@ -154,9 +155,13 @@ def _walk(obj, items: dict[str, str]) -> None:
         elif owner.startswith(_PKG):
             # module-level constant reached by bare name from a package
             # module — its VALUE is part of the key's behavior (only if
-            # its repr is process-stable; address-bearing reprs are noise)
+            # its repr is process-stable; address-bearing reprs are noise).
+            # A path inside the checkout (operators.scans.SCRATCH) is hashed
+            # relative to the checkout root, so the hash does not depend on
+            # where the repository lives.
             rep = _stable_repr(ref)
             if rep is not None:
+                rep = rep.replace(_REPO, "<repo>")
                 items.setdefault(f"{owner}.{name}", f"{name}={rep}")
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import data_transform_spark.pipeline.training as tr  # noqa: E402
 from data_transform_spark.session import get_spark  # noqa: E402
+from data_transform_spark.shares import release, share  # noqa: E402
 
 N_DOCS = 20_000
 WORDS_PER_DOC = 30
@@ -124,17 +125,10 @@ def fertility(spark, sf_dir: str, merges, chunk: int = 128):
     a 1 024-deep expression tree would stall Catalyst/codegen; 128-deep
     chunks keep analysis linear (script-local mitigation; the registry
     keys top out at 12 merges where one chain is fine)."""
-    from data_transform_spark.operators.graph import (
-        _checkpoint_rdd_id,
-        _release_rdds,
+    words = share(
+        tr._bpe_words(spark, sf_dir).withColumn("seq", tr._bpe_seq0(F.col("word"))),
+        eager=True,
     )
-
-    words = (
-        tr._bpe_words(spark, sf_dir)
-        .withColumn("seq", tr._bpe_seq0(F.col("word")))
-        .localCheckpoint(eager=True)
-    )
-    rids = {_checkpoint_rdd_id(words)}
     try:
         for lo in range(0, len(merges), chunk):
             seq = F.col("seq")
@@ -143,8 +137,9 @@ def fertility(spark, sf_dir: str, merges, chunk: int = 128):
                 seq = F.replace(
                     seq, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
                 )
-            words = words.withColumn("seq", seq).localCheckpoint(eager=True)
-            rids.add(_checkpoint_rdd_id(words))
+            prev = words
+            words = share(words.withColumn("seq", seq), eager=True)
+            release(prev)
         row = (
             words.select(
                 F.sum(F.col("cnt") * F.length("word")).alias("chars"),
@@ -155,7 +150,7 @@ def fertility(spark, sf_dir: str, merges, chunk: int = 128):
         )
         return int(row["chars"]), int(row["toks"])
     finally:
-        _release_rdds(spark, {r for r in rids if r is not None})
+        release(words)
 
 
 def main() -> None:
