@@ -7,6 +7,8 @@ registered queries, importable directly by library users:
 
 Each function takes/returns plain DataFrames so they compose with arbitrary
 user pipelines; none of them collect to the driver (see SCALING.md).
+A frame they return stays valid after later ``QUERIES`` dispatches
+(``shares`` gives the rule).
 """
 
 from __future__ import annotations

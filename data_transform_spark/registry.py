@@ -3,8 +3,9 @@
 Every operator from SURVEY.md §2 registers itself here via the ``register``
 decorator. ``QUERIES[name]`` is a callable ``(spark, sf_dir) -> DataFrame``
 that releases the previous build's share frames (``shares.release_all``)
-and then builds the key; the decorated module-level function stays raw, so
-a key body that calls another key directly keeps its own shares alive.
+and then builds the key inside ``shares.building()``; the decorated
+module-level function stays raw, so a key body that calls another key
+directly keeps its own shares alive. Frame lifetimes: see ``shares``.
 ``inspect.unwrap(QUERIES[name])`` is the key body.
 ``ORACLES[name]`` (when present) is the equivalent DuckDB SQL string the
 driver hash-compares against. Keys without an oracle get the driver's weaker
@@ -17,7 +18,7 @@ import functools
 from collections.abc import Callable
 from typing import Optional
 
-from data_transform_spark.shares import release_all
+from data_transform_spark.shares import building, release_all
 
 QUERIES: dict[str, Callable] = {}
 ORACLES: dict[str, str] = {}
@@ -33,7 +34,8 @@ def register(name: str, oracle: Optional[str] = None):
         @functools.wraps(fn)
         def dispatch(spark, sf_dir):
             release_all()
-            return fn(spark, sf_dir)
+            with building():
+                return fn(spark, sf_dir)
 
         QUERIES[name] = dispatch
         if oracle is not None:

@@ -3,11 +3,18 @@
 A key body shares a frame when several branches of its plan read it —
 above all the broadcast crossJoin branches, which execute as separate jobs
 with no runtime exchange reuse, so an unshared frame is recomputed once per
-branch. Reuse is legal only WITHIN one build: every frame ``share`` returns
-is tracked, and the dispatch wrapper that ``registry.register`` stores in
-``QUERIES`` calls ``release_all`` at key entry. A repeated build therefore
-recomputes from the parquet inputs and can never hit its previous
-invocation's cache through CacheManager plan-matching.
+branch. Reuse is legal only WITHIN one build: the dispatch wrapper that
+``registry.register`` stores in ``QUERIES`` calls ``release_all`` at key
+entry and runs the key body inside ``building()``. A repeated build
+therefore recomputes from the parquet inputs and can never hit its
+previous invocation's cache through CacheManager plan-matching.
+
+A frame a dispatch returns is valid until the next dispatch, which frees
+every share its build made; a freed local checkpoint cannot be recomputed,
+so a later action on the frame fails. A frame from a direct call outside
+any dispatch (``api.py``, ``examples/``) stays valid: only its lazy
+persists are tracked (the next dispatch unpersists them and the frame
+recomputes them), and its eager checkpoints are left to GC.
 
 - ``share(df, eager=False)``: lazy ``persist`` (the cache fills during the
   key's single action), or, with ``eager=True``, an eager
@@ -22,6 +29,7 @@ invocation's cache through CacheManager plan-matching.
 - ``release(*frames)``: free the given frames now — for loops whose new
   checkpoint supersedes the old one.
 - ``release_all()``: free every tracked frame (key entry only).
+- ``building()``: one dispatched build, where eager shares are tracked.
 - ``fill(*thunks)`` / ``submit(thunk)``: run independent eager fills as
   concurrent Spark actions on one 4-worker driver-thread pool, so the
   scheduler back-fills idle cores across the fills' tails.
@@ -31,15 +39,18 @@ from __future__ import annotations
 
 import threading
 from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import contextmanager
 
 from pyspark import StorageLevel
 
 _FILL_THREAD = "share-fill"
 
-# Every frame share() returned and nothing has released yet. Fill threads
+# Every frame share() tracked and nothing has released yet. Fill threads
 # append to it too, so every change holds _LOCK.
 _HELD: list = []
 _LOCK = threading.Lock()
+# Dispatched builds running now; global, as fill threads share for them.
+_builds = 0
 _POOL = ThreadPoolExecutor(max_workers=4, thread_name_prefix=_FILL_THREAD)
 # Per-thread list of the frames the running fill thunk has shared (see fill).
 _made = threading.local()
@@ -51,15 +62,16 @@ class NestedFillError(RuntimeError):
 
 
 def share(df, eager: bool = False):
-    """Track ``df`` as a share frame of the current build and return the
-    frame to read from: ``df`` persisted (lazy), or its eager local
-    checkpoint."""
+    """Share ``df`` and return the frame to read from: ``df`` persisted
+    (lazy, always tracked), or its eager local checkpoint (tracked only
+    inside a dispatched build, so a direct call's result stays valid)."""
     if eager:
         df = df.localCheckpoint(eager=True)
     else:
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
-        _HELD.append(df)
+        if _builds or not eager:
+            _HELD.append(df)
     made = getattr(_made, "frames", None)
     if made is not None:
         made.append(df)
@@ -85,6 +97,18 @@ def release_all() -> None:
         _HELD.clear()
     for df in frames:
         _free(df)
+
+
+@contextmanager
+def building():
+    """Scope of one dispatched key build: eager checkpoints shared inside
+    it are tracked, so the next dispatch frees them."""
+    global _builds
+    _builds += 1
+    try:
+        yield
+    finally:
+        _builds -= 1
 
 
 def _free(df) -> None:

@@ -90,11 +90,25 @@ def test_raw_key_call_keeps_shares_dispatch_releases(spark, sf_dir):
     from data_transform_spark.operators.scans import scan_parquet
 
     QUERIES["scan_parquet"](spark, sf_dir)  # releases everything held
-    held = shares.share(spark.range(10), eager=True)
+    held = shares.share(spark.range(10))
     scan_parquet(spark, sf_dir)  # a nested key-in-key call
     assert shares._HELD == [held]
     QUERIES["scan_parquet"](spark, sf_dir)
     assert not shares._HELD
+
+
+def test_direct_build_survives_a_dispatch(spark, sf_dir):
+    """A frame from a direct key call (here resting on dedup's eager
+    connected-component checkpoints) still runs after a later dispatch
+    has released the tracked shares."""
+    from data_transform_spark.pipeline.dedup import dedup_near_survivors
+
+    before = _persistent_rdds(spark)
+    survivors = dedup_near_survivors(spark, sf_dir)
+    assert _persistent_rdds(spark) > before  # the build pinned checkpoints
+    QUERIES["scan_parquet"](spark, sf_dir)
+    fresh = QUERIES["dedup_near_survivors"](spark, sf_dir).collect()
+    assert survivors.collect() == fresh
 
 
 def test_repeated_dispatch_reuses_nothing(spark, sf_dir, monkeypatch):

@@ -49,6 +49,7 @@ _MUTABLE_STATE = {
     # build, so its repr is run-state-dependent (stable "[]" before the
     # first call, unstable after) and must never join the key's hash
     f"{_PKG}.shares._HELD",
+    f"{_PKG}.shares._builds",  # run state, like _HELD
 }
 
 # Constant leaves whose repr is deterministic across processes. Containers
