@@ -279,8 +279,16 @@ def main() -> None:
     names = [n for n in HEADLINE + OPTIONAL if n in qs]
 
     # JVM + whole-stage-codegen warm-up: run every query once at the smoke SF
-    # so sf0.1 timings measure execution, not one-time Janino compilation
-    # (the generated-code cache is keyed on source text, which is identical).
+    # so sf0.1 timings measure execution, not one-time Janino compilation.
+    # The generated-class cache is keyed on source text, which is mostly
+    # the same at both SFs, but it only helps while the classes are still
+    # cached: at Spark's default 100 entries the smoke pass (~1600 classes
+    # over the 77 keys its budget reached) had evicted them, and 14 sampled
+    # keys compiled 601 classes on their first sf0.1 rep. With the
+    # 1000-entry cap get_spark sets, the pass compiles ~1100 classes over
+    # all 88 keys and 14 sampled first reps compiled 83 (the earliest keys'
+    # classes and plans that change with the SF, e.g. the join strategy,
+    # still compile; 4-core VM).
     # Budgeted since r13 — this was the only unbounded phase, and a
     # contended run stretched the whole process to 565 s wall (r13
     # measurement); keys that miss the smoke pass still get their per-key
@@ -353,6 +361,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf else sf_dir,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     if steal_ticks:
         # ticks are USER_HZ (100/s) summed over all CPUs; 32 cores → 3200
@@ -419,16 +428,24 @@ def main() -> None:
     # STDOUT gets a COMPACT line (r14 VERDICT #1): the driver keeps only a
     # bounded stdout tail, and r13's full record (steal map + calib + wall)
     # overflowed it mid-line, so the round-over-round comparison got NO
-    # per-query numbers. The compact line carries exactly the contract
-    # fields (metric/value/unit/queries/sf) plus the tier-2 seconds —
-    # ~3 KB vs ~7 KB — while the full record (steal ticks, calibration
-    # probes, process wall) lives in bench_last.json, written above.
+    # per-query numbers. The compact line carries the contract fields
+    # (metric/value/unit/queries/sf), the core count, the tier-2 seconds
+    # and, so the stdout tail keeps the run's contention evidence (r15
+    # VERDICT #2), steal_total (steal ticks over the headline's timed reps)
+    # and calib_max_gemm (the slower gemm probe) — ~3 KB vs ~7 KB — while
+    # the full record (per-query steal ticks, calibration probes, process
+    # wall) lives in bench_last_<cpus>.json, written above.
+    calib = out["calib"]
     compact: dict = {
         "metric": out["metric"],
         "value": out["value"],
         "unit": out["unit"],
         "queries": out["queries"],
         "sf": out["sf"],
+        "cpus": out["cpus"],
+        "steal_total": sum(steal_ticks.values()) if steal_ticks else None,
+        "calib_max_gemm": max(calib["before"]["gemm_sec"],
+                              calib["after"]["gemm_sec"]),
         "tier2": {
             k: v
             for k, v in out["tier2"].items()
@@ -439,19 +456,19 @@ def main() -> None:
 
 
 def _write_record(out: dict) -> None:
-    """Persist the full per-query record to bench_last.json: the driver's
-    BENCH_r*.json keeps only a 2000-char stdout tail, which silently
-    truncates the head of the query table (r11 VERDICT #3)."""
+    """Persist the full per-query record to bench_last_<cpus>.json: the
+    driver's BENCH_r*.json keeps only a 2000-char stdout tail, which silently
+    truncates the head of the query table (r11 VERDICT #3). One file per
+    core count, so an 8-core run does not overwrite a 32-core one."""
+    name = f"bench_last_{out['cpus']}.json"
     try:
         with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "bench_last.json"),
+            os.path.join(os.path.dirname(os.path.abspath(__file__)), name),
             "w",
         ) as fh:
             fh.write(json.dumps(out) + "\n")
     except OSError as exc:
-        print(f"bench.py: could not write bench_last.json: {exc}",
-              file=sys.stderr)
+        print(f"bench.py: could not write {name}: {exc}", file=sys.stderr)
 
 
 if __name__ == "__main__":

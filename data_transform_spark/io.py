@@ -10,15 +10,24 @@ arrives as long nanoseconds and is truncated with
 ``timestamp_micros(ts div 1000)`` (integer div — ns-since-epoch ~1.7e18
 exceeds exact double range; matches DuckDB's ns->us truncation exactly),
 while a MICROS column already scans as timestamp_ntz and passes through.
+
+Fixture reads go through ``read_parquet``, which infers a local file's schema
+once per SparkContext and hands it to later reads: inference runs a one-task
+footer job (60-70 ms of CPU) on every ``spark.read.parquet`` call, and every
+key build reads its tables again. The schema is keyed on the file's size and
+mtime and on the confs that change the parquet-to-Spark type mapping, so a
+rewritten file or a flipped conf is inferred again. Every read still scans
+its rows; only the schema is reused.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = [
     "region",
@@ -36,6 +45,35 @@ TABLES = [
 
 def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
+
+
+# Confs that change how parquet types map to Spark types (events.ts reads as
+# long under nanosAsLong, as timestamp_ntz without it).
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the footer schema inferred once per
+    (SparkContext, file size/mtime, type-mapping confs). Anything that is not
+    a local regular file (a directory, a remote URI) infers as usual."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (spark.sparkContext, path, st.st_size, st.st_mtime_ns,
+           tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    schema = _SCHEMAS.get(key)
+    if schema is None:  # two fill threads may both infer: same value, no lock
+        schema = _SCHEMAS[key] = spark.read.parquet(path).schema
+    return spark.read.schema(schema).parquet(path)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -57,17 +95,17 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The NTZ->TIMESTAMP cast in normalize_event_ts is value-preserving only
-    # under a UTC session; configure_session tolerates conf.set failures, so
-    # re-assert here rather than silently shifting event timestamps on a
-    # non-UTC driver session (round-3 ADVICE).
+    # under a UTC session; direct callers (api.py, examples/) never run
+    # configure_session, so re-assert here rather than silently shifting
+    # event timestamps on a non-UTC session (round-3 ADVICE).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return normalize_event_ts(spark.read.parquet(path_of(sf_dir, "events")))
+    return normalize_event_ts(read_parquet(spark, path_of(sf_dir, "events")))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(path_of(sf_dir, name))
+    return read_parquet(spark, path_of(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

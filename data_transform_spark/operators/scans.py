@@ -14,7 +14,7 @@ import re
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, normalize_event_ts, path_of
+from data_transform_spark.io import load_table, normalize_event_ts, path_of, read_parquet
 from data_transform_spark.registry import register
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
@@ -90,7 +90,7 @@ def source_stream_file(spark, sf_dir):
     core Structured Streaming guarantee we rely on for every §2.I op.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     # the file source requires a directory: stage the fixture into scratch.
     # The staged copy is invalidated when the source mtime/size changes so a
     # regenerated fixture is never served stale (round-1 ADVICE.md).
@@ -778,7 +778,7 @@ def scan_metadata_cols(spark, sf_dir):
     shuffle and no extra scan: the values come from the scan's own file
     metadata. The oracle pins the grouped row count per (single-file
     fixture) file name."""
-    ev = spark.read.parquet(path_of(sf_dir, "events")).select(
+    ev = read_parquet(spark, path_of(sf_dir, "events")).select(
         F.col("_metadata.file_name").alias("file_name")
     )
     return ev.groupBy("file_name").agg(F.count(F.lit(1)).alias("n_rows"))

@@ -5,6 +5,11 @@ settable at runtime (``spark.conf.set``) — ``configure_session`` applies those
 ``get_spark`` builds a session for local tests/bench, sized by env vars:
 ``SPARK_GRAFT_CPUS`` (default 32) and shuffle partitions matched to cores.
 
+One entry of ``RUNTIME_CONFS`` is static: ``spark.sql.codegen.cache.maxEntries``
+takes effect only when a session is built with it (``get_spark``, or any
+builder that applies ``RUNTIME_CONFS``). ``configure_session`` skips it, so a
+session the driver hands in keeps Spark's 100-entry generated-class cache.
+
 At cluster scale the same code runs unchanged: shuffle partitions should be
 set to ~2-3x total executor cores (AQE coalesces down), and
 ``spark.sql.files.maxPartitionBytes`` left at 128m so a 100 TB scan yields
@@ -30,10 +35,20 @@ RUNTIME_CONFS = {
     # 100-field whole-stage-codegen limit and run interpreted. Round 2 raised
     # the limit to 300 to keep them codegen'd; re-measured round 3: Janino
     # compilation of the giant generated functions costs 10-40 s per fresh
-    # plan (expression IDs change the source, so the code cache misses) with
-    # NO steady-state win — simhash: stable 3.8-4.2 s at the default vs
-    # 4-15 s at 300. Keep the default limit; the wide aggs are fine
-    # interpreted because their per-row work is trivial bit math.
+    # plan with NO steady-state win — simhash: stable 3.8-4.2 s at the
+    # default vs 4-15 s at 300. Keep the default limit; the wide aggs are
+    # fine interpreted because their per-row work is trivial bit math.
+
+    # Static (build time only): the generated-class cache. It is keyed on
+    # the generated source, which a rebuilt plan of the same key repeats —
+    # a second dedup_simhash build compiles 0 classes — but it only hits if
+    # it holds every class a pass needs. Spark's default of 100 does not:
+    # one pipeline_e2e_llm_v4 build at sf0.1 compiles 310-340 classes and a
+    # perfbench llm_staged pass 180-200, so an LRU of 100 evicts each class
+    # before its next use and every build recompiles everything. 1000 holds
+    # ~3 of the largest builds; metaspace after v4 + sim_ann_ivfpq read
+    # 179 MB here vs 182 MB at 100.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # Fixture-tier setting (sf <= 0.1): the default 200 is pure stage overhead
     # at this size. Derived from SPARK_GRAFT_CPUS rather than pinned (r14,
     # guide §2 "scale-adaptive partitioning"): the driver also runs the bench
@@ -47,12 +62,11 @@ RUNTIME_CONFS = {
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply required runtime confs to an externally-provided session."""
+    """Apply the runtime-settable confs to an externally-provided session;
+    static ones (the codegen cache cap) only apply at session build."""
     for k, v in RUNTIME_CONFS.items():
-        try:
+        if spark.conf.isModifiable(k):
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build: proceed, loaders re-assert
     return spark
 
 

@@ -23,7 +23,7 @@ import uuid
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, normalize_event_ts, path_of
+from data_transform_spark.io import load_table, normalize_event_ts, path_of, read_parquet
 from data_transform_spark.operators.events import _SESSION_MOTIF_ORACLE
 from data_transform_spark.operators.scans import SCRATCH
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
@@ -76,7 +76,7 @@ def stage_events_dir(sf_dir: str) -> str:
 def events_stream(spark, sf_dir: str):
     """readStream over events; ts normalized to us whatever the fixture dtype."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     return normalize_event_ts(
         spark.readStream.schema(raw_schema).parquet(stage_events_dir(sf_dir))
     )
@@ -228,7 +228,7 @@ def stream_watermark(spark, sf_dir):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = stage_events_chunks(sf_dir, plant_late=True)
 
-    raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
@@ -564,7 +564,7 @@ def docs_stream(spark, sf_dir: str):
     """readStream over the documents table — the ingestion shape of a
     continuously-crawled corpus (files land, the curation stream picks
     them up)."""
-    raw_schema = spark.read.parquet(path_of(sf_dir, "documents")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "documents")).schema
     return spark.readStream.schema(raw_schema).parquet(stage_docs_dir(sf_dir))
 
 

@@ -212,47 +212,27 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
     """Keys audited for eager driver-side actions (round-4 VERDICT #2-3)
     must build their plan WITHOUT running any Spark job: the n_docs /
     orphan-count scalars ride in-plan as broadcast 1-row aggregates. At
-    100 TB an eager .count() at plan-build time is an extra full pass."""
+    100 TB an eager .count() at plan-build time is an extra full pass.
+    Each fixture table is loaded once first, so its footer schema is
+    cached and a build runs no schema-inference job either."""
     from data_transform_spark import api
-    from data_transform_spark.io import load_table
+    from data_transform_spark.io import load_table, load_tables
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def _build_api_tfidf():
-        api.tfidf(load_table(spark, sf_dir, "documents"))
-
+    load_tables(spark, sf_dir)
     builders = {
-        "pipeline_e2e": None,
-        "dq_checks": None,
-        "text_tfidf": None,
-        "pipeline_funnel": None,
+        "pipeline_e2e": lambda: QUERIES["pipeline_e2e"](spark, sf_dir),
+        "dq_checks": lambda: QUERIES["dq_checks"](spark, sf_dir),
+        "text_tfidf": lambda: QUERIES["text_tfidf"](spark, sf_dir),
+        "pipeline_funnel": lambda: QUERIES["pipeline_funnel"](spark, sf_dir),
         # public api surface (r5 VERDICT #2): same no-eager-job contract
-        "api.tfidf": _build_api_tfidf,
+        "api.tfidf": lambda: api.tfidf(load_table(spark, sf_dir, "documents")),
     }
-    for key, builder in builders.items():
-        group = f"plan-build-{key}"
-        sc.setJobGroup(group, "plan-build eager-job guard")
-        try:
-            if builder is None:
-                QUERIES[key](spark, sf_dir)  # build only — no action
-            else:
-                builder()
-        finally:
-            sc.setJobGroup("", "")
-        # Spark runs a 1-task "parquet at ..." footer job per read call for
-        # schema inference — metadata-only, tolerated. Anything else (a
-        # count/collect stage, a shuffle) is an eager driver-side action.
-        for jid in tracker.getJobIdsForGroup(group):
-            info = tracker.getJobInfo(jid)
-            for sid in info.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is None:
-                    continue
-                assert si.name.startswith("parquet at") and si.numTasks == 1, (
-                    f"{key} ran eager job {jid} stage '{si.name}' "
-                    f"({si.numTasks} tasks) at plan-build time"
-                )
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    for key, build in builders.items():
+        before = int(dag.nextJobId())
+        build()  # build only — no action
+        ran = int(dag.nextJobId()) - before
+        assert ran == 0, f"{key} ran {ran} Spark job(s) at plan-build time"
 
 
 def test_decontaminate_broadcasts_bench_grams(spark, sf_dir):

@@ -18,6 +18,10 @@ def _persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _held_ids() -> list[int]:
     return [id(df) for df in shares._HELD]
 
@@ -103,9 +107,11 @@ def test_direct_build_survives_a_dispatch(spark, sf_dir):
     has released the tracked shares."""
     from data_transform_spark.pipeline.dedup import dedup_near_survivors
 
-    before = _persistent_rdds(spark)
+    # compared by id, not by count: the context cleaner may unpersist
+    # earlier tests' RDDs while this build runs
+    before = _persistent_rdd_ids(spark)
     survivors = dedup_near_survivors(spark, sf_dir)
-    assert _persistent_rdds(spark) > before  # the build pinned checkpoints
+    assert _persistent_rdd_ids(spark) - before  # the build pinned checkpoints
     QUERIES["scan_parquet"](spark, sf_dir)
     fresh = QUERIES["dedup_near_survivors"](spark, sf_dir).collect()
     assert survivors.collect() == fresh

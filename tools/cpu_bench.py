@@ -9,6 +9,10 @@ measures WORK DONE, which co-tenant contention inflates far less than
 wall clock. Use the cpu column to A/B algorithm changes on a noisy
 host; confirm with wall in a quiet window before recording bench
 claims (BASELINE.md protocol).
+
+Each rep also prints the Janino classes compiled and the Spark jobs run
+during it (deltas of ``CodegenMetrics`` and ``DAGScheduler.nextJobId``), so
+a profile shows whether a rep paid code generation or extra jobs.
 """
 
 from __future__ import annotations
@@ -73,20 +77,31 @@ def main() -> None:
     from data_transform_spark.session import get_spark
 
     spark = get_spark("cpu-profile")
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+
+    def counters() -> tuple[int, int]:
+        return (codegen.METRIC_COMPILATION_TIME().getCount(),
+                int(dag.nextJobId()))
+
     qs = em.queries()
     warm = os.path.isdir(args.warm_sf) and os.path.abspath(args.warm_sf) != os.path.abspath(args.sf)
     for key in args.keys:
         if warm:
             qs[key](spark, args.warm_sf).count()
-        walls, cpus = [], []
+        walls, cpus, compiles, jobs = [], [], [], []
         for _ in range(args.n):
-            c0, t0 = subtree_cpu_sec(), time.time()
+            (k0, j0), c0, t0 = counters(), subtree_cpu_sec(), time.time()
             qs[key](spark, args.sf).count()
             walls.append(round(time.time() - t0, 3))
             cpus.append(round(subtree_cpu_sec() - c0, 2))
+            k1, j1 = counters()
+            compiles.append(k1 - k0)
+            jobs.append(j1 - j0)
         print(
             f"{key}: wall={walls} (med {statistics.median(walls)}) "
-            f"cpu={cpus} (med {statistics.median(cpus)})",
+            f"cpu={cpus} (med {statistics.median(cpus)}) "
+            f"compiles={compiles} jobs={jobs}",
             flush=True,
         )
 

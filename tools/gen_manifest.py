@@ -50,6 +50,7 @@ _MUTABLE_STATE = {
     # first call, unstable after) and must never join the key's hash
     f"{_PKG}.shares._HELD",
     f"{_PKG}.shares._builds",  # run state, like _HELD
+    f"{_PKG}.io._SCHEMAS",  # footer schemas cached by earlier reads
 }
 
 # Constant leaves whose repr is deterministic across processes. Containers
