@@ -457,7 +457,7 @@ def main() -> None:
 
 def _write_record(out: dict) -> None:
     """Persist the full per-query record to bench_last_<cpus>.json: the
-    driver's BENCH_r*.json keeps only a 2000-char stdout tail, which silently
+    recorded BENCH_r*.json keeps only a 2000-char stdout tail, which silently
     truncates the head of the query table (r11 VERDICT #3). One file per
     core count, so an 8-core run does not overwrite a 32-core one."""
     name = f"bench_last_{out['cpus']}.json"

@@ -8,7 +8,7 @@ settable at runtime (``spark.conf.set``) — ``configure_session`` applies those
 One entry of ``RUNTIME_CONFS`` is static: ``spark.sql.codegen.cache.maxEntries``
 takes effect only when a session is built with it (``get_spark``, or any
 builder that applies ``RUNTIME_CONFS``). ``configure_session`` skips it, so a
-session the driver hands in keeps Spark's 100-entry generated-class cache.
+session built elsewhere keeps Spark's 100-entry generated-class cache.
 
 At cluster scale the same code runs unchanged: shuffle partitions should be
 set to ~2-3x total executor cores (AQE coalesces down), and
