@@ -9,7 +9,11 @@ pure-SQL oracle twin.
 
 from __future__ import annotations
 
+import warnings
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import functions as F
 
@@ -87,21 +91,33 @@ def udf_pandas_agg(spark, sf_dir):
     """,
 )
 def udf_grouped_map(spark, sf_dir):
-    """applyInPandas per-group transform: z-normalize value within each user."""
+    """applyInArrow per-group transform: z-normalize value within each user.
 
-    def znorm(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf["value"]
-        z = ((v - v.mean()) / v.std(ddof=1)).round(6)
-        return pd.DataFrame(
-            {"user_id": pdf["user_id"], "event_id": pdf["event_id"], "znorm": z}
+    The group arrives as a pyarrow Table and numpy does the arithmetic, so
+    no pandas frame is built either way. nanmean/nanstd skip NULLs as
+    pandas' mean/std do, and ``from_pandas=True`` turns the NaN of a
+    one-row, all-NULL or constant group into NULL, as the pandas
+    conversion did."""
+
+    def znorm(tbl: pa.Table) -> pa.Table:
+        v = tbl.column("value").to_numpy(zero_copy_only=False)
+        with warnings.catch_warnings(), np.errstate(divide="ignore", invalid="ignore"):
+            warnings.simplefilter("ignore", RuntimeWarning)
+            z = np.round((v - np.nanmean(v)) / np.nanstd(v, ddof=1), 6)
+        return pa.table(
+            {
+                "user_id": tbl.column("user_id"),
+                "event_id": tbl.column("event_id"),
+                "znorm": pa.array(z, from_pandas=True),
+            }
         )
 
     ev = load_table(spark, sf_dir, "events")
-    # Measured round 4: an explicit select("user_id","event_id","value")
-    # before the groupBy is ~15% SLOWER here (A/B, 5 reps each direction) —
-    # the extra projection adds a row-copy step without reducing Arrow
-    # transfer, so the straightforward form below is also the fast one.
-    return ev.groupBy("user_id").applyInPandas(
+    # Measured round 4 on the applyInPandas form: an explicit
+    # select("user_id","event_id","value") before the groupBy was ~15%
+    # SLOWER (A/B, 5 reps each direction) — the extra projection added a
+    # row-copy step without reducing Arrow transfer.
+    return ev.groupBy("user_id").applyInArrow(
         znorm, "user_id long, event_id long, znorm double"
     )
 

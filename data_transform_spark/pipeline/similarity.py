@@ -24,6 +24,9 @@ Scale ladder for 100 TB:
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import numpy as np
 
 from pyspark.sql import Window
@@ -463,37 +466,94 @@ def _md5_seeds(e, k: int):
     )
 
 
+def _sqdist(x, c):
+    """(len(x), len(c)) squared euclidean distances, the per-dimension
+    squares summed in dimension order — the sequential fold
+    ``F.aggregate(zip_with(...), 0.0, s + v)`` runs in Spark, so every
+    distance, and so every argmin, is bit-identical to the in-plan one."""
+    sq = x[:, None, :] - c[None, :, :]
+    sq *= sq
+    dist = np.zeros(sq.shape[:2])
+    for j in range(sq.shape[2]):
+        dist += sq[:, :, j]
+    return dist
+
+
+def _nearest(x, c):
+    """Row index of each vector's nearest centroid, ordered like Spark's
+    ``min_by(..., struct(dist, c_id))``: the smallest distance, NaN after
+    every number, ties to the first (lowest c_id) row."""
+    dist = _sqdist(x, c)
+    nan = np.isnan(dist)
+    return np.lexsort((np.where(nan, 0.0, dist), nan), axis=-1)[:, 0]
+
+
+def _lloyd(x, k: int, iters: int):
+    """Deterministic k-means over an md5-rank-ordered sample ``x`` (n × d):
+    seeds are its first ``k`` rows (c_id = row rank), then ``iters`` Lloyd
+    passes — nearest centroid by ``_nearest``, each surviving cluster's
+    mean (sum over members / count, as Spark's avg), and a cluster left
+    with no members drops out, as it does from a grouped mean. Returns
+    (c_ids, centroids) of the surviving clusters in c_id order."""
+    c_ids = np.arange(min(k, len(x)))
+    cent = x[: len(c_ids)].copy()
+    for _ in range(iters if len(x) else 0):
+        a = _nearest(x, cent)
+        sums = np.zeros_like(cent)
+        np.add.at(sums, a, x)
+        size = np.bincount(a, minlength=len(cent))
+        keep = size > 0
+        c_ids, cent = c_ids[keep], sums[keep] / size[keep, None]
+    return c_ids, cent
+
+
+def _fit_sample(e):
+    """The training sample as an md5-rank-ordered (n × d) float64 matrix,
+    collected once to the driver: ANN_TRAIN_CAP bounds it at any corpus
+    size, so each Lloyd fit on it is driver-sized work (FAISS trains the
+    same way), not a chain of Spark jobs."""
+    rows = _train_sample(e).collect()
+    rows.sort(
+        key=lambda r: (hashlib.md5(str(r.vec_id).encode()).hexdigest(), r.vec_id)
+    )
+    embs = [r.emb for r in rows]
+    if not embs:
+        return np.zeros((0, 0))
+    if any(v is None or None in v or len(v) != len(embs[0]) for v in embs):
+        raise ValueError(
+            "ANN quantizer fit: the training sample needs non-NULL vectors "
+            "of one length with no NULL element"
+        )
+    return np.array(embs, dtype=np.float64)
+
+
+def _literal_table(spark, rows: list, ddl: str):
+    """A small driver-side table as ONE literal: ``from_json`` of the
+    ``json.dumps`` text under a one-row range. It plans no Python worker
+    (``createDataFrame`` would ship the rows through one) and has no
+    lineage, so consumers re-read it for free; json round-trips every
+    float64 exactly."""
+    table = F.from_json(F.lit(json.dumps(rows)), f"array<struct<{ddl}>>")
+    return spark.range(0, 1, 1, 1).select(F.explode(table).alias("r")).select("r.*")
+
+
 def ivf_index(e):
-    """Build an IVF coarse quantizer: deterministic seed pick (md5-ranked
-    vec_ids) + IVF_ITERS Lloyd passes, all as DataFrame ops. The Lloyd fit
-    runs on the bounded _train_sample (ANN_TRAIN_CAP md5-prefix vectors);
-    the final list assignment covers the FULL corpus. Returns
-    (centroids, assignments) — the inverted-list structure."""
-    train = _train_sample(e)
-    # seeds are the md5-rank first IVF_K — a prefix of the training sample
-    # by construction (the sample is itself an md5-rank prefix)
-    seeds = _md5_seeds(train, IVF_K).select("c_id", F.col("emb").alias("c_emb"))
-    cent = seeds
-    for _ in range(IVF_ITERS):
-        assign = _nearest_centroid(
-            train.select("vec_id", "emb"), cent, "vec_id", "c_id", keep_cols=("emb",)
-        )
-        cent = (
-            assign.select("c_id", F.posexplode("emb").alias("pos", "v"))
-            .groupBy("c_id", "pos")
-            .agg(F.avg("v").alias("cv"))
-            .groupBy("c_id")
-            .agg(F.sort_array(F.collect_list(F.struct("pos", "cv"))).alias("pc"))
-            .select("c_id", F.col("pc.cv").alias("c_emb"))
-        )
-    # r14 (guide §5): same sharing argument as _pq_train_encode — the
-    # K-row centroid table and the N-row assignment feed several
-    # broadcast-separated consumers (probe LUT, residual build, list
-    # scans, shape counts), each of which would otherwise replay the
-    # Lloyd chain. Eager localCheckpoint since the r14 optimization
-    # round (see _pq_train_encode — the lineage-truncation rationale and
-    # the subtree-CPU A/B: sim_ann_ivf 18.4 -> 11.5 CPU-s).
-    cent = share(cent, eager=True)
+    """Build an IVF coarse quantizer: IVF_K md5-ranked seeds + IVF_ITERS
+    Lloyd passes fit on the driver over the bounded _train_sample
+    (``_lloyd``), returned as a literal centroid table; the list
+    assignment of the FULL corpus runs in Spark. Returns
+    (centroids (c_id, c_emb), assignments (vec_id, list_id)) — the
+    inverted-list structure."""
+    c_ids, cent = _lloyd(_fit_sample(e), IVF_K, IVF_ITERS)
+    cent = _literal_table(
+        e.sparkSession,
+        [{"c_id": int(c), "c_emb": v.tolist()} for c, v in zip(c_ids, cent)],
+        "c_id:int,c_emb:array<double>",
+    )
+    # Eager: the N-row assignment feeds several broadcast-separated
+    # consumers (probe lists, residual build, list scans, shape counts)
+    # that would each replay the corpus scan (r14 subtree-CPU A/B:
+    # sim_ann_ivf 18.4 -> 11.5 CPU-s).
     assign = share(
         _nearest_centroid(e.select("vec_id", "emb"), cent, "vec_id", "list_id"),
         eager=True,
@@ -561,40 +621,44 @@ def _ann_recall_summary(ann, exact_f, recall_bound: float):
     against the exact top-k. Measured recall floors across sf0.001/0.01/0.1
     are recorded in the key docstrings.
 
-    r14 (guide §2.4/§5): ``ann`` and the exact pairs each feed TWO
-    branches (their own count + the hit join), and the three 1-row frames
-    meet as broadcast crossJoins — which execute as separate broadcast
-    jobs where AQE's runtime exchange reuse does NOT fire (the e2e
-    measurement: ReusedExchange=0 across broadcast branches). Without
-    sharing, every ANN key re-ran its ENTIRE index build + serve
-    pipeline and the brute-force check twice each. Both frames are
-    ≤N_QUERIES×TOPK rows. Eager localCheckpoints since the r14
-    optimization round: their lineage is the ENTIRE serve pipeline, and
-    the lazy persist's consumers serialized it into every count-branch
-    task (the v3 deser/GC mechanism, OPTIMIZATION_r14.md wave 4/5 —
-    subtree-CPU A/B: lsh 14.6 -> 10.0 CPU-s from this change alone).
+    Both pair frames are eager checkpoints of at most N_QUERIES×TOPK rows
+    (their lineage is the whole serve pipeline or the brute-force scan, so
+    the action never replays it), and the counts come from ONE aggregate
+    over their tagged union: per (query, neighbor) pair the ANN and exact
+    multiplicities, then n_results = Σ ann, n_queries = distinct queries
+    with an ANN row, n_exact = Σ exact and n_hit = Σ ann·exact over
+    non-NULL pairs — the row count of the exact ⋈ ANN pair join,
+    duplicates included.
 
     ``exact_f`` is the Future of _overlapped_exact_fill, which the caller
     submits BEFORE building its index, so the brute-force pass overlaps
     the index work (r15, guide §2.6); it is resolved after the ANN fill."""
     ann_pairs = share(ann.select("query_id", "neighbor_id"), eager=True)
     exact_pairs = exact_f.result()
-    counts = ann_pairs.agg(
-        F.count(F.lit(1)).alias("n_results"),
-        F.countDistinct("query_id").alias("n_queries"),
-    )
-    n_exact = exact_pairs.agg(F.count(F.lit(1)).alias("n_exact"))
-    n_hit = exact_pairs.join(ann_pairs, ["query_id", "neighbor_id"]).agg(
-        F.count(F.lit(1)).alias("n_hit")
-    )
-    return (
-        counts.crossJoin(n_exact)
-        .crossJoin(n_hit)
-        .select(
-            "n_results",
-            "n_queries",
-            (F.col("n_hit") >= recall_bound * F.col("n_exact")).alias("recall_ok"),
+    pairs = (
+        ann_pairs.withColumn("_ann", F.lit(True))
+        .unionByName(exact_pairs.withColumn("_ann", F.lit(False)))
+        .groupBy("query_id", "neighbor_id")
+        .agg(
+            F.count_if("_ann").alias("na"),
+            F.count_if(~F.col("_ann")).alias("nx"),
         )
+    )
+    # an equi-join never matches a NULL key, so neither may n_hit
+    keyed = F.col("query_id").isNotNull() & F.col("neighbor_id").isNotNull()
+    return pairs.agg(
+        F.coalesce(F.sum("na"), F.lit(0)).alias("n_results"),
+        F.count_distinct(F.when(F.col("na") > 0, F.col("query_id"))).alias(
+            "n_queries"
+        ),
+        F.coalesce(F.sum("nx"), F.lit(0)).alias("n_exact"),
+        F.coalesce(
+            F.sum(F.when(keyed, F.col("na") * F.col("nx"))), F.lit(0)
+        ).alias("n_hit"),
+    ).select(
+        "n_results",
+        "n_queries",
+        (F.col("n_hit") >= recall_bound * F.col("n_exact")).alias("recall_ok"),
     )
 
 
@@ -759,51 +823,34 @@ PQ_SHORTLIST = 100  # ADC shortlist re-ranked exactly
 def _pq_train_encode(e):
     """Train per-subspace PQ codebooks and encode every vector.
 
-    All PQ_M subspaces train TOGETHER in one frame keyed by (vec_id, m):
-    the BOUNDED training sample (ANN_TRAIN_CAP md5-prefix vectors — see
-    _train_sample; r8 VERDICT #2) explodes into cap×M subvector rows for
-    the Lloyd fit, seeds are the md5-ranked first PQ_KS vec_ids (the
-    ivf_index recipe, reused per subspace), and each Lloyd pass is one
-    broadcast join against the M×PQ_KS codebook + one grouped mean — so
-    the build costs M-fold the 8-dim arithmetic of one k-means over the
-    sample, not M sequential jobs over the corpus. ENCODING then covers
-    the full corpus (N×M code rows). Ties break (dist, c_id), making
-    assignments deterministic. Works on any (vec_id, emb) frame — raw
-    embeddings (sim_ann_pq) or IVF residuals (sim_ann_ivfpq). Returns
-    (codebooks (m, c_id, c_sub), codes (vec_id, m, code))."""
-    train = _train_sample(e)
-    sub = _subvectors(e)
-    sub_train = _subvectors(train)
-    # seeds are the md5-rank first PQ_KS — a prefix of the training sample
-    seeds = _md5_seeds(train, PQ_KS).select("vec_id", "c_id")
-    cent = sub_train.join(seeds, "vec_id").select(
-        "m", "c_id", F.col("sub").alias("c_sub")
+    The fit runs on the driver over the BOUNDED training sample
+    (ANN_TRAIN_CAP md5-prefix vectors — see _train_sample; r8 VERDICT #2):
+    each of the PQ_M contiguous PQ_DSUB-dim blocks gets its own ``_lloyd``
+    (the ivf_index recipe — seeds are the md5-ranked first PQ_KS vectors,
+    ties break (dist, c_id)), and the M×PQ_KS codebook comes back as one
+    literal table. ENCODING covers the full corpus in Spark (N×M code
+    rows). Works on any (vec_id, emb) frame — raw embeddings (sim_ann_pq)
+    or IVF residuals (sim_ann_ivfpq). Returns (codebooks (m, c_id, c_sub),
+    codes (vec_id, m, code))."""
+    x = _fit_sample(e)
+    rows = []
+    for m in range(PQ_M):
+        block = x[:, m * PQ_DSUB : (m + 1) * PQ_DSUB]
+        c_ids, cent = _lloyd(block, PQ_KS, PQ_ITERS)
+        rows += [
+            {"m": m, "c_id": int(c), "c_sub": v.tolist()} for c, v in zip(c_ids, cent)
+        ]
+    cent = _literal_table(
+        e.sparkSession, rows, "m:int,c_id:int,c_sub:array<double>"
     )
-    # Lloyd fit on the BOUNDED sample; encoding below covers the full corpus
-    for _ in range(PQ_ITERS):
-        cent = (
-            _pq_assign(cent, sub_train)
-            .select("m", "c_id", F.posexplode("sub").alias("pos", "v"))
-            .groupBy("m", "c_id", "pos")
-            .agg(F.avg("v").alias("cv"))
-            .groupBy("m", "c_id")
-            .agg(F.sort_array(F.collect_list(F.struct("pos", "cv"))).alias("pc"))
-            .select("m", "c_id", F.col("pc.cv").alias("c_sub"))
-        )
-    # r14 (guide §3.3/§5): the trained codebook (M×Ks rows) and the code
-    # table (N×M narrow rows) are each consumed by several
-    # broadcast-separated branches downstream (LUT build + shape counts;
-    # ADC scan + shape counts) where runtime exchange reuse does not
-    # fire. EAGER localCheckpoint since the r14 optimization round: a
-    # lazily-persisted frame's consumers still serialize the whole Lloyd
-    # lineage into every task binary (the pipeline_e2e_llm_v3 deser/GC
-    # measurement, OPTIMIZATION_r14.md wave 4/5) — the wall-based wave-2
-    # A/B that kept lazy persist could not see that through host noise;
-    # the subtree-CPU A/B did: sim_ann_pq 30.6 -> 12.8 CPU-s, ivfpq
-    # 51.9 -> 15.8.
-    cent = share(cent, eager=True)
+    # Eager: the N×M code table feeds the ADC scan and the shape counts,
+    # broadcast-separated branches where exchange reuse does not fire; a
+    # lazy persist would also serialize the encode lineage into every
+    # consumer task (r14 subtree-CPU A/B, OPTIMIZATION_r14.md wave 4/5).
     codes = share(
-        _pq_assign(cent, sub).select("vec_id", "m", F.col("c_id").alias("code")),
+        _pq_assign(cent, _subvectors(e)).select(
+            "vec_id", "m", F.col("c_id").alias("code")
+        ),
         eager=True,
     )
     return cent, codes
@@ -885,10 +932,9 @@ def sim_ann_pq_topk(spark, sf_dir):
 
 def _pq_topk(e, cent, codes):
     """ADC shortlist + exact re-rank over an already-trained (cent, codes)
-    index — split from sim_ann_pq_topk so the registered summary key can
-    train ONCE and share the index subtree between the recall check and
-    the shape counts (identical subtrees let Catalyst reuse exchanges
-    instead of re-running the Lloyd passes)."""
+    index — split from sim_ann_pq_topk so the registered summary key fits
+    ONCE and the recall check and the shape counts read the same literal
+    codebook and checkpointed codes."""
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
@@ -1020,8 +1066,8 @@ def _ivfpq_topk(e, cent, books, codes_l, k: int | None = None):
     (list_id, m, code) equi-join — at 100 TB that is probes/K of a
     64×-compressed table, the only corpus-sized input the query touches.
     Split from the registered key so training runs ONCE and the recall
-    and shape branches share the index subtree (exchange reuse — the
-    sim_ann_pq lesson)."""
+    and shape branches read the same fitted index (the sim_ann_pq
+    split)."""
     q = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )

@@ -669,8 +669,8 @@ def test_knn_similarity_topk_is_take_ordered(spark, sf_dir):
 
 
 def test_md5_seed_cut_is_take_ordered(spark, sf_dir):
-    """r8 VERDICT nit: the ANN index seed pick (first k vec_ids by md5
-    rank, shared by IVF and PQ training) must cut the corpus with
+    """r8 VERDICT nit: the in-plan k-means seed pick (first k vec_ids by
+    md5 rank, used by the semantic k-means fit) must cut the corpus with
     orderBy().limit(k) — TakeOrderedAndProject — so the only window in
     the seed plan runs over the ALREADY k-row frame, never corpus-wide."""
     from pyspark.sql import functions as F

@@ -1,54 +1,43 @@
 """Offline numpy twin of the Spark IVF-PQ recipe — the measurement tool
 behind SCALING.md "Round-9 IVF-PQ composition + sampled training".
 
-Mirrors pipeline/similarity.py exactly: md5-ranked seeds, fixed Lloyd
-passes, (dist, c_id) tie-breaks, 6dp rounding where the Spark side
-rounds — Spark reproduced these numbers EXACTLY at every SF (r8 LSH/PQ
-and r9 IVF-PQ all matched). Grid: probes x train-cap x SF ->
-recall@5 after exact re-rank + scanned fraction. Run:
+The quantizer fits are the engine's own driver-side kernel
+(pipeline/similarity.py ``_lloyd``: md5-ranked seeds, fixed Lloyd passes,
+(dist, c_id) tie-breaks, empty clusters dropped), and assignments use its
+``_nearest``; the query path rounds to 6dp where the Spark side rounds.
+Grid: probes x train-cap x SF -> recall@5 after exact re-rank + scanned
+fraction. Run:
     python tools/ivfpq_grid.py
 (~4 min; sf0.1 dominates). Tune IVFPQ_PROBES/ANN_TRAIN_CAP from the
 printed curve, then re-verify the registered keys' recall bounds.
 """
 import hashlib
+import os
 import sys
 
 import duckdb
 import numpy as np
 
-IVF_K = 16
-IVF_ITERS = 2
-PQ_M = 8
-PQ_DSUB = 8
-PQ_KS = 16
-PQ_ITERS = 2
-SHORTLIST = 100
-N_QUERIES = 20
-TOPK = 5
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from data_transform_spark.pipeline.similarity import (  # noqa: E402
+    IVF_ITERS,
+    IVF_K,
+    N_QUERIES,
+    PQ_DSUB,
+    PQ_ITERS,
+    PQ_KS,
+    PQ_M,
+    PQ_SHORTLIST,
+    TOPK,
+    _lloyd,
+    _nearest,
+    _sqdist,
+)
 
 
 def md5_rank_ids(ids):
     return sorted(ids, key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
-
-
-def lloyd(X, ids, k, iters):
-    """Seeds = first k ids by md5 rank; fixed Lloyd passes; ties (dist, c_id)."""
-    order = md5_rank_ids(ids)
-    id2row = {v: r for r, v in enumerate(ids)}
-    cent = X[[id2row[v] for v in order[:k]]].astype(float).copy()
-    for _ in range(iters):
-        d = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-        a = d.argmin(1)  # argmin takes lowest index on ties == (dist, c_id)
-        for c in range(k):
-            m = a == c
-            if m.any():
-                cent[c] = X[m].mean(0)
-    return cent
-
-
-def assign(X, cent):
-    d = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-    return d.argmin(1)
 
 
 def run(sf, probes, train_cap):
@@ -70,42 +59,31 @@ def run(sf, probes, train_cap):
         cand.sort()
         exact[q] = {j for _, j in cand[:TOPK]}
 
-    # training sample: first train_cap ids by md5 rank
-    order = md5_rank_ids(ids)
-    tr_ids = set(order[: min(train_cap, N)])
-    tr_mask = np.array([i in tr_ids for i in ids])
-    Xt, idt = X[tr_mask], [i for i in ids if i in tr_ids]
+    # training sample: first train_cap ids by md5 rank, in that order
+    id2row = {v: r for r, v in enumerate(ids)}
+    tr_rows = [id2row[v] for v in md5_rank_ids(ids)[: min(train_cap, N)]]
 
     # IVF on the sample, assign full corpus
-    cent = lloyd(Xt, idt, IVF_K, IVF_ITERS)
-    lists = assign(X, cent)
+    _, cent = _lloyd(X[tr_rows], IVF_K, IVF_ITERS)
+    lists = _nearest(X, cent)
 
     # PQ on residuals of the sample
     R = X - cent[lists]
-    Rt = R[tr_mask]
-    books = []
-    for m in range(PQ_M):
-        sub = Rt[:, m * PQ_DSUB : (m + 1) * PQ_DSUB]
-        books.append(lloyd(sub, idt, PQ_KS, PQ_ITERS))
+    blocks = [slice(m * PQ_DSUB, (m + 1) * PQ_DSUB) for m in range(PQ_M)]
+    books = [_lloyd(R[tr_rows, b], PQ_KS, PQ_ITERS)[1] for b in blocks]
     codes = np.stack(
-        [
-            assign(R[:, m * PQ_DSUB : (m + 1) * PQ_DSUB], books[m])
-            for m in range(PQ_M)
-        ],
-        axis=1,
+        [_nearest(R[:, b], books[m]) for m, b in enumerate(blocks)], axis=1
     )  # N x M
 
     # query: probe nearest lists, ADC over residual LUTs, re-rank exact
     hits = scanned = 0
     for q in range(N_QUERIES):
-        qd = ((cent - X[q]) ** 2).sum(1)
+        qd = _sqdist(X[q : q + 1], cent)[0]
         pl = np.argsort(qd, kind="stable")[:probes]
-        lut = np.zeros((len(pl), PQ_M, PQ_KS))
-        for li, l in enumerate(pl):
-            r = X[q] - cent[l]
-            for m in range(PQ_M):
-                sub = r[m * PQ_DSUB : (m + 1) * PQ_DSUB]
-                lut[li, m] = ((books[m] - sub) ** 2).sum(1)
+        lut = [
+            [_sqdist((X[q] - cent[l])[None, b], books[m])[0] for m, b in enumerate(blocks)]
+            for l in pl
+        ]
         members = [
             (li, j)
             for li, l in enumerate(pl)
@@ -114,11 +92,11 @@ def run(sf, probes, train_cap):
         ]
         scanned += len(members)
         adc = [
-            (round(sum(lut[li, m, codes[j, m]] for m in range(PQ_M)), 6), j)
+            (round(sum(lut[li][m][codes[j, m]] for m in range(PQ_M)), 6), j)
             for li, j in members
         ]
         adc.sort()
-        short = [j for _, j in adc[:SHORTLIST]]
+        short = [j for _, j in adc[:PQ_SHORTLIST]]
         s = (X[short] @ X[q]) / (norms[short] * np.linalg.norm(X[q]) + 1e-300)
         s = np.round(s, 6)
         rer = sorted(zip(-s, short))
