@@ -18,12 +18,19 @@ key build reads its tables again. The schema is keyed on the file's size and
 mtime and on the confs that change the parquet-to-Spark type mapping, so a
 rewritten file or a flipped conf is inferred again. Every read still scans
 its rows; only the schema is reused.
+
+Every scratch store (a history digest store, an ANN index, a staged scan or
+stream input) is built through ``stage``: its directory name is its cache
+key, and it is published whole or not at all.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
 import stat
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +52,70 @@ TABLES = [
 
 def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
+
+
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+MARKER = "_STAGED"  # written by stage() once a build has returned
+
+
+def fingerprint(path: str) -> str:
+    """Short content fingerprint of a parquet file-or-directory: sha256 of
+    every member file's (relpath, size, mtime_ns), driver-side metadata only.
+    It changes whenever the fixture is regenerated, so a store keyed on it
+    can never alias a stale layout to fresh source data."""
+    h = hashlib.sha256()
+    if os.path.isdir(path):
+        for dirpath, _dirnames, filenames in sorted(os.walk(path)):
+            for fname in sorted(filenames):
+                st = os.stat(os.path.join(dirpath, fname))
+                rel = os.path.relpath(os.path.join(dirpath, fname), path)
+                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
+    elif os.path.exists(path):
+        st = os.stat(path)
+        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:12]
+
+
+def store_dir(name: str, sf_dir: str, table: str) -> str:
+    """Where store ``name`` built from fixture ``table`` lives: the SF
+    directory's basename plus the table's fingerprint, so a store built for
+    one SF or one state of the fixture is never served for another."""
+    sf = os.path.basename(sf_dir.rstrip("/"))
+    return f"{SCRATCH}/{name}_{sf}_{fingerprint(path_of(sf_dir, table))}"
+
+
+def stage(name: str, sf_dir: str, table: str, build) -> str:
+    """Return ``store_dir(name, sf_dir, table)``, building it on a miss.
+
+    A hit is a directory holding ``MARKER``. On a miss ``build(tmp)``
+    creates ``tmp``, a per-process temp sibling, and writes the store into
+    it; the marker is written after it returns, and the sibling is renamed
+    into place. A
+    reader therefore sees no directory or a complete one, never a partial
+    write. A lost rename race is benign when the winner holds the marker; a
+    target without it is a leftover of a crashed or older publisher and is
+    removed so the fresh copy wins. A failed build removes its sibling."""
+    staged = store_dir(name, sf_dir, table)
+    if os.path.exists(os.path.join(staged, MARKER)):
+        return staged
+    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
+    try:
+        build(tmp)
+        open(os.path.join(tmp, MARKER), "w").close()
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    for _ in range(2):
+        try:
+            os.rename(tmp, staged)
+            return staged
+        except OSError:
+            if os.path.exists(os.path.join(staged, MARKER)):
+                shutil.rmtree(tmp, ignore_errors=True)  # the winner is complete
+                return staged
+            shutil.rmtree(staged, ignore_errors=True)  # heal a markerless leftover
+    shutil.rmtree(tmp, ignore_errors=True)
+    raise OSError(f"could not publish {staged!r}: the target kept reappearing without {MARKER}")
 
 
 # Confs that change how parquet types map to Spark types (events.ts reads as

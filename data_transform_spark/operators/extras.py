@@ -282,7 +282,7 @@ def sink_orc(spark, sf_dir):
     """ORC write + read-back round trip (the second columnar format)."""
     import os
 
-    from data_transform_spark.operators.scans import SCRATCH
+    from data_transform_spark.io import SCRATCH
 
     out = f"{SCRATCH}/sink_orc"
     os.makedirs(SCRATCH, exist_ok=True)

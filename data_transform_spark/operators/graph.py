@@ -153,9 +153,9 @@ def graph_pagerank(spark, sf_dir):
     edges = e.join(out_w, "src").select(
         "src", "dst", (F.col("w") / F.col("out_w")).alias("share")
     )
-    # edges feed every iteration: checkpoint once so the 5-table build runs
-    # a single time (and, at scale, to cut lineage growth per iteration).
-    edges = edges.localCheckpoint(eager=False)
+    # edges feed every iteration: share once so the 5-table build runs a
+    # single time.
+    edges = share(edges)
     nodes = load_table(spark, sf_dir, "nation").select(
         F.col("n_name").alias("node")
     )
@@ -221,8 +221,8 @@ def graph_reachability(spark, sf_dir):
     This is the WITH RECURSIVE surface: Spark has no recursive CTE, so the
     engine unrolls the fixed-depth frontier expansion as {REACH_HOPS} join
     iterations UNION ALL-ed then min-reduced — exactly the tree the
-    recursive oracle evaluates. The sparse edge list is localCheckpoint-ed
-    once so the 5-table build doesn't rerun per iteration; at a real scale
+    recursive oracle evaluates. The sparse edge list is shared once so
+    the 5-table build doesn't rerun per iteration; at a real scale
     (billions of edges) the frontier would also be de-duplicated per level
     (semi-join against visited) to stop path-count blowup — with depth 4
     and out-degree {REACH_TOPK} the tree is <=121 paths, cheaper than the
@@ -234,8 +234,11 @@ def graph_reachability(spark, sf_dir):
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= REACH_TOPK)
         .select("src", "dst")
-        .localCheckpoint(eager=False)
     )
+    # eager: four joins read it, and a lazy persist measured 26 jobs and
+    # 13.0 CPU-s per build against 13 jobs and 6.7 CPU-s (cpu_bench, sf0.1,
+    # 4 cores); pagerank's and triangles' shares measured faster lazy
+    sparse = share(sparse, eager=True)
     frontier = spark.range(1).select(
         F.lit(REACH_SRC).alias("node"), F.lit(0).alias("hop")
     )
@@ -298,8 +301,8 @@ def graph_triangles(spark, sf_dir):
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
+    und = share(und)
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
     e3 = und.select(F.col("a").alias("x3"), F.col("b").alias("z3"))

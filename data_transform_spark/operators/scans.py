@@ -14,10 +14,8 @@ import re
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, normalize_event_ts, path_of, read_parquet
+from data_transform_spark.io import SCRATCH, load_table, path_of, read_parquet, stage
 from data_transform_spark.registry import register
-
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
 @register("scan_parquet", oracle="SELECT * FROM customer")
@@ -89,30 +87,9 @@ def source_stream_file(spark, sf_dir):
     The batch read of the same file is the oracle — stream == batch is the
     core Structured Streaming guarantee we rely on for every §2.I op.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
-    # the file source requires a directory: stage the fixture into scratch.
-    # The staged copy is invalidated when the source mtime/size changes so a
-    # regenerated fixture is never served stale (round-1 ADVICE.md).
-    src = path_of(sf_dir, "events")
-    src_dir = f"{SCRATCH}/stream_src_events_{os.path.basename(sf_dir.rstrip('/'))}"
-    os.makedirs(src_dir, exist_ok=True)
-    staged = f"{src_dir}/events.parquet"
-    stamp_file = f"{src_dir}/_stamp"
-    st = os.stat(src)
-    stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    prev = open(stamp_file).read() if os.path.exists(stamp_file) else None
-    if prev != stamp or not os.path.exists(staged):
-        import shutil
+    from data_transform_spark.streaming.ops import events_stream, run_to_memory
 
-        shutil.copyfile(src, staged)
-        with open(stamp_file, "w") as f:
-            f.write(stamp)
-    stream = normalize_event_ts(spark.readStream.schema(raw_schema).parquet(src_dir))
-    name = "source_stream_file_mem"
-    q = stream.writeStream.format("memory").queryName(name).trigger(availableNow=True).start()
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(events_stream(spark, sf_dir), "append")
 
 
 @register("scan_jsonl", oracle="SELECT * FROM documents")
@@ -120,23 +97,14 @@ def scan_jsonl(spark, sf_dir):
     """JSONL (newline-delimited JSON) source over the documents corpus.
 
     The landed-corpus format LLM pipelines actually ingest: the fixture is
-    staged to scratch as JSONL once (stamp-invalidated on fixture change),
-    then read back with an explicit schema — no inference pass, which at
-    100 TB would double the scan. Hash-checked against the parquet original,
+    staged to scratch as JSONL once per fixture fingerprint, then read back
+    with an explicit schema — no inference pass, which at 100 TB would
+    double the scan. Hash-checked against the parquet original,
     so escaping (newlines, quotes, unicode) must round-trip exactly.
     """
     docs = load_table(spark, sf_dir, "documents")
-    src = path_of(sf_dir, "documents")
-    out_dir = f"{SCRATCH}/scan_jsonl_{os.path.basename(sf_dir.rstrip('/'))}"
-    stamp_file = f"{out_dir}_stamp"
-    st = os.stat(src)
-    stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    prev = open(stamp_file).read() if os.path.exists(stamp_file) else None
-    if prev != stamp or not os.path.isdir(out_dir):
-        docs.write.mode("overwrite").json(out_dir)
-        with open(stamp_file, "w") as f:
-            f.write(stamp)
-    return spark.read.schema(docs.schema).json(out_dir)
+    staged = stage("scan_jsonl", sf_dir, "documents", docs.write.json)
+    return spark.read.schema(docs.schema).json(staged)
 
 
 PYDS_N = 4096
@@ -217,21 +185,9 @@ def scan_csv(spark, sf_dir):
     JSONL case. Hash-checked against the parquet original, so header,
     quoting, and type round-trips must be exact."""
     docs = load_table(spark, sf_dir, "documents")
-    src = path_of(sf_dir, "documents")
-    out_dir = f"{SCRATCH}/scan_csv_{os.path.basename(sf_dir.rstrip('/'))}"
-    stamp_file = f"{out_dir}_stamp"
-    st = os.stat(src)
-    stamp = f"{st.st_mtime_ns}:{st.st_size}"
-    prev = open(stamp_file).read() if os.path.exists(stamp_file) else None
-    if prev != stamp or not os.path.isdir(out_dir):
-        docs.write.mode("overwrite").options(
-            header=True, quote='"', escape='"'
-        ).csv(out_dir)
-        with open(stamp_file, "w") as f:
-            f.write(stamp)
-    return spark.read.schema(docs.schema).options(
-        header=True, quote='"', escape='"'
-    ).csv(out_dir)
+    csv = dict(header=True, quote='"', escape='"')
+    staged = stage("scan_csv", sf_dir, "documents", docs.write.options(**csv).csv)
+    return spark.read.schema(docs.schema).options(**csv).csv(staged)
 
 
 @register(
@@ -269,79 +225,6 @@ def scan_schema_evolution(spark, sf_dir):
     )
 
 
-def _path_fingerprint(path: str) -> str:
-    """Short content fingerprint of a parquet file-or-directory: sha256 of
-    every member file's (relpath, size, mtime_ns), driver-side metadata only.
-    Changes whenever the fixture is regenerated — cache-dir keys built from
-    it can never alias a stale layout to fresh source data."""
-    import hashlib
-
-    h = hashlib.sha256()
-    if os.path.isdir(path):
-        for dirpath, _dirnames, filenames in sorted(os.walk(path)):
-            for fname in sorted(filenames):
-                st = os.stat(os.path.join(dirpath, fname))
-                rel = os.path.relpath(os.path.join(dirpath, fname), path)
-                h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-    elif os.path.exists(path):
-        st = os.stat(path)
-        h.update(f"{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:12]
-
-
-def _stage_atomic(staged: str, build, marker: str = "_SUCCESS") -> None:
-    """Publish a staged cache directory atomically: ``build(tmp)`` writes
-    into a per-process temp sibling, which is then os.rename-d into the
-    final path. A reader can therefore only ever observe (a) no directory
-    or (b) a COMPLETE directory — never a mid-rewrite partial, which the
-    previous write-in-place mode('overwrite') (delete-then-write) allowed
-    when two fresh processes both missed the marker and raced (r7 ADVICE).
-
-    Self-healing (r8 ADVICE): a lost rename race is only benign if the
-    winner's directory is COMPLETE, which every complete build proves by
-    containing ``marker`` (Spark writes _SUCCESS; hand-rolled builds write
-    their own sentinel). After a failed rename, a target WITHOUT the marker
-    is a corrupt leftover (e.g. a pre-r8 delete-then-write crash) — it is
-    removed and the rename retried so the fresh complete copy wins instead
-    of being discarded while callers silently read the partial dir forever.
-    A failed build removes its temp sibling instead of leaking it in
-    SCRATCH."""
-    import shutil
-    import uuid
-
-    tmp = f"{staged}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
-    try:
-        build(tmp)
-        # A build whose output lacks its own completeness marker would be
-        # indistinguishable from a corrupt leftover to every later process
-        # (which would rmtree it while readers hold it — the r9 ADVICE race).
-        # Catch the marker-name mismatch at build time instead.
-        if not os.path.exists(os.path.join(tmp, marker)):
-            raise OSError(
-                f"_stage_atomic build for {staged!r} did not write its "
-                f"completeness marker {marker!r} — marker kwarg mismatch?"
-            )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    for _ in range(2):
-        try:
-            os.rename(tmp, staged)
-            return
-        except OSError:
-            if os.path.exists(os.path.join(staged, marker)):
-                # benign lost race: the winner's dir is complete
-                shutil.rmtree(tmp, ignore_errors=True)
-                return
-            # corrupt leftover without its completeness marker: heal it
-            shutil.rmtree(staged, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    raise OSError(
-        f"could not publish staged dir {staged!r}: target kept "
-        f"reappearing without its {marker!r} completeness marker"
-    )
-
-
 @register(
     "join_dpp",
     oracle="""
@@ -373,23 +256,15 @@ def join_dpp(spark, sf_dir):
     and DPP converts it into a partition predicate for free. Requires the
     fact to be partitioned on the join key — the layout decision that makes
     date-dim star joins cheap."""
-    # Cache key = basename + content fingerprint (mtime+size of the source
-    # parquet), so a regenerated fixture at the same path — or two fixture
-    # roots sharing a basename — can never serve a stale partitioned layout
-    # while the oracle reads the live file (r5 ADVICE).
-    src = f"{sf_dir}/lineitem.parquet"
-    out = (
-        f"{SCRATCH}/dpp_lineitem_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
+    # The staged layout is keyed on the lineitem fingerprint, so a
+    # regenerated fixture can never serve a stale partitioned layout while
+    # the oracle reads the live file (r5 ADVICE).
     li = load_table(spark, sf_dir, "lineitem")
-    if not os.path.exists(f"{out}/_SUCCESS"):
-        _stage_atomic(
-            out,
-            lambda tmp: li.withColumn(
-                "sm", F.date_format("l_shipdate", "yyyy-MM")
-            ).write.mode("overwrite").partitionBy("sm").parquet(tmp),
-        )
+    out = stage(
+        "dpp_lineitem", sf_dir, "lineitem",
+        lambda tmp: li.withColumn("sm", F.date_format("l_shipdate", "yyyy-MM"))
+        .write.partitionBy("sm").parquet(tmp),
+    )
     fact = spark.read.parquet(out)
     w = Window.orderBy(F.col("n_ship").desc(), "m")
     dim = (
@@ -728,34 +603,20 @@ def scan_csv_malformed(spark, sf_dir):
     FAILFAST for contract-enforced feeds — all three are one option flag
     on the same scan, never a cleansing pre-pass over the corpus."""
     nation = load_table(spark, sf_dir, "nation")
-    # Cache key = SF basename + content fingerprint of the source parquet
-    # (same recipe as join_dpp): a regenerated fixture at the same path can
-    # never serve a stale staged CSV while the oracle reads the live table
-    # (r6 ADVICE).
-    out_dir = (
-        f"{SCRATCH}/scan_csv_malformed_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(path_of(sf_dir, 'nation'))}"
-    )
-    marker = f"{out_dir}/_planted"
-    if not os.path.exists(marker):
 
-        def _build(tmp: str) -> None:
-            nation.write.mode("overwrite").options(
-                header=True, quote='"', escape='"'
-            ).csv(tmp)
-            # separate file: Spark skips line 1 of EVERY file as header, so
-            # the sacrificial header keeps the planted rows aligned
-            with open(f"{tmp}/malformed.csv", "w") as f:
-                f.write(
-                    "n_nationkey,n_name,n_regionkey,n_comment\n"
-                    "notanint,BADLAND,0,unparseable key\n"
-                    "1,2,3,4,5,6,7\n"
-                    'alsobad,"X",zero,"trailing mess"\n'
-                )
-            with open(f"{tmp}/_planted", "w") as f:
-                f.write("ok")
+    def _build(tmp: str) -> None:
+        nation.write.options(header=True, quote='"', escape='"').csv(tmp)
+        # separate file: Spark skips line 1 of EVERY file as header, so
+        # the sacrificial header keeps the planted rows aligned
+        with open(f"{tmp}/malformed.csv", "w") as f:
+            f.write(
+                "n_nationkey,n_name,n_regionkey,n_comment\n"
+                "notanint,BADLAND,0,unparseable key\n"
+                "1,2,3,4,5,6,7\n"
+                'alsobad,"X",zero,"trailing mess"\n'
+            )
 
-        _stage_atomic(out_dir, _build, marker="_planted")
+    out_dir = stage("scan_csv_malformed", sf_dir, "nation", _build)
     return (
         spark.read.schema(nation.schema)
         .options(header=True, quote='"', escape='"', mode="DROPMALFORMED")
@@ -840,23 +701,14 @@ def scan_xml(spark, sf_dir):
     arrive in (SEC filings, PubMed, legacy SOAP exports); at scale the
     reader splits by row tag like any text source, and an explicit
     schema (as here) skips the inference pass that would read the corpus
-    twice. Staged once per (SF, source-fingerprint) via _stage_atomic —
-    same race-free recipe as scan_text."""
-    staged = (
-        f"{SCRATCH}/scan_xml_nation_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(path_of(sf_dir, 'nation'))}"
-    )
+    twice. Staged once per (SF, nation fingerprint) through io.stage."""
     na = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    if not os.path.exists(f"{staged}/_SUCCESS"):
-        _stage_atomic(
-            staged,
-            lambda tmp: na.write.mode("overwrite")
-            .format("xml")
-            .option("rowTag", "nation")
-            .save(tmp),
-        )
+    staged = stage(
+        "scan_xml_nation", sf_dir, "nation",
+        na.write.format("xml").option("rowTag", "nation").save,
+    )
     back = (
         spark.read.format("xml")
         .schema("n_nationkey long, n_name string, n_regionkey long")
@@ -881,25 +733,18 @@ def scan_json_multiline(spark, sf_dir):
     check (oracle = the original table). The staged array is built
     driver-side from the 25-row SF-invariant nation table (bounded by
     contract, same class as scan_binary_files' fixture staging) and
-    published via _stage_atomic."""
-    staged = (
-        f"{SCRATCH}/scan_json_multiline_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(path_of(sf_dir, 'nation'))}"
-    )
+    published through io.stage."""
     nation = load_table(spark, sf_dir, "nation")
-    if not os.path.exists(f"{staged}/_STAGED"):
 
-        def _build(tmp: str) -> None:
-            import json
+    def _build(tmp: str) -> None:
+        import json
 
-            os.makedirs(tmp)
-            recs = [r.asDict() for r in nation.collect()]  # 25 rows, fixed
-            with open(f"{tmp}/nation.json", "w") as fh:
-                json.dump(recs, fh, indent=1)
-            with open(f"{tmp}/_STAGED", "w") as fh:
-                fh.write("ok")
+        os.makedirs(tmp)
+        recs = [r.asDict() for r in nation.collect()]  # 25 rows, fixed
+        with open(f"{tmp}/nation.json", "w") as fh:
+            json.dump(recs, fh, indent=1)
 
-        _stage_atomic(staged, _build, marker="_STAGED")
+    staged = stage("scan_json_multiline", sf_dir, "nation", _build)
     return (
         spark.read.schema(nation.schema)
         .option("multiLine", "true")
@@ -955,27 +800,18 @@ def scan_text(spark, sf_dir):
     as `name|regionkey` lines, read back with ``spark.read.text`` (one
     row per line, a single `value` column) and parsed with split — the
     universal fallback format when data arrives as raw lines. Staged ONCE
-    per (SF, source-fingerprint) and published via _stage_atomic's
-    temp-dir + os.rename, so a concurrent fresh process can never observe
-    an empty/partial directory mid-stage (r7 ADVICE — the bare _SUCCESS
-    check narrowed but did not close the delete-then-write window); the
-    content fingerprint keeps a regenerated fixture from ever serving
-    stale staged lines. Text scans split by line ranges at scale, so
-    parallelism comes free; the parse is row-local JVM split/cast."""
-    staged = (
-        f"{SCRATCH}/scan_text_nation_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(path_of(sf_dir, 'nation'))}"
+    per (SF, nation fingerprint) through io.stage, whose temp-dir +
+    os.rename publish means a concurrent fresh process can never observe
+    an empty/partial directory mid-stage (r7 ADVICE); the fingerprint
+    keeps a regenerated fixture from ever serving stale staged lines.
+    Text scans split by line ranges at scale, so parallelism comes free;
+    the parse is row-local JVM split/cast."""
+    staged = stage(
+        "scan_text_nation", sf_dir, "nation",
+        lambda tmp: load_table(spark, sf_dir, "nation").select(
+            F.concat_ws("|", "n_name", F.col("n_regionkey").cast("string")).alias("value")
+        ).coalesce(1).write.text(tmp),
     )
-    if not os.path.exists(f"{staged}/_SUCCESS"):
-        na = load_table(spark, sf_dir, "nation").select(
-            F.concat_ws(
-                "|", F.col("n_name"), F.col("n_regionkey").cast("string")
-            ).alias("value")
-        )
-        _stage_atomic(
-            staged,
-            lambda tmp: na.coalesce(1).write.mode("overwrite").text(tmp),
-        )
     back = spark.read.text(staged).select(
         F.split(F.col("value"), r"\|").alias("parts")
     )

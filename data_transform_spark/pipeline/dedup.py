@@ -21,7 +21,7 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, spread
+from data_transform_spark.io import load_table, spread, stage
 from data_transform_spark.registry import register
 from data_transform_spark.shares import release, share
 
@@ -1379,8 +1379,6 @@ def dedup_incremental(spark, sf_dir):
 # historical passage is a duplicate regardless of ids — equivalence with
 # a full run under arrival order is property-tested.
 
-SUBSTR_STORE_MARKER = "_SUCCESS"  # Spark parquet write's own marker
-
 
 def _substring_grams(frame):
     """(doc_id, pos, g) rolling SUBSTR_W-token window fingerprints — the
@@ -1403,37 +1401,17 @@ def _substring_grams(frame):
     )
 
 
-def substring_store_dir(sf_dir: str) -> str:
-    """Staged digest-store location — SF-namespaced + content-fingerprinted
-    (the ivfpq_index_dir discipline): a store built against one corpus
-    state can never be silently served for another."""
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "documents")
-    return (
-        f"{SCRATCH}/substr_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 def substring_stage_store(spark, sf_dir) -> str:
     """Build the history fingerprint store ONCE: one scan of the history
     partition, distinct md5 digests, atomic parquet publish. At 100 TB
     this is the nightly batch job's output table; every later increment
     pays only a digest join against it."""
-    from data_transform_spark.operators.scans import _stage_atomic
 
-    staged = substring_store_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, SUBSTR_STORE_MARKER)):
-        hist = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 < 8
-        )
-        grams = _substring_grams(hist).select("g").distinct()
-        _stage_atomic(
-            staged, lambda tmp: grams.write.mode("overwrite").parquet(tmp)
-        )
-    return staged
+    def _build(tmp: str) -> None:
+        hist = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 < 8)
+        _substring_grams(hist).select("g").distinct().write.parquet(tmp)
+
+    return stage("substr_store", sf_dir, "documents", _build)
 
 
 @register(
@@ -1555,18 +1533,6 @@ def text_substring_dedup_incr(spark, sf_dir):
     )
 
 
-def substring_store_v2_dir(sf_dir: str) -> str:
-    """Location of the POST-increment store (history ∪ batch digests)."""
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "documents")
-    return (
-        f"{SCRATCH}/substr_store2_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 @register(
     "text_substring_store_update",
     oracle=f"""
@@ -1604,26 +1570,14 @@ def text_substring_store_update(spark, sf_dir):
     batch-sized work plus one store-sized distinct union write (or, with
     a digest-bucketed store layout, an append of pre-bucketed novel
     digests — no rewrite)."""
-    from data_transform_spark.operators.scans import _stage_atomic
+    store = spark.read.parquet(substring_stage_store(spark, sf_dir))
 
-    staged = substring_stage_store(spark, sf_dir)
-    store = spark.read.parquet(staged)
-    staged2 = substring_store_v2_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged2, SUBSTR_STORE_MARKER)):
-        batch = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 >= 8
-        )
-        novel = (
-            _substring_grams(batch)
-            .select("g")
-            .distinct()
-            .join(store, "g", "left_anti")
-        )
-        updated = store.unionByName(novel)
-        _stage_atomic(
-            staged2, lambda tmp: updated.write.mode("overwrite").parquet(tmp)
-        )
-    upd = spark.read.parquet(staged2)
+    def _build(tmp: str) -> None:
+        batch = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 >= 8)
+        novel = _substring_grams(batch).select("g").distinct().join(store, "g", "left_anti")
+        store.unionByName(novel).write.parquet(tmp)
+
+    upd = spark.read.parquet(stage("substr_store2", sf_dir, "documents", _build))
     n_hist = store.agg(F.count(F.lit(1)).cast("long").alias("n_hist"))
     n_total = upd.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     return n_hist.crossJoin(F.broadcast(n_total)).select(
@@ -1644,8 +1598,6 @@ def text_substring_store_update(spark, sf_dir):
 # pairs with a band-keyed join against the store and verifies them against
 # the stored digests — historical TEXT is never re-read.
 
-MINHASH_STORE_MARKER = "_INDEX"
-
 
 def _shingle_digests(docs):
     """(doc_id, sh) distinct shingle md5 digests — 32-byte set elements;
@@ -1654,38 +1606,16 @@ def _shingle_digests(docs):
     return _shingles(docs).select("doc_id", F.md5("shingle").alias("sh"))
 
 
-def minhash_store_dir(sf_dir: str) -> str:
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "documents")
-    return (
-        f"{SCRATCH}/minhash_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 def minhash_stage_store(spark, sf_dir) -> str:
     """Stage the history partition's LSH band rows + shingle digests
     atomically (one history scan, ever)."""
-    from data_transform_spark.operators.scans import _stage_atomic
 
-    staged = minhash_store_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, MINHASH_STORE_MARKER)):
-        hist = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 < 8
-        )
-        bands = _sig_bands(minhash_signatures(hist))
-        sh = _shingle_digests(hist)
+    def _build(tmp: str) -> None:
+        hist = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 < 8)
+        _sig_bands(minhash_signatures(hist)).write.parquet(f"{tmp}/bands")
+        _shingle_digests(hist).write.parquet(f"{tmp}/shingles")
 
-        def _build(tmp: str) -> None:
-            bands.write.parquet(f"{tmp}/bands")
-            sh.write.parquet(f"{tmp}/shingles")
-            with open(os.path.join(tmp, MINHASH_STORE_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=MINHASH_STORE_MARKER)
-    return staged
+    return stage("minhash_store", sf_dir, "documents", _build)
 
 
 def _digest_jaccard_of_pairs(cand, sh_a, sh_b):

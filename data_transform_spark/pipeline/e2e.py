@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table
+from data_transform_spark.io import load_table, stage
 from data_transform_spark.registry import register
 from data_transform_spark.shares import release, share, submit
 
@@ -356,16 +356,14 @@ def _e2e_prefix(spark, sf_dir):
     return d, cleaned, surv, decon
 
 
-E2E_PREFIX_MARKER = "_PREFIX"  # completeness marker for the staged prefix
-
-
 def _prefix_code_fingerprint() -> str:
     """Fingerprint of the CODE that derives the staged prefix: the prefix
     builder plus the whole dedup module it delegates to (deliberately
     broad — a 1-build rebuild per edit is nothing next to silently
-    serving results of retired logic). The fixture fingerprint in
-    e2e_prefix_dir covers data staleness; this covers code staleness.
-    The DuckDB oracle remains the backstop either way."""
+    serving results of retired logic). The documents fingerprint in the
+    store's directory name covers data staleness; this fingerprint, part
+    of the store's name, covers code staleness. The DuckDB oracle remains
+    the backstop either way."""
     import hashlib
     import inspect
 
@@ -380,33 +378,13 @@ def _prefix_code_fingerprint() -> str:
     return hashlib.sha256(src.encode()).hexdigest()[:10]
 
 
-def e2e_prefix_dir(sf_dir: str) -> str:
-    """Staged-prefix location: SF-namespaced, content-fingerprinted on
-    the documents fixture (the ivfpq_index_dir discipline) AND
-    code-fingerprinted on the prefix logic — a prefix built against one
-    SF, a regenerated corpus, or retired stage code can never be
-    silently served."""
-    import os
-
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import (
-        SCRATCH,
-        _path_fingerprint,
-    )
-
-    src = path_of(sf_dir, "documents")
-    return (
-        f"{SCRATCH}/e2e_prefix_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}_{_prefix_code_fingerprint()}"
-    )
-
-
 def stage_e2e_prefix(spark, sf_dir) -> str:
-    """Build funnel stages 1-3 ONCE per (SF, corpus fingerprint) and
-    publish them atomically: `decon` (the decontaminated survivors with
-    cleaned text) plus a 1-row `stats` table carrying the c1/c2 funnel
-    counts the capstones report. The sim_ann_persist discipline applied
-    to the curation prefix (r11 VERDICT #2).
+    """Build funnel stages 1-3 ONCE per (SF, corpus fingerprint, prefix
+    code fingerprint) and publish them atomically: `decon` (the
+    decontaminated survivors with cleaned text) plus a 1-row `stats` table
+    carrying the c1/c2 funnel counts the capstones report. The
+    sim_ann_persist discipline applied to the curation prefix (r11 VERDICT
+    #2).
 
     Why this exists — measured, not assumed: the capstones assemble
     their funnel row from ~6-11 crossJoin(broadcast(...)) branches, and
@@ -418,26 +396,18 @@ def stage_e2e_prefix(spark, sf_dir) -> str:
     pipeline_e2e_llm_v4's single action measured 83.5 s (branches
     racing the cache). Staging collapses the prefix to one build +
     parquet scans, which are harmless to materialize concurrently."""
-    import os
 
-    from data_transform_spark.operators.scans import _stage_atomic
-
-    staged = e2e_prefix_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, E2E_PREFIX_MARKER)):
+    def _build(tmp: str) -> None:
         _d, cleaned, surv, decon = _e2e_prefix(spark, sf_dir)
-
-        def _build(tmp: str) -> None:
-            decon.write.parquet(f"{tmp}/decon")
-            spark.createDataFrame(
-                [(cleaned.count(), surv.count())],
-                "n_substr_clean long, n_neardup_surv long",
-            ).coalesce(1).write.parquet(f"{tmp}/stats")
-            with open(os.path.join(tmp, E2E_PREFIX_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=E2E_PREFIX_MARKER)
+        decon.write.parquet(f"{tmp}/decon")
+        spark.createDataFrame(
+            [(cleaned.count(), surv.count())],
+            "n_substr_clean long, n_neardup_surv long",
+        ).coalesce(1).write.parquet(f"{tmp}/stats")
         release(cleaned, surv, decon)  # the build's shares are now redundant
-    return staged
+
+    name = f"e2e_prefix_{_prefix_code_fingerprint()}"
+    return stage(name, sf_dir, "documents", _build)
 
 
 def _e2e_prefix_staged(spark, sf_dir):

@@ -23,7 +23,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, spread
+from data_transform_spark.io import load_table, spread, stage
 from data_transform_spark.registry import register
 
 
@@ -675,43 +675,15 @@ def dedup_image_survivors(spark, sf_dir):
     ).orderBy("img_id")
 
 
-PHASH_STORE_MARKER = "_INDEX"
-
-
-def phash_store_dir(sf_dir: str) -> str:
-    import os
-
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "documents")
-    return (
-        f"{SCRATCH}/phash_store_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 def phash_stage_store(spark, sf_dir) -> str:
     """Stage the HISTORY partition's image fingerprints (img_id, phash)
     once — 8 bytes a picture; the raw pixels are never re-decoded."""
-    import os
 
-    from data_transform_spark.operators.scans import _stage_atomic
+    def _build(tmp: str) -> None:
+        hist = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 < 8)
+        phash_fingerprints(hist).write.parquet(f"{tmp}/fingerprints")
 
-    staged = phash_store_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, PHASH_STORE_MARKER)):
-        hist = load_table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 10 < 8
-        )
-        fp = phash_fingerprints(hist)
-
-        def _build(tmp: str) -> None:
-            fp.write.parquet(f"{tmp}/fingerprints")
-            with open(os.path.join(tmp, PHASH_STORE_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=PHASH_STORE_MARKER)
-    return staged
+    return stage("phash_store", sf_dir, "documents", _build)
 
 
 @register(

@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table
+from data_transform_spark.io import load_table, stage
 from data_transform_spark.registry import register
 from data_transform_spark.shares import share, submit
 
@@ -1208,24 +1208,25 @@ def sim_ann_ivfpq(spark, sf_dir):
 # sim_ann_ivfpq key keeps the self-contained train+query contract for the
 # oracle; sim_ann_persist is the split the verdict asked for.
 
-IVFPQ_INDEX_MARKER = "_INDEX"  # completeness marker for the staged artifact
+
+def _write_index(tmp: str, cent, books, codes) -> None:
+    cent.write.parquet(f"{tmp}/centroids")
+    books.write.parquet(f"{tmp}/codebooks")
+    codes.write.parquet(f"{tmp}/codes")
 
 
-def ivfpq_index_dir(sf_dir: str) -> str:
-    """Staged-index location: SF-namespaced AND content-fingerprinted on
-    the embeddings fixture, so an index built at one SF (or against a
-    regenerated fixture) can never be silently served for another — the
-    dir name itself is the cache key (the scan_* staging discipline)."""
-    import os
+def _stage_ivfpq(spark, sf_dir, name: str, rows) -> str:
+    """Train the IVF-PQ index on the embeddings that satisfy ``rows`` and
+    stage it as store ``name``."""
 
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
+    def _build(tmp: str) -> None:
+        e = load_table(spark, sf_dir, "embeddings").filter(rows).select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+        )
+        cent, _assign, books, codes_l = _ivfpq_index(e)
+        _write_index(tmp, cent, books, codes_l)
 
-    src = path_of(sf_dir, "embeddings")
-    return (
-        f"{SCRATCH}/ivfpq_index_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
+    return stage(name, sf_dir, "embeddings", _build)
 
 
 def ivfpq_stage_index(spark, sf_dir) -> str:
@@ -1238,30 +1239,11 @@ def ivfpq_stage_index(spark, sf_dir) -> str:
     serve path never needs the training sample, the seeds, or a Lloyd
     pass again. The build is the same deterministic _ivfpq_index as the
     self-contained key (md5-ranked seeds, bounded ANN_TRAIN_CAP sample),
-    so staged-vs-fresh results are identical — tested. Publication is
-    _stage_atomic with an explicit top-level marker (Spark writes
-    _SUCCESS per subdirectory; the artifact is complete only when all
-    three are)."""
-    import os
-
-    from data_transform_spark.operators.scans import _stage_atomic
-
-    staged = ivfpq_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, IVFPQ_INDEX_MARKER)):
-        e = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
-        cent, _assign, books, codes_l = _ivfpq_index(e)
-
-        def _build(tmp: str) -> None:
-            cent.write.parquet(f"{tmp}/centroids")
-            books.write.parquet(f"{tmp}/codebooks")
-            codes_l.write.parquet(f"{tmp}/codes")
-            with open(os.path.join(tmp, IVFPQ_INDEX_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=IVFPQ_INDEX_MARKER)
-    return staged
+    so staged-vs-fresh results are identical — tested. The store's
+    directory name is its cache key (SF basename + embeddings
+    fingerprint), so an index built at one SF or against a regenerated
+    fixture is never served for another."""
+    return _stage_ivfpq(spark, sf_dir, "ivfpq_index", F.lit(True))
 
 
 def ivfpq_read_index(spark, staged: str):
@@ -1602,46 +1584,10 @@ def embed_pca(spark, sf_dir):
 # --- index append: encode-many after train-once (FAISS add() contract) ---
 
 
-def ivfpq_hist_index_dir(sf_dir: str) -> str:
-    """Staged location of the HISTORY-trained index (the %10<8 split —
-    the dedup_incremental family's history convention), distinct from
-    ivfpq_index_dir's full-corpus artifact."""
-    import os
-
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "embeddings")
-    return (
-        f"{SCRATCH}/ivfpq_hist_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 def ivfpq_stage_hist_index(spark, sf_dir) -> str:
-    """Train + stage the IVF-PQ index on the HISTORY partition only."""
-    import os
-
-    from data_transform_spark.operators.scans import _stage_atomic
-
-    staged = ivfpq_hist_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, IVFPQ_INDEX_MARKER)):
-        hist = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") % 10 < 8)
-            .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
-        )
-        cent, _assign, books, codes_l = _ivfpq_index(hist)
-
-        def _build(tmp: str) -> None:
-            cent.write.parquet(f"{tmp}/centroids")
-            books.write.parquet(f"{tmp}/codebooks")
-            codes_l.write.parquet(f"{tmp}/codes")
-            with open(os.path.join(tmp, IVFPQ_INDEX_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=IVFPQ_INDEX_MARKER)
-    return staged
+    """Train + stage the IVF-PQ index on the HISTORY partition only (the
+    %10<8 split — the dedup_incremental family's history convention)."""
+    return _stage_ivfpq(spark, sf_dir, "ivfpq_hist", F.col("vec_id") % 10 < 8)
 
 
 def _ivfpq_encode(e, cent, books):
@@ -1748,7 +1694,6 @@ GRAPH_DEGREE = 8  # out-degree of the kNN graph (pre-symmetrization)
 GRAPH_BEAM = 8  # beam width per query per round
 GRAPH_ROUNDS = 4  # fixed expansion rounds (plan-deterministic)
 GRAPH_SEEDS = 8  # evenly spaced entry points
-GRAPH_INDEX_MARKER = "_INDEX"
 
 
 def _graph_knn_edges(spark, sf_dir):
@@ -1841,51 +1786,21 @@ def _graph_knn_edges(spark, sf_dir):
     )
 
 
-def graph_index_dir(sf_dir: str) -> str:
-    """Staged kNN-graph location — SF-namespaced + content-fingerprinted
-    on the embeddings fixture (the ivfpq_index_dir discipline)."""
-    import os
-
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "embeddings")
-    return (
-        f"{SCRATCH}/graph_index_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 def graph_stage_index(spark, sf_dir) -> str:
     """Build the kNN graph ONCE and publish the SYMMETRIZED adjacency
     atomically as parquet: adjacency = out-edges ∪ reversed out-edges
     (undirected — the NSW navigability fix: a hub reachable from its
     neighbors even when they fall outside ITS top-G). Serve sessions scan
     the staged (src, dst) table and never run the gemm build again."""
-    import os
 
-    from data_transform_spark.operators.scans import _stage_atomic
-
-    staged = graph_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, GRAPH_INDEX_MARKER)):
+    def _build(tmp: str) -> None:
         edges = _graph_knn_edges(spark, sf_dir)
-        adj = (
-            edges.select("src", "dst")
-            .unionByName(
-                edges.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst")
-                )
-            )
-            .distinct()
+        back = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        edges.select("src", "dst").unionByName(back).distinct().write.parquet(
+            f"{tmp}/adjacency"
         )
 
-        def _build(tmp: str) -> None:
-            adj.write.parquet(f"{tmp}/adjacency")
-            with open(os.path.join(tmp, GRAPH_INDEX_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=GRAPH_INDEX_MARKER)
-    return staged
+    return stage("graph_index", sf_dir, "embeddings", _build)
 
 
 def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS):
@@ -2010,61 +1925,23 @@ ANN_RETRAIN_RATIO = 1.5  # append-vs-history residual-energy ratio budget
 ANN_COMPACT_BATCH_MODS = (8, 9)  # the two nightly append batches (%10)
 
 
-def ivfpq_appends_dir(sf_dir: str) -> str:
-    """Staged location of the N appended code batches (one subdir per
-    batch) — the accumulation a nightly encode-only job leaves behind."""
-    import os
-
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "embeddings")
-    return (
-        f"{SCRATCH}/ivfpq_appends_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
-
-
 def ivfpq_stage_appends(spark, sf_dir) -> str:
     """Encode-only append of each batch against the staged HISTORY index
     (zero Lloyd passes), one parquet subdir per batch — N invocations of
     the sim_ann_index_append contract accumulated on disk."""
-    import os
 
-    from data_transform_spark.operators.scans import _stage_atomic
-
-    hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
-    staged = ivfpq_appends_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, IVFPQ_INDEX_MARKER)):
-        cent, books, _codes_hist = ivfpq_read_index(spark, hist_staged)
+    def _build(tmp: str) -> None:
+        cent, books, _codes_hist = ivfpq_read_index(
+            spark, ivfpq_stage_hist_index(spark, sf_dir)
+        )
         e = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.col("embedding").cast("array<double>").alias("emb")
         )
+        for mod in ANN_COMPACT_BATCH_MODS:
+            batch = e.filter(F.col("vec_id") % 10 == mod)
+            _ivfpq_encode(batch, cent, books).write.parquet(f"{tmp}/batch-{mod}")
 
-        def _build(tmp: str) -> None:
-            for mod in ANN_COMPACT_BATCH_MODS:
-                batch = e.filter(F.col("vec_id") % 10 == mod)
-                _ivfpq_encode(batch, cent, books).write.parquet(
-                    f"{tmp}/batch-{mod}"
-                )
-            with open(os.path.join(tmp, IVFPQ_INDEX_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=IVFPQ_INDEX_MARKER)
-    return staged
-
-
-def ivfpq_compact_dir(sf_dir: str) -> str:
-    import os
-
-    from data_transform_spark.io import path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
-
-    src = path_of(sf_dir, "embeddings")
-    return (
-        f"{SCRATCH}/ivfpq_compact_{os.path.basename(sf_dir.rstrip('/'))}"
-        f"_{_path_fingerprint(src)}"
-    )
+    return stage("ivfpq_appends", sf_dir, "embeddings", _build)
 
 
 def ivfpq_stage_compact(spark, sf_dir) -> str:
@@ -2072,34 +1949,23 @@ def ivfpq_stage_compact(spark, sf_dir) -> str:
     artifact: a single codes dataset repartitioned by list_id (ADC-scan
     locality — probing a list reads contiguous files, not one sliver per
     append), with the centroids/codebooks carried over unchanged (a
-    compaction never retrains). Atomic staging, same marker discipline as
-    the index builds."""
-    import os
+    compaction never retrains)."""
 
-    from data_transform_spark.operators.scans import _stage_atomic
-
-    hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
-    appends = ivfpq_stage_appends(spark, sf_dir)
-    staged = ivfpq_compact_dir(sf_dir)
-    if not os.path.exists(os.path.join(staged, IVFPQ_INDEX_MARKER)):
-        cent, books, codes_hist = ivfpq_read_index(spark, hist_staged)
+    def _build(tmp: str) -> None:
+        cent, books, codes_hist = ivfpq_read_index(
+            spark, ivfpq_stage_hist_index(spark, sf_dir)
+        )
+        appends = ivfpq_stage_appends(spark, sf_dir)
         merged = codes_hist
         for mod in ANN_COMPACT_BATCH_MODS:
             batch_codes = spark.read.parquet(f"{appends}/batch-{mod}")
             merged = merged.unionByName(batch_codes.select(*codes_hist.columns))
+        # (list_id, m): list-local file layout for probed scans WITHOUT
+        # the IVF_K-wide partition skew plain list_id keying would give
+        # a 100 TB codes table (16 lists -> 16 giant partitions)
+        _write_index(tmp, cent, books, merged.repartition("list_id", "m"))
 
-        def _build(tmp: str) -> None:
-            cent.write.parquet(f"{tmp}/centroids")
-            books.write.parquet(f"{tmp}/codebooks")
-            # (list_id, m): list-local file layout for probed scans WITHOUT
-            # the IVF_K-wide partition skew plain list_id keying would give
-            # a 100 TB codes table (16 lists -> 16 giant partitions)
-            merged.repartition("list_id", "m").write.parquet(f"{tmp}/codes")
-            with open(os.path.join(tmp, IVFPQ_INDEX_MARKER), "w") as fh:
-                fh.write("ok")
-
-        _stage_atomic(staged, _build, marker=IVFPQ_INDEX_MARKER)
-    return staged
+    return stage("ivfpq_compact", sf_dir, "embeddings", _build)
 
 
 @register(

@@ -23,54 +23,34 @@ import uuid
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, normalize_event_ts, path_of, read_parquet
+from data_transform_spark.io import (
+    SCRATCH,
+    load_table,
+    normalize_event_ts,
+    path_of,
+    read_parquet,
+    stage,
+)
 from data_transform_spark.operators.events import _SESSION_MOTIF_ORACLE
-from data_transform_spark.operators.scans import SCRATCH
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
 from data_transform_spark.pipeline.text import PII_SCRUB_ORACLE, pii_plant, pii_scrub
 from data_transform_spark.registry import register
 from data_transform_spark.shares import release
 
 
-def _source_stamp(src: str) -> str:
-    """mtime+size fingerprint of a fixture file or parquet directory."""
-    if os.path.isdir(src):
-        parts = []
-        for name in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, name))
-            parts.append(f"{name}:{st.st_mtime_ns}:{st.st_size}")
-        return ";".join(parts)
-    st = os.stat(src)
-    return f"{st.st_mtime_ns}:{st.st_size}"
+def stage_table_dir(sf_dir: str, table: str) -> str:
+    """Stage a fixture table into a scratch dir (the file stream source
+    needs a directory), once per fixture fingerprint."""
+    src = path_of(sf_dir, table)
 
+    def _build(tmp: str) -> None:
+        if os.path.isdir(src):
+            shutil.copytree(src, f"{tmp}/{table}.parquet")
+        else:
+            os.makedirs(tmp)
+            shutil.copyfile(src, f"{tmp}/{table}.parquet")
 
-def _copy_parquet(src: str, dst: str) -> None:
-    """Copy a parquet source that may be a single file OR a directory."""
-    if os.path.isdir(src):
-        shutil.copytree(src, dst, dirs_exist_ok=True)
-    else:
-        shutil.copyfile(src, dst)
-
-
-def stage_events_dir(sf_dir: str) -> str:
-    """Copy the events fixture into a scratch dir (file source needs a dir).
-
-    The staged copy is invalidated when the source's mtime/size changes, so
-    regenerated fixtures never serve stale data (round-1 ADVICE.md)."""
-    src = path_of(sf_dir, "events")
-    src_dir = f"{SCRATCH}/stream_events_{os.path.basename(sf_dir.rstrip('/'))}"
-    os.makedirs(src_dir, exist_ok=True)
-    staged = f"{src_dir}/events.parquet"
-    stamp_file = f"{src_dir}/_stamp"
-    stamp = _source_stamp(src)
-    prev = open(stamp_file).read() if os.path.exists(stamp_file) else None
-    if prev != stamp or not os.path.exists(staged):
-        if os.path.isdir(staged):
-            shutil.rmtree(staged)
-        _copy_parquet(src, staged)
-        with open(stamp_file, "w") as f:
-            f.write(stamp)
-    return src_dir
+    return stage(f"stream_{table}", sf_dir, table, _build)
 
 
 def events_stream(spark, sf_dir: str):
@@ -78,7 +58,7 @@ def events_stream(spark, sf_dir: str):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     return normalize_event_ts(
-        spark.readStream.schema(raw_schema).parquet(stage_events_dir(sf_dir))
+        spark.readStream.schema(raw_schema).parquet(stage_table_dir(sf_dir, "events"))
     )
 
 
@@ -175,13 +155,8 @@ def stage_events_chunks(sf_dir: str, plant_late: bool) -> str:
     50 old rows in the last chunk (to land behind an advanced watermark)."""
     import pandas as pd
 
-    tag = "late" if plant_late else "clean"
-    src = f"{SCRATCH}/stream_chunks_{tag}_{os.path.basename(sf_dir.rstrip('/'))}"
-    stamp = _source_stamp(path_of(sf_dir, "events"))
-    ready = f"{src}/_ready"
-    prev = open(ready).read() if os.path.exists(ready) else None
-    if prev != stamp:
-        os.makedirs(src, exist_ok=True)
+    def _build(tmp: str) -> None:
+        os.makedirs(tmp)
         pdf = pd.read_parquet(path_of(sf_dir, "events")).sort_values("ts")
         n = len(pdf)
         chunks = [
@@ -193,10 +168,10 @@ def stage_events_chunks(sf_dir: str, plant_late: bool) -> str:
         if plant_late:
             chunks[3] = pd.concat([pdf.iloc[n // 4 : n // 4 + 50], chunks[3]])
         for i, chunk in enumerate(chunks):
-            chunk.to_parquet(f"{src}/chunk_{i}.parquet", index=False)
-        with open(ready, "w") as f:
-            f.write(stamp)
-    return src
+            chunk.to_parquet(f"{tmp}/chunk_{i}.parquet", index=False)
+
+    tag = "late" if plant_late else "clean"
+    return stage(f"stream_chunks_{tag}", sf_dir, "events", _build)
 
 
 @register(
@@ -540,32 +515,12 @@ def stream_session_motif(spark, sf_dir):
     return run_to_memory(out, "complete")
 
 
-def stage_docs_dir(sf_dir: str) -> str:
-    """Copy the documents fixture into a scratch dir for the file stream
-    source (same stamp-invalidated pattern as stage_events_dir — a
-    regenerated fixture never serves stale data)."""
-    src = path_of(sf_dir, "documents")
-    src_dir = f"{SCRATCH}/stream_docs_{os.path.basename(sf_dir.rstrip('/'))}"
-    os.makedirs(src_dir, exist_ok=True)
-    staged = f"{src_dir}/documents.parquet"
-    stamp_file = f"{src_dir}/_stamp"
-    stamp = _source_stamp(src)
-    prev = open(stamp_file).read() if os.path.exists(stamp_file) else None
-    if prev != stamp or not os.path.exists(staged):
-        if os.path.isdir(staged):
-            shutil.rmtree(staged)
-        _copy_parquet(src, staged)
-        with open(stamp_file, "w") as f:
-            f.write(stamp)
-    return src_dir
-
-
 def docs_stream(spark, sf_dir: str):
     """readStream over the documents table — the ingestion shape of a
     continuously-crawled corpus (files land, the curation stream picks
     them up)."""
     raw_schema = read_parquet(spark, path_of(sf_dir, "documents")).schema
-    return spark.readStream.schema(raw_schema).parquet(stage_docs_dir(sf_dir))
+    return spark.readStream.schema(raw_schema).parquet(stage_table_dir(sf_dir, "documents"))
 
 
 @register("stream_pii_scrub", oracle=PII_SCRUB_ORACLE)

@@ -1,4 +1,5 @@
-"""spread() split estimation + zero-norm embedding guard (round-3 ADVICE)."""
+"""spread() split estimation, zero-norm embedding guard (round-3 ADVICE) and
+the staged-store publish (io.stage)."""
 
 import math
 import os
@@ -113,128 +114,189 @@ class TestZeroNormGuard:
         assert got == want
 
 
+@pytest.fixture
+def scratch_sf(tmp_path, monkeypatch):
+    """(scratch, sf_dir): SCRATCH moved into tmp_path, and an SF dir holding
+    one stand-in nation table for the store key to fingerprint."""
+    from data_transform_spark import io as dio
+
+    scratch = tmp_path / "scratch"
+    scratch.mkdir()
+    monkeypatch.setattr(dio, "SCRATCH", str(scratch))
+    sf = tmp_path / "sf_t"
+    sf.mkdir()
+    (sf / "nation.parquet").write_bytes(b"stand-in")
+    return str(scratch), str(sf)
+
+
+def _write(d: str, text: str) -> None:
+    os.makedirs(d, exist_ok=True)
+    with open(f"{d}/part-0", "w") as f:
+        f.write(text)
+
+
+def _read(d: str) -> str:
+    with open(f"{d}/part-0") as f:
+        return f.read()
+
+
 class TestStageAtomic:
-    def test_publishes_complete_dir_and_discards_race_loser(self, tmp_path):
-        """r7 ADVICE: staged cache dirs are published via temp-dir +
-        os.rename, so a reader can only ever see a COMPLETE directory; a
-        process that loses the rename race discards its temp copy and the
-        winner's contents survive untouched."""
-        from data_transform_spark.operators.scans import _stage_atomic
+    def test_publishes_complete_dir_and_discards_race_loser(self, scratch_sf):
+        """r7 ADVICE: staged stores are published via temp-dir + os.rename,
+        so a reader can only ever see a COMPLETE directory; a hit runs no
+        build; a process that loses the rename race discards its temp copy
+        and the winner's contents survive untouched."""
+        from data_transform_spark.io import MARKER, stage, store_dir
 
-        target = str(tmp_path / "staged")
+        scratch, sf = scratch_sf
+        target = store_dir("t", sf, "nation")
+        assert stage("t", sf, "nation", lambda d: _write(d, "v1")) == target
+        assert _read(target) == "v1"
+        assert os.path.exists(f"{target}/{MARKER}")
 
-        def build_v1(d):
-            os.makedirs(d)
-            with open(f"{d}/part-0", "w") as f:
-                f.write("v1")
-            with open(f"{d}/_SUCCESS", "w") as f:
-                f.write("")
+        def no_build(d):
+            raise AssertionError("a hit must not build")
 
-        _stage_atomic(target, build_v1)
-        with open(f"{target}/part-0") as f:
-            assert f.read() == "v1"
+        assert stage("t", sf, "nation", no_build) == target
 
-        def build_v2(d):
-            os.makedirs(d)
-            with open(f"{d}/part-0", "w") as f:
-                f.write("v2")
-            with open(f"{d}/_SUCCESS", "w") as f:
-                f.write("")
+        race = store_dir("race", sf, "nation")
 
-        _stage_atomic(target, build_v2)  # target already exists: lost race
-        with open(f"{target}/part-0") as f:
-            assert f.read() == "v1"
+        def build_losing(d):
+            _write(d, "loser")
+            _write(race, "winner")  # another process publishes meanwhile
+            open(f"{race}/{MARKER}", "w").close()
+
+        assert stage("race", sf, "nation", build_losing) == race
+        assert _read(race) == "winner"
         # no stray .tmp-* siblings left behind
-        assert sorted(os.listdir(tmp_path)) == ["staged"]
+        assert sorted(os.listdir(scratch)) == sorted(map(os.path.basename, (target, race)))
 
-    def test_heals_corrupt_markerless_leftover(self, tmp_path):
-        """r8 ADVICE: a pre-existing target WITHOUT its completeness marker
-        (a delete-then-write crash leftover) must not win the rename race —
-        the fresh complete build replaces it instead of being discarded
-        while callers read the partial dir forever."""
-        from data_transform_spark.operators.scans import _stage_atomic
+    def test_heals_corrupt_markerless_leftover(self, scratch_sf):
+        """r8 ADVICE: a pre-existing target WITHOUT the marker (a crashed
+        publisher, or a store an older engine marked another way) must not
+        win the rename race — the fresh complete build replaces it."""
+        from data_transform_spark.io import MARKER, stage, store_dir
 
-        target = str(tmp_path / "staged")
-        os.makedirs(target)  # corrupt leftover: no _SUCCESS inside
-        with open(f"{target}/part-0", "w") as f:
-            f.write("partial")
+        scratch, sf = scratch_sf
+        target = store_dir("t", sf, "nation")
+        _write(target, "partial")
+        open(f"{target}/_INDEX", "w").close()
 
-        def build(d):
-            os.makedirs(d)
-            with open(f"{d}/part-0", "w") as f:
-                f.write("fresh")
-            with open(f"{d}/_SUCCESS", "w") as f:
-                f.write("")
+        assert stage("t", sf, "nation", lambda d: _write(d, "fresh")) == target
+        assert _read(target) == "fresh"
+        assert sorted(os.listdir(target)) == [MARKER, "part-0"]
+        assert os.listdir(scratch) == [os.path.basename(target)]
 
-        _stage_atomic(target, build)
-        with open(f"{target}/part-0") as f:
-            assert f.read() == "fresh"
-        assert os.path.exists(f"{target}/_SUCCESS")
-        assert sorted(os.listdir(tmp_path)) == ["staged"]
-
-    def test_failed_build_leaks_no_temp_sibling(self, tmp_path):
+    def test_failed_build_leaks_no_temp_sibling(self, scratch_sf):
         """r8 ADVICE: if build() raises, the .tmp-* sibling is cleaned up
         (not leaked in SCRATCH) and the error propagates."""
-        import pytest
+        from data_transform_spark.io import stage
 
-        from data_transform_spark.operators.scans import _stage_atomic
-
-        target = str(tmp_path / "staged")
+        scratch, sf = scratch_sf
 
         def bad_build(d):
-            os.makedirs(d)
-            with open(f"{d}/part-0", "w") as f:
-                f.write("half")
+            _write(d, "half")
             raise RuntimeError("build blew up")
 
         with pytest.raises(RuntimeError, match="build blew up"):
-            _stage_atomic(target, bad_build)
-        assert os.listdir(tmp_path) == []  # no target, no .tmp-* leftovers
+            stage("t", sf, "nation", bad_build)
+        assert os.listdir(scratch) == []  # no target, no .tmp-* leftovers
 
-    def test_custom_marker_respected(self, tmp_path):
-        """A complete winner carrying a CUSTOM marker (e.g. _planted) is
-        left untouched by a losing builder using the same marker name."""
-        from data_transform_spark.operators.scans import _stage_atomic
 
-        target = str(tmp_path / "staged")
+# store name -> the fixture table it is keyed on, for every scratch store
+_STORES = {
+    "dpp_lineitem": "lineitem",
+    "scan_csv_malformed": "nation",
+    "scan_xml_nation": "nation",
+    "scan_json_multiline": "nation",
+    "scan_text_nation": "nation",
+    "substr_store": "documents",
+    "substr_store2": "documents",
+    "minhash_store": "documents",
+    "phash_store": "documents",
+    "ivfpq_index": "embeddings",
+    "ivfpq_hist": "embeddings",
+    "graph_index": "embeddings",
+    "ivfpq_appends": "embeddings",
+    "ivfpq_compact": "embeddings",
+    "stream_events": "events",
+    "stream_chunks_late": "events",
+    "stream_chunks_clean": "events",
+    "stream_documents": "documents",
+    "scan_jsonl": "documents",
+    "scan_csv": "documents",
+}
+# the keys that stage them (ivfpq_hist and ivfpq_appends via the compaction)
+_STAGING_KEYS = [
+    "join_dpp", "scan_csv_malformed", "scan_xml", "scan_json_multiline", "scan_text",
+    "text_substring_dedup_incr", "text_substring_store_update", "dedup_minhash_incr",
+    "dedup_image_phash_incr", "sim_ann_persist", "sim_ann_graph", "sim_ann_index_compact",
+    "source_stream_file", "stream_tumbling", "stream_watermark", "stream_pii_scrub",
+    "scan_jsonl", "scan_csv",
+]
+# stores once stamp-checked and rewritten in place, and the keys that stage them
+_RESTAGED_STORES = ["stream_events", "stream_chunks_late", "stream_chunks_clean",
+                    "stream_documents", "scan_jsonl", "scan_csv"]
+_RESTAGED_KEYS = ["source_stream_file", "stream_watermark", "stream_pii_scrub",
+                  "scan_jsonl", "scan_csv"]
 
-        def build(tag):
-            def _b(d):
-                os.makedirs(d)
-                with open(f"{d}/part-0", "w") as f:
-                    f.write(tag)
-                with open(f"{d}/_planted", "w") as f:
-                    f.write("ok")
 
-            return _b
+def _snapshot(d: str) -> dict:
+    out = {}
+    for dirpath, _dirs, files in os.walk(d):
+        for f in files:
+            p = os.path.join(dirpath, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, d)] = (os.stat(p).st_mtime_ns, fh.read())
+    return out
 
-        _stage_atomic(target, build("first"), marker="_planted")
-        _stage_atomic(target, build("second"), marker="_planted")
-        with open(f"{target}/part-0") as f:
-            assert f.read() == "first"
 
-    def test_build_must_write_its_marker(self, tmp_path):
-        """r9 ADVICE: a build that writes a DIFFERENT marker than the one
-        passed to _stage_atomic would publish a dir every later process
-        treats as a corrupt leftover (and rmtree's while readers hold it).
-        The mismatch is now caught at build time, before the rename."""
-        import pytest
+class TestStagedStores:
+    def test_every_store_is_keyed_marked_and_republished(self, spark, sf_dir, tmp_path, monkeypatch):
+        """Every scratch store goes through io.stage: its directory is
+        {name}_{sf}_{fingerprint} and holds the one marker. A changed
+        fixture publishes a new store next to the old one, which stays
+        byte-identical (no in-place rewrite)."""
+        import shutil
 
-        from data_transform_spark.operators.scans import _stage_atomic
+        import __spark_entry__  # noqa: F401
+        from data_transform_spark import io as dio
+        from data_transform_spark.pipeline.e2e import _prefix_code_fingerprint, stage_e2e_prefix
+        from data_transform_spark.registry import QUERIES
+        from data_transform_spark.streaming.ops import stage_events_chunks
 
-        target = str(tmp_path / "staged")
+        sf = str(tmp_path / os.path.basename(sf_dir))
+        os.makedirs(sf)
+        for f in os.listdir(sf_dir):
+            shutil.copyfile(os.path.join(sf_dir, f), os.path.join(sf, f))
+        scratch = str(tmp_path / "scratch")
+        monkeypatch.setattr(dio, "SCRATCH", scratch)
+        stores = {**_STORES, f"e2e_prefix_{_prefix_code_fingerprint()}": "documents"}
 
-        def build(d):
-            os.makedirs(d)
-            with open(f"{d}/part-0", "w") as f:
-                f.write("data")
-            with open(f"{d}/_STAGED", "w") as f:  # wrong name for _SUCCESS
-                f.write("ok")
+        def entries(names):
+            return {os.path.basename(dio.store_dir(n, sf, stores[n])) for n in names}
 
-        with pytest.raises(OSError, match="completeness marker"):
-            _stage_atomic(target, build)  # default marker=_SUCCESS
-        assert os.listdir(tmp_path) == []  # nothing published, nothing leaked
+        counts = {key: QUERIES[key](spark, sf).count() for key in _STAGING_KEYS}
+        stage_events_chunks(sf, plant_late=False)
+        stage_e2e_prefix(spark, sf)
+        first = entries(stores)
+        assert set(os.listdir(scratch)) == first
+        for entry in first:
+            assert os.path.exists(os.path.join(scratch, entry, dio.MARKER)), entry
+        before = {e: _snapshot(os.path.join(scratch, e)) for e in first}
 
-        _stage_atomic(target, build, marker="_STAGED")  # correct kwarg: ok
-        with open(f"{target}/part-0") as f:
-            assert f.read() == "data"
+        for table in ("documents", "events", "nation"):
+            p = dio.path_of(sf, table)
+            st = os.stat(p)
+            os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        for key in _RESTAGED_KEYS:
+            assert QUERIES[key](spark, sf).count() == counts[key], key
+        stage_events_chunks(sf, plant_late=False)
+
+        new = entries(_RESTAGED_STORES)
+        assert not new & first
+        assert set(os.listdir(scratch)) == first | new
+        for entry in new:
+            assert os.path.exists(os.path.join(scratch, entry, dio.MARKER)), entry
+        for entry in first:
+            assert _snapshot(os.path.join(scratch, entry)) == before[entry], entry

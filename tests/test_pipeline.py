@@ -809,14 +809,13 @@ class TestAnnPersist:
         codes actually staged under each path cover exactly that SF's
         corpus."""
         from data_transform_spark.io import load_table
-        from data_transform_spark.pipeline.similarity import (
-            PQ_M,
-            ivfpq_index_dir,
-            ivfpq_stage_index,
-        )
+        from data_transform_spark.io import store_dir
+        from data_transform_spark.pipeline.similarity import PQ_M, ivfpq_stage_index
 
         sf_a, sf_b = "/root/testdata/sf0.001", "/root/testdata/sf0.01"
-        assert ivfpq_index_dir(sf_a) != ivfpq_index_dir(sf_b)
+        assert store_dir("ivfpq_index", sf_a, "embeddings") != store_dir(
+            "ivfpq_index", sf_b, "embeddings"
+        )
         staged_a = ivfpq_stage_index(spark, sf_a)
         staged_b = ivfpq_stage_index(spark, sf_b)
         assert staged_a != staged_b
@@ -1049,27 +1048,23 @@ class TestStagedIndexHeal:
     def test_markerless_corrupt_index_is_rebuilt(self, spark):
         """A staged index that lost its completeness marker (crashed
         publisher, partial copy) must be treated as corrupt and REBUILT on
-        the next call — the _stage_atomic heal path exercised end-to-end
-        on the real artifact, not a toy dir."""
+        the next call — io.stage's heal path exercised end-to-end on the
+        real artifact, not a toy dir."""
         import os
         import shutil
 
-        from data_transform_spark.io import load_table
-        from data_transform_spark.pipeline.similarity import (
-            IVFPQ_INDEX_MARKER,
-            PQ_M,
-            ivfpq_stage_index,
-        )
+        from data_transform_spark.io import MARKER, load_table
+        from data_transform_spark.pipeline.similarity import PQ_M, ivfpq_stage_index
 
         sf = "/root/testdata/sf0.001"
         staged = ivfpq_stage_index(spark, sf)
         # corrupt it: drop the marker AND one component table
-        os.remove(os.path.join(staged, IVFPQ_INDEX_MARKER))
+        os.remove(os.path.join(staged, MARKER))
         shutil.rmtree(os.path.join(staged, "codes"))
 
         healed = ivfpq_stage_index(spark, sf)
         assert healed == staged
-        assert os.path.exists(os.path.join(staged, IVFPQ_INDEX_MARKER))
+        assert os.path.exists(os.path.join(staged, MARKER))
         n = load_table(spark, sf, "embeddings").count()
         assert spark.read.parquet(f"{staged}/codes").count() == n * PQ_M
 

@@ -61,7 +61,7 @@ def test_asof_join_single_shuffle(spark, sf_dir):
 
 def test_partition_pruning_on_partitioned_sink(spark, sf_dir):
     """The hive-layout sink must enable partition pruning on read-back."""
-    from data_transform_spark.operators.scans import SCRATCH
+    from data_transform_spark.io import SCRATCH
 
     QUERIES["sink_partitioned"](spark, sf_dir).count()  # materialize layout
     df = spark.read.parquet(f"{SCRATCH}/sink_partitioned").filter("l_returnflag = 'A'")
@@ -452,7 +452,7 @@ def test_zorder_files_cluster_both_dims(spark, sf_dir):
     one dimension and leaves the other's per-file range at ~100%)."""
     from pyspark.sql import functions as F
 
-    from data_transform_spark.operators.scans import SCRATCH
+    from data_transform_spark.io import SCRATCH
 
     QUERIES["sink_zorder"](spark, sf_dir).count()  # materialize layout
     tag = __import__("os").path.basename(sf_dir.rstrip("/"))
@@ -482,7 +482,7 @@ def test_dynamic_overwrite_leaves_other_partitions(spark, sf_dir):
     base write (static mode would have deleted and re-created them)."""
     import os
 
-    from data_transform_spark.operators.scans import SCRATCH
+    from data_transform_spark.io import SCRATCH
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     out = f"{SCRATCH}/dynover_lineitem_{tag}"
@@ -527,24 +527,14 @@ def test_permissive_csv_quarantines_bad_rows(spark, sf_dir):
     """PERMISSIVE mode must load every line, quarantining exactly the 3
     planted malformed rows into _corrupt_record with nulls elsewhere —
     the audit-trail alternative to DROPMALFORMED's silent skip."""
-    import os
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StringType, StructField
 
-    from data_transform_spark.io import load_table, path_of
-    from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
+    from data_transform_spark.io import load_table, store_dir
 
     QUERIES["scan_csv_malformed"](spark, sf_dir).count()  # stage the dir
     nation = load_table(spark, sf_dir, "nation")
-    # the staged dir is (SF, source-fingerprint)-keyed since r7 — derive the
-    # path the same way the operator does (the old unsuffixed path only kept
-    # working while a stale pre-r7 scratch dir survived on disk)
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    staged = (
-        f"{SCRATCH}/scan_csv_malformed_{tag}"
-        f"_{_path_fingerprint(path_of(sf_dir, 'nation'))}"
-    )
+    staged = store_dir("scan_csv_malformed", sf_dir, "nation")
     schema = nation.schema.add(StructField("_corrupt_record", StringType()))
     df = (
         spark.read.schema(schema)

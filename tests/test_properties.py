@@ -1314,16 +1314,13 @@ class TestStoreUpdateAndStreamScrub:
         the distinct window digests of the full corpus — the invariant
         that keeps every later increment correct."""
         import __spark_entry__  # noqa: F401
-        from data_transform_spark.io import load_table
-        from data_transform_spark.pipeline.dedup import (
-            _substring_grams,
-            substring_store_v2_dir,
-        )
+        from data_transform_spark.io import load_table, store_dir
+        from data_transform_spark.pipeline.dedup import _substring_grams
         from data_transform_spark.registry import QUERIES
 
         row = QUERIES["text_substring_store_update"](spark, sf_dir).collect()[0]
         assert row.n_total == row.n_hist + row.n_batch_novel
-        upd = spark.read.parquet(substring_store_v2_dir(sf_dir))
+        upd = spark.read.parquet(store_dir("substr_store2", sf_dir, "documents"))
         got = {r.g for r in upd.collect()}
         full = {
             r.g

@@ -97,8 +97,8 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir):
 
     import pyspark.sql.functions as F
 
-    from data_transform_spark.io import path_of
-    from data_transform_spark.streaming.ops import SCRATCH, stage_events_chunks
+    from data_transform_spark.io import SCRATCH, path_of
+    from data_transform_spark.streaming.ops import stage_events_chunks
 
     src = stage_events_chunks(sf_dir, plant_late=False)
     ckpt = f"{SCRATCH}/ckpt_{uuid.uuid4().hex[:8]}"

@@ -158,7 +158,7 @@ def _walk(obj, items: dict[str, str]) -> None:
             # module-level constant reached by bare name from a package
             # module — its VALUE is part of the key's behavior (only if
             # its repr is process-stable; address-bearing reprs are noise).
-            # A path inside the checkout (operators.scans.SCRATCH) is hashed
+            # A path inside the checkout (io.SCRATCH) is hashed
             # relative to the checkout root, so the hash does not depend on
             # where the repository lives.
             rep = _stable_repr(ref)

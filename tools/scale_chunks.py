@@ -23,7 +23,7 @@ sys.path.insert(0, _REPO)
 from pyspark.sql import functions as F  # noqa: E402
 
 import data_transform_spark.pipeline.dedup as dd  # noqa: E402
-from data_transform_spark.operators.scans import SCRATCH  # noqa: E402
+from data_transform_spark.io import SCRATCH  # noqa: E402
 from data_transform_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
