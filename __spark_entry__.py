@@ -55,8 +55,7 @@ def _wrap(fn: Callable) -> Callable[[SparkSession, str], DataFrame]:
 # The set is read from the CORRECTNESS_r*.json files the driver commits
 # into the repo root, so it maintains itself round over round (round 3
 # wasted its entire sweep budget on a hand-maintained set that had gone
-# stale). _GREEN_FALLBACK pins the r1-r3 union in case the files are
-# missing in some future checkout.
+# stale). With no CORRECTNESS file, nothing counts as verified.
 
 
 def _official_green() -> set[str]:
@@ -100,13 +99,6 @@ def _official_green_rounds() -> dict[str, int]:
     # A green verdict only counts if it post-dates the last output-changing
     # rewrite of that key — otherwise the row describes code that no longer
     # exists and the key must re-enter the sweep.
-    # Fall back to the pinned r1-r3 union ONLY when no correctness rows were
-    # read at all (missing/corrupt files in some future checkout). If rows
-    # exist but every one is red, the honest answer is the empty set — the
-    # capped sweep must then re-check everything, not skip ~90 red keys as
-    # "verified" (round-4 ADVICE).
-    if not latest:
-        return {key: 0 for key in _GREEN_FALLBACK}
     return {
         key: rnd
         for key, (rnd, ok) in latest.items()
@@ -118,107 +110,7 @@ def _official_green_rounds() -> dict[str, int]:
 # green official row. Their stale verdict is ignored until the driver
 # re-verifies them in that round or later (at which point the entry here is
 # inert and can be dropped).
-_CHANGED_IN_ROUND = {
-    "sample_hash": 4,  # round 4: 16->32-bit md5 bucket prefix resamples
-    # round 10: stub image decode upgraded to a REAL pure-numpy BMP codec
-    # (r9 VERDICT #4) — dims/stats now come from decoded pixels
-    "multimodal_features": 10,
-    "multimodal_resize": 10,
-    # round 11: digest composes hierarchically (256 content buckets ->
-    # bucket digests -> published md5) per r10 ADVICE — corpus_md5 values
-    # change; counts unchanged
-    "corpus_manifest": 11,
-    # round 11: domain switched source -> lang (source is perfectly
-    # uniform in the fixture, so every rate was 1.0 and the op was a
-    # no-op on its own fixture); output column source -> lang
-    "sample_temperature": 11,
-    # round 14: MRR@10 + MAP@10 columns added (r13 VERDICT #7) — the key
-    # had no official green row yet (registered r13), so this entry is
-    # documentation; it stays at the tier-0 sweep head either way
-    "search_eval_graded": 14,
-    # round 14: the bakeoff gains the 'wordpiece' row (the trainer trio
-    # became a quartet) — 6 families now, same metric columns
-    "tokenize_bakeoff": 14,
-}
-
-
-_GREEN_FALLBACK = {
-    "agg_approx_distinct", "agg_bool", "agg_collect", "agg_count_distinct",
-    "agg_countif", "agg_cube", "agg_global", "agg_groupby",
-    "agg_grouping_sets", "agg_having", "agg_minmax_by", "agg_percentile",
-    "agg_pivot", "agg_rollup", "agg_sketch_merge", "agg_stats",
-    "agg_string", "agg_sum_distinct", "dedup_subset", "dq_checks",
-    "fn_array", "fn_array_lambda", "fn_array_setops", "fn_bitwise_scalar",
-    "fn_date_arith", "fn_date_epoch", "fn_date_extract", "fn_explode",
-    "fn_hash", "fn_json", "fn_json_build", "fn_map", "fn_math",
-    "fn_sequence", "fn_string_basic", "fn_string_fuzzy", "fn_string_regex",
-    "fn_struct", "fn_trig", "join_anti", "join_asof", "join_broadcast",
-    "join_cross", "join_full", "join_inner", "join_interval", "join_left",
-    "join_multiway", "join_right", "join_self", "join_semi",
-    "join_skew_salted", "join_theta", "limit_offset", "limit_topk",
-    "sample_hash", "scan_events_ns", "scan_jsonl", "scan_parquet",
-    "scan_pruned", "set_except", "set_except_all", "set_intersect",
-    "set_intersect_all", "set_union", "set_union_all", "shard_assign",
-    "sink_csv_json", "sink_parquet", "sink_partitioned", "sort_multi",
-    "sort_nulls", "source_stream_file", "tpch_q3", "tpch_q6",
-    "transform_scd2", "transform_upsert", "udf_grouped_map",
-    "udf_map_in_pandas", "udf_pandas_agg", "udf_pandas_scalar",
-    "udf_scalar", "udf_sql_registered", "udtf_tokenize", "win_first_last",
-    "win_lag_lead", "win_moving", "win_range_frame", "win_rank",
-    "win_row_number", "win_running", "win_topk_group",
-}
-
-# Round-4 sweep targets: the 50 keys the capped sweep must reach, in order.
-# All of SURVEY §2.B (13 projections), §2.K core (11 LLM-pipeline), §2.I
-# core (8 streaming) — never officially swept — plus 18 pipeline-extension
-# keys to fill the 50 slots exactly. Within each block, cheap keys lead and
-# the expensive verifies (minhash 3-18 s, embed_cosine 12-20 s at sf0.01)
-# trail, so even a TIME-capped sweep (the observed cap is 50 keys) verifies
-# the maximum number of keys before cutting off.
-_SWEEP_PRIORITY = [
-    # §2.B projections / filters / predicates (all sub-second)
-    "project_select", "project_compute", "filter_compare", "filter_in",
-    "filter_between", "filter_like", "filter_rlike", "filter_null",
-    "filter_bool", "expr_case", "expr_coalesce", "expr_cast",
-    "project_distinct",
-    # §2.K LLM-pipeline core, cheapest first
-    "embed_normalize", "text_stats", "text_lang_filter", "text_tokenize",
-    "multimodal_binary", "text_tfidf", "sim_topk_bruteforce",
-    "sim_knn_classify", "sim_pairs_threshold", "dedup_exact",
-    "dedup_near_minhash",
-    # §2.I streaming core
-    "stream_tumbling", "stream_sliding", "stream_session",
-    "stream_dedup", "stream_stateful", "stream_static_join",
-    "stream_sink", "stream_watermark",
-    # pipeline extensions, cheapest first
-    "text_token_count", "text_quality", "text_fingerprint",
-    "text_pii_redact", "sample_stratified", "split_train_test",
-    "pack_sequences", "text_ngram_counts", "embed_quantize",
-    "multimodal_features", "sim_topk_blocked", "sim_ann_ivf",
-    "sim_ann_lsh", "dedup_ngram_jaccard", "dedup_simhash",
-    "dedup_near_survivors", "dedup_survivors_star", "dedup_embed_cosine",
-]
-_SWEEP_RANK = {k: i for i, k in enumerate(_SWEEP_PRIORITY)}
-
-# Family order for unverified keys beyond the explicit priority block —
-# round 5's queue (round-3 VERDICT "Next round" #7).
-_FAMILY_ORDER = [
-    "pipeline.e2e",
-    "streaming.ops",         # stream_update_counts / stream_join extras
-    "operators.sqlsurface",
-    "operators.tpch_more",
-    "operators.timeseries",
-    "operators.extras",
-    "operators.reshape",
-    "functions.strings",     # fn_url
-    "operators.projections",
-    "pipeline.text",
-    "pipeline.training",
-    "pipeline.multimodal",
-    "pipeline.dedup",
-    "pipeline.similarity",
-    "operators.etl",
-]
+_CHANGED_IN_ROUND: dict[str, int] = {}
 
 
 _GREEN_ROUNDS = _official_green_rounds()
@@ -294,11 +186,7 @@ def _sweep_tier(name: str) -> int:
 
 
 def _sweep_rank(name: str) -> tuple:
-    fn = QUERIES[name]
-    mod = fn.__module__.removeprefix("data_transform_spark.")
-    fam = _FAMILY_ORDER.index(mod) if mod in _FAMILY_ORDER else len(_FAMILY_ORDER)
     ins = list(QUERIES).index(name)
-    pri = _SWEEP_RANK.get(name, len(_SWEEP_PRIORITY))
     rnd = _KEY_ROUNDS.get(name, _ROUND_UNKNOWN)
     # Age-based re-verify tier (r10 VERDICT #5): unverified backlog keys
     # still lead (oldest registration round first — unchanged), but WITHIN
@@ -308,7 +196,7 @@ def _sweep_rank(name: str) -> tuple:
     # registration-order tail. Keys registered in the in-flight round sort
     # LAST (tier 2 — see _sweep_tier).
     green_rnd = _GREEN_ROUNDS.get(name, 0) if name in _GREEN_OFFICIAL else 0
-    return (_sweep_tier(name), green_rnd, rnd, pri, fam, ins)
+    return (_sweep_tier(name), green_rnd, rnd, ins)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

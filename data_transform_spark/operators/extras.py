@@ -121,6 +121,16 @@ def sample_hash(spark, sf_dir):
     return d.filter(bucket == 0).select("doc_id", "lang")
 
 
+def md5_shard(n_shards: int):
+    """The engine's one shard policy: a doc's shard is its doc_id's 16-bit
+    md5 prefix mod ``n_shards`` — the same hex in Spark and DuckDB, so a
+    doc lands in the same shard whichever engine writes it."""
+    return (
+        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
+        % n_shards
+    )
+
+
 @register(
     "shard_assign",
     oracle="""
@@ -137,12 +147,8 @@ def shard_assign(spark, sf_dir):
     """Stable shard assignment (md5 % n_shards) + per-shard size accounting —
     the repartition key for deterministic dataset materialization."""
     d = load_table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("long")
-        % 8
-    ).alias("shard")
     return (
-        d.select(shard, "n_chars")
+        d.select(md5_shard(8).alias("shard"), "n_chars")
         .groupBy("shard")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("n_chars").alias("total_chars"))
     )

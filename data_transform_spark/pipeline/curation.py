@@ -145,6 +145,26 @@ def mix_domains(spark, sf_dir):
 TEMP_ALPHA = 0.7  # sampling temperature (mT5/XLM-R use 0.3-0.7)
 
 
+def _temperature_rates(frame, domain: str):
+    """The (domain, rate) frame of temperature sampling over ``frame``:
+    r_d = p_d^(α-1) rounded to 6 dp, then normalised by the max rate and
+    rounded again (the cross-engine float rule in sample_temperature's
+    docstring). Counts, total and max are 1-row broadcast aggregates in
+    the caller's plan; the caller applies its own salted keep-filter."""
+    cnt = frame.groupBy(domain).agg(F.count(F.lit(1)).alias("n"))
+    tot = cnt.agg(F.sum("n").alias("t"))
+    w = cnt.crossJoin(F.broadcast(tot)).select(
+        domain,
+        F.round(
+            F.pow(F.col("n") / F.col("t"), F.lit(TEMP_ALPHA - 1)), 6
+        ).alias("wr"),
+    )
+    mx = w.agg(F.max("wr").alias("mx"))
+    return w.crossJoin(F.broadcast(mx)).select(
+        domain, F.round(F.col("wr") / F.col("mx"), 6).alias("rate")
+    )
+
+
 @register(
     "sample_temperature",
     oracle=f"""
@@ -188,20 +208,8 @@ def sample_temperature(spark, sf_dir):
     exponent has no DECIMAL-exact path, so a fixture whose domain share
     puts pow() exactly on a 0.5e-6 boundary could still diverge."""
     d = load_table(spark, sf_dir, "documents")
-    cnt = d.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.agg(F.sum("n").alias("t"))
-    w = cnt.crossJoin(F.broadcast(tot)).select(
-        "lang",
-        F.round(
-            F.pow(F.col("n") / F.col("t"), F.lit(TEMP_ALPHA - 1)), 6
-        ).alias("wr"),
-    )
-    mx = w.agg(F.max("wr").alias("mx"))
-    rates = w.crossJoin(F.broadcast(mx)).select(
-        "lang", F.round(F.col("wr") / F.col("mx"), 6).alias("rate")
-    )
     return (
-        d.join(F.broadcast(rates), "lang")
+        d.join(F.broadcast(_temperature_rates(d, "lang")), "lang")
         .filter(_u01(F.col("doc_id"), ":temp") < F.col("rate"))
         .select("doc_id", "lang", "rate")
     )

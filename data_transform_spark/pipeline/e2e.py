@@ -1,9 +1,18 @@
-"""End-to-end training-data pipeline composition (§2.K capstone).
+"""End-to-end training-data pipeline compositions (§2.K capstones).
 
-One DataFrame chaining the library's stages the way a real corpus-prep job
-does: exact dedup → language gate → quality gate → TF-IDF → top term per
-doc → deterministic shard assignment. Every stage is the same code the
-individual keys use; the composition itself is what's verified here.
+pipeline_e2e chains the library's stages the way a corpus-prep job does:
+exact dedup → language gate → quality gate → TF-IDF → top term per doc →
+deterministic shard assignment.
+
+The three LLM-curation capstones run one funnel: substring dedup →
+near-dup removal → decontamination (the staged prefix) → a quality gate →
+temperature sampling → md5 sharding → per-shard packing. They differ only
+in the gate: pipeline_e2e_llm applies Gopher rules, pipeline_e2e_llm_v3 a
+trained NB model at a PR-curve threshold (the front v4 shares,
+_nb_gate_front), and pipeline_e2e_llm_v4 a 2-of-3 committee. Everything
+after the gate is one tail (_e2e_sampled, then _pack_summary), and each
+capstone reports one funnel row (_funnel). Every stage is the same code
+the individual keys use; the composition itself is what's verified here.
 """
 
 from __future__ import annotations
@@ -12,6 +21,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table, stage
+from data_transform_spark.operators.extras import md5_shard
 from data_transform_spark.registry import register
 from data_transform_spark.shares import release, share, submit
 
@@ -103,11 +113,8 @@ def pipeline_e2e(spark, sf_dir):
     )
 
     # 5. deterministic shard assignment
-    shard = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10).cast("long") % 8
-    )
     return gated.join(top, "doc_id").select(
-        "doc_id", "lang", "top_token", "tfidf", shard.alias("shard")
+        "doc_id", "lang", "top_token", "tfidf", md5_shard(8).alias("shard")
     )
 
 
@@ -425,6 +432,125 @@ def _e2e_prefix_staged(spark, sf_dir):
     return d, stats, decon
 
 
+def _nb_gate_front(d, decon):
+    """v3's and v4's front of the model gate: (lgate, w, prior, thr).
+
+    lgate is the length gate on the cleaned token counts. It depends only
+    on the staged decon frame, not on the NB chain, so its fill runs on a
+    driver thread CONCURRENTLY with the fit/threshold fills (r15, guide
+    §2.6 "overlap independent jobs": the serial fills left most of the
+    box idle). The NB is fit on the RAW corpus (quality_nb's exact
+    contract, via _nb_fit) and its keep threshold picked from the
+    held-out PR curve (_nb_threshold). Every frame is an eager share: the
+    funnel's broadcast branches race cold caches (r14)."""
+    from data_transform_spark.pipeline.curation import _nb_fit, _nb_threshold
+
+    lgate_f = submit(
+        lambda: share(
+            decon.filter(F.col("n_tok").between(E2E_MIN_TOK, E2E_MAX_TOK)),
+            eager=True,
+        )
+    )
+    d0 = d.select("doc_id", F.split("text", " ").alias("toks"))
+    lab, tok, w, prior = _nb_fit(d0)
+    # SHARE POINT: w feeds the held-out calibration scoring AND the
+    # cleaned-corpus gate scoring — persist or the fit aggregate runs twice.
+    w = share(w, eager=True)
+    score = (
+        tok.join(F.broadcast(w), "tok", "left")
+        .groupBy("doc_id")
+        .agg(F.sum(F.coalesce("wu", F.lit(0))).cast("long").alias("su"))
+    )
+    scored = (
+        lab.join(score, "doc_id")
+        .crossJoin(F.broadcast(prior))
+        .select(
+            "doc_id",
+            "is_train",
+            "label",
+            (F.col("su") + F.col("pu")).cast("long").alias("logit_u"),
+        )
+    )
+    # SHARE POINT: the 1-row threshold — its lineage is the whole held-out
+    # scoring pass; persisting collapses that to one execution
+    thr = share(_nb_threshold(scored), eager=True)
+    return lgate_f.result(), w, prior, thr
+
+
+def _e2e_sampled(gated):
+    """Temperature sampling from the GATED source distribution: the
+    content-stable keep decision against the per-source rates."""
+    from data_transform_spark.pipeline.curation import _temperature_rates, _u01
+
+    return (
+        gated.join(F.broadcast(_temperature_rates(gated, "source")), "source")
+        .filter(_u01(F.col("doc_id"), ":e2e") < F.col("rate"))
+        .select("doc_id", "source", "n_tok")
+    )
+
+
+def _pack_summary(sampled):
+    """Deterministic md5 shard, then PER-SHARD sequence packing
+    (PACK_BUDGET-token packs), as the capstones' 1-row summary: n_sampled,
+    tokens_out, n_packs, n_shards and the sampled_md5 pin."""
+    from data_transform_spark.pipeline.training import PACK_BUDGET
+
+    w_pack = (
+        Window.partitionBy("shard")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    packed = sampled.select(
+        "doc_id", "n_tok", md5_shard(E2E_SHARDS).alias("shard")
+    ).select(
+        "doc_id",
+        "n_tok",
+        "shard",
+        F.floor(
+            F.coalesce(F.sum("n_tok").over(w_pack), F.lit(0)) / PACK_BUDGET
+        )
+        .cast("long")
+        .alias("pack_id"),
+    )
+    return packed.agg(
+        F.count(F.lit(1)).alias("n_sampled"),
+        F.coalesce(F.sum("n_tok"), F.lit(0)).cast("long").alias("tokens_out"),
+        F.countDistinct("shard", "pack_id").cast("long").alias("n_packs"),
+        F.countDistinct("shard").cast("long").alias("n_shards"),
+        # verification pin, fixture-tier by design: collecting every
+        # sampled doc_id into one row is how the HASH proves the exact
+        # survivor set — at 100 TB you drop this column (or md5 per shard
+        # and hash the 8 shard digests); the funnel counts stay cheap
+        F.md5(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list("doc_id")),
+                    lambda x: x.cast("string"),
+                ),
+                ",",
+            )
+        ).alias("sampled_md5"),
+    )
+
+
+def _funnel(d, stats, decon, *stages):
+    """The capstones' report: the prefix counts (n_docs, n_substr_clean,
+    n_neardup_surv, n_decontaminated) followed by ``stages``, each a
+    1-row frame, folded as broadcast crossJoins — every count rides
+    in-plan, no driver .count() anywhere."""
+    row = (
+        d.agg(F.count(F.lit(1)).alias("n_docs"))
+        .crossJoin(F.broadcast(stats.select("n_substr_clean")))
+        .crossJoin(F.broadcast(stats.select("n_neardup_surv")))
+        .crossJoin(
+            F.broadcast(decon.agg(F.count(F.lit(1)).alias("n_decontaminated")))
+        )
+    )
+    for stage_row in stages:
+        row = row.crossJoin(F.broadcast(stage_row))
+    return row
+
+
 @register("pipeline_e2e_llm", oracle=_e2e_llm_oracle())
 def pipeline_e2e_llm(spark, sf_dir):
     """LLM-curation capstone v2 (r8 VERDICT #4) — the round-8/9 tiers
@@ -465,9 +591,6 @@ def pipeline_e2e_llm(spark, sf_dir):
       the gates are row-local on the cleaned text; everything after the
       gated frame is metadata-narrow (doc_id, source, n_tok).
     """
-    from data_transform_spark.pipeline.curation import TEMP_ALPHA, _u01
-    from data_transform_spark.pipeline.training import PACK_BUDGET
-
     d, _stats, decon = _e2e_prefix_staged(spark, sf_dir)
 
     # 4. gates on the cleaned text: length + Gopher repetition
@@ -508,79 +631,13 @@ def pipeline_e2e_llm(spark, sf_dir):
         .select("doc_id", "source", "n_tok")
     )
 
-    # 5. temperature sampling from the GATED source distribution
-    cnt = gated.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.agg(F.sum("n").alias("t"))
-    w = cnt.crossJoin(F.broadcast(tot)).select(
-        "source",
-        F.round(
-            F.pow(F.col("n") / F.col("t"), F.lit(TEMP_ALPHA - 1)), 6
-        ).alias("wr"),
-    )
-    mx = w.agg(F.max("wr").alias("mx"))
-    rates = w.crossJoin(F.broadcast(mx)).select(
-        "source", F.round(F.col("wr") / F.col("mx"), 6).alias("rate")
-    )
-    sampled = (
-        gated.join(F.broadcast(rates), "source")
-        .filter(_u01(F.col("doc_id"), ":e2e") < F.col("rate"))
-        .select("doc_id", "source", "n_tok")
-    )
-
-    # 6+7. deterministic shard, then PER-SHARD sequence packing
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-        ).cast("long")
-        % E2E_SHARDS
-    )
-    w_pack = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    packed = sampled.select("doc_id", "n_tok", shard.alias("shard")).select(
-        "doc_id",
-        "n_tok",
-        "shard",
-        F.floor(
-            F.coalesce(F.sum("n_tok").over(w_pack), F.lit(0)) / PACK_BUDGET
-        )
-        .cast("long")
-        .alias("pack_id"),
-    )
-
-    # funnel: every stage count as a 1-row broadcast aggregate, in-plan
-    c0 = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    c1 = _stats.select("n_substr_clean")
-    c2 = _stats.select("n_neardup_surv")
-    c3 = decon.agg(F.count(F.lit(1)).alias("n_decontaminated"))
-    c4 = gated.agg(F.count(F.lit(1)).alias("n_gated"))
-    c5 = packed.agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.coalesce(F.sum("n_tok"), F.lit(0)).cast("long").alias("tokens_out"),
-        F.countDistinct("shard", "pack_id").cast("long").alias("n_packs"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-        # verification pin, fixture-tier by design: collecting every
-        # sampled doc_id into one row is how the HASH proves the exact
-        # survivor set — at 100 TB you drop this column (or md5 per shard
-        # and hash the 8 shard digests); the funnel counts stay cheap
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            )
-        ).alias("sampled_md5"),
-    )
-    return (
-        c0.crossJoin(F.broadcast(c1))
-        .crossJoin(F.broadcast(c2))
-        .crossJoin(F.broadcast(c3))
-        .crossJoin(F.broadcast(c4))
-        .crossJoin(F.broadcast(c5))
+    # 5-7. temperature sampling → md5 shard → per-shard packing
+    return _funnel(
+        d,
+        _stats,
+        decon,
+        gated.agg(F.count(F.lit(1)).alias("n_gated")),
+        _pack_summary(_e2e_sampled(gated)),
     )
 
 
@@ -796,55 +853,10 @@ def pipeline_e2e_llm_v3(spark, sf_dir):
     over the already-length-gated survivors. Share points: the weight
     frame (feeds held-out calibration AND corpus scoring), the 1-row
     threshold, both gate frames."""
-    from data_transform_spark.pipeline.curation import (
-        TEMP_ALPHA,
-        _nb_fit,
-        _nb_threshold,
-        _u01,
-    )
-    from data_transform_spark.pipeline.training import PACK_BUDGET
-
     d, _stats, decon = _e2e_prefix_staged(spark, sf_dir)
 
-    # 4. length gate on the cleaned text — depends only on the staged
-    # decon frame, NOT on the NB chain, so its fill runs on a driver
-    # thread CONCURRENTLY with the fit/threshold fills below (r15,
-    # guide §2.6 "overlap independent jobs": the serial fills left most
-    # of the box idle; same work, overlapped actions).
-    lgate_f = submit(
-        lambda: share(
-            decon.filter(F.col("n_tok").between(E2E_MIN_TOK, E2E_MAX_TOK)),
-            eager=True,
-        )
-    )
-
-    # 5a. fit the NB on the RAW corpus (quality_nb's exact contract)
-    d0 = d.select("doc_id", F.split("text", " ").alias("toks"))
-    lab, tok, w, prior = _nb_fit(d0)
-    # SHARE POINT: w feeds the held-out calibration scoring AND the
-    # cleaned-corpus gate scoring — persist or the fit aggregate runs twice.
-    # Eager (r14): the funnel's broadcast branches race cold caches.
-    w = share(w, eager=True)
-    score = (
-        tok.join(F.broadcast(w), "tok", "left")
-        .groupBy("doc_id")
-        .agg(F.sum(F.coalesce("wu", F.lit(0))).cast("long").alias("su"))
-    )
-    scored = (
-        lab.join(score, "doc_id")
-        .crossJoin(F.broadcast(prior))
-        .select(
-            "doc_id",
-            "is_train",
-            "label",
-            (F.col("su") + F.col("pu")).cast("long").alias("logit_u"),
-        )
-    )
-    # SHARE POINT: the 1-row threshold — its lineage is the whole held-out
-    # scoring pass; persisting collapses that to one execution
-    thr = share(_nb_threshold(scored), eager=True)
-
-    lgate = lgate_f.result()
+    # 4-5a. length gate, NB fit and PR-curve threshold
+    lgate, w, prior, thr = _nb_gate_front(d, decon)
 
     # 5b. model gate: score the CLEANED text, keep logit >= threshold
     ctok = lgate.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
@@ -862,83 +874,15 @@ def pipeline_e2e_llm_v3(spark, sf_dir):
         eager=True,
     )
 
-    # 6. temperature sampling from the MODEL-gated source distribution
-    cnt = mgate.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.agg(F.sum("n").alias("t"))
-    wsrc = cnt.crossJoin(F.broadcast(tot)).select(
-        "source",
-        F.round(
-            F.pow(F.col("n") / F.col("t"), F.lit(TEMP_ALPHA - 1)), 6
-        ).alias("wr"),
-    )
-    mx = wsrc.agg(F.max("wr").alias("mx"))
-    rates = wsrc.crossJoin(F.broadcast(mx)).select(
-        "source", F.round(F.col("wr") / F.col("mx"), 6).alias("rate")
-    )
-    sampled = (
-        mgate.join(F.broadcast(rates), "source")
-        .filter(_u01(F.col("doc_id"), ":e2e") < F.col("rate"))
-        .select("doc_id", "source", "n_tok")
-    )
-
-    # 7+8. deterministic shard, then PER-SHARD sequence packing
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-        ).cast("long")
-        % E2E_SHARDS
-    )
-    w_pack = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    packed = sampled.select("doc_id", "n_tok", shard.alias("shard")).select(
-        "doc_id",
-        "n_tok",
-        "shard",
-        F.floor(
-            F.coalesce(F.sum("n_tok").over(w_pack), F.lit(0)) / PACK_BUDGET
-        )
-        .cast("long")
-        .alias("pack_id"),
-    )
-
-    c0 = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    c1 = _stats.select("n_substr_clean")
-    c2 = _stats.select("n_neardup_surv")
-    c3 = decon.agg(F.count(F.lit(1)).alias("n_decontaminated"))
-    c4a = lgate.agg(F.count(F.lit(1)).alias("n_len_gated"))
-    c4b = mgate.agg(F.count(F.lit(1)).alias("n_model_gated"))
-    c5 = packed.agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.coalesce(F.sum("n_tok"), F.lit(0)).cast("long").alias("tokens_out"),
-        F.countDistinct("shard", "pack_id").cast("long").alias("n_packs"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-        # fixture-tier verification pin (see pipeline_e2e_llm)
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            )
-        ).alias("sampled_md5"),
-    )
-    return (
-        c0.crossJoin(F.broadcast(c1))
-        .crossJoin(F.broadcast(c2))
-        .crossJoin(F.broadcast(c3))
-        .crossJoin(F.broadcast(c4a))
-        .crossJoin(F.broadcast(c4b))
-        .crossJoin(F.broadcast(thr.select(F.col("thr_u").cast("long").alias("thr_u"))))
-        .crossJoin(F.broadcast(c5))
-        .select(
-            "n_docs", "n_substr_clean", "n_neardup_surv", "n_decontaminated",
-            "n_len_gated", "n_model_gated", "thr_u", "n_sampled",
-            "tokens_out", "n_packs", "n_shards", "sampled_md5",
-        )
+    # 6-8. sampling / sharding / packing from the MODEL-gated distribution
+    return _funnel(
+        d,
+        _stats,
+        decon,
+        lgate.agg(F.count(F.lit(1)).alias("n_len_gated")),
+        mgate.agg(F.count(F.lit(1)).alias("n_model_gated")),
+        thr.select(F.col("thr_u").cast("long").alias("thr_u")),
+        _pack_summary(_e2e_sampled(mgate)),
     )
 
 
@@ -1113,9 +1057,6 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
     from data_transform_spark.pipeline.curation import (
         _dsir_bucket,
         _dsir_fit,
-        _nb_fit,
-        _nb_threshold,
-        _u01,
         GOPHER_MAX_DUP_UNIGRAM,
         GOPHER_MAX_MWL,
         GOPHER_MIN_MWL,
@@ -1125,21 +1066,13 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
         GOPHER_STOPWORDS,
         QNB_NEG,
         QNB_POS,
-        TEMP_ALPHA,
     )
-    from data_transform_spark.pipeline.training import PACK_BUDGET
 
     d, _stats, decon = _e2e_prefix_staged(spark, sf_dir)
 
-    # length gate (stage 4) and the DSIR fit (member 3's weights) are both
-    # independent of the NB chain — fill them on driver threads
-    # CONCURRENTLY with the fit/threshold fills below (r15, guide §2.6).
-    lgate_f = submit(
-        lambda: share(
-            decon.filter(F.col("n_tok").between(E2E_MIN_TOK, E2E_MAX_TOK)),
-            eager=True,
-        )
-    )
+    # the DSIR fit (member 3's weights) is independent of the NB chain —
+    # fill it on a driver thread CONCURRENTLY with the length-gate and
+    # fit/threshold fills of v3's front (r15, guide §2.6)
     dlab = d.select(
         "doc_id",
         F.split("text", " ").alias("toks"),
@@ -1156,26 +1089,8 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
 
     dw_f = submit(_dw_fill)
 
-    # NB fit on the raw corpus + PR-curve threshold (v3's stage 5a)
-    d0 = d.select("doc_id", F.split("text", " ").alias("toks"))
-    lab, tok, w, prior = _nb_fit(d0)
-    w = share(w, eager=True)
-    score = (
-        tok.join(F.broadcast(w), "tok", "left")
-        .groupBy("doc_id")
-        .agg(F.sum(F.coalesce("wu", F.lit(0))).cast("long").alias("su"))
-    )
-    scored = (
-        lab.join(score, "doc_id")
-        .crossJoin(F.broadcast(prior))
-        .select(
-            "doc_id", "is_train", "label",
-            (F.col("su") + F.col("pu")).cast("long").alias("logit_u"),
-        )
-    )
-    thr = share(_nb_threshold(scored), eager=True)
-
-    lgate = lgate_f.result()
+    # length gate, NB fit on the raw corpus + PR-curve threshold
+    lgate, w, prior, thr = _nb_gate_front(d, decon)
 
     # members 1+3 in ONE pass (r15, VERDICT #2 / guide §2.4 "aggregate
     # before you shuffle"): the NB weight lookup (broadcast join on tok)
@@ -1255,51 +1170,8 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
         eager=True,
     )
 
-    # sampling / sharding / packing from the committee-gated distribution
-    cnt = cgate.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    tot = cnt.agg(F.sum("n").alias("t"))
-    wsrc = cnt.crossJoin(F.broadcast(tot)).select(
-        "source",
-        F.round(
-            F.pow(F.col("n") / F.col("t"), F.lit(TEMP_ALPHA - 1)), 6
-        ).alias("wr"),
-    )
-    mx = wsrc.agg(F.max("wr").alias("mx"))
-    rates = wsrc.crossJoin(F.broadcast(mx)).select(
-        "source", F.round(F.col("wr") / F.col("mx"), 6).alias("rate")
-    )
-    sampled = (
-        cgate.join(F.broadcast(rates), "source")
-        .filter(_u01(F.col("doc_id"), ":e2e") < F.col("rate"))
-        .select("doc_id", "source", "n_tok")
-    )
-    shard = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-        ).cast("long")
-        % E2E_SHARDS
-    )
-    w_pack = (
-        Window.partitionBy("shard")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    packed = sampled.select("doc_id", "n_tok", shard.alias("shard")).select(
-        "doc_id",
-        "n_tok",
-        "shard",
-        F.floor(
-            F.coalesce(F.sum("n_tok").over(w_pack), F.lit(0)) / PACK_BUDGET
-        )
-        .cast("long")
-        .alias("pack_id"),
-    )
-
-    c0 = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    c1 = _stats.select("n_substr_clean")
-    c2 = _stats.select("n_neardup_surv")
-    c3 = decon.agg(F.count(F.lit(1)).alias("n_decontaminated"))
-    c4 = lgate.agg(F.count(F.lit(1)).alias("n_len_gated"))
+    # each member's pass count, then sampling / sharding / packing from
+    # the committee-gated distribution
     g1 = m_nb.agg(
         F.sum(F.when(F.col("pass_nb"), 1).otherwise(0)).cast("long").alias("n_gate_nb")
     )
@@ -1313,37 +1185,15 @@ def pipeline_e2e_llm_v4(spark, sf_dir):
         .cast("long")
         .alias("n_gate_dsir")
     )
-    c5 = cgate.agg(F.count(F.lit(1)).alias("n_committee_gated"))
-    c6 = packed.agg(
-        F.count(F.lit(1)).alias("n_sampled"),
-        F.coalesce(F.sum("n_tok"), F.lit(0)).cast("long").alias("tokens_out"),
-        F.countDistinct("shard", "pack_id").cast("long").alias("n_packs"),
-        F.countDistinct("shard").cast("long").alias("n_shards"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda x: x.cast("string"),
-                ),
-                ",",
-            )
-        ).alias("sampled_md5"),
-    )
-    return (
-        c0.crossJoin(F.broadcast(c1))
-        .crossJoin(F.broadcast(c2))
-        .crossJoin(F.broadcast(c3))
-        .crossJoin(F.broadcast(c4))
-        .crossJoin(F.broadcast(g1))
-        .crossJoin(F.broadcast(g2))
-        .crossJoin(F.broadcast(g3))
-        .crossJoin(F.broadcast(c5))
-        .crossJoin(F.broadcast(thr.select(F.col("thr_u").cast("long").alias("thr_u"))))
-        .crossJoin(F.broadcast(c6))
-        .select(
-            "n_docs", "n_substr_clean", "n_neardup_surv", "n_decontaminated",
-            "n_len_gated", "n_gate_nb", "n_gate_rules", "n_gate_dsir",
-            "n_committee_gated", "thr_u", "n_sampled", "tokens_out",
-            "n_packs", "n_shards", "sampled_md5",
-        )
+    return _funnel(
+        d,
+        _stats,
+        decon,
+        lgate.agg(F.count(F.lit(1)).alias("n_len_gated")),
+        g1,
+        g2,
+        g3,
+        cgate.agg(F.count(F.lit(1)).alias("n_committee_gated")),
+        thr.select(F.col("thr_u").cast("long").alias("thr_u")),
+        _pack_summary(_e2e_sampled(cgate)),
     )

@@ -28,8 +28,13 @@ recomputes them), and its eager checkpoints are left to GC.
   deployment would switch to reliable checkpoints here.
 - ``release(*frames)``: free the given frames now — for loops whose new
   checkpoint supersedes the old one.
-- ``release_all()``: free every tracked frame (key entry only).
-- ``building()``: one dispatched build, where eager shares are tracked.
+- ``release_all()``: free every tracked frame and delete every tracked
+  run directory (key entry only).
+- ``building()``: one dispatched build, where eager shares and run
+  directories are tracked.
+- ``run_dir(prefix)``: a fresh scratch directory for files the returned
+  frame reads (the streaming sinks); a dispatch's directory lives exactly
+  as long as that frame.
 - ``fill(*thunks)`` / ``submit(thunk)``: run independent eager fills as
   concurrent Spark actions on one 4-worker driver-thread pool, so the
   scheduler back-fills idle cores across the fills' tails.
@@ -37,17 +42,23 @@ recomputes them), and its eager checkpoints are left to GC.
 
 from __future__ import annotations
 
+import shutil
 import threading
+import uuid
 from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
+
+from data_transform_spark.io import SCRATCH
 
 _FILL_THREAD = "share-fill"
 
 # Every frame share() tracked and nothing has released yet. Fill threads
 # append to it too, so every change holds _LOCK.
 _HELD: list = []
+# Run directories made inside a dispatched build; guarded by _LOCK too.
+_DIRS: list = []
 _LOCK = threading.Lock()
 # Dispatched builds running now; global, as fill threads share for them.
 _builds = 0
@@ -90,19 +101,36 @@ def release(*frames) -> None:
 
 
 def release_all() -> None:
-    """Free every tracked share frame; called once per registered-key build,
-    at its entry."""
+    """Free every tracked share frame and delete every tracked run
+    directory; called once per registered-key build, at its entry."""
     with _LOCK:
         frames = _HELD[:]
         _HELD.clear()
+        dirs = _DIRS[:]
+        _DIRS.clear()
     for df in frames:
         _free(df)
+    for path in dirs:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def run_dir(prefix: str) -> str:
+    """A fresh ``{SCRATCH}/{prefix}_<uuid>`` path for files a key writes
+    and its returned frame reads. Made inside a dispatched build, it is
+    tracked like an eager checkpoint and deleted by the next dispatch;
+    a direct call's directory is untracked."""
+    path = f"{SCRATCH}/{prefix}_{uuid.uuid4().hex[:8]}"
+    with _LOCK:
+        if _builds:
+            _DIRS.append(path)
+    return path
 
 
 @contextmanager
 def building():
-    """Scope of one dispatched key build: eager checkpoints shared inside
-    it are tracked, so the next dispatch frees them."""
+    """Scope of one dispatched key build: eager checkpoints shared and run
+    directories made inside it are tracked, so the next dispatch frees
+    them."""
     global _builds
     _builds += 1
     try:

@@ -24,7 +24,6 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_transform_spark.io import (
-    SCRATCH,
     load_table,
     normalize_event_ts,
     path_of,
@@ -35,7 +34,7 @@ from data_transform_spark.operators.events import _SESSION_MOTIF_ORACLE
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
 from data_transform_spark.pipeline.text import PII_SCRUB_ORACLE, pii_plant, pii_scrub
 from data_transform_spark.registry import register
-from data_transform_spark.shares import release
+from data_transform_spark.shares import release, run_dir
 
 
 def stage_table_dir(sf_dir: str, table: str) -> str:
@@ -302,7 +301,7 @@ def stream_sink(spark, sf_dir):
     discipline as stream_upsert_sink's atomic swap). A bare ``mode("append")``
     here would only look exactly-once on an uninterrupted run.
     """
-    out = f"{SCRATCH}/stream_sink_out_{uuid.uuid4().hex[:8]}"
+    out = run_dir("stream_sink_out")
 
     def write_batch(batch_df, batch_id: int):
         batch_df.write.mode("overwrite").parquet(f"{out}/batch-{batch_id}")
@@ -440,7 +439,7 @@ def stream_upsert_sink(spark, sf_dir):
     foreachBatch body targets a format with native MERGE INTO (Delta /
     Iceberg), turning the read-union-rewrite into a log append; the
     rename-swap here is the plain-parquet equivalent of that commit."""
-    out = f"{SCRATCH}/stream_upsert_{uuid.uuid4().hex[:8]}"
+    out = run_dir("stream_upsert")
     tmp = f"{out}_tmp"
 
     def upsert(batch_df, _batch_id: int):
@@ -573,8 +572,7 @@ def stream_dedup_incr(spark, sf_dir):
     be bucketed by; batch work scales with the batch. The store grows by
     24 band rows + ~32 B/shingle per doc, exactly what the nightly
     example (examples/incremental_refresh.py) provisions."""
-    run = f"{SCRATCH}/stream_minhash_{uuid.uuid4().hex[:8]}"
-    return run_stream_dedup_incr(spark, sf_dir, run)
+    return run_stream_dedup_incr(spark, sf_dir, run_dir("stream_minhash"))
 
 
 def run_stream_dedup_incr(spark, sf_dir, run: str):

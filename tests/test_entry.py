@@ -29,10 +29,9 @@ def test_all_queries_run_smoke(spark, sf_dir):
 
 def test_sweep_order_puts_unverified_keys_first():
     """The driver verifies only the first ~50 keys of queries() order, so
-    officially-green keys must sort AFTER every never-verified key, and the
-    round-4 priority block must occupy the head of the list. Round 3 lost
-    its whole sweep budget to a stale hand-maintained green set — this pins
-    the self-maintaining ordering."""
+    officially-green keys must sort AFTER every never-verified key. Round 3
+    lost its whole sweep budget to a stale hand-maintained green set — this
+    pins the self-maintaining ordering."""
     ordered = list(entry_mod.queries())
     # Three tiers since r12: unverified BACKLOG first, green rotation in
     # the middle, keys registered in the in-flight round last (the r11
@@ -44,9 +43,6 @@ def test_sweep_order_puts_unverified_keys_first():
     )
     green = entry_mod._GREEN_OFFICIAL
     backlog = [n for n in ordered if entry_mod._sweep_tier(n) == 0]
-    # the explicit priority block leads (§ 2.B / 2.K / 2.I first)
-    pri = [k for k in entry_mod._SWEEP_PRIORITY if k in backlog]
-    assert ordered[: len(pri)] == pri
     # no green key may appear before any backlog key
     assert all(n not in green for n in backlog)
 
@@ -282,23 +278,6 @@ def test_current_round_keys_defer_behind_green_block(monkeypatch):
     # falls into the backlog tier and leads the next sweep
     monkeypatch.setattr(entry_mod, "_LATEST_OFFICIAL_ROUND", 12)
     assert entry_mod._sweep_tier("brand_new") == 0
-
-
-def test_r12_sweep_head_is_the_stale_backlog():
-    """The r11 VERDICT #1 'Done' criterion, live: while the in-flight
-    round is 12 (CORRECTNESS files end at r11), the first 50 keys of
-    queries() order must all be green rows last certified in r1/r3 — the
-    stalest-certification backlog — regardless of how many new keys this
-    round registers. Self-retiring: skipped once r12's file lands."""
-    import pytest
-
-    if entry_mod._LATEST_OFFICIAL_ROUND != 11:
-        pytest.skip("r12 sweep already landed; the freeze criterion retired")
-    head = list(entry_mod.queries())[:50]
-    assert all(entry_mod._GREEN_ROUNDS.get(n) in (1, 3) for n in head), (
-        f"non-stale key in sweep head: "
-        f"{[(n, entry_mod._GREEN_ROUNDS.get(n)) for n in head if entry_mod._GREEN_ROUNDS.get(n) not in (1, 3)][:5]}"
-    )
 
 
 def test_sweep_green_block_recertifies_oldest_first():

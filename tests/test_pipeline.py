@@ -2272,6 +2272,28 @@ class TestCapstoneV4:
         assert r4["n_shards"] <= r4["n_packs"] or r4["n_sampled"] == 0
 
 
+@pytest.mark.parametrize(
+    "key, build_jobs, action_jobs",
+    [
+        ("pipeline_e2e_llm", 2, 33),
+        ("pipeline_e2e_llm_v3", 40, 23),
+        ("pipeline_e2e_llm_v4", 53, 32),
+    ],
+)
+def test_capstone_dispatch_job_counts(spark, sf_dir, key, build_jobs, action_jobs):
+    """Jobs per warm capstone dispatch, counted by job-id difference (fill
+    threads included). Each eager fill runs its own build jobs, so a
+    refactor that adds, drops or moves a fill changes these counts."""
+    QUERIES[key](spark, sf_dir).collect()  # staged prefix, footers, classes
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(dag.nextJobId())
+    df = QUERIES[key](spark, sf_dir)
+    built = int(dag.nextJobId())
+    df.write.format("noop").mode("overwrite").save()
+    acted = int(dag.nextJobId())
+    assert (built - before, acted - built) == (build_jobs, action_jobs)
+
+
 class TestLangidEval:
     def test_confusion_matrix_consistent_with_predictor(self, spark, sf_dir):
         """Cells must equal a direct count over the predictor's output,

@@ -140,6 +140,24 @@ def test_repeated_dispatch_reuses_nothing(spark, sf_dir, monkeypatch):
     assert at_second <= base
 
 
+@pytest.mark.parametrize(
+    "key, prefix",
+    [
+        ("stream_sink", "stream_sink_out_"),
+        ("stream_upsert_sink", "stream_upsert_"),
+        ("stream_dedup_incr", "stream_minhash_"),
+    ],
+)
+def test_stream_run_dir_lives_one_dispatch(spark, sf_dir, tmp_path, monkeypatch, key, prefix):
+    """A streaming sink's run directory is the returned frame's input, so
+    it lives until the next dispatch deletes it: two dispatches leave one
+    directory of the key's kind."""
+    monkeypatch.setattr(shares, "SCRATCH", str(tmp_path))
+    for _ in range(2):
+        assert QUERIES[key](spark, sf_dir).count() > 0
+    assert len([n for n in os.listdir(tmp_path) if n.startswith(prefix)]) == 1
+
+
 _FORK_FROM_THREAD = """
 import subprocess, sys, threading, time
 def fork():

@@ -84,7 +84,7 @@ def test_stream_dedup_no_duplicates(spark, sf_dir, state_provider):
     assert len(ids) == len(set(ids))
 
 
-def test_checkpoint_recovery_exactly_once(spark, sf_dir):
+def test_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
     """Stop a checkpointed stream mid-flight, restart it, and verify the sink
     holds every source row exactly once. foreachBatch is at-least-once — a
     batch whose write landed but whose checkpoint commit did not is replayed
@@ -93,16 +93,15 @@ def test_checkpoint_recovery_exactly_once(spark, sf_dir):
     test using mode("append") with no batch key: a legitimate replay after
     q.stop() duplicated rows."""
     import time
-    import uuid
 
     import pyspark.sql.functions as F
 
-    from data_transform_spark.io import SCRATCH, path_of
+    from data_transform_spark.io import path_of
     from data_transform_spark.streaming.ops import stage_events_chunks
 
     src = stage_events_chunks(sf_dir, plant_late=False)
-    ckpt = f"{SCRATCH}/ckpt_{uuid.uuid4().hex[:8]}"
-    out = f"{SCRATCH}/ckpt_out_{uuid.uuid4().hex[:8]}"
+    ckpt = str(tmp_path / "ckpt")
+    out = str(tmp_path / "out")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
 
