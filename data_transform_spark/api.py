@@ -293,21 +293,17 @@ def mmr_over_ann(spark, sf_dir: str) -> DataFrame:
     pinned by tests/test_pipeline.py::TestMmrOverAnn. This is the 100 TB
     serve shape: candidate generation from the staged index, diversity
     logic unchanged."""
-    from pyspark.sql import functions as F
-
-    from data_transform_spark.io import load_table
     from data_transform_spark.pipeline.retrieval import MMR_CAND, _mmr_rerank
     from data_transform_spark.pipeline.similarity import (
         _ivfpq_topk,
         ivfpq_read_index,
         ivfpq_stage_index,
+        load_embeddings,
     )
 
     staged = ivfpq_stage_index(spark, sf_dir)
     cent, books, codes_l = ivfpq_read_index(spark, staged)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     cand = _ivfpq_topk(e, cent, books, codes_l, k=MMR_CAND).select(
         F.col("query_id").alias("qid"),
         F.col("neighbor_id").alias("id"),

@@ -207,13 +207,12 @@ def _rrf_corpus(spark, sf_dir):
     """The retrieval corpus — documents that carry an embedding, with
     token array and double-cast embedding (shared by _rrf_rankings and
     the graded-qrel construction so the two can never drift)."""
+    from data_transform_spark.pipeline.similarity import load_embeddings
+
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
-    e = load_table(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").alias("doc_id"),
-        F.col("embedding").cast("array<double>").alias("emb"),
-    )
+    e = load_embeddings(spark, sf_dir).withColumnRenamed("vec_id", "doc_id")
     return d.join(e, "doc_id").select(
         F.col("doc_id").alias("id"), "toks", "emb"
     )
@@ -445,9 +444,9 @@ def sim_mmr_diversify(spark, sf_dir):
     shortlist-sized frames (|Q| x {MMR_CAND}²), computed per query INSIDE
     a cogrouped applyInPandas — the sequential selection never touches
     the driver and parallelizes across queries."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    from data_transform_spark.pipeline.similarity import load_embeddings
+
+    e = load_embeddings(spark, sf_dir)
     return _mmr_rerank(e, _mmr_exact_shortlist(e))
 
 

@@ -26,10 +26,11 @@ from __future__ import annotations
 
 import hashlib
 import json
+from functools import reduce
 
 import numpy as np
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table, stage
@@ -48,6 +49,46 @@ def _dot(a, b):
 
 def _cos(a, b):
     return _dot(a, b) / (F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
+
+
+def _l2sq(a, b):
+    """Sequential-fold squared L2 distance in double (the _dot fold over
+    per-dimension squared differences)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)), F.lit(0.0), lambda s, v: s + v
+    )
+
+
+def load_embeddings(spark, sf_dir):
+    """(vec_id, emb array<double>): the embeddings fixture as vectors — the
+    one place its vector-column format is decided."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
+    )
+
+
+def _queries(e):
+    """(query_id, q_emb): the query panel (vec_id < N_QUERIES) of ``e``."""
+    return e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
+    )
+
+
+def _cosine_topk(cand, k: int = TOPK):
+    """Exact re-rank of (query_id, q_emb, vec_id, emb) candidates:
+    (query_id, neighbor_id, score) with the cosine rounded to 6 dp and the
+    top ``k`` per query by (score desc, neighbor_id)."""
+    scored = cand.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(_cos(F.col("q_emb"), F.col("emb")), 6).alias("score"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", "score")
+    )
 
 
 # DuckDB twin of the same fold (kept as one SQL fragment used by both keys).
@@ -85,9 +126,7 @@ def sim_topk_bruteforce(spark, sf_dir):
     (the dedup_semdedup idiom) so each of the N_QUERIES×N pairs pays a
     single dot fold instead of _cos's three — sqrt(dot(v,v)) is the same
     IEEE value either way, so scores and the hash are bit-identical."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     en = e.withColumn("nrm", F.sqrt(_dot("emb", "emb")))
     q = en.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -210,6 +249,29 @@ def sim_pairs_threshold(spark, sf_dir):
     return tiled_cosine_pairs(spark, sf_dir, PAIR_TAU)
 
 
+def _tiles(spark, sf_dir):
+    """The tiled block join's input: the vectors with a non-zero norm,
+    salted into PAIR_BLOCKS tiles by vec_id, and every unordered tile pair
+    (bi <= bj) holding tile bi as side "a" and tile bj as side "b".
+    Returns (e (vec_id, emb, blk), tiles (bi, bj, side, vec_id, emb))."""
+    e = (
+        load_embeddings(spark, sf_dir)
+        .withColumn("blk", (F.col("vec_id") % PAIR_BLOCKS).cast("int"))
+        .filter(_dot(F.col("emb"), F.col("emb")) > 0)
+    )
+    tile_pairs = spark.createDataFrame(
+        [(i, j) for i in range(PAIR_BLOCKS) for j in range(PAIR_BLOCKS) if i <= j],
+        "bi int, bj int",
+    )
+    rep_a = e.join(F.broadcast(tile_pairs), e.blk == tile_pairs.bi).select(
+        "bi", "bj", F.lit("a").alias("side"), "vec_id", "emb"
+    )
+    rep_b = e.join(F.broadcast(tile_pairs), e.blk == tile_pairs.bj).select(
+        "bi", "bj", F.lit("b").alias("side"), "vec_id", "emb"
+    )
+    return e, rep_a.unionByName(rep_b)
+
+
 def tiled_cosine_pairs(spark, sf_dir, tau: float):
     """Exact (id_a, id_b, score) cosine pairs >= tau via the tiled block join
     described in sim_pairs_threshold (shared by dedup_embed_cosine).
@@ -222,22 +284,7 @@ def tiled_cosine_pairs(spark, sf_dir, tau: float):
     defined direction never pair."""
     import pandas as pd
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("emb"),
-        (F.col("vec_id") % PAIR_BLOCKS).cast("int").alias("blk"),
-    ).filter(_dot(F.col("emb"), F.col("emb")) > 0)
-    tile_pairs = spark.createDataFrame(
-        [(i, j) for i in range(PAIR_BLOCKS) for j in range(PAIR_BLOCKS) if i <= j],
-        "bi int, bj int",
-    )
-    rep_a = e.join(F.broadcast(tile_pairs), e.blk == tile_pairs.bi).select(
-        "bi", "bj", F.lit("a").alias("side"), "vec_id", "emb"
-    )
-    rep_b = e.join(F.broadcast(tile_pairs), e.blk == tile_pairs.bj).select(
-        "bi", "bj", F.lit("b").alias("side"), "vec_id", "emb"
-    )
-    tiles = rep_a.unionByName(rep_b)
+    e, tiles = _tiles(spark, sf_dir)
 
     tau_sieve = tau - 1e-6
 
@@ -318,13 +365,11 @@ def sim_knn_classify(spark, sf_dir):
         .agg(F.sort_array(F.collect_list(F.struct("pos", "cv"))).alias("pc"))
         .select("c_label", F.col("pc.cv").alias("c_emb"))
     )
-    sqdiff = F.aggregate(
-        F.zip_with("emb", "c_emb", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     dists = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id", F.col("label").alias("true_label"), "c_label", sqdiff.alias("dist")
+        "vec_id",
+        F.col("label").alias("true_label"),
+        "c_label",
+        _l2sq("emb", "c_emb").alias("dist"),
     )
     w = Window.partitionBy("vec_id").orderBy("dist", "c_label")
     return (
@@ -424,17 +469,12 @@ def _nearest_centroid(vectors, cent, id_col, out_col, keep_cols=()):
     impossible past c_id), but the K×corpus candidate rows now reduce
     map-side to one row per vector BEFORE the exchange, and no per-group
     sort ever runs."""
-    sqdiff = F.aggregate(
-        F.zip_with("emb", "c_emb", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     best = F.min_by(
         F.struct("c_id", *keep_cols), F.struct("dist", "c_id")
     ).alias("_best")
     return (
         vectors.crossJoin(F.broadcast(cent))
-        .select(id_col, *keep_cols, "c_id", sqdiff.alias("dist"))
+        .select(id_col, *keep_cols, "c_id", _l2sq("emb", "c_emb").alias("dist"))
         .groupBy(id_col)
         .agg(best)
         .select(
@@ -573,42 +613,23 @@ def sim_ann_ivf_topk(spark, sf_dir, probes: int = IVF_PROBES):
     key; the measured recall/probes curve is in SCALING.md (probes is THE
     runtime recall/latency knob — the index itself is probe-agnostic).
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     cent, assign = ivf_index(e)
     corpus = e.join(assign, "vec_id")
-
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
     # nearest IVF_PROBES centroids per query
-    sqdiff_q = F.aggregate(
-        F.zip_with("q_emb", "c_emb", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     wq = Window.partitionBy("query_id").orderBy("qdist", "c_id")
     probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "c_id", sqdiff_q.alias("qdist"))
+        _queries(e)
+        .crossJoin(F.broadcast(cent))
+        .select("query_id", "q_emb", "c_id", _l2sq("q_emb", "c_emb").alias("qdist"))
         .withColumn("_rn", F.row_number().over(wq))
         .filter(F.col("_rn") <= probes)
         .select("query_id", "q_emb", F.col("c_id").alias("list_id"))
     )
-    cand = F.broadcast(probes).join(corpus, "list_id").filter(
-        F.col("query_id") != F.col("vec_id")
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(_cos(F.col("q_emb"), F.col("emb")), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOPK)
-        .select("query_id", "neighbor_id", "score")
+    return _cosine_topk(
+        F.broadcast(probes).join(corpus, "list_id").filter(
+            F.col("query_id") != F.col("vec_id")
+        )
     )
 
 
@@ -662,13 +683,6 @@ def _ann_recall_summary(ann, exact_f, recall_bound: float):
     )
 
 
-_ANN_SUMMARY_ORACLE = f"""
-    SELECT CAST({N_QUERIES * TOPK} AS BIGINT) AS n_results,
-           CAST({N_QUERIES} AS BIGINT) AS n_queries,
-           TRUE AS recall_ok
-"""
-
-
 def _overlapped_exact_fill(spark, sf_dir):
     """Submit the brute-force exact-pairs checkpoint fill on a driver
     thread and return the Future (r15, guide §2.6): the exact check is
@@ -685,26 +699,78 @@ def _overlapped_exact_fill(spark, sf_dir):
     )
 
 
-@register("sim_ann_ivf", oracle=_ANN_SUMMARY_ORACLE)
-def sim_ann_ivf(spark, sf_dir):
-    """IVF-Flat ANN, bounds-checked: recall vs exact top-5 must be >= 0.45
-    (measured 0.57–0.63 across sf0.001/0.01/0.1 with K=16, 4 probes)."""
+ANN_RECALL_FLOOR = 0.45  # least recall@TOPK vs exact of a bounds-checked key
+
+
+def _ann_checked(spark, sf_dir, build):
+    """The bounds-checked ANN key contract, one summary row: n_results,
+    n_queries and recall_ok (recall vs the exact top-k >= ANN_RECALL_FLOOR,
+    via _ann_recall_summary), then the key's index-shape columns.
+
+    The exact fill is submitted BEFORE ``build()`` runs, so the brute-force
+    scan overlaps the index work. ``build()`` returns ``(topk, shape,
+    *checks)``: the ANN top-k frame; the shape columns as a name -> value
+    dict, where a frame stands for its row count and an int for itself
+    (both long, all counts in one broadcast 1-row frame); and 1-row frames
+    of checks, each joined on its own, whose columns follow as they are."""
     exact_f = _overlapped_exact_fill(spark, sf_dir)
-    return _ann_recall_summary(sim_ann_ivf_topk(spark, sf_dir), exact_f, 0.45)
+    topk, shape, *checks = build()
+    out = _ann_recall_summary(topk, exact_f, ANN_RECALL_FLOOR)
+    counts = [
+        v.agg(F.count(F.lit(1)).alias(k))
+        for k, v in shape.items()
+        if not isinstance(v, int)
+    ]
+    if counts:
+        out = out.crossJoin(F.broadcast(reduce(DataFrame.crossJoin, counts)))
+    for check in checks:
+        out = out.crossJoin(F.broadcast(check))
+    return out.select(
+        "n_results",
+        "n_queries",
+        "recall_ok",
+        *[
+            (F.lit(v) if isinstance(v, int) else F.col(k)).cast("long").alias(k)
+            for k, v in shape.items()
+        ],
+        *[c for check in checks for c in check.columns],
+    )
 
 
-@register("sim_ann_lsh", oracle=_ANN_SUMMARY_ORACLE)
+def _ann_oracle(**shape) -> str:
+    """DuckDB twin of _ann_checked: the constant n_results, n_queries,
+    recall_ok head, then each shape column — a BIGINT SQL expression, or
+    True for a check that must hold."""
+    cols = {
+        "n_results": N_QUERIES * TOPK,
+        "n_queries": N_QUERIES,
+        "recall_ok": True,
+        **shape,
+    }
+    return "SELECT " + ",\n       ".join(
+        f"TRUE AS {k}" if v is True else f"CAST({v} AS BIGINT) AS {k}"
+        for k, v in cols.items()
+    )
+
+
+@register("sim_ann_ivf", oracle=_ann_oracle())
+def sim_ann_ivf(spark, sf_dir):
+    """IVF-Flat ANN, bounds-checked at ANN_RECALL_FLOOR (measured recall vs
+    exact top-5 0.57–0.63 across sf0.001/0.01/0.1 with K=16, 4 probes)."""
+    return _ann_checked(spark, sf_dir, lambda: (sim_ann_ivf_topk(spark, sf_dir), {}))
+
+
+@register("sim_ann_lsh", oracle=_ann_oracle())
 def sim_ann_lsh(spark, sf_dir):
-    """Multiprobe random-hyperplane LSH ANN, bounds-checked: recall vs
-    exact top-5 must be >= 0.45 — the same bound as sim_ann_ivf, because
-    the r8 retune put the two tiers at the same cost point (measured
-    0.62–0.73 across sf0.001/0.01/0.1 with 8 tables × 8 bits +
+    """Multiprobe random-hyperplane LSH ANN, bounds-checked at
+    ANN_RECALL_FLOOR — the same bound as sim_ann_ivf, because the r8
+    retune put the two tiers at the same cost point (measured recall vs
+    exact top-5 0.62–0.73 across sf0.001/0.01/0.1 with 8 tables × 8 bits +
     distance-1 multiprobe, scanning ~27% of the corpus per query — vs
     0.35–0.37 at ~13% for the old 8×6 single-probe config, and vs IVF's
     0.57–0.63 at ~25% with 4/16 probes; full measured grid in SCALING.md
     "Round-8 LSH retune")."""
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    return _ann_recall_summary(sim_ann_lsh_topk(spark, sf_dir), exact_f, 0.45)
+    return _ann_checked(spark, sf_dir, lambda: (sim_ann_lsh_topk(spark, sf_dir), {}))
 
 
 N_TABLES = 8  # independent LSH hash tables
@@ -736,9 +802,7 @@ def sim_ann_lsh_topk(spark, sf_dir):
     rng = np.random.RandomState(42)
     planes = rng.randn(N_TABLES * BITS_PER_TABLE, 64)
 
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
 
     def table_bucket(t: int):
         bits = None
@@ -790,7 +854,7 @@ def sim_ann_lsh_topk(spark, sf_dir):
             F.explode(probe_buckets).alias("probe_bucket"),
         )
     )
-    cand = (
+    return _cosine_topk(
         F.broadcast(q)
         .join(
             sig,
@@ -799,17 +863,6 @@ def sim_ann_lsh_topk(spark, sf_dir):
             & (F.col("query_id") != F.col("vec_id")),
         )
         .dropDuplicates(["query_id", "vec_id"])
-    )
-    scored = cand.select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(_cos(F.col("q_emb"), F.col("emb")), 6).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOPK)
-        .select("query_id", "neighbor_id", "score")
     )
 
 
@@ -847,63 +900,81 @@ def _pq_train_encode(e):
     # broadcast-separated branches where exchange reuse does not fire; a
     # lazy persist would also serialize the encode lineage into every
     # consumer task (r14 subtree-CPU A/B, OPTIMIZATION_r14.md wave 4/5).
-    codes = share(
-        _pq_assign(cent, _subvectors(e)).select(
-            "vec_id", "m", F.col("c_id").alias("code")
-        ),
-        eager=True,
-    )
-    return cent, codes
+    return cent, share(_pq_encode(cent, e), eager=True)
 
 
-def _subvectors(frame):
-    """(vec_id, m, sub) — split each vector into PQ_M contiguous PQ_DSUB-dim
-    subvectors (module-level so train and encode-only paths share it)."""
+def _subvectors(frame, col: str = "emb", keys=("vec_id",)):
+    """(*keys, m, sub) — split each ``col`` vector into PQ_M contiguous
+    PQ_DSUB-dim subvectors (the corpus encode and the query lookup tables
+    share it)."""
     return frame.select(
-        "vec_id",
+        *keys,
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(m).alias("m"),
-                        F.slice("emb", m * PQ_DSUB + 1, PQ_DSUB).alias("sub"),
+                        F.slice(col, m * PQ_DSUB + 1, PQ_DSUB).alias("sub"),
                     )
                     for m in range(PQ_M)
                 ]
             )
         ).alias("ms"),
-    ).select("vec_id", F.col("ms.m").alias("m"), F.col("ms.sub").alias("sub"))
+    ).select(*keys, F.col("ms.m").alias("m"), F.col("ms.sub").alias("sub"))
 
 
-def _pq_assign(codebook, frame):
-    """Nearest-codeword assignment per (vec_id, m); ties (dist, c_id) —
-    deterministic everywhere. Broadcast the M×Ks codebook.
+def _pq_encode(books, frame):
+    """(vec_id, m, code): the nearest codeword of each (vec_id, emb)
+    vector per subspace; ties (dist, c_id) — deterministic everywhere.
+    Broadcast the M×Ks codebook.
 
     r14: argmin as a ``min_by`` aggregate over the totally-ordered
     (dist, c_id) key instead of a row_number window (the
     _nearest_centroid change) — same row out, but the ×Ks candidate
     explosion reduces map-side before the exchange and the per-group
     sort disappears."""
-    sqd = F.aggregate(
-        F.zip_with("sub", "c_sub", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     return (
-        frame.join(F.broadcast(codebook), "m")
-        .select("vec_id", "m", "sub", "c_id", sqd.alias("dist"))
+        _subvectors(frame)
+        .join(F.broadcast(books), "m")
+        .select("vec_id", "m", "sub", "c_id", _l2sq("sub", "c_sub").alias("dist"))
         .groupBy("vec_id", "m")
         .agg(
             F.min_by(
                 F.struct("sub", "c_id"), F.struct("dist", "c_id")
             ).alias("_best")
         )
-        .select(
-            "vec_id",
-            "m",
-            F.col("_best.sub").alias("sub"),
-            F.col("_best.c_id").alias("c_id"),
-        )
+        .select("vec_id", "m", F.col("_best.c_id").alias("code"))
+    )
+
+
+def _adc_topk(e, q, qsub, books, codes, k: int = TOPK):
+    """ADC shortlist + exact re-rank, the query tail of the PQ and IVF-PQ
+    paths. ``qsub`` (query_id, *keys, m, sub) holds the query subvectors
+    and ``codes`` (vec_id, *keys, m, code) the corpus codes, where keys are
+    the columns both carry besides m (none for PQ, list_id for IVF-PQ). A
+    broadcast lookup table holds every query subvector's squared distance
+    to every codeword of ``books``; a code row's approximate distance is
+    the SUM of its M lookups (6 dp), and the PQ_SHORTLIST closest per
+    query by (adist, vec_id) are re-ranked by exact cosine to the top
+    ``k``."""
+    keys = [c for c in qsub.columns if c not in ("query_id", "sub")]
+    lut = qsub.join(F.broadcast(books), "m").select(
+        "query_id", *keys, F.col("c_id").alias("code"), _l2sq("sub", "c_sub").alias("d")
+    )
+    adc = (
+        codes.join(F.broadcast(lut), [*keys, "code"])
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.round(F.sum("d"), 6).alias("adist"))
+    )
+    ws = Window.partitionBy("query_id").orderBy("adist", "vec_id")
+    shortlist = (
+        adc.withColumn("_rn", F.row_number().over(ws))
+        .filter(F.col("_rn") <= PQ_SHORTLIST)
+        .select("query_id", "vec_id")
+    )
+    return _cosine_topk(
+        shortlist.join(e, "vec_id").join(F.broadcast(q), "query_id"), k
     )
 
 
@@ -921,11 +992,9 @@ def sim_ann_pq_topk(spark, sf_dir):
     full-width scan and it is 64× smaller than the embeddings. Recall@5
     after re-rank measured 0.81/0.85/0.60 at sf0.001/0.01/0.1 — the
     Spark implementation and the numpy twin agree exactly
-    (bound-checked at 0.45 by the registered key). Compose with IVF
-    lists (classic IVF-PQ) when even the code scan must prune."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    (bound-checked at ANN_RECALL_FLOOR by the registered key). Compose
+    with IVF lists (classic IVF-PQ) when even the code scan must prune."""
+    e = load_embeddings(spark, sf_dir)
     cent, codes = _pq_train_encode(e)
     return _pq_topk(e, cent, codes)
 
@@ -935,99 +1004,49 @@ def _pq_topk(e, cent, codes):
     index — split from sim_ann_pq_topk so the registered summary key fits
     ONCE and the recall check and the shape counts read the same literal
     codebook and checkpointed codes."""
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    qsub = q.select(
-        "query_id",
-        "q_emb",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("q_emb", m * PQ_DSUB + 1, PQ_DSUB).alias("sub"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("query_id", F.col("ms.m").alias("m"), F.col("ms.sub").alias("sub"))
-    sqd = F.aggregate(
-        F.zip_with("sub", "c_sub", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    lut = qsub.join(F.broadcast(cent), "m").select(
-        "query_id", "m", F.col("c_id").alias("code"), sqd.alias("d")
-    )
-    adc = (
-        codes.join(F.broadcast(lut), ["m", "code"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adist"))
-    )
-    ws = Window.partitionBy("query_id").orderBy("adist", "vec_id")
-    shortlist = (
-        adc.withColumn("_rn", F.row_number().over(ws))
-        .filter(F.col("_rn") <= PQ_SHORTLIST)
-        .select("query_id", "vec_id")
-    )
-    rerank = (
-        shortlist.join(e, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(_cos(F.col("q_emb"), F.col("emb")), 6).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    return (
-        rerank.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOPK)
-        .select("query_id", "neighbor_id", "score")
-    )
+    q = _queries(e)
+    return _adc_topk(e, q, _subvectors(q, "q_emb", ("query_id",)), cent, codes)
+
+
+_N_CODE_ROWS_SQL = f"(SELECT count(*) FROM embeddings) * {PQ_M}"
 
 
 @register(
     "sim_ann_pq",
-    oracle=f"""
-    SELECT CAST({N_QUERIES * TOPK} AS BIGINT) AS n_results,
-           CAST({N_QUERIES} AS BIGINT) AS n_queries,
-           TRUE AS recall_ok,
-           CAST((SELECT count(*) FROM embeddings) * {PQ_M} AS BIGINT)
-               AS n_code_rows,
-           CAST({PQ_M * PQ_KS} AS BIGINT) AS codebook_rows
-    """,
+    oracle=_ann_oracle(n_code_rows=_N_CODE_ROWS_SQL, codebook_rows=PQ_M * PQ_KS),
 )
 def sim_ann_pq(spark, sf_dir):
-    """Product-quantization ANN, bounds-checked like the LSH/IVF keys:
-    recall@5 after exact re-rank of the ADC shortlist must be >= 0.45
-    (measured 0.81/0.85/0.60 across SFs; grid in SCALING.md "Round-8 PQ").
+    """Product-quantization ANN, bounds-checked like the LSH/IVF keys at
+    ANN_RECALL_FLOOR: recall@5 after exact re-rank of the ADC shortlist
+    measured 0.81/0.85/0.60 across SFs (grid in SCALING.md "Round-8 PQ").
     The hash additionally pins the index SHAPE from the data: one code
     row per (vector, subspace) — corpus × PQ_M — and a full M × Ks
     codebook (no empty-cluster collapse; min cluster membership measured
     9/12/68 at the three SFs)."""
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    cent, codes = _pq_train_encode(e)  # ONE training, shared by both branches
-    summary = _ann_recall_summary(_pq_topk(e, cent, codes), exact_f, 0.45)
-    shape = codes.agg(F.count(F.lit(1)).alias("n_code_rows")).crossJoin(
-        cent.agg(F.count(F.lit(1)).alias("codebook_rows"))
-    )
-    return summary.crossJoin(F.broadcast(shape)).select(
-        "n_results",
-        "n_queries",
-        "recall_ok",
-        F.col("n_code_rows").cast("long").alias("n_code_rows"),
-        F.col("codebook_rows").cast("long").alias("codebook_rows"),
-    )
+
+    def build():
+        e = load_embeddings(spark, sf_dir)
+        cent, codes = _pq_train_encode(e)  # ONE training, shared by both branches
+        return _pq_topk(e, cent, codes), {"n_code_rows": codes, "codebook_rows": cent}
+
+    return _ann_checked(spark, sf_dir, build)
 
 
 IVFPQ_PROBES = 6  # coarse lists probed per query (the recall/scan knob)
+
+
+def _residuals(e, assign, cent):
+    """(vec_id, list_id, emb): each vector minus its list's centroid."""
+    cl = cent.select(F.col("c_id").alias("list_id"), "c_emb")
+    return (
+        e.join(assign, "vec_id")
+        .join(F.broadcast(cl), "list_id")
+        .select(
+            "vec_id",
+            "list_id",
+            F.zip_with("emb", "c_emb", lambda x, c: x - c).alias("emb"),
+        )
+    )
 
 
 def _ivfpq_index(e):
@@ -1041,19 +1060,8 @@ def _ivfpq_index(e):
     codes_l) where codes_l carries each code row's list_id so the ADC
     scan can prune to probed lists with an equi-join."""
     cent, assign = ivf_index(e)
-    cl = cent.select(F.col("c_id").alias("list_id"), "c_emb")
-    resid = (
-        e.join(assign, "vec_id")
-        .join(F.broadcast(cl), "list_id")
-        .select(
-            "vec_id",
-            "list_id",
-            F.zip_with("emb", "c_emb", lambda x, c: x - c).alias("emb"),
-        )
-    )
-    books, codes = _pq_train_encode(resid.select("vec_id", "emb"))
-    codes_l = codes.join(assign, "vec_id")
-    return cent, assign, books, codes_l
+    books, codes = _pq_train_encode(_residuals(e, assign, cent))
+    return cent, assign, books, codes.join(assign, "vec_id")
 
 
 def _ivfpq_topk(e, cent, books, codes_l, k: int | None = None):
@@ -1068,18 +1076,14 @@ def _ivfpq_topk(e, cent, books, codes_l, k: int | None = None):
     Split from the registered key so training runs ONCE and the recall
     and shape branches read the same fitted index (the sim_ann_pq
     split)."""
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
-    sqd_c = F.aggregate(
-        F.zip_with("q_emb", "c_emb", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
+    q = _queries(e)
     wq = Window.partitionBy("query_id").orderBy("qdist", "c_id")
     probed = (
         q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "c_id", "c_emb", sqd_c.alias("qdist"))
+        .select(
+            "query_id", "q_emb", "c_id", "c_emb",
+            _l2sq("q_emb", "c_emb").alias("qdist"),
+        )
         .withColumn("_rn", F.row_number().over(wq))
         .filter(F.col("_rn") <= IVFPQ_PROBES)
         .select(
@@ -1088,86 +1092,44 @@ def _ivfpq_topk(e, cent, books, codes_l, k: int | None = None):
             F.zip_with("q_emb", "c_emb", lambda x, c: x - c).alias("r_emb"),
         )
     )
-    qsub = probed.select(
-        "query_id",
-        "list_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice("r_emb", m * PQ_DSUB + 1, PQ_DSUB).alias("sub"),
-                    )
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("ms"),
-    ).select("query_id", "list_id", F.col("ms.m").alias("m"), F.col("ms.sub").alias("sub"))
-    sqd_b = F.aggregate(
-        F.zip_with("sub", "c_sub", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    lut = qsub.join(F.broadcast(books), "m").select(
-        "query_id", "list_id", "m", F.col("c_id").alias("code"), sqd_b.alias("d")
-    )
-    adc = (
-        codes_l.join(F.broadcast(lut), ["list_id", "m", "code"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.round(F.sum("d"), 6).alias("adist"))
-    )
-    ws = Window.partitionBy("query_id").orderBy("adist", "vec_id")
-    shortlist = (
-        adc.withColumn("_rn", F.row_number().over(ws))
-        .filter(F.col("_rn") <= PQ_SHORTLIST)
-        .select("query_id", "vec_id")
-    )
-    rerank = (
-        shortlist.join(e, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(_cos(F.col("q_emb"), F.col("emb")), 6).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    return (
-        rerank.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= (k or TOPK))
-        .select("query_id", "neighbor_id", "score")
-    )
+    qsub = _subvectors(probed, "r_emb", ("query_id", "list_id"))
+    return _adc_topk(e, q, qsub, books, codes_l, k or TOPK)
 
 
 def sim_ann_ivfpq_topk(spark, sf_dir):
     """Composable entry point: train + query in one call (tests use this;
     the registered key trains once and shares the index across branches)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     cent, _assign, books, codes_l = _ivfpq_index(e)
     return _ivfpq_topk(e, cent, books, codes_l)
 
 
-@register(
-    "sim_ann_ivfpq",
-    oracle=f"""
-    SELECT CAST({N_QUERIES * TOPK} AS BIGINT) AS n_results,
-           CAST({N_QUERIES} AS BIGINT) AS n_queries,
-           TRUE AS recall_ok,
-           CAST((SELECT count(*) FROM embeddings) * {PQ_M} AS BIGINT)
-               AS n_code_rows,
-           CAST({PQ_M * PQ_KS} AS BIGINT) AS codebook_rows,
-           CAST({IVF_K} AS BIGINT) AS n_lists
-    """,
+def _ivfpq_checked(spark, sf_dir, index):
+    """The sim_ann_ivfpq / sim_ann_persist body: the bounds-checked IVF-PQ
+    summary over ``index(e)`` -> (cent, books, codes_l), with the index
+    shape counted from the frames the query path reads."""
+
+    def build():
+        e = load_embeddings(spark, sf_dir)
+        cent, books, codes_l = index(e)
+        shape = {"n_code_rows": codes_l, "codebook_rows": books, "n_lists": cent}
+        return _ivfpq_topk(e, cent, books, codes_l), shape
+
+    return _ann_checked(spark, sf_dir, build)
+
+
+_IVFPQ_ORACLE = _ann_oracle(
+    n_code_rows=_N_CODE_ROWS_SQL, codebook_rows=PQ_M * PQ_KS, n_lists=IVF_K
 )
+
+
+@register("sim_ann_ivfpq", oracle=_IVFPQ_ORACLE)
 def sim_ann_ivfpq(spark, sf_dir):
     """IVF-PQ — the production ANN shape at 100 TB (r8 VERDICT #1): the
     three verified tiers composed. IVF prunes the scan to IVFPQ_PROBES/
     IVF_K of the corpus, PQ compresses what's left 64×, exact re-rank
     repairs the quantization error on a 100-deep shortlist. Bounds-checked
-    at the family's shared 0.45 recall floor; measured recall@5 =
+    at the family's shared ANN_RECALL_FLOOR; measured recall@5 =
     0.68/0.73/0.56 at sf0.001/0.01/0.1 with 6/16 probes and sampled
     training (numpy twin = Spark; grid in SCALING.md "Round-9 IVF-PQ"),
     scanning ~38% of a 64×-smaller codes table — vs sim_ann_pq's 100%
@@ -1176,27 +1138,12 @@ def sim_ann_ivfpq(spark, sf_dir):
     code rows, the full M×Ks residual codebook (no empty-cluster
     collapse; min membership 13/14/24 at the three SFs), and all IVF_K
     coarse lists materialized."""
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    cent, _assign, books, codes_l = _ivfpq_index(e)  # ONE training
-    summary = _ann_recall_summary(
-        _ivfpq_topk(e, cent, books, codes_l), exact_f, 0.45
-    )
-    shape = (
-        codes_l.agg(F.count(F.lit(1)).alias("n_code_rows"))
-        .crossJoin(books.agg(F.count(F.lit(1)).alias("codebook_rows")))
-        .crossJoin(cent.agg(F.count(F.lit(1)).alias("n_lists")))
-    )
-    return summary.crossJoin(F.broadcast(shape)).select(
-        "n_results",
-        "n_queries",
-        "recall_ok",
-        F.col("n_code_rows").cast("long").alias("n_code_rows"),
-        F.col("codebook_rows").cast("long").alias("codebook_rows"),
-        F.col("n_lists").cast("long").alias("n_lists"),
-    )
+
+    def index(e):
+        cent, _assign, books, codes_l = _ivfpq_index(e)  # ONE training
+        return cent, books, codes_l
+
+    return _ivfpq_checked(spark, sf_dir, index)
 
 
 # --- train-once / serve-many: the staged IVF-PQ index (r9 VERDICT #1) ----
@@ -1220,9 +1167,7 @@ def _stage_ivfpq(spark, sf_dir, name: str, rows) -> str:
     stage it as store ``name``."""
 
     def _build(tmp: str) -> None:
-        e = load_table(spark, sf_dir, "embeddings").filter(rows).select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
+        e = load_embeddings(spark, sf_dir).filter(rows)
         cent, _assign, books, codes_l = _ivfpq_index(e)
         _write_index(tmp, cent, books, codes_l)
 
@@ -1264,30 +1209,17 @@ def sim_ann_ivfpq_serve_topk(spark, sf_dir):
     build job runs at 100 TB."""
     staged = ivfpq_stage_index(spark, sf_dir)
     cent, books, codes_l = ivfpq_read_index(spark, staged)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     return _ivfpq_topk(e, cent, books, codes_l)
 
 
-@register(
-    "sim_ann_persist",
-    oracle=f"""
-    SELECT CAST({N_QUERIES * TOPK} AS BIGINT) AS n_results,
-           CAST({N_QUERIES} AS BIGINT) AS n_queries,
-           TRUE AS recall_ok,
-           CAST((SELECT count(*) FROM embeddings) * {PQ_M} AS BIGINT)
-               AS n_code_rows,
-           CAST({PQ_M * PQ_KS} AS BIGINT) AS codebook_rows,
-           CAST({IVF_K} AS BIGINT) AS n_lists
-    """,
-)
+@register("sim_ann_persist", oracle=_IVFPQ_ORACLE)
 def sim_ann_persist(spark, sf_dir):
     """Train-once / serve-many IVF-PQ (r9 VERDICT #1): the first call
     builds and stages the index to parquet; every call serves queries
     from the staged artifact with zero k-means/codebook stages in the
     plan. The summary row carries the same contract as sim_ann_ivfpq —
-    recall bound vs exact top-5 (same 0.45 floor; the staged index is
+    recall bound vs exact top-5 (same ANN_RECALL_FLOOR; the staged index is
     bit-identical to a fresh build, tested) — and the shape counts are
     computed FROM THE STAGED PARQUET, so the hash pins that the artifact
     on disk holds exactly corpus×M code rows, the full M×Ks codebook and
@@ -1298,27 +1230,10 @@ def sim_ann_persist(spark, sf_dir):
     # eager fills at wall 3.3 -> 9.4 s, but the overlapped exact fill
     # measures flat against lazy pair persists (A/B in CHANGES.md), so the
     # key takes the one summary path every ANN key uses.
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    staged = ivfpq_stage_index(spark, sf_dir)
-    cent, books, codes_l = ivfpq_read_index(spark, staged)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    summary = _ann_recall_summary(
-        _ivfpq_topk(e, cent, books, codes_l), exact_f, 0.45
-    )
-    shape = (
-        codes_l.agg(F.count(F.lit(1)).alias("n_code_rows"))
-        .crossJoin(books.agg(F.count(F.lit(1)).alias("codebook_rows")))
-        .crossJoin(cent.agg(F.count(F.lit(1)).alias("n_lists")))
-    )
-    return summary.crossJoin(F.broadcast(shape)).select(
-        "n_results",
-        "n_queries",
-        "recall_ok",
-        F.col("n_code_rows").cast("long").alias("n_code_rows"),
-        F.col("codebook_rows").cast("long").alias("codebook_rows"),
-        F.col("n_lists").cast("long").alias("n_lists"),
+    return _ivfpq_checked(
+        spark,
+        sf_dir,
+        lambda e: ivfpq_read_index(spark, ivfpq_stage_index(spark, sf_dir)),
     )
 
 
@@ -1595,36 +1510,18 @@ def _ivfpq_encode(e, cent, books):
     assignment + residual + codeword assignment — not one Lloyd pass
     anywhere. This is FAISS's add()-after-train(): new vectors join the
     index at one assignment scan each."""
-    cl = cent.select(F.col("c_id").alias("list_id"), "c_emb")
     assign = _nearest_centroid(e.select("vec_id", "emb"), cent, "vec_id", "list_id")
-    resid = (
-        e.join(assign, "vec_id")
-        .join(F.broadcast(cl), "list_id")
-        .select(
-            "vec_id",
-            "list_id",
-            F.zip_with("emb", "c_emb", lambda x, c: x - c).alias("emb"),
-        )
-    )
-    codes = _pq_assign(books, _subvectors(resid.select("vec_id", "emb"))).select(
-        "vec_id", "m", F.col("c_id").alias("code")
-    )
-    return codes.join(assign, "vec_id")
+    return _pq_encode(books, _residuals(e, assign, cent)).join(assign, "vec_id")
 
 
 @register(
     "sim_ann_index_append",
-    oracle=f"""
-    SELECT CAST({N_QUERIES * TOPK} AS BIGINT) AS n_results,
-           CAST({N_QUERIES} AS BIGINT) AS n_queries,
-           TRUE AS recall_ok,
-           CAST((SELECT count(*) FROM embeddings WHERE vec_id % 10 < 8)
-                * {PQ_M} AS BIGINT) AS n_hist_codes,
-           CAST((SELECT count(*) FROM embeddings WHERE vec_id % 10 >= 8)
-                * {PQ_M} AS BIGINT) AS n_append_codes,
-           CAST({PQ_M * PQ_KS} AS BIGINT) AS codebook_rows,
-           CAST({IVF_K} AS BIGINT) AS n_lists
-    """,
+    oracle=_ann_oracle(
+        n_hist_codes=f"(SELECT count(*) FROM embeddings WHERE vec_id % 10 < 8) * {PQ_M}",
+        n_append_codes=f"(SELECT count(*) FROM embeddings WHERE vec_id % 10 >= 8) * {PQ_M}",
+        codebook_rows=PQ_M * PQ_KS,
+        n_lists=IVF_K,
+    ),
 )
 def sim_ann_index_append(spark, sf_dir):
     """Index APPEND — the other half of the train-once contract
@@ -1635,7 +1532,7 @@ def sim_ann_index_append(spark, sf_dir):
     centroids/codebooks, zero Lloyd passes (FAISS add() after train()).
     Queries then run over the MERGED codes (staged + appended) with the
     standard probed-ADC + exact re-rank, bounds-checked at the family's
-    0.45 recall floor vs exact top-5 over the full corpus — measured
+    ANN_RECALL_FLOOR vs exact top-5 over the full corpus — measured
     0.73/0.69/0.66 at sf0.001/0.01/0.1 (the append path costs no recall
     vs the self-contained key: a fifth of the corpus encoded-not-trained
     barely moves residual quantization error). The hash pins the split
@@ -1649,33 +1546,22 @@ def sim_ann_index_append(spark, sf_dir):
     # summary's broadcast branches raced the cold cache and ran it twice.
     # Eager fill + the overlapped exact (the in-plan-training treatment):
     # interleaved A/B in OPTIMIZATION_r15.md.
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    staged = ivfpq_stage_hist_index(spark, sf_dir)
-    cent, books, codes_hist = ivfpq_read_index(spark, staged)
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    batch = e.filter(F.col("vec_id") % 10 >= 8)
-    codes_batch = _ivfpq_encode(batch, cent, books)
-    merged = codes_hist.unionByName(codes_batch.select(*codes_hist.columns))
-    summary = _ann_recall_summary(
-        _ivfpq_topk(e, cent, books, merged), exact_f, 0.45
-    )
-    shape = (
-        codes_hist.agg(F.count(F.lit(1)).alias("n_hist_codes"))
-        .crossJoin(
-            codes_batch.agg(F.count(F.lit(1)).alias("n_append_codes"))
-        )
-    )
-    return summary.crossJoin(F.broadcast(shape)).select(
-        "n_results",
-        "n_queries",
-        "recall_ok",
-        F.col("n_hist_codes").cast("long").alias("n_hist_codes"),
-        F.col("n_append_codes").cast("long").alias("n_append_codes"),
-        F.lit(PQ_M * PQ_KS).cast("long").alias("codebook_rows"),
-        F.lit(IVF_K).cast("long").alias("n_lists"),
-    )
+
+    def build():
+        staged = ivfpq_stage_hist_index(spark, sf_dir)
+        cent, books, codes_hist = ivfpq_read_index(spark, staged)
+        e = load_embeddings(spark, sf_dir)
+        codes_batch = _ivfpq_encode(e.filter(F.col("vec_id") % 10 >= 8), cent, books)
+        merged = codes_hist.unionByName(codes_batch.select(*codes_hist.columns))
+        shape = {
+            "n_hist_codes": codes_hist,
+            "n_append_codes": codes_batch,
+            "codebook_rows": PQ_M * PQ_KS,
+            "n_lists": IVF_K,
+        }
+        return _ivfpq_topk(e, cent, books, merged), shape
+
+    return _ann_checked(spark, sf_dir, build)
 
 
 # --- graph ANN: kNN graph + beam search (r13 VERDICT #5) ------------------
@@ -1713,26 +1599,7 @@ def _graph_knn_edges(spark, sf_dir):
     replaces the exact build — serve is unchanged either way."""
     import pandas as pd
 
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("emb"),
-            (F.col("vec_id") % PAIR_BLOCKS).cast("int").alias("blk"),
-        )
-        .filter(_dot(F.col("emb"), F.col("emb")) > 0)
-    )
-    tile_pairs = spark.createDataFrame(
-        [(i, j) for i in range(PAIR_BLOCKS) for j in range(PAIR_BLOCKS) if i <= j],
-        "bi int, bj int",
-    )
-    rep_a = e.join(F.broadcast(tile_pairs), e.blk == tile_pairs.bi).select(
-        "bi", "bj", F.lit("a").alias("side"), "vec_id", "emb"
-    )
-    rep_b = e.join(F.broadcast(tile_pairs), e.blk == tile_pairs.bj).select(
-        "bi", "bj", F.lit("b").alias("side"), "vec_id", "emb"
-    )
-    tiles = rep_a.unionByName(rep_b)
+    _, tiles = _tiles(spark, sf_dir)
     shift = np.int64(1) << np.int64(44)
     sentinel = np.int64(-(1 << 62))
 
@@ -1835,9 +1702,7 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS):
     intra-round sharing rides the checkpoint scan."""
     staged = graph_stage_index(spark, sf_dir)
     adj = spark.read.parquet(f"{staged}/adjacency")
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     nv = e.agg(F.count(F.lit(1)).cast("long").alias("nv"))
     step = F.greatest(
         F.floor(F.col("nv") / GRAPH_SEEDS).cast("long"), F.lit(1)
@@ -1847,9 +1712,7 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS):
         .filter(F.col("vec_id") % step == 0)
         .select(F.col("vec_id").alias("node"), F.col("emb").alias("n_emb"))
     )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
+    q = _queries(e)
     score = F.round(_cos(F.col("q_emb"), F.col("n_emb")), 4)
     visited = share(
         q.crossJoin(F.broadcast(seeds)).select(
@@ -1901,11 +1764,11 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS):
     )
 
 
-@register("sim_ann_graph", oracle=_ANN_SUMMARY_ORACLE)
+@register("sim_ann_graph", oracle=_ann_oracle())
 def sim_ann_graph(spark, sf_dir):
     """Graph ANN (kNN graph + beam search — the NSW/HNSW index class),
-    bounds-checked: recall vs exact top-5 must be >= 0.45, the
-    sim_ann_ivf/lsh bound at the same cost point (measured: 1.00 /
+    bounds-checked at ANN_RECALL_FLOOR, the sim_ann_ivf/lsh bound at the
+    same cost point (measured recall vs exact top-5: 1.00 /
     1.00 / 0.79 at sf0.001/0.01/0.1 with G=8, beam 8, 4 rounds, 8
     seeds — the ~520-node visited budget is 21% of the sf0.1 corpus and
     SHRINKS relatively as N grows, which is the argument for graph
@@ -1915,8 +1778,7 @@ def sim_ann_graph(spark, sf_dir):
     # (the eager fill pays here: the serve+verify chains measured 6.8 vs
     # 9.8 CPU-s against lazy pair persists with walls equal — the beam
     # rounds re-run per branch without it.)
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    return _ann_recall_summary(sim_ann_graph_topk(spark, sf_dir), exact_f, 0.45)
+    return _ann_checked(spark, sf_dir, lambda: (sim_ann_graph_topk(spark, sf_dir), {}))
 
 
 # --- index compaction + staleness (r10 VERDICT #3) ------------------------
@@ -1934,14 +1796,23 @@ def ivfpq_stage_appends(spark, sf_dir) -> str:
         cent, books, _codes_hist = ivfpq_read_index(
             spark, ivfpq_stage_hist_index(spark, sf_dir)
         )
-        e = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-        )
+        e = load_embeddings(spark, sf_dir)
         for mod in ANN_COMPACT_BATCH_MODS:
             batch = e.filter(F.col("vec_id") % 10 == mod)
             _ivfpq_encode(batch, cent, books).write.parquet(f"{tmp}/batch-{mod}")
 
     return stage("ivfpq_appends", sf_dir, "embeddings", _build)
+
+
+def _merged_codes(spark, sf_dir, codes_hist):
+    """The history codes ∪ every staged append batch, in codes_hist's
+    column order."""
+    appends = ivfpq_stage_appends(spark, sf_dir)
+    merged = codes_hist
+    for mod in ANN_COMPACT_BATCH_MODS:
+        batch_codes = spark.read.parquet(f"{appends}/batch-{mod}")
+        merged = merged.unionByName(batch_codes.select(*codes_hist.columns))
+    return merged
 
 
 def ivfpq_stage_compact(spark, sf_dir) -> str:
@@ -1955,11 +1826,7 @@ def ivfpq_stage_compact(spark, sf_dir) -> str:
         cent, books, codes_hist = ivfpq_read_index(
             spark, ivfpq_stage_hist_index(spark, sf_dir)
         )
-        appends = ivfpq_stage_appends(spark, sf_dir)
-        merged = codes_hist
-        for mod in ANN_COMPACT_BATCH_MODS:
-            batch_codes = spark.read.parquet(f"{appends}/batch-{mod}")
-            merged = merged.unionByName(batch_codes.select(*codes_hist.columns))
+        merged = _merged_codes(spark, sf_dir, codes_hist)
         # (list_id, m): list-local file layout for probed scans WITHOUT
         # the IVF_K-wide partition skew plain list_id keying would give
         # a 100 TB codes table (16 lists -> 16 giant partitions)
@@ -1970,16 +1837,12 @@ def ivfpq_stage_compact(spark, sf_dir) -> str:
 
 @register(
     "sim_ann_index_compact",
-    oracle=f"""
-    SELECT CAST({N_QUERIES * TOPK} AS BIGINT) AS n_results,
-           CAST({N_QUERIES} AS BIGINT) AS n_queries,
-           TRUE AS recall_ok,
-           CAST((SELECT count(*) FROM embeddings) * {PQ_M} AS BIGINT)
-               AS n_compact_codes,
-           CAST({len(ANN_COMPACT_BATCH_MODS)} AS BIGINT) AS n_batches_merged,
-           TRUE AS compact_equals_merged,
-           TRUE AS drift_within_budget
-    """,
+    oracle=_ann_oracle(
+        n_compact_codes=_N_CODE_ROWS_SQL,
+        n_batches_merged=len(ANN_COMPACT_BATCH_MODS),
+        compact_equals_merged=True,
+        drift_within_budget=True,
+    ),
 )
 def sim_ann_index_compact(spark, sf_dir):
     """Index maintenance beyond one append (r10 VERDICT #3): N appended
@@ -1996,7 +1859,7 @@ def sim_ann_index_compact(spark, sf_dir):
       appends union EXACTLY (exceptAll both directions, counted in-plan)
       — compaction is a layout change, never a content change;
     - recall_ok: serving from the compacted artifact clears the family's
-      0.45 floor vs exact top-5 (same index content as
+      ANN_RECALL_FLOOR vs exact top-5 (same index content as
       sim_ann_index_append: measured 0.73/0.69/0.66);
     - drift_within_budget: the retrain trigger — mean squared coarse
       residual of APPENDED vectors vs HISTORY vectors, ratio <=
@@ -2010,86 +1873,62 @@ def sim_ann_index_compact(spark, sf_dir):
     staleness probe is one assignment scan over the appended slice — both
     are the nightly maintenance cost, and historical raw vectors are
     never re-read."""
-    staged = ivfpq_stage_compact(spark, sf_dir)
-    appends = ivfpq_stage_appends(spark, sf_dir)
-    hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
-    cent, books, codes_hist = ivfpq_read_index(spark, hist_staged)
-    compact_codes = spark.read.parquet(f"{staged}/codes")
-    merged = codes_hist
-    for mod in ANN_COMPACT_BATCH_MODS:
-        merged = merged.unionByName(
-            spark.read.parquet(f"{appends}/batch-{mod}").select(
-                *codes_hist.columns
-            )
-        )
-
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
     # r15: eager + overlapped exact, same rationale as sim_ann_index_append
     # (the compact serve scans the compacted codes and shares the action
     # with the exceptAll diffs and the staleness scan — the lazy pair
     # persists re-ran it across the broadcast branches).
-    exact_f = _overlapped_exact_fill(spark, sf_dir)
-    summary = _ann_recall_summary(
-        _ivfpq_topk(e, cent, books, compact_codes), exact_f, 0.45
-    )
-    cols = codes_hist.columns
-    diff = (
-        compact_codes.select(*cols)
-        .exceptAll(merged.select(*cols))
-        .agg(F.count(F.lit(1)).alias("d1"))
-        .crossJoin(
-            merged.select(*cols)
-            .exceptAll(compact_codes.select(*cols))
-            .agg(F.count(F.lit(1)).alias("d2"))
-        )
-        .select(((F.col("d1") + F.col("d2")) == 0).alias("compact_equals_merged"))
-    )
-    shape = compact_codes.agg(F.count(F.lit(1)).alias("n_compact_codes"))
 
-    # staleness: mean squared coarse residual, appended vs history slices,
-    # assignments read from the compacted codes (one distinct per vec)
-    assign = compact_codes.select("vec_id", "list_id").distinct()
-    cl = cent.select(F.col("c_id").alias("list_id"), "c_emb")
-    rsq = F.aggregate(
-        F.zip_with("emb", "c_emb", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
-    energy = (
-        e.join(assign, "vec_id")
-        .join(F.broadcast(cl), "list_id")
-        .select((F.col("vec_id") % 10 >= 8).alias("is_append"), rsq.alias("r2"))
-        .groupBy("is_append")
-        .agg(F.avg("r2").alias("mean_r2"))
-    )
-    drift = (
-        energy.groupBy()
-        .pivot("is_append", [False, True])
-        .agg(F.first("mean_r2"))
-        .select(
-            (F.col("true") <= ANN_RETRAIN_RATIO * F.col("false")).alias(
-                "drift_within_budget"
+    def build():
+        staged = ivfpq_stage_compact(spark, sf_dir)
+        hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
+        cent, books, codes_hist = ivfpq_read_index(spark, hist_staged)
+        compact_codes = spark.read.parquet(f"{staged}/codes")
+        merged = _merged_codes(spark, sf_dir, codes_hist)
+        e = load_embeddings(spark, sf_dir)
+        cols = codes_hist.columns
+        diff = (
+            compact_codes.select(*cols)
+            .exceptAll(merged.select(*cols))
+            .agg(F.count(F.lit(1)).alias("d1"))
+            .crossJoin(
+                merged.select(*cols)
+                .exceptAll(compact_codes.select(*cols))
+                .agg(F.count(F.lit(1)).alias("d2"))
+            )
+            .select(((F.col("d1") + F.col("d2")) == 0).alias("compact_equals_merged"))
+        )
+        # staleness: mean squared coarse residual, appended vs history
+        # slices, assignments read from the compacted codes (one distinct
+        # per vec)
+        assign = compact_codes.select("vec_id", "list_id").distinct()
+        cl = cent.select(F.col("c_id").alias("list_id"), "c_emb")
+        energy = (
+            e.join(assign, "vec_id")
+            .join(F.broadcast(cl), "list_id")
+            .select(
+                (F.col("vec_id") % 10 >= 8).alias("is_append"),
+                _l2sq("emb", "c_emb").alias("r2"),
+            )
+            .groupBy("is_append")
+            .agg(F.avg("r2").alias("mean_r2"))
+        )
+        drift = (
+            energy.groupBy()
+            .pivot("is_append", [False, True])
+            .agg(F.first("mean_r2"))
+            .select(
+                (F.col("true") <= ANN_RETRAIN_RATIO * F.col("false")).alias(
+                    "drift_within_budget"
+                )
             )
         )
-    )
-    return (
-        summary.crossJoin(F.broadcast(shape))
-        .crossJoin(F.broadcast(diff))
-        .crossJoin(F.broadcast(drift))
-        .select(
-            "n_results",
-            "n_queries",
-            "recall_ok",
-            F.col("n_compact_codes").cast("long").alias("n_compact_codes"),
-            F.lit(len(ANN_COMPACT_BATCH_MODS)).cast("long").alias(
-                "n_batches_merged"
-            ),
-            "compact_equals_merged",
-            "drift_within_budget",
-        )
-    )
+        shape = {
+            "n_compact_codes": compact_codes,
+            "n_batches_merged": len(ANN_COMPACT_BATCH_MODS),
+        }
+        return _ivfpq_topk(e, cent, books, compact_codes), shape, diff, drift
+
+    return _ann_checked(spark, sf_dir, build)
 
 
 TRIPLET_ALPHA = 0.05  # semi-hard margin (FaceNet's α, cosine-similarity form)
@@ -2396,9 +2235,7 @@ def dedup_semdedup(spark, sf_dir):
     neighbor argmax and removal rule run on integer 6dp cosine units.
     The oracle replays the whole pipeline — seeds, both Lloyd passes,
     assignment, neighbor pick — as one generated CTE chain."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     cent, assign = _sem_kmeans(e)
     # per-row norm computed ONCE (2 folds/row) so each pair pays a single
     # dot fold instead of _cos's three — ~3× less interpreted-lambda work
@@ -2583,9 +2420,7 @@ def sim_ann_recall_curve(spark, sf_dir):
     per level. Scale: candidate volume is |Q|·(N/K)·max_probes rows and
     the exact side |Q|·N — both linear in the corpus for a fixed query
     panel, shuffled once each."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
+    e = load_embeddings(spark, sf_dir)
     cent, assign = _sem_kmeans(e)
     # single-fold pair scoring (the dedup_semdedup norm trick): per-row
     # norms once, one dot fold per pair; sqrt(dot(v,v)) is the same IEEE
@@ -2597,15 +2432,13 @@ def sim_ann_recall_curve(spark, sf_dir):
         F.col("emb").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    sqd = F.aggregate(
-        F.zip_with("q_emb", "c_emb", lambda x, c: (x - c) * (x - c)),
-        F.lit(0.0),
-        lambda s, v: s + v,
-    )
     wq = Window.partitionBy("query_id").orderBy("qdist", "c_id")
     pr = (
         q.crossJoin(F.broadcast(cent))
-        .select("query_id", "q_emb", "q_nrm", "c_id", sqd.alias("qdist"))
+        .select(
+            "query_id", "q_emb", "q_nrm", "c_id",
+            _l2sq("q_emb", "c_emb").alias("qdist"),
+        )
         .withColumn("probe_rank", F.row_number().over(wq))
         .filter(F.col("probe_rank") <= max(RECALL_LEVELS))
         .select(
@@ -2769,12 +2602,8 @@ def sim_dim_truncation_curve(spark, sf_dir):
     panel — each level prunes its own column read down to the prefix it
     needs; at 100 TB each level is a linear scan and the levels union is
     embarrassingly parallel."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
-    )
+    e = load_embeddings(spark, sf_dir)
+    q = _queries(e)
 
     def topk_at(d: int | None):
         # r14: slice + norm are computed ONCE per row per side before the
@@ -2900,9 +2729,7 @@ def decontaminate_semantic(spark, sf_dir):
     one windowed argmax on integer 6dp units. At 100 TB this is the
     linear-scan shape: no self-join, no shuffle of the corpus beyond the
     argmax's vec_id partition, benchmark always in memory."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    ).withColumn("nrm", F.sqrt(_dot("emb", "emb")))
+    e = load_embeddings(spark, sf_dir).withColumn("nrm", F.sqrt(_dot("emb", "emb")))
     bench = e.filter(F.col("vec_id") % 97 == 0).select(
         F.col("vec_id").alias("eval_id"),
         F.col("emb").alias("b_emb"),

@@ -143,13 +143,18 @@ def _free(df) -> None:
     """A persisted frame is a CacheManager entry; a local checkpoint is an
     RDD cached in the block manager and reachable only through the
     LogicalRDD at its plan root, where DataFrame.unpersist() is a no-op —
-    so both are freed. Best effort: a frame bound to a stopped session
-    died with it, and anything else falls back to GC -> ContextCleaner."""
+    so both are freed. The RDD goes through SparkContext.unpersistRDD:
+    RDD.unpersist would log, for every local checkpoint, the warning that
+    it cannot be recomputed, which is what freeing it means. Best effort:
+    a frame bound to a stopped session died with it, and anything else
+    falls back to GC -> ContextCleaner."""
     try:
         df.unpersist(False)
         plan = df._jdf.queryExecution().analyzed()
         if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+            df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+                plan.rdd().id(), False
+            )
     except Exception:
         pass
 

@@ -16,7 +16,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__  # noqa: F401
 
 from data_transform_spark.pipeline.similarity import (

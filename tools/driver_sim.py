@@ -1,7 +1,7 @@
 """Independent driver simulation — imports __spark_entry__ exactly as the
 driver would, runs entry() + sampled queries vs DuckDB with its own compare."""
-import sys, hashlib
-sys.path.insert(0, "/root/repo")
+import os, sys, hashlib
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as em
 import duckdb
 from pyspark.sql import SparkSession

@@ -1,5 +1,5 @@
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__
 from data_transform_spark.registry import QUERIES, ORACLES
 from data_transform_spark.session import get_spark
