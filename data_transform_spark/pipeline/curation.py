@@ -41,6 +41,24 @@ _U01_SQL = (
 )
 
 
+def ngrams(frame):
+    """(doc_id, g): every NGRAM_N-token window of each doc's text, one row
+    per occurrence; a doc shorter than NGRAM_N has none."""
+    t = F.split("text", " ")
+    return frame.select(
+        "doc_id",
+        F.explode(
+            F.when(
+                F.size(t) >= NGRAM_N,
+                F.transform(
+                    F.sequence(F.lit(1), F.size(t) - (NGRAM_N - 1)),
+                    lambda s: F.array_join(F.slice(t, s, NGRAM_N), " "),
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+        ).alias("g"),
+    )
+
+
 @register(
     "decontaminate_ngram",
     oracle=f"""
@@ -68,20 +86,7 @@ def decontaminate_ngram(spark, sf_dir):
     broadcast, and contaminated docs aggregate matched-gram counts. At
     100 TB the corpus side stays a single scan + one aggregate shuffle;
     only benchmark grams are ever collected into a broadcast."""
-    d = load_table(spark, sf_dir, "documents")
-    t = F.split("text", " ")
-    grams = d.select(
-        "doc_id",
-        F.explode(
-            F.when(
-                F.size(t) >= NGRAM_N,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(t) - (NGRAM_N - 1)),
-                    lambda s: F.array_join(F.slice(t, s, NGRAM_N), " "),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("g"),
-    )
+    grams = ngrams(load_table(spark, sf_dir, "documents"))
     bench = (
         grams.filter(F.col("doc_id") % 97 == 0).select("g").distinct()
     )

@@ -1,14 +1,23 @@
 """§2.K — deduplication family (SURVEY.md; mandated by BASELINE.json north star).
 
-Four tiers, cheapest first:
-  * exact        — md5 content hash, canonical min-id survivor. One shuffle.
-  * ngram_jaccard— exact token-set Jaccard via inverted-index self-join.
-                   Correct but O(sum_t df(t)^2) pairs: only viable when the
-                   per-token document frequency is bounded. The 100 TB path
-                   is minhash below.
-  * minhash+LSH  — shingle → minhash signature → band-bucket join. Linear in
-                   corpus size, tunable recall; THE scale path for near-dup.
-  * simhash      — 64-bit weighted fingerprint, hamming<=k via chunk index.
+Seventeen keys in five families, cheapest first: exact and first-survivor
+(md5 content hash), token- and shingle-set jaccard (PPJoin prefix filter),
+MinHash LSH (banded candidates, exact verify, connected-component
+survivors, the staged incremental store), simhash, and sub-document
+(chunk and Lee-et-al substring) dedup. The keys share one helper per
+shape, so the copies cannot drift:
+
+  * ``_first_rows``       — the ``row_number() == 1`` survivor window.
+  * ``_kgrams``           — word k-gram shingle sets (jaccard k=3,
+                            containment k=5); ``_shingle_digests`` hashes them.
+  * ``_jaccard_of_pairs`` — the exact set-jaccard verify of candidate pairs
+                            over any two (doc_id, element) frames: PPJoin
+                            truth, raw shingles and staged digests alike.
+  * ``_band_pairs``       — the LSH (band, bucket) self-join.
+  * ``_substring_grams`` → ``_later_occurrences`` → ``_drop_covered`` — the
+                            substring pass, full and incremental.
+  * ``_sql_shingle_overlap``, ``_SQL_CC`` and ``_sql_substring_tail`` — the
+                            DuckDB oracle CTEs those helpers are checked by.
 
 All hashing is seeded/deterministic (xxhash64 / md5), so results are stable
 across executors, runs, and machines.
@@ -28,6 +37,14 @@ from data_transform_spark.shares import release, share
 # ---------------------------------------------------------------- exact
 
 
+def _first_rows(df, key, *order):
+    """The first row of ``df`` per ``key`` by ``order`` — the survivor
+    window every first-wins dedup key ends in."""
+    w = Window.partitionBy(key).orderBy(*order)
+    rn = F.row_number().over(w)
+    return df.withColumn("rn", rn).filter(F.col("rn") == 1).drop("rn")
+
+
 @register(
     "dedup_exact",
     oracle="""
@@ -38,13 +55,9 @@ from data_transform_spark.shares import release, share
 )
 def dedup_exact(spark, sf_dir):
     """Exact content dedup: canonical survivor = min doc_id per md5(text)."""
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("content_hash").orderBy("doc_id")
-    return (
-        d.withColumn("content_hash", F.md5("text"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "content_hash", "lang", "source")
+    d = load_table(spark, sf_dir, "documents").withColumn("content_hash", F.md5("text"))
+    return _first_rows(d, "content_hash", "doc_id").select(
+        "doc_id", "content_hash", "lang", "source"
     )
 
 
@@ -110,16 +123,7 @@ def _jaccard_pairs_of_tok(tok, tau: float):
       inequality is applied with a half-element of slack (n + 0.5 >=
       tau*m) so double rounding can only let a doomed candidate THROUGH
       to the exact verify, never drop a qualifying one.
-    - ARRAY verify: each doc's (already distinct) element set is
-      collected once per side and candidates intersect the two arrays
-      map-side (array_intersect on distinct arrays = exact shared
-      count), replacing the old verify join that exploded every
-      candidate pair by |A| rows and re-shuffled the explosion by
-      (doc, element) — measured 19 of the truth tier's 47 CPU-s at
-      sf0.1. Per-pair memory is bounded by the two documents' element
-      counts — the same bound the old shuffle carried per group — and
-      documents stay bounded at any corpus scale. ``jaccard`` is the
-      same integer ratio, so the double is bit-identical."""
+    - ARRAY verify: ``_jaccard_of_pairs`` over the same element frame."""
     sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     df = tok.groupBy("t").agg(F.count(F.lit(1)).alias("df"))
 
@@ -145,28 +149,50 @@ def _jaccard_pairs_of_tok(tok, tau: float):
         .select(F.col("pa.doc_id").alias("doc_a"), F.col("pb.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
+    return _jaccard_of_pairs(cand, tok).filter(F.col("jaccard") >= tau)
 
-    sets = tok.groupBy("doc_id").agg(
-        F.collect_list("t").alias("ts"), F.count(F.lit(1)).alias("n")
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ts").alias("ts_a"),
-        F.col("n").alias("na"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ts").alias("ts_b"),
-        F.col("n").alias("nb"),
-    )
-    shared = F.size(F.array_intersect("ts_a", "ts_b"))
-    jac = F.col("shared") * 1.0 / (F.col("na") + F.col("nb") - F.col("shared"))
+
+def _jaccard_of_pairs(cand, elems_a, elems_b=None):
+    """Exact set jaccard of every candidate (doc_a, doc_b): the a-side's
+    elements come from ``elems_a`` and the b-side's from ``elems_b``
+    (default: ``elems_a``, collected once for both sides), each a
+    distinct (doc_id, element) frame — words or shingles for the PPJoin
+    tier, raw shingles for the MinHash verify, md5 shingle digests for
+    the incremental store (equal digests are equal shingles in both
+    engines). Only candidates are scored, never all pairs.
+
+    r15 (guide §2.3): each doc's element set is collected once per side
+    and candidates intersect the two arrays map-side (array_intersect on
+    distinct arrays = exact shared count), replacing a verify join that
+    exploded every candidate pair by |A| rows and re-shuffled the
+    explosion by (doc, element) — measured 19 of the PPJoin truth tier's
+    47 CPU-s at sf0.1. Per-pair memory is bounded by the two documents'
+    element counts. Two sides over one frame are identical subtrees, so
+    exchange reuse runs the aggregate once either way. ``jaccard`` =
+    shared / (|A| + |B| - shared) is an exact integer ratio, so the
+    double is bit-identical to the oracle's."""
+
+    def sets(elems):
+        return elems.groupBy("doc_id").agg(
+            F.collect_list(elems.columns[1]).alias("ts"), F.count(F.lit(1)).alias("n")
+        )
+
+    def side(s, x):
+        return s.select(
+            F.col("doc_id").alias(f"doc_{x}"),
+            F.col("ts").alias(f"ts_{x}"),
+            F.col("n").alias(f"n{x}"),
+        )
+
+    sets_a = sets(elems_a)
+    sets_b = sets_a if elems_b is None else sets(elems_b)
+    c = F.size(F.array_intersect("ts_a", "ts_b"))
+    jac = F.col("c") * 1.0 / (F.col("na") + F.col("nb") - F.col("c"))
     return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", "na", "nb", shared.alias("shared"))
+        cand.join(side(sets_a, "a"), "doc_a")
+        .join(side(sets_b, "b"), "doc_b")
+        .select("doc_a", "doc_b", "na", "nb", c.alias("c"))
         .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= tau)
     )
 
 
@@ -184,31 +210,45 @@ MINHASH_EXACT_TAU = 0.7  # exact shingle-jaccard acceptance threshold
 # empirically, not just probabilistically.
 
 
-def _shingles(df):
-    """doc_id, shingle — word k-grams via a size-bounded higher-order expr."""
+def _kgrams(df, k: int):
+    """doc_id, shingle — distinct word k-grams via a size-bounded
+    higher-order expr; a doc shorter than k keeps its whole text as one
+    shingle."""
     df = spread(df)  # single-split scans otherwise serialize the explode+hash
     toks = F.split("text", " ")
     n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_K, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, SHINGLE_K)))
+    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
     return df.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
-# DuckDB twin of _shingles + exact shingle-set jaccard >= tau over all pairs.
-# Shared CTE text used by the dedup_near_minhash and dedup_near_survivors
-# oracles (quadratic in DuckDB — oracle-tier only; Spark never does all-pairs).
-_SQL_SHINGLE_PAIRS = f"""
-    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+_SQL_TOKS = "toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents)"
+
+
+def _sql_shingle_overlap(k: int, elem: str = "{}") -> str:
+    """DuckDB twin of ``_kgrams(·, k)`` with each shingle wrapped by
+    ``elem`` (``"md5({})"`` for ``_shingle_digests``), plus every pair's
+    shared-shingle count: CTEs toks, sh, sizes, shared. All pairs —
+    quadratic in DuckDB, oracle tier only; Spark never does all-pairs."""
+    shingle = elem.format(f"array_to_string(t[i:i+{k - 1}], ' ')")
+    return f"""
+    {_SQL_TOKS},
     sh AS (
-        SELECT DISTINCT doc_id, array_to_string(t[i:i+{SHINGLE_K - 1}], ' ') AS shingle
-        FROM toks, unnest(generate_series(1, greatest(len(t) - {SHINGLE_K - 1}, 1))) AS u(i)
+        SELECT DISTINCT doc_id, {shingle} AS shingle
+        FROM toks, unnest(generate_series(1, greatest(len(t) - {k - 1}, 1))) AS u(i)
     ),
     sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
     shared AS (
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
         FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         GROUP BY 1, 2
-    ),
+    )"""
+
+
+def _sql_shingle_pairs(elem: str = "{}") -> str:
+    """``_sql_shingle_overlap`` at SHINGLE_K plus exact_pairs: every pair
+    with shingle-set jaccard >= MINHASH_EXACT_TAU."""
+    return _sql_shingle_overlap(SHINGLE_K, elem) + f""",
     exact_pairs AS (
         SELECT s.doc_a, s.doc_b,
                s.c * 1.0 / (sa.n + sb.n - s.c) AS jaccard
@@ -235,7 +275,7 @@ def minhash_signatures(docs):
     not compiled (the round-3 bench spike). Steady-state cost is unchanged;
     the one-time compile cost drops ~10×.
     """
-    sh = _shingles(docs)
+    sh = _kgrams(docs, SHINGLE_K)
     base = sh.select("doc_id", F.xxhash64("shingle").alias("h0"))
     aggs = [
         F.min(F.xxhash64(F.lit(i), F.col("h0"))).alias(f"h{i}") for i in range(N_HASHES)
@@ -338,6 +378,19 @@ def _sig_bands(sig):
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
 
 
+def _band_pairs(bands):
+    """(doc_a, doc_b), doc_a < doc_b, once per (band, bucket) the two docs
+    share — the LSH self-join over ``_sig_bands`` rows. Callers dedup."""
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+
+
 def _minhash_candidates(docs):
     """Candidate (doc_a, doc_b) pairs: banded LSH bucket join (+ estimate
     gate at scale).
@@ -360,20 +413,7 @@ def _minhash_candidates(docs):
         # the 48-aggregate signature job runs once. Eager — the lazy variant
         # races AQE and spams "non-existent accumulator" warnings.
         sig = share(sig, eager=True)
-    bands = _sig_bands(sig)
-
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    cand = _band_pairs(_sig_bands(sig)).dropDuplicates(["doc_a", "doc_b"])
     if not use_gate:
         return cand
     sig_a = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
@@ -388,48 +428,15 @@ def _minhash_candidates(docs):
 
 
 def _exact_jaccard_of_pairs(docs, cand):
-    """Exact shingle-set jaccard for each candidate pair (verification step).
-
-    Only candidate pairs are scored — never all pairs — so the cost is
-    |candidates| × shingles-per-doc, linear in corpus size when the LSH
-    candidate set is.
-
-    r15 (guide §2.3): each doc's (distinct) shingle set is collected once
-    and candidates intersect the two arrays map-side — the old shape
-    exploded every candidate pair by |A| shingle rows and re-shuffled the
-    explosion by (doc, shingle) before counting. array_intersect on
-    distinct arrays is the exact shared count; per-pair memory is bounded
-    by the two documents' shingle counts (the same bound the old shuffle
-    carried per group), and ``jaccard`` is the same integer ratio, so the
-    double is bit-identical."""
-    sh = _shingles(docs)
-    sets = sh.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("ts"), F.count(F.lit(1)).alias("n")
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ts").alias("ts_a"),
-        F.col("n").alias("na"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ts").alias("ts_b"),
-        F.col("n").alias("nb"),
-    )
-    c = F.size(F.array_intersect("ts_a", "ts_b"))
-    jac = F.col("c") * 1.0 / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", "na", "nb", c.alias("c"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-    )
+    """Exact shingle-set jaccard of each candidate pair of ``docs`` (the
+    MinHash verify step): ``_jaccard_of_pairs`` over raw SHINGLE_K-grams."""
+    return _jaccard_of_pairs(cand, _kgrams(docs, SHINGLE_K))
 
 
 @register(
     "dedup_near_minhash",
     oracle=f"""
-    WITH {_SQL_SHINGLE_PAIRS}
+    WITH {_sql_shingle_pairs()}
     SELECT doc_a, doc_b, jaccard FROM exact_pairs
     """,
 )
@@ -459,11 +466,11 @@ def dedup_near_minhash(spark, sf_dir):
 # use the star variant.
 MAX_CC_ROUNDS = 25
 
-
-@register(
-    "dedup_near_survivors",
-    oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLE_PAIRS},
+# DuckDB twin of the connected components over the exact pair set: minlab
+# holds each doc's component label (its min doc_id), found by a recursive
+# min-label CTE. _SQL_SURVIVORS keeps one doc per component.
+_SQL_CC = f"""
+    WITH RECURSIVE {_sql_shingle_pairs()},
     edges AS (
         SELECT doc_a AS a, doc_b AS b FROM exact_pairs
         UNION ALL
@@ -474,12 +481,15 @@ MAX_CC_ROUNDS = 25
         UNION
         SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
     ),
-    minlab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)
+    minlab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)"""
+_SQL_SURVIVORS = f"""{_SQL_CC}
     SELECT d.doc_id, d.lang, d.source
     FROM documents d JOIN minlab m ON d.doc_id = m.node
     WHERE m.label = d.doc_id
-    """,
-)
+    """
+
+
+@register("dedup_near_survivors", oracle=_SQL_SURVIVORS)
 def dedup_near_survivors(spark, sf_dir):
     """Collapse near-duplicate clusters to one canonical survivor per cluster.
 
@@ -574,26 +584,7 @@ def cc_survivor_ids_star(nodes, pairs):
     return nodes.select("doc_id").join(non_roots, "doc_id", "left_anti")
 
 
-@register(
-    "dedup_survivors_star",
-    oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLE_PAIRS},
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM exact_pairs
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM exact_pairs
-    ),
-    reach(node, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    ),
-    minlab AS (SELECT node, min(label) AS label FROM reach GROUP BY node)
-    SELECT d.doc_id, d.lang, d.source
-    FROM documents d JOIN minlab m ON d.doc_id = m.node
-    WHERE m.label = d.doc_id
-    """,
-)
+@register("dedup_survivors_star", oracle=_SQL_SURVIVORS)
 def dedup_survivors_star(spark, sf_dir):
     """dedup_near_survivors computed with the O(log d)-round large-star/
     small-star algorithm instead of O(d)-round label propagation — the
@@ -817,12 +808,7 @@ def text_chunk_dedup(spark, sf_dir):
             ).alias("chunk_text")
         )
     )
-    w = Window.partitionBy("chunk_text").orderBy("doc_id", "chunk")
-    kept = (
-        chunks.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    kept = _first_rows(chunks, "chunk_text", "doc_id", "chunk")
     tot = chunks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_total"))
     agg = kept.groupBy("doc_id").agg(
         F.array_join(
@@ -844,31 +830,43 @@ def text_chunk_dedup(spark, sf_dir):
 
 SUBSTR_W = 12  # rolling-window width (tokens) for substring-level dedup
 
+# DuckDB twins of the substring pass, over a CTE ``src`` of (doc_id, t)
+# token lists. _sql_occ: every SUBSTR_W-token window (none for a shorter
+# doc) with its md5 digest — _substring_grams. _sql_later: the occurrences
+# after each digest's first by (doc_id, pos) — _later_occurrences.
+# _sql_substring_tail: drop the positions the ``dups`` windows cover and
+# reassemble — _drop_covered, reading ``sizes``.
+_SQL_GRAM = f"md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' '))"
 
-@register(
-    "text_substring_dedup",
-    oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sizes AS (SELECT doc_id, len(t) AS n_tokens FROM toks),
-    occ AS (
+
+def _sql_windows(src: str) -> str:
+    return f"""FROM {src}, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
+        WHERE len(t) >= {SUBSTR_W}"""
+
+
+def _sql_occ(src: str) -> str:
+    return f"""occ AS (
         SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
-        FROM toks, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
-        WHERE len(t) >= {SUBSTR_W}
-    ),
-    dups AS (
-        SELECT doc_id, pos FROM (
+               {_SQL_GRAM} AS g
+        {_sql_windows(src)}
+    )"""
+
+
+def _sql_later(src: str) -> str:
+    return f"""SELECT doc_id, pos FROM (
             SELECT doc_id, pos,
                    row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-            FROM occ) WHERE rn > 1
-    ),
-    covered AS (
+            FROM {src}) WHERE rn > 1"""
+
+
+def _sql_substring_tail(src: str) -> str:
+    return f"""covered AS (
         SELECT DISTINCT doc_id, q
         FROM dups, unnest(generate_series(pos, pos + {SUBSTR_W - 1})) AS u(q)
     ),
     tokpos AS (
         SELECT doc_id, i - 1 AS q, t[i] AS token
-        FROM toks, unnest(generate_series(1, len(t))) AS u(i)
+        FROM {src}, unnest(generate_series(1, len(t))) AS u(i)
     ),
     kept AS (
         SELECT tp.doc_id, tp.q, tp.token
@@ -884,7 +882,28 @@ SUBSTR_W = 12  # rolling-window width (tokens) for substring-level dedup
            CAST(s.n_tokens - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
            COALESCE(a.clean_text, '') AS clean_text
     FROM sizes s LEFT JOIN agg a USING (doc_id)
-    """,
+    """
+
+
+def _sql_digests(name: str, split: str) -> str:
+    """CTE ``name``: the distinct window digests of the docs whose
+    ``doc_id % 10`` passes ``split`` (``< 8`` is the history store)."""
+    return f"""{name} AS (
+        SELECT DISTINCT {_SQL_GRAM} AS g
+        {_sql_windows("toks")} AND doc_id % 10 {split}
+    )"""
+
+
+@register(
+    "text_substring_dedup",
+    oracle=f"""
+    WITH {_SQL_TOKS},
+    sizes AS (SELECT doc_id, len(t) AS n_tokens FROM toks),
+    {_sql_occ("toks")},
+    dups AS (
+        {_sql_later("occ")}
+    ),
+    {_sql_substring_tail("toks")}""",
 )
 def text_substring_dedup(spark, sf_dir):
     """EXACT substring-level dedup (Lee et al. 2022, "Deduplicating
@@ -928,32 +947,30 @@ def substring_clean(d):
     text_substring_dedup key and the pipeline_e2e_llm capstone (which
     chains it BEFORE near-dup clustering, the order the paper's pipeline
     uses: exact substring removal first, then fuzzy doc-level dedup)."""
-    toks = d.select("doc_id", F.split("text", " ").alias("t"))
-    sizes = toks.select("doc_id", F.size("t").alias("n_tokens"))
-    idx = F.when(
-        F.size("t") >= SUBSTR_W,
-        F.sequence(F.lit(0), F.size("t") - SUBSTR_W),
-    ).otherwise(F.array().cast("array<int>"))
-    occ = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                idx,
-                lambda i: F.md5(F.concat_ws(" ", F.slice("t", i + 1, SUBSTR_W))),
-            )
-        ).alias("pos", "g"),
-    )
+    return _drop_covered(d, _later_occurrences(_substring_grams(d)))
+
+
+def _later_occurrences(occ):
+    """(doc_id, pos) of every window occurrence after its digest's first
+    by (doc_id, pos) — first occurrence wins."""
     w_first = Window.partitionBy("g").orderBy("doc_id", "pos")
-    dups = (
+    return (
         occ.withColumn("rn", F.row_number().over(w_first))
         .filter(F.col("rn") > 1)
         .select("doc_id", "pos")
     )
+
+
+def _drop_covered(d, dups):
+    """(doc_id, n_tokens, n_removed, clean_text) per doc of ``d``: every
+    token position a ``dups`` (doc_id, pos) window covers is dropped and
+    the rest reassembled in position order; a doc that loses every token
+    comes back with empty clean_text."""
+    toks = d.select("doc_id", F.split("text", " ").alias("t"))
+    sizes = toks.select("doc_id", F.size("t").alias("n_tokens"))
     covered = dups.select(
         "doc_id",
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + SUBSTR_W - 1)
-        ).alias("q"),
+        F.explode(F.sequence(F.col("pos"), F.col("pos") + SUBSTR_W - 1)).alias("q"),
     ).distinct()
     tokpos = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("q", "token")
@@ -1000,15 +1017,10 @@ def dedup_priority_source(spark, sf_dir):
     one window); only the ORDER BY inside the window changes. The general
     form at 100 TB keeps a tiny source->priority broadcast table instead
     of the parse, so editorial re-rankings never rewrite the plan."""
-    d = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("content_hash").orderBy(
-        F.substring("source", 4, 10).cast("int"), "doc_id"
-    )
-    return (
-        d.withColumn("content_hash", F.md5("text"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "content_hash", "source", "lang")
+    d = load_table(spark, sf_dir, "documents").withColumn("content_hash", F.md5("text"))
+    rank = F.substring("source", 4, 10).cast("int")
+    return _first_rows(d, "content_hash", rank, "doc_id").select(
+        "doc_id", "content_hash", "source", "lang"
     )
 
 
@@ -1060,19 +1072,7 @@ def cc_labels(nodes, pairs):
 
 @register(
     "dedup_cluster_stats",
-    oracle=f"""
-    WITH RECURSIVE {_SQL_SHINGLE_PAIRS},
-    edges AS (
-        SELECT doc_a AS a, doc_b AS b FROM exact_pairs
-        UNION ALL
-        SELECT doc_b AS a, doc_a AS b FROM exact_pairs
-    ),
-    reach(node, label) AS (
-        SELECT doc_id, doc_id FROM documents
-        UNION
-        SELECT e.a, r.label FROM edges e JOIN reach r ON r.node = e.b
-    ),
-    minlab AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
+    oracle=f"""{_SQL_CC},
     csizes AS (SELECT label, count(*) AS cluster_size FROM minlab GROUP BY label)
     SELECT cluster_size, count(*) AS n_clusters,
            CAST(cluster_size * count(*) AS BIGINT) AS n_docs
@@ -1167,30 +1167,10 @@ CONTAIN_K = 5
 CONTAIN_DF_CAP = 256
 
 
-def _kgrams(df, k: int):
-    """doc_id, shingle — word k-grams (parametrized twin of _shingles)."""
-    df = spread(df)
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
-    return df.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
-
-
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-        SELECT DISTINCT doc_id, array_to_string(t[i:i+{CONTAIN_K - 1}], ' ') AS shingle
-        FROM toks, unnest(generate_series(1, greatest(len(t) - {CONTAIN_K - 1}, 1))) AS u(i)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )
+    WITH {_sql_shingle_overlap(CONTAIN_K)}
     SELECT doc_a, doc_b, c * 1.0 / least(sa.n, sb.n) AS containment
     FROM shared
     JOIN sizes sa ON doc_a = sa.doc_id
@@ -1236,10 +1216,8 @@ def dedup_containment(spark, sf_dir):
     shingles can't build that prefix and falls back to probing its
     ENTIRE shingle set against the unfiltered index — any shared shingle
     then surfaces the pair, trivially lossless, and the expensive
-    df-sized probes are paid only for those explicitly-pathological docs
-    (a corpus property worth alerting on: SPARK_GRAFT_DEBUG=1 counts and
-    stderr-logs the fallback docs, so the cost is observable). Both
-    candidate paths union before the exact verify, so the result set is
+    df-sized probes are paid only for those explicitly-pathological docs.
+    Both candidate paths union before the exact verify, so the result set is
     IDENTICAL at any cap — pinned by
     tests/test_properties.py::test_containment_guard_is_lossless_under_boilerplate."""
     # sh feeds FIVE subtrees (sizes, df, prefix, full index, exact verify):
@@ -1278,18 +1256,6 @@ def dedup_containment(spark, sf_dir):
     # their whole set against the UNFILTERED index — df-sized probes, but
     # only for these few pathological docs, never for the corpus at large
     fb_docs = doc_stats.filter(F.col("n_ub") < p_len).select("doc_id")
-    if os.environ.get("SPARK_GRAFT_DEBUG"):
-        # The docstring promises fallback docs are "worth alerting on, not a
-        # silent cost" — behind the debug flag, actually count and surface
-        # them (r7 ADVICE). One doc-stats-sized job; never on the hot path.
-        import sys as _sys
-
-        print(
-            f"dedup_containment: {fb_docs.count()} fallback doc(s) with "
-            f"< p unbanned shingles (df cap {CONTAIN_DF_CAP}) — each probes "
-            "its full shingle set against the unfiltered index",
-            file=_sys.stderr,
-        )
     fb_prefix = sh.join(F.broadcast(fb_docs), "doc_id").select("doc_id", "shingle")
     full = sh.select(F.col("doc_id").alias("f_id"), "shingle")
     cand_fallback = fb_prefix.join(full, "shingle").select("doc_id", "f_id")
@@ -1356,12 +1322,7 @@ def dedup_incremental(spark, sf_dir):
         "doc_id", F.md5("text").alias("sig")
     )
     fresh = delta.join(hist, "sig", "left_anti")
-    w = Window.partitionBy("sig").orderBy("doc_id")
-    return (
-        fresh.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "sig")
-    )
+    return _first_rows(fresh, "sig", "doc_id").select("doc_id", "sig")
 
 
 # --- incremental SUBSTRING dedup (r9 VERDICT #6) --------------------------
@@ -1381,10 +1342,10 @@ def dedup_incremental(spark, sf_dir):
 
 
 def _substring_grams(frame):
-    """(doc_id, pos, g) rolling SUBSTR_W-token window fingerprints — the
-    EXACT expressions substring_clean uses (md5 of the space-joined
-    slice), split out so the store builder, the incremental serve path
-    and the full pass can never drift apart."""
+    """(doc_id, pos, g) rolling SUBSTR_W-token window fingerprints (md5 of
+    the space-joined slice; none for a doc shorter than SUBSTR_W) — the
+    one gram builder of the store builder, the incremental serve path
+    and the full pass."""
     toks = frame.select("doc_id", F.split("text", " ").alias("t"))
     idx = F.when(
         F.size("t") >= SUBSTR_W,
@@ -1417,52 +1378,18 @@ def substring_stage_store(spark, sf_dir) -> str:
 @register(
     "text_substring_dedup_incr",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    hist AS (
-        SELECT DISTINCT md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
-        FROM toks, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
-        WHERE len(t) >= {SUBSTR_W} AND doc_id % 10 < 8
-    ),
+    WITH {_SQL_TOKS},
+    {_sql_digests("hist", "< 8")},
     newdocs AS (SELECT doc_id, t FROM toks WHERE doc_id % 10 >= 8),
     sizes AS (SELECT doc_id, len(t) AS n_tokens FROM newdocs),
-    occ AS (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
-        FROM newdocs, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
-        WHERE len(t) >= {SUBSTR_W}
-    ),
+    {_sql_occ("newdocs")},
     hist_dup AS (SELECT o.doc_id, o.pos FROM occ o SEMI JOIN hist h ON o.g = h.g),
     fresh AS (SELECT o.* FROM occ o ANTI JOIN hist h ON o.g = h.g),
     batch_dup AS (
-        SELECT doc_id, pos FROM (
-            SELECT doc_id, pos,
-                   row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-            FROM fresh) WHERE rn > 1
+        {_sql_later("fresh")}
     ),
     dups AS (SELECT * FROM hist_dup UNION SELECT * FROM batch_dup),
-    covered AS (
-        SELECT DISTINCT doc_id, q
-        FROM dups, unnest(generate_series(pos, pos + {SUBSTR_W - 1})) AS u(q)
-    ),
-    tokpos AS (
-        SELECT doc_id, i - 1 AS q, t[i] AS token
-        FROM newdocs, unnest(generate_series(1, len(t))) AS u(i)
-    ),
-    kept AS (
-        SELECT tp.doc_id, tp.q, tp.token
-        FROM tokpos tp ANTI JOIN covered c
-          ON tp.doc_id = c.doc_id AND tp.q = c.q
-    ),
-    agg AS (
-        SELECT doc_id, count(*) AS n_kept,
-               string_agg(token, ' ' ORDER BY q) AS clean_text
-        FROM kept GROUP BY doc_id
-    )
-    SELECT s.doc_id, CAST(s.n_tokens AS BIGINT) AS n_tokens,
-           CAST(s.n_tokens - COALESCE(a.n_kept, 0) AS BIGINT) AS n_removed,
-           COALESCE(a.clean_text, '') AS clean_text
-    FROM sizes s LEFT JOIN agg a USING (doc_id)
-    """,
+    {_sql_substring_tail("newdocs")}""",
 )
 def text_substring_dedup_incr(spark, sf_dir):
     """Incremental substring-level dedup (r9 VERDICT #6): dedup TODAY'S
@@ -1493,60 +1420,18 @@ def text_substring_dedup_incr(spark, sf_dir):
     batch = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 >= 8
     )
-    toks = batch.select("doc_id", F.split("text", " ").alias("t"))
-    sizes = toks.select("doc_id", F.size("t").alias("n_tokens"))
     occ = _substring_grams(batch)
     hist_dup = occ.join(store, "g", "left_semi").select("doc_id", "pos")
     fresh = occ.join(store, "g", "left_anti")
-    w_first = Window.partitionBy("g").orderBy("doc_id", "pos")
-    batch_dup = (
-        fresh.withColumn("rn", F.row_number().over(w_first))
-        .filter(F.col("rn") > 1)
-        .select("doc_id", "pos")
-    )
-    dups = hist_dup.unionByName(batch_dup)
-    covered = dups.select(
-        "doc_id",
-        F.explode(F.sequence(F.col("pos"), F.col("pos") + SUBSTR_W - 1)).alias("q"),
-    ).distinct()
-    tokpos = batch.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("q", "token")
-    )
-    kept = tokpos.join(covered, ["doc_id", "q"], "left_anti")
-    agg = kept.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("q", "token"))),
-                lambda s: s["token"],
-            ),
-            " ",
-        ).alias("clean_text"),
-    )
-    return sizes.join(agg, "doc_id", "left").select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        (F.col("n_tokens") - F.coalesce("n_kept", F.lit(0)))
-        .cast("long")
-        .alias("n_removed"),
-        F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-    )
+    return _drop_covered(batch, hist_dup.unionByName(_later_occurrences(fresh)))
 
 
 @register(
     "text_substring_store_update",
     oracle=f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    hist AS (
-        SELECT DISTINCT md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
-        FROM toks, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
-        WHERE len(t) >= {SUBSTR_W} AND doc_id % 10 < 8
-    ),
-    batch AS (
-        SELECT DISTINCT md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
-        FROM toks, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
-        WHERE len(t) >= {SUBSTR_W} AND doc_id % 10 >= 8
-    ),
+    WITH {_SQL_TOKS},
+    {_sql_digests("hist", "< 8")},
+    {_sql_digests("batch", ">= 8")},
     novel AS (SELECT b.g FROM batch b ANTI JOIN hist h ON b.g = h.g)
     SELECT (SELECT CAST(count(*) AS BIGINT) FROM hist) AS n_hist,
            (SELECT CAST(count(*) AS BIGINT) FROM novel) AS n_batch_novel,
@@ -1603,7 +1488,7 @@ def _shingle_digests(docs):
     """(doc_id, sh) distinct shingle md5 digests — 32-byte set elements;
     set intersections over digests equal intersections over shingles
     (both engines hash the same bytes, the text_substring_dedup trick)."""
-    return _shingles(docs).select("doc_id", F.md5("shingle").alias("sh"))
+    return _kgrams(docs, SHINGLE_K).select("doc_id", F.md5("shingle").alias("sh"))
 
 
 def minhash_stage_store(spark, sf_dir) -> str:
@@ -1618,63 +1503,11 @@ def minhash_stage_store(spark, sf_dir) -> str:
     return stage("minhash_store", sf_dir, "documents", _build)
 
 
-def _digest_jaccard_of_pairs(cand, sh_a, sh_b):
-    """Exact shingle-set jaccard over DIGEST frames: ``cand`` (doc_a,
-    doc_b) scored against sh_a/(doc_id, sh) for the a-side and sh_b for
-    the b-side. The _exact_jaccard_of_pairs shape generalized to two
-    (possibly staged) shingle sources.
-
-    r15 (guide §2.3, the _exact_jaccard_of_pairs array verify): each
-    side's digest sets are collected once per doc and candidates
-    intersect the arrays map-side, replacing the verify join that
-    exploded every candidate pair by |A| digest rows. When sh_a and sh_b
-    are the same frame (both incremental twins pass sh_all for both
-    sides) the two collects are IDENTICAL subtrees, so exchange reuse
-    runs the aggregate once — the old shape's two differently-keyed
-    verify joins (doc_a vs doc_b) shuffled the digest source twice and
-    reused nothing. ``jaccard`` is the same integer ratio, bit-identical
-    double."""
-    sets_a = sh_a.groupBy("doc_id").agg(
-        F.collect_list("sh").alias("ts_a"), F.count(F.lit(1)).alias("na")
-    )
-    sets_b = sh_b.groupBy("doc_id").agg(
-        F.collect_list("sh").alias("ts_b"), F.count(F.lit(1)).alias("nb")
-    )
-    c = F.size(F.array_intersect("ts_a", "ts_b"))
-    jac = F.col("c") * 1.0 / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        cand.join(sets_a.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .join(sets_b.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        .select("doc_a", "doc_b", "na", "nb", c.alias("c"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-    )
-
-
 # Shared with the streaming twin (stream_dedup_incr): batch == stream by
 # the Structured Streaming guarantee, and the discovered pair set is
 # convergent under ANY micro-batch slicing (see streaming/ops.py).
 MINHASH_INCR_ORACLE = f"""
-    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    sh AS (
-        SELECT DISTINCT doc_id,
-               md5(array_to_string(t[i:i+{SHINGLE_K - 1}], ' ')) AS shingle
-        FROM toks,
-             unnest(generate_series(1, greatest(len(t) - {SHINGLE_K - 1}, 1))) AS u(i)
-    ),
-    sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    exact_pairs AS (
-        SELECT s.doc_a, s.doc_b,
-               s.c * 1.0 / (sa.n + sb.n - s.c) AS jaccard
-        FROM shared s
-        JOIN sizes sa ON s.doc_a = sa.doc_id
-        JOIN sizes sb ON s.doc_b = sb.doc_id
-        WHERE s.c * 1.0 / (sa.n + sb.n - s.c) >= {MINHASH_EXACT_TAU}
-    )
+    WITH {_sql_shingle_pairs("md5({})")}
     SELECT doc_a, doc_b, jaccard FROM exact_pairs
     WHERE NOT (doc_a % 10 < 8 AND doc_b % 10 < 8)
     ORDER BY doc_a, doc_b
@@ -1737,27 +1570,16 @@ def minhash_incr_pairs(hist_bands, hist_sh, batch):
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    a = batch_bands.alias("a")
-    b = batch_bands.alias("b")
-    intra_cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    cross_ha = _digest_jaccard_of_pairs(
+    intra_cand = _band_pairs(batch_bands).dropDuplicates(["doc_a", "doc_b"])
+    cross_ha = _jaccard_of_pairs(
         cross_cand.filter("hist_is_a").select("doc_a", "doc_b"), hist_sh, batch_sh
     )
-    cross_hb = _digest_jaccard_of_pairs(
+    cross_hb = _jaccard_of_pairs(
         cross_cand.filter("not hist_is_a").select("doc_a", "doc_b"),
         batch_sh,
         hist_sh,
     )
-    intra = _digest_jaccard_of_pairs(intra_cand, batch_sh, batch_sh)
+    intra = _jaccard_of_pairs(intra_cand, batch_sh, batch_sh)
     return (
         cross_ha.unionByName(cross_hb)
         .unionByName(intra)
@@ -1775,7 +1597,7 @@ def _bakeoff_dedup_oracle() -> str:
     sim_ctes, sim_select = sim_sql.split("\n    SELECT a.doc_id AS doc_a,", 1)
     sim_ctes = sim_ctes.lstrip().removeprefix("WITH ")
     return f"""
-    WITH {_SQL_SHINGLE_PAIRS},
+    WITH {_sql_shingle_pairs()},
     {sim_ctes},
     sim_pairs AS (
         SELECT a.doc_id AS doc_a,{sim_select}
@@ -1844,7 +1666,7 @@ def dedup_bakeoff(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     truth = (
         _jaccard_pairs_of_tok(
-            _shingles(docs).withColumnRenamed("shingle", "t"),
+            _kgrams(docs, SHINGLE_K).withColumnRenamed("shingle", "t"),
             MINHASH_EXACT_TAU,
         )
         .select("doc_a", "doc_b")

@@ -290,7 +290,7 @@ def _e2e_prefix(spark, sf_dir):
     pipeline_e2e_llm_v3 (the two capstones differ only in their quality
     gate and everything downstream of it). Shares its three frames
     (cleaned / surv / decon)."""
-    from data_transform_spark.pipeline.curation import NGRAM_N
+    from data_transform_spark.pipeline.curation import ngrams
     from data_transform_spark.pipeline.dedup import (
         MINHASH_EXACT_TAU,
         _exact_jaccard_of_pairs,
@@ -330,25 +330,9 @@ def _e2e_prefix(spark, sf_dir):
     surv = share(cleaned.join(victims, "doc_id", "left_anti"))
 
     # 3. benchmark decontamination (8-gram overlap, broadcast bench set)
-    t = F.split("text", " ")
-
-    def grams_of(frame):
-        return frame.select(
-            "doc_id",
-            F.explode(
-                F.when(
-                    F.size(t) >= NGRAM_N,
-                    F.transform(
-                        F.sequence(F.lit(1), F.size(t) - (NGRAM_N - 1)),
-                        lambda s: F.array_join(F.slice(t, s, NGRAM_N), " "),
-                    ),
-                ).otherwise(F.array().cast("array<string>"))
-            ).alias("g"),
-        )
-
-    bench = grams_of(d.filter(F.col("doc_id") % 97 == 0)).select("g").distinct()
+    bench = ngrams(d.filter(F.col("doc_id") % 97 == 0)).select("g").distinct()
     contaminated = (
-        grams_of(surv.filter(F.col("doc_id") % 97 != 0))
+        ngrams(surv.filter(F.col("doc_id") % 97 != 0))
         .join(F.broadcast(bench), "g")  # bench grams ARE broadcast-sized
         .select("doc_id")
         .distinct()
@@ -365,11 +349,12 @@ def _e2e_prefix(spark, sf_dir):
 
 def _prefix_code_fingerprint() -> str:
     """Fingerprint of the CODE that derives the staged prefix: the prefix
-    builder plus the whole dedup module it delegates to (deliberately
-    broad — a 1-build rebuild per edit is nothing next to silently
-    serving results of retired logic). The documents fingerprint in the
-    store's directory name covers data staleness; this fingerprint, part
-    of the store's name, covers code staleness. The DuckDB oracle remains
+    builder plus the whole dedup module and the curation n-gram builder
+    it delegates to (deliberately broad — a 1-build rebuild per edit is
+    nothing next to silently serving results of retired logic). The
+    documents fingerprint in the store's directory name covers data
+    staleness; this fingerprint, part of the store's name, covers code
+    staleness. The DuckDB oracle remains
     the backstop either way."""
     import hashlib
     import inspect
@@ -380,6 +365,7 @@ def _prefix_code_fingerprint() -> str:
     src = (
         inspect.getsource(_e2e_prefix)
         + inspect.getsource(_dd)
+        + inspect.getsource(_cur.ngrams)
         + f":{_cur.NGRAM_N}"
     )
     return hashlib.sha256(src.encode()).hexdigest()[:10]

@@ -932,18 +932,14 @@ def _pq_encode(books, frame):
     (dist, c_id) key instead of a row_number window (the
     _nearest_centroid change) — same row out, but the ×Ks candidate
     explosion reduces map-side before the exchange and the per-group
-    sort disappears."""
+    sort disappears. Only ``c_id`` rides in the aggregate buffer: the
+    subvector is dropped before the partial aggregate and the shuffle."""
     return (
         _subvectors(frame)
         .join(F.broadcast(books), "m")
-        .select("vec_id", "m", "sub", "c_id", _l2sq("sub", "c_sub").alias("dist"))
+        .select("vec_id", "m", "c_id", _l2sq("sub", "c_sub").alias("dist"))
         .groupBy("vec_id", "m")
-        .agg(
-            F.min_by(
-                F.struct("sub", "c_id"), F.struct("dist", "c_id")
-            ).alias("_best")
-        )
-        .select("vec_id", "m", F.col("_best.c_id").alias("code"))
+        .agg(F.min_by("c_id", F.struct("dist", "c_id")).alias("code"))
     )
 
 

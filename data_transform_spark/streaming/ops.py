@@ -34,7 +34,7 @@ from data_transform_spark.operators.events import _SESSION_MOTIF_ORACLE
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
 from data_transform_spark.pipeline.text import PII_SCRUB_ORACLE, pii_plant, pii_scrub
 from data_transform_spark.registry import register
-from data_transform_spark.shares import release, run_dir
+from data_transform_spark.shares import release, run_dir, share
 
 
 def stage_table_dir(sf_dir: str, table: str) -> str:
@@ -581,7 +581,8 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
     the returned pairs."""
     from data_transform_spark.pipeline.dedup import (
         MINHASH_EXACT_TAU,
-        _digest_jaccard_of_pairs,
+        _band_pairs,
+        _jaccard_of_pairs,
         _shingle_digests,
         _sig_bands,
         minhash_signatures,
@@ -615,14 +616,13 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         s = batch_df.sparkSession
         # r14 (guide §3.3/§5): the body runs THREE write actions per
         # micro-batch and the batch band/digest frames feed all of them —
-        # local checkpoints (filled by the first write) run the shingle
-        # explode + 48-min signature aggregate once per batch AND truncate
-        # the lineage the downstream join tasks would otherwise serialize
-        # per task (the
+        # eager local checkpoints run the shingle explode + 48-min
+        # signature aggregate once per batch AND truncate the lineage the
+        # downstream join tasks would otherwise serialize per task (the
         # capstone-share mechanism; plain lazy/eager PERSIST variants
         # measured SLOWER here — OPTIMIZATION_r14.md wave 3/6).
-        bands_b = _sig_bands(minhash_signatures(batch_df)).localCheckpoint()
-        sh_b = _shingle_digests(batch_df).localCheckpoint()
+        bands_b = share(_sig_bands(minhash_signatures(batch_df)), eager=True)
+        sh_b = share(_shingle_digests(batch_df), eager=True)
         store_bands = s.read.parquet(*_prior(bands_dir, batch_id))
         store_sh = s.read.parquet(*_prior(sh_dir, batch_id))
         h, n = store_bands.alias("h"), bands_b.alias("n")
@@ -637,16 +637,11 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
                 F.greatest(F.col("h.doc_id"), F.col("n.doc_id")).alias("doc_b"),
             )
         )
-        a, b = bands_b.alias("a"), bands_b.alias("b")
-        intra = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        cand = cross.unionByName(intra).dropDuplicates(["doc_a", "doc_b"])
+        cand = cross.unionByName(_band_pairs(bands_b)).dropDuplicates(
+            ["doc_a", "doc_b"]
+        )
         sh_all = store_sh.unionByName(sh_b)
-        pairs = _digest_jaccard_of_pairs(cand, sh_all, sh_all).filter(
+        pairs = _jaccard_of_pairs(cand, sh_all, sh_all).filter(
             F.col("jaccard") >= MINHASH_EXACT_TAU
         )
         # pairs FIRST (reads only prior store state), appends LAST: a crash

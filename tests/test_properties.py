@@ -7,7 +7,7 @@ Small example counts: each property round-trips through the JVM.
 
 import duckdb
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import Window
@@ -30,6 +30,12 @@ PROP_SETTINGS = dict(
     # the driver's verify must be reproducible: same examples every run
     derandomize=True,
 )
+
+
+def _kgram_set(text, k):
+    """Distinct word k-grams of ``text``; a text shorter than k is one gram."""
+    toks = text.split(" ")
+    return {" ".join(toks[i : i + k]) for i in range(max(len(toks) - k + 1, 1))}
 
 
 def _df(spark, rows):
@@ -141,14 +147,7 @@ def test_containment_bounds_and_includes_exact_dups(spark, sf_dir):
     from data_transform_spark.pipeline.dedup import CONTAIN_K
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
-    sets = {}
-    for r in d:
-        toks = r.text.split(" ")
-        ks = {
-            " ".join(toks[i : i + CONTAIN_K])
-            for i in range(max(len(toks) - CONTAIN_K + 1, 1))
-        }
-        sets[r.doc_id] = ks
+    sets = {r.doc_id: _kgram_set(r.text, CONTAIN_K) for r in d}
     ids = sorted(sets)
     want = {}
     for i, a in enumerate(ids):
@@ -314,18 +313,11 @@ def test_containment_guard_matches_bruteforce_on_random_corpora(
         f"{base}/documents.parquet"
     )
 
-    def shingles(text):
-        words = text.split(" ")
-        return {
-            " ".join(words[i : i + k])
-            for i in range(0, max(len(words) - k, 0) + 1)
-        }
-
     expected = set()
     ids = sorted(texts)
     for ai, a in enumerate(ids):
         for b in ids[ai + 1 :]:
-            sa, sb = shingles(texts[a]), shingles(texts[b])
+            sa, sb = _kgram_set(texts[a], k), _kgram_set(texts[b], k)
             if len(sa & sb) / min(len(sa), len(sb)) >= dd.CONTAIN_TAU:
                 expected.add((a, b))
 
@@ -343,6 +335,45 @@ def test_containment_guard_matches_bruteforce_on_random_corpora(
             )
     finally:
         dd.CONTAIN_K, dd.CONTAIN_DF_CAP = orig_k, orig_cap
+
+
+# Tiny corpora over a 3-word vocab: most pairs share shingles, and docs of
+# one or two words are shorter than SHINGLE_K, so each keeps its whole text
+# as its one shingle.
+JACCARD_CORPUS = st.lists(
+    st.lists(st.sampled_from(["aa", "bb", "cc"]), min_size=1, max_size=6),
+    min_size=2,
+    max_size=6,
+)
+
+
+@given(docs=JACCARD_CORPUS)
+@example(docs=[["aa"], ["aa"], ["aa", "bb"], ["aa", "bb", "cc"], ["bb", "aa"]])
+@settings(**{**PROP_SETTINGS, "max_examples": 6})
+def test_jaccard_verifier_matches_bruteforce(spark, docs):
+    """The one jaccard verifier, given every pair as a candidate, returns
+    Python's exact set jaccard for each, bit for bit — over raw
+    SHINGLE_K-shingles as one frame for both sides (the MinHash verify)
+    and over their md5 digests as two frames (the incremental store)."""
+    from data_transform_spark.pipeline.dedup import (
+        SHINGLE_K,
+        _jaccard_of_pairs,
+        _kgrams,
+        _shingle_digests,
+    )
+
+    texts = [" ".join(words) for words in docs]
+    d = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    pairs = [(a, b) for a in range(len(texts)) for b in range(a + 1, len(texts))]
+    cand = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    sets = [_kgram_set(t, SHINGLE_K) for t in texts]
+    want = {(a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b]) for a, b in pairs}
+    for sides in ([_kgrams(d, SHINGLE_K)], [_shingle_digests(d)] * 2):
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in _jaccard_of_pairs(cand, *sides).collect()
+        }
+        assert got == want, f"{sides[0].columns}: {got} != {want} on {texts}"
 
 
 def test_motif_whale_cap_bounds_journeys(spark, tmp_path):
