@@ -144,10 +144,8 @@ def bpe_token_counts(words: DataFrame, merges, word_col: str = "word") -> DataFr
     result back to your corpus — the tokenize_bpe shape."""
     from data_transform_spark.pipeline import training as _t
 
-    seq = _t._bpe_seq0(F.col(word_col))
-    for _r, a, b, m, _c in merges:
-        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    return words.withColumn("n_bpe", F.size(F.split(F.trim(seq), "  ")))
+    seq = _t._replay(_t._bpe_seq0(F.col(word_col)), merges)
+    return words.withColumn("n_bpe", _t._n_symbols(seq))
 
 
 def ann_ivfpq_topk(embeddings: DataFrame, spark=None) -> DataFrame:

@@ -137,24 +137,26 @@ _E2E_U01 = (
 )
 
 
-def _e2e_llm_oracle() -> str:
-    # Heavy CTEs carry DuckDB's AS MATERIALIZED hint: the funnel's final
-    # SELECT reads each stage from ~10 scalar subqueries, and DuckDB's
-    # default CTE inlining recomputes the whole upstream pipeline per
-    # reference — at sf0.1 that multiplies the all-pairs shingle join's
-    # memory ~10x and OOMs the oracle. Materialization evaluates each
-    # stage once (what Spark's plan gets via exchange reuse) — semantics
-    # identical, verified equal at sf0.01 both ways.
-    from data_transform_spark.pipeline.curation import NGRAM_N, TEMP_ALPHA
+def _e2e_prefix_ctes() -> str:
+    """Funnel stages 1-3 as DuckDB CTEs, toks0 through decon — the twin of
+    _e2e_prefix, shared by every capstone oracle. Ends with a comma; the
+    caller's next CTE follows. Heavy CTEs carry DuckDB's AS MATERIALIZED
+    hint: the funnel's final SELECT reads each stage from ~10 scalar
+    subqueries, and DuckDB's default CTE inlining recomputes the whole
+    upstream pipeline per reference — at sf0.1 that multiplies the
+    all-pairs shingle join's memory ~10x and OOMs the oracle.
+    Materialization evaluates each stage once (what Spark's plan gets via
+    exchange reuse) — semantics identical, verified equal at sf0.01 both
+    ways. The documents alias is ``dd``: the v3 oracle defines a CTE
+    named ``d``."""
+    from data_transform_spark.pipeline.curation import NGRAM_N
     from data_transform_spark.pipeline.dedup import (
         MINHASH_EXACT_TAU,
         SHINGLE_K,
         SUBSTR_W,
     )
-    from data_transform_spark.pipeline.training import PACK_BUDGET
 
-    return f"""
-    WITH toks0 AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    return f"""toks0 AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
     occ AS MATERIALIZED (
         SELECT doc_id, i - 1 AS pos,
                md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
@@ -181,10 +183,10 @@ def _e2e_llm_oracle() -> str:
           ON tp.doc_id = c.doc_id AND tp.q = c.q
     ),
     cleaned AS MATERIALIZED (
-        SELECT k.doc_id, d.source, count(*) AS n_tok,
+        SELECT k.doc_id, dd.source, count(*) AS n_tok,
                string_agg(k.token, ' ' ORDER BY k.q) AS text
-        FROM kept k JOIN documents d USING (doc_id)
-        GROUP BY k.doc_id, d.source
+        FROM kept k JOIN documents dd USING (doc_id)
+        GROUP BY k.doc_id, dd.source
     ),
     sh AS MATERIALIZED (
         SELECT DISTINCT doc_id,
@@ -223,7 +225,15 @@ def _e2e_llm_oracle() -> str:
         SELECT * FROM surv
         WHERE doc_id % 97 <> 0
           AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-    ),
+    ),"""
+
+
+def _e2e_llm_oracle() -> str:
+    from data_transform_spark.pipeline.curation import TEMP_ALPHA
+    from data_transform_spark.pipeline.training import PACK_BUDGET
+
+    return f"""
+    WITH {_e2e_prefix_ctes()}
     gbase AS MATERIALIZED (SELECT doc_id, source, n_tok, string_split(text, ' ') AS ts
               FROM decon),
     bi AS (
@@ -634,13 +644,7 @@ def _e2e_llm_v3_oracle() -> str:
     from data_transform_spark.pipeline.curation import (
         _QNB_CTE_SQL,
         NB_GATE_PRECISION,
-        NGRAM_N,
         TEMP_ALPHA,
-    )
-    from data_transform_spark.pipeline.dedup import (
-        MINHASH_EXACT_TAU,
-        SHINGLE_K,
-        SUBSTR_W,
     )
     from data_transform_spark.pipeline.training import PACK_BUDGET
 
@@ -673,76 +677,7 @@ def _e2e_llm_v3_oracle() -> str:
                    min(CASE WHEN bucket = 1 THEN cum_min END)) AS thr_u
         FROM cumk
     ),
-    toks0 AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-    occ AS MATERIALIZED (
-        SELECT doc_id, i - 1 AS pos,
-               md5(array_to_string(t[i:i+{SUBSTR_W - 1}], ' ')) AS g
-        FROM toks0, unnest(generate_series(1, len(t) - {SUBSTR_W} + 1)) AS u(i)
-        WHERE len(t) >= {SUBSTR_W}
-    ),
-    dups AS (
-        SELECT doc_id, pos FROM (
-            SELECT doc_id, pos,
-                   row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-            FROM occ) WHERE rn > 1
-    ),
-    covered AS MATERIALIZED (
-        SELECT DISTINCT doc_id, q
-        FROM dups, unnest(generate_series(pos, pos + {SUBSTR_W - 1})) AS u(q)
-    ),
-    tokpos AS MATERIALIZED (
-        SELECT doc_id, i - 1 AS q, t[i] AS token
-        FROM toks0, unnest(generate_series(1, len(t))) AS u(i)
-    ),
-    kept AS MATERIALIZED (
-        SELECT tp.doc_id, tp.q, tp.token
-        FROM tokpos tp ANTI JOIN covered c
-          ON tp.doc_id = c.doc_id AND tp.q = c.q
-    ),
-    cleaned AS MATERIALIZED (
-        SELECT k.doc_id, dd.source, count(*) AS n_tok,
-               string_agg(k.token, ' ' ORDER BY k.q) AS text
-        FROM kept k JOIN documents dd USING (doc_id)
-        GROUP BY k.doc_id, dd.source
-    ),
-    sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id,
-               array_to_string(t[i:i+{SHINGLE_K - 1}], ' ') AS shingle
-        FROM (SELECT doc_id, string_split(text, ' ') AS t FROM cleaned),
-             unnest(generate_series(1, greatest(len(t) - {SHINGLE_K - 1}, 1))) AS u(i)
-    ),
-    sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-    shared AS MATERIALIZED (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    ),
-    victims AS (
-        SELECT DISTINCT s.doc_b AS doc_id
-        FROM shared s
-        JOIN sz sa ON s.doc_a = sa.doc_id
-        JOIN sz sb ON s.doc_b = sb.doc_id
-        WHERE s.c * 1.0 / (sa.n + sb.n - s.c) >= {MINHASH_EXACT_TAU}
-    ),
-    surv AS MATERIALIZED (SELECT * FROM cleaned ANTI JOIN victims USING (doc_id)),
-    bgrams AS (
-        SELECT DISTINCT array_to_string(t[s:s+{NGRAM_N - 1}], ' ') AS g
-        FROM (SELECT doc_id, string_split(text, ' ') AS t
-              FROM documents WHERE doc_id % 97 = 0),
-             unnest(generate_series(1, greatest(len(t) - {NGRAM_N - 1}, 0))) AS u(s)
-    ),
-    cgrams AS (
-        SELECT doc_id, array_to_string(t[s:s+{NGRAM_N - 1}], ' ') AS g
-        FROM (SELECT doc_id, string_split(text, ' ') AS t
-              FROM surv WHERE doc_id % 97 <> 0),
-             unnest(generate_series(1, greatest(len(t) - {NGRAM_N - 1}, 0))) AS u(s)
-    ),
-    contaminated AS (SELECT DISTINCT doc_id FROM cgrams JOIN bgrams USING (g)),
-    decon AS MATERIALIZED (
-        SELECT * FROM surv
-        WHERE doc_id % 97 <> 0
-          AND doc_id NOT IN (SELECT doc_id FROM contaminated)
-    ),
+    {_e2e_prefix_ctes()}
     lgate AS MATERIALIZED (
         SELECT doc_id, source, n_tok, text FROM decon
         WHERE n_tok BETWEEN {E2E_MIN_TOK} AND {E2E_MAX_TOK}

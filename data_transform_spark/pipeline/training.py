@@ -9,12 +9,14 @@ hash functions or nondeterministic `df.sample()`. That is the property a
 
 from __future__ import annotations
 
+import heapq
+from collections import Counter
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_events, load_table
 from data_transform_spark.registry import register
-from data_transform_spark.shares import release, share
 
 # Content-stable bucket in [0, 100): first 8 md5 hex chars of the id.
 # A 32-bit prefix makes the %100 folding bias ~2e-8 (vs 0.15% with the old
@@ -915,6 +917,27 @@ def ml_kmeans_1d(spark, sf_dir):
 
 BPE_ROUNDS = 8  # learned merge rounds (bounded — replayed by the oracle)
 
+# Most distinct words a tokenizer trainer collects to the driver. Every
+# trainer below reads the corpus only through _bpe_words, the word-count
+# table, and fits on it in Python. The fixtures hold 31 distinct words; the
+# 279,365-word md5 scale corpus (SCALING.md, round 14) fits with room to
+# spare, at 1.1-1.6 s per merge round. A natural-language corpus with a
+# vocabulary in the millions does not fit: count words on a sample or on a
+# pre-tokenized, frequency-pruned table first, as production BPE and
+# SentencePiece trainers do. Past the cap the trainer raises
+# WordTableTooLarge; it never falls back to a Spark loop.
+WORD_TABLE_CAP = 1 << 19
+
+_INT64_MAX = (1 << 63) - 1
+
+
+class WordTableTooLarge(RuntimeError):
+    """The corpus has more distinct words than WORD_TABLE_CAP."""
+
+
+class WordPieceScoreOverflow(OverflowError):
+    """A WordPiece score term left int64, where Spark and DuckDB raise."""
+
 
 def _bpe_seq0(word_col):
     """Initial BPE symbol sequence of a word: every character wrapped in
@@ -928,10 +951,19 @@ def _bpe_seq0(word_col):
     leftmost-non-overlapping scan IS canonical greedy BPE, including the
     a==b run case (' a  a  a  a  a ' -> ' aa  aa  a '). Symbols never
     contain spaces (words come from splitting text ON spaces), so the
-    delimiter cannot collide."""
+    delimiter cannot collide. Python's str.replace scans the same way, so
+    the driver-side trainer and the Spark encoder agree by construction."""
     return F.concat(
         F.lit(" "), F.array_join(F.split(word_col, ""), "  "), F.lit(" ")
     )
+
+
+# DuckDB twin of _bpe_seq0.
+_BPE_SEQ0_SQL = (
+    "' ' || array_to_string("
+    "list_transform(generate_series(1, length(word)), "
+    "i -> substring(word, i, 1)), '  ') || ' '"
+)
 
 
 def _bpe_words(spark, sf_dir):
@@ -945,29 +977,6 @@ def _bpe_words(spark, sf_dir):
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def _bpe_pair_counts(words, seq):
-    """Adjacent-symbol pair counts of the current sequences, weighted by
-    word frequency — all JVM-side: split to symbols, transform over the
-    1..n-1 index range (guarded: Spark's sequence(1, 0) is DESCENDING, not
-    empty), explode, aggregate."""
-    syms = F.split(F.trim(seq), "  ")
-    idx = F.when(
-        F.size(syms) > 1, F.sequence(F.lit(1), F.size(syms) - 1)
-    ).otherwise(F.array().cast("array<int>"))
-    pairs = F.transform(
-        idx,
-        lambda i: F.struct(
-            F.element_at(syms, i).alias("a"),
-            F.element_at(syms, i + 1).alias("b"),
-        ),
-    )
-    return (
-        words.select("cnt", F.explode(pairs).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("cnt").alias("pc"))
     )
 
 
@@ -993,70 +1002,133 @@ _BPE_BYTES_SEQ0_SQL = (
 )
 
 
-def _bpe_train(spark, sf_dir, rounds: int = BPE_ROUNDS, seq0=None):
-    """Learn ``rounds`` BPE merges (Sennrich et al. 2016) deterministically.
-
-    Each round picks the most frequent adjacent symbol pair (ties broken
-    lexicographically by (a, b) — integer counts, so the decision is
-    bit-exact in any engine) via a 1-row orderBy().limit(1) collect — a
-    training decision is inherently a driver decision, the
-    pagerank_converged precedent — then folds the merge into the symbol
-    sequences as a literal replace. The word table is eagerly
-    localCheckpoint-ed once (ONE corpus scan for the whole training run;
-    each round's job re-reads the vocabulary-sized checkpoint, never the
-    corpus) and released before returning (shares.release).
-    Returns [(merge_round, a, b, merged, pair_count), ...] as plain
-    literals, so callers build plans with no dependency on the
-    checkpoint."""
-    words = share(
-        _bpe_words(spark, sf_dir).withColumn(
-            "seq", (seq0 or _bpe_seq0)(F.col("word"))
-        ),
-        eager=True,
+def _word_table(spark, sf_dir, seq0):
+    """[(word, cnt, seq), ...] — the word-count table with each word's
+    initial symbol sequence, in ONE collect. ``seq`` is the Spark seq0
+    Column's own output, so every alphabet keeps one definition; the
+    trainers fold their merges into it with Python's str.replace."""
+    rows = (
+        _bpe_words(spark, sf_dir)
+        .select("word", "cnt", seq0(F.col("word")).alias("seq"))
+        .limit(WORD_TABLE_CAP + 1)
+        .collect()
     )
+    if len(rows) > WORD_TABLE_CAP:
+        raise WordTableTooLarge(
+            f"{sf_dir}: more than WORD_TABLE_CAP={WORD_TABLE_CAP} distinct "
+            "words; a tokenizer trainer fits on the driver"
+        )
+    return [(r["word"], int(r["cnt"]), r["seq"]) for r in rows]
+
+
+def _symbols(seq: str) -> list:
+    return seq.strip(" ").split("  ")
+
+
+def _pair_count_score(pairs, _seqs):
+    """BPE selection: a pair's score is its corpus count."""
+    return {ab: (pc,) for ab, pc in pairs.items()}
+
+
+def _merge_loop(table, rounds, batch=1, score=_pair_count_score, merged=str.__add__):
+    """The one merge loop every BPE-family trainer runs, in Python over a
+    _word_table. Each round counts adjacent symbol pairs weighted by word
+    count, ``score(pairs, seqs)`` maps each pair to its stats tuple (the
+    ranking score last), and the pairs rank by (score DESC, a, b) — integer
+    scores and code-point string order, which is UTF-8 byte order, so the
+    ranking is the one the DuckDB oracle computes. A greedy scan over the top
+    BPE_BATCH_CAND_FACTOR·batch candidates accepts up to ``batch`` pairs,
+    skipping a pair when either symbol was consumed OR produced by a pair
+    accepted earlier in the round: a merged output can be spelled like a
+    pre-existing symbol, and without the output block a later-rank replace
+    could consume occurrences an earlier merge created. Disjoint symbol
+    sets make the round's replaces commute, so every accepted pair's stats
+    are exact at round start. batch=1 is sequential BPE: rank 1 is always
+    accepted and the round stops there. The accepted merges fold into the
+    sequences as literal ``' a  b '`` -> ``' m '`` replaces (the _bpe_seq0
+    layout). Returns [(round, cand_rank, a, b, merged, *stats), ...]."""
+    seqs = [(cnt, seq) for _word, cnt, seq in table]
     merges = []
-    seq = F.col("seq")
-    try:
-        for r in range(1, rounds + 1):
-            top = (
-                _bpe_pair_counts(words, seq)
-                .orderBy(F.col("pc").desc(), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not top:  # degenerate corpus: no adjacent pairs left
+    for r in range(1, rounds + 1):
+        syms = [(cnt, _symbols(seq)) for cnt, seq in seqs]
+        pairs = Counter()
+        for cnt, s in syms:
+            for ab in zip(s, s[1:]):
+                pairs[ab] += cnt
+        stats = score(pairs, syms)
+        top = heapq.nsmallest(
+            BPE_BATCH_CAND_FACTOR * batch,
+            stats,
+            key=lambda ab: (-stats[ab][-1], ab),
+        )
+        if not top:  # degenerate corpus: no adjacent pairs left
+            break
+        taken: set[str] = set()
+        fold = []
+        for rk, (a, b) in enumerate(top, start=1):
+            if len(fold) == batch:
                 break
-            a, b, pc = top[0]["a"], top[0]["b"], int(top[0]["pc"])
-            merges.append((r, a, b, a + b, pc))
-            seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} "))
-    finally:
-        release(words)
+            if a in taken or b in taken:
+                continue
+            m = merged(a, b)
+            taken.update((a, b, m))
+            fold.append((f" {a}  {b} ", f" {m} "))
+            merges.append((r, rk, a, b, m, *stats[a, b]))
+        for i, (cnt, seq) in enumerate(seqs):
+            for old, new in fold:
+                seq = seq.replace(old, new)
+            seqs[i] = (cnt, seq)
     return merges
 
 
-def _bpe_cte_chain(
-    rounds: int,
-    seq0_sql: str | None = None,
-    ns: str = "",
-    materialized: bool = False,
-) -> str:
-    """The DuckDB replay of _bpe_train: w0 = symbol sequences (chars by
-    default; pass seq0_sql for the byte-level alphabet), then per round
-    (pair counts -> top-1 merge -> replace) as chained CTEs — the
-    ml_kmeans_1d bounded-unroll pattern. Validated against a canonical
-    python BPE implementation (greedy leftmost, ties lexicographic) in
-    tests/test_properties.py. ``ns`` prefixes every CTE name so several
-    chains can compose into ONE query (tokenize_bakeoff); default ""
-    keeps the standalone oracles byte-identical."""
-    seq0_sql = seq0_sql or (
-        "' ' || array_to_string("
-        "list_transform(generate_series(1, length(word)), "
-        "i -> substring(word, i, 1)), '  ') || ' '"
-    )
-    mat = " MATERIALIZED" if materialized else ""
+def _bpe_train(spark, sf_dir, rounds: int = BPE_ROUNDS, seq0=None):
+    """Learn ``rounds`` BPE merges (Sennrich et al. 2016) deterministically:
+    each round fuses the most frequent adjacent symbol pair (ties broken
+    lexicographically by (a, b)) — _merge_loop with batch=1 over one
+    collected word table (chars by default; pass seq0 for another
+    alphabet). Returns [(merge_round, a, b, merged, pair_count), ...] as
+    plain literals."""
+    table = _word_table(spark, sf_dir, seq0 or _bpe_seq0)
+    return [(r, a, b, m, pc) for r, _rk, a, b, m, pc in _merge_loop(table, rounds)]
+
+
+def _replay(seq, merges):
+    """Encode: fold learned merges, in learned order, into a seq Column as
+    literal replaces (merge priority, not longest match — the defining
+    property of BPE encoding). ``merges`` rows start (round, a, b, merged),
+    the _bpe_train and _wp_train layout."""
+    for _r, a, b, m, *_stats in merges:
+        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+    return seq
+
+
+def _n_symbols(seq):
+    return F.size(F.split(F.trim(seq), "  "))
+
+
+def _doc_rollup(spark, sf_dir, wtok, *aggs, by="doc_id"):
+    """Per-document rollup of per-word counts: the corpus exploded to
+    (doc_id[, by], word) is broadcast-joined to ``wtok``, one row per
+    DISTINCT word, then aggregated by ``by`` — the tokenize_vocab shape,
+    so no corpus shuffle beyond the rollup itself."""
+    d = load_table(spark, sf_dir, "documents")
+    dw = d.select(
+        *dict.fromkeys(("doc_id", by)),
+        F.explode(F.split("text", " ")).alias("word"),
+    ).filter(F.col("word") != "")
+    return dw.join(F.broadcast(wtok), "word").groupBy(by).agg(*aggs)
+
+
+def _merge_cte_chain(rounds, seq0_sql, step, ns="", mat="", recursive=False):
+    """The DuckDB replay skeleton of _merge_loop: w0 = each distinct word's
+    count and initial symbol sequence, then per round the weighted
+    adjacent-pair counts p{r} followed by ``step(r)``, the CTEs that pick
+    round r's merges into m{r} and fold them into w{r}. ``ns`` prefixes
+    every CTE name so several chains compose into ONE query
+    (tokenize_bakeoff)."""
     parts = [
         f"""
-    WITH {ns}w0 AS{mat} (
+    WITH {"RECURSIVE " if recursive else ""}{ns}w0 AS{mat} (
         SELECT word, count(*) AS cnt,
                {seq0_sql} AS seq
         FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
@@ -1071,44 +1143,93 @@ def _bpe_cte_chain(
               FROM {ns}w{r - 1}),
              unnest(generate_series(1, len(s) - 1)) AS t(i)
         GROUP BY 1, 2
-    ),
-    {ns}m{r} AS{mat} (
-        SELECT CAST({r} AS INTEGER) AS merge_round, a, b, a || b AS merged,
-               CAST(pc AS BIGINT) AS pair_count
-        FROM {ns}p{r} ORDER BY pc DESC, a, b LIMIT 1
-    ),
+    ),{step(r)}""")
+    return "".join(parts)
+
+
+def _replace_cte(r, ns, mat):
+    """w{r}: fold round r's single merge m{r} into w{r-1}."""
+    return f"""
     {ns}w{r} AS{mat} (
         SELECT word, cnt,
                replace(seq, ' ' || a || '  ' || b || ' ',
                        ' ' || merged || ' ') AS seq
         FROM {ns}w{r - 1}, {ns}m{r}
     )"""
+
+
+def _bpe_cte_chain(
+    rounds: int,
+    seq0_sql: str = _BPE_SEQ0_SQL,
+    ns: str = "",
+    materialized: bool = False,
+) -> str:
+    """The DuckDB replay of _bpe_train: per round pair counts -> top-1
+    merge -> replace, as chained CTEs — the ml_kmeans_1d bounded-unroll
+    pattern. Validated against a canonical python BPE implementation
+    (greedy leftmost, ties lexicographic) in tests/test_properties.py."""
+    mat = " MATERIALIZED" if materialized else ""
+
+    def step(r):
+        return f"""
+    {ns}m{r} AS{mat} (
+        SELECT CAST({r} AS INTEGER) AS merge_round, a, b, a || b AS merged,
+               CAST(pc AS BIGINT) AS pair_count
+        FROM {ns}p{r} ORDER BY pc DESC, a, b LIMIT 1
+    ),{_replace_cte(r, ns, mat)}"""
+
+    return _merge_cte_chain(rounds, seq0_sql, step, ns, mat)
+
+
+def _merge_table_sql(rounds: int, cols: str, order: str = "merge_round") -> str:
+    """Final SELECT of a vocab_* oracle: the per-round m{r} CTEs stacked."""
+    return (
+        "\n    SELECT * FROM ("
+        + "\n    UNION ALL ".join(
+            f"SELECT {cols} FROM m{r}" for r in range(1, rounds + 1)
         )
-    return "".join(parts)
-
-
-_VOCAB_BPE_ORACLE = _bpe_cte_chain(BPE_ROUNDS) + "\n    SELECT * FROM (" + "\n    UNION ALL ".join(
-    f"SELECT merge_round, a AS pair_a, b AS pair_b, merged, pair_count FROM m{r}"
-    for r in range(1, BPE_ROUNDS + 1)
-) + ") ORDER BY merge_round"
-
-_TOKENIZE_BPE_ORACLE = _bpe_cte_chain(BPE_ROUNDS) + f""",
-    wt AS (
-        SELECT word, len(string_split(trim(seq), '  ')) AS n_bpe,
-               length(word) AS n_chars
-        FROM w{BPE_ROUNDS}
+        + f") ORDER BY {order}"
     )
-    SELECT doc_id, count(*) AS n_words,
-           CAST(sum(n_chars) AS BIGINT) AS n_char_tokens,
-           CAST(sum(n_bpe) AS BIGINT) AS n_bpe_tokens
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
+
+
+def _doc_rollup_sql(wt: str, aggs: str, by: str = "doc_id") -> str:
+    """Final CTE + SELECT of a tokenize_* oracle: ``wt`` holds one row of
+    per-word counts per distinct word; the corpus words join it and roll
+    up by ``by`` (the _doc_rollup twin)."""
+    cols = ", ".join(dict.fromkeys(("doc_id", by)))
+    return f""",
+    wt AS ({wt})
+    SELECT {by}, {aggs}
+    FROM (SELECT {cols}, unnest(string_split(text, ' ')) AS word
           FROM documents) dw
     JOIN wt USING (word)
-    GROUP BY doc_id
+    GROUP BY {by}
 """
 
 
-@register("vocab_bpe", oracle=_VOCAB_BPE_ORACLE)
+_BPE_MERGE_COLS = "merge_round, a AS pair_a, b AS pair_b, merged, pair_count"
+_BPE_MERGE_DDL = (
+    "merge_round int, pair_a string, pair_b string, merged string, "
+    "pair_count long"
+)
+
+
+def _n_bpe_sql(w: str, n_base: str = "length(word) AS n_chars") -> str:
+    return (
+        f"SELECT word, len(string_split(trim(seq), '  ')) AS n_bpe, "
+        f"{n_base} FROM {w}"
+    )
+
+
+_BPE_DOC_AGGS = """count(*) AS n_words,
+           CAST(sum(n_chars) AS BIGINT) AS n_char_tokens,
+           CAST(sum(n_bpe) AS BIGINT) AS n_bpe_tokens"""
+
+
+@register(
+    "vocab_bpe",
+    oracle=_bpe_cte_chain(BPE_ROUNDS) + _merge_table_sql(BPE_ROUNDS, _BPE_MERGE_COLS),
+)
 def vocab_bpe(spark, sf_dir):
     """Byte-pair-encoding trainer — the actual LLM-tokenizer family (GPT-2/
     RoBERTa/Llama lineage), one rung above tokenize_vocab's frequency-rank
@@ -1121,21 +1242,19 @@ def vocab_bpe(spark, sf_dir):
     (the ml_kmeans_1d pattern); a property test additionally pins the
     whole pipeline against a canonical python BPE on the live fixture.
 
-    Scale shape: ONE corpus scan builds the word-frequency table
-    (vocabulary-sized from then on); each round is one groupBy over
-    exploded adjacent pairs of the CURRENT symbol sequences + a 1-row
-    top-k collect + a literal string replace. At 100 TB: corpus scan once,
-    then rounds cost O(vocab), the standard way production BPE trainers
-    (HF tokenizers) operate — they too count words first."""
-    merges = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
-        merges,
-        "merge_round int, pair_a string, pair_b string, merged string, "
-        "pair_count long",
-    )
+    Scale shape: ONE corpus scan builds the word-frequency table, which is
+    collected once (at most WORD_TABLE_CAP words); the merge rounds run in
+    Python on the driver over that table, O(vocab) each and no Spark job —
+    the way production BPE trainers (HF tokenizers) count words first and
+    merge in memory."""
+    return spark.createDataFrame(_bpe_train(spark, sf_dir), _BPE_MERGE_DDL)
 
 
-@register("tokenize_bpe", oracle=_TOKENIZE_BPE_ORACLE)
+@register(
+    "tokenize_bpe",
+    oracle=_bpe_cte_chain(BPE_ROUNDS)
+    + _doc_rollup_sql(_n_bpe_sql(f"w{BPE_ROUNDS}"), _BPE_DOC_AGGS),
+)
 def tokenize_bpe(spark, sf_dir):
     """Encode with the learned BPE merges: apply the BPE_ROUNDS merges IN
     LEARNED ORDER (the defining property of BPE encoding — merge priority,
@@ -1144,66 +1263,39 @@ def tokenize_bpe(spark, sf_dir):
     word count, pre-merge character token count, and post-merge BPE token
     count — the compression the tokenizer actually buys.
 
-    Scale shape: training reads the corpus once (see _bpe_train); encoding
-    is a map over DISTINCT words (replace chain of BPE_ROUNDS literals,
-    zero Python) + one broadcast join against the corpus — the same
-    broadcast-vocab pattern as tokenize_vocab, so no corpus shuffle beyond
-    the per-doc rollup."""
-    merges = _bpe_train(spark, sf_dir)
-    seq = _bpe_seq0(F.col("word"))
-    for _r, a, b, m, _c in merges:
-        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    wtok = _bpe_words(spark, sf_dir).select(
-        "word",
-        F.size(F.split(F.trim(seq), "  ")).alias("n_bpe"),
-        F.length("word").alias("n_chars"),
-    )
-    d = load_table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docs.join(F.broadcast(wtok), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_chars").cast("long").alias("n_char_tokens"),
-            F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
-        )
+    Scale shape: training collects the word table once (see _bpe_train);
+    encoding is a map over DISTINCT words (replace chain of BPE_ROUNDS
+    literals, zero Python) + one broadcast join against the corpus — the
+    same broadcast-vocab pattern as tokenize_vocab, so no corpus shuffle
+    beyond the per-doc rollup."""
+    return _bpe_doc_tokens(spark, sf_dir, _bpe_train(spark, sf_dir))
+
+
+def _bpe_word_tokens(spark, sf_dir, merges):
+    """(word, n_bpe, n_chars) per distinct word under char-BPE merges."""
+    seq = _replay(_bpe_seq0(F.col("word")), merges)
+    return _bpe_words(spark, sf_dir).select(
+        "word", _n_symbols(seq).alias("n_bpe"), F.length("word").alias("n_chars")
     )
 
 
-_VOCAB_BPE_BYTES_ORACLE = (
-    _bpe_cte_chain(BPE_ROUNDS, _BPE_BYTES_SEQ0_SQL)
-    + "\n    SELECT * FROM ("
-    + "\n    UNION ALL ".join(
-        f"SELECT merge_round, a AS pair_a, b AS pair_b, merged, pair_count "
-        f"FROM m{r}"
-        for r in range(1, BPE_ROUNDS + 1)
+def _bpe_doc_tokens(spark, sf_dir, merges):
+    """Per document: word, character and char-BPE token counts."""
+    return _doc_rollup(
+        spark,
+        sf_dir,
+        _bpe_word_tokens(spark, sf_dir, merges),
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_chars").cast("long").alias("n_char_tokens"),
+        F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
     )
-    + ") ORDER BY merge_round"
+
+
+@register(
+    "vocab_bpe_bytes",
+    oracle=_bpe_cte_chain(BPE_ROUNDS, _BPE_BYTES_SEQ0_SQL)
+    + _merge_table_sql(BPE_ROUNDS, _BPE_MERGE_COLS),
 )
-
-_TOKENIZE_BPE_BYTES_ORACLE = (
-    _bpe_cte_chain(BPE_ROUNDS, _BPE_BYTES_SEQ0_SQL)
-    + f""",
-    wt AS (
-        SELECT word, len(string_split(trim(seq), '  ')) AS n_bpe,
-               octet_length(encode(word)) AS n_bytes
-        FROM w{BPE_ROUNDS}
-    )
-    SELECT doc_id, count(*) AS n_words,
-           CAST(sum(n_bytes) AS BIGINT) AS n_byte_tokens,
-           CAST(sum(n_bpe) AS BIGINT) AS n_bpe_tokens
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          FROM documents) dw
-    JOIN wt USING (word)
-    GROUP BY doc_id
-"""
-)
-
-
-@register("vocab_bpe_bytes", oracle=_VOCAB_BPE_BYTES_ORACLE)
 def vocab_bpe_bytes(spark, sf_dir):
     """BYTE-level BPE trainer — the GPT-2-family tokenizer base (Radford
     et al. 2019; vocab_bpe is the char-sequence Sennrich form): symbols
@@ -1224,18 +1316,24 @@ def vocab_bpe_bytes(spark, sf_dir):
     all-ASCII, so the multi-byte case runs on synthetic text there.
 
     Scale shape: identical to vocab_bpe — ONE corpus scan builds the
-    word-frequency table, each round is a vocabulary-sized pair count +
-    1-row collect; the hex rendering doubles symbol-string bytes but
-    nothing corpus-sized."""
-    merges = _bpe_train(spark, sf_dir, seq0=_bpe_seq0_bytes)
+    word-frequency table, collected once with Spark's hex rendering of
+    each word, then driver-side merge rounds; the hex rendering doubles
+    symbol-string bytes but nothing corpus-sized."""
     return spark.createDataFrame(
-        merges,
-        "merge_round int, pair_a string, pair_b string, merged string, "
-        "pair_count long",
+        _bpe_train(spark, sf_dir, seq0=_bpe_seq0_bytes), _BPE_MERGE_DDL
     )
 
 
-@register("tokenize_bpe_bytes", oracle=_TOKENIZE_BPE_BYTES_ORACLE)
+@register(
+    "tokenize_bpe_bytes",
+    oracle=_bpe_cte_chain(BPE_ROUNDS, _BPE_BYTES_SEQ0_SQL)
+    + _doc_rollup_sql(
+        _n_bpe_sql(f"w{BPE_ROUNDS}", "octet_length(encode(word)) AS n_bytes"),
+        """count(*) AS n_words,
+           CAST(sum(n_bytes) AS BIGINT) AS n_byte_tokens,
+           CAST(sum(n_bpe) AS BIGINT) AS n_bpe_tokens""",
+    ),
+)
 def tokenize_bpe_bytes(spark, sf_dir):
     """Encode with the learned BYTE-level BPE merges (vocab_bpe_bytes),
     applied in learned order to every distinct word — merge priority,
@@ -1246,138 +1344,47 @@ def tokenize_bpe_bytes(spark, sf_dir):
     tokenize_bpe; fertility here is tokens-per-BYTE, the number GPT-2-
     style tokenizer evaluations actually report.
 
-    Scale shape: training reads the corpus once (_bpe_train); encoding
-    is a replace chain of BPE_ROUNDS literals over DISTINCT words (zero
-    Python) + one broadcast join — no corpus shuffle beyond the per-doc
-    rollup."""
+    Scale shape: training collects the word table once (_bpe_train);
+    encoding is a replace chain of BPE_ROUNDS literals over DISTINCT words
+    (zero Python) + one broadcast join — no corpus shuffle beyond the
+    per-doc rollup."""
     merges = _bpe_train(spark, sf_dir, seq0=_bpe_seq0_bytes)
-    seq = _bpe_seq0_bytes(F.col("word"))
-    for _r, a, b, m, _c in merges:
-        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+    seq = _replay(_bpe_seq0_bytes(F.col("word")), merges)
     wtok = _bpe_words(spark, sf_dir).select(
-        "word",
-        F.size(F.split(F.trim(seq), "  ")).alias("n_bpe"),
-        F.octet_length("word").alias("n_bytes"),
+        "word", _n_symbols(seq).alias("n_bpe"), F.octet_length("word").alias("n_bytes")
     )
-    d = load_table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docs.join(F.broadcast(wtok), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_bytes").cast("long").alias("n_byte_tokens"),
-            F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
-        )
+    return _doc_rollup(
+        spark,
+        sf_dir,
+        wtok,
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_bytes").cast("long").alias("n_byte_tokens"),
+        F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
     )
 
 
 # --- Batched-merge BPE (r12 VERDICT #3) ---------------------------------
-# The sequential trainer's per-round driver sync is the scaling bound: a
-# 32k-merge vocabulary is 32k bounded collects. Batching picks the top-B
-# NON-OVERLAPPING pairs per round — greedy in (count DESC, a, b) rank
-# order over the top CAND_FACTOR·B candidates, accepting a pair iff
-# neither symbol appears in an already-accepted pair this round — where
-# "appears" covers each accepted pair's OUTPUT string a+b as well as its
-# inputs (r13 ADVICE: a merged output can collide with an identically
-# spelled pre-existing symbol, and without the output block a later-rank
-# replace could consume occurrences an earlier merge created). Disjoint
-# symbol sets make the B replaces commute (no merge can create or destroy
-# another accepted pair's ' a  b ' occurrence), so applying them in rank
-# order inside one round is exact, and a 32k-merge train becomes ~32k/B
-# driver syncs (B=256 → 125). B=1 degenerates to the sequential trainer
-# EXACTLY (property-pinned in tests), because rank-1 is always accepted
-# and the round stops at one merge — same selection, same replace.
+# A sequential trainer decides one merge per round: a 32k-merge vocabulary
+# is 32k recounts. Batching picks the top-B NON-OVERLAPPING pairs per round
+# — _merge_loop's greedy scan in (count DESC, a, b) rank order over the top
+# CAND_FACTOR·B candidates — so a 32k-merge train becomes ~32k/B rounds.
+# B=1 degenerates to the sequential trainer EXACTLY (property-pinned in
+# tests), because rank-1 is always accepted and the round stops at one
+# merge — same selection, same replace.
 BPE_BATCH = 4  # merges accepted per round (the "B" knob)
-BPE_BATCH_ROUNDS = 3  # demo rounds — 12 merges in 3 driver syncs
+BPE_BATCH_ROUNDS = 3  # demo rounds — 12 merges in 3 rounds
 BPE_BATCH_CAND_FACTOR = 8  # greedy scans the top CAND_FACTOR*B candidates
 
 
-def _bpe_train_batched(
-    spark, sf_dir, rounds: int, batch: int, seq0=None
-):
-    """Batched _bpe_train: per round, ONE bounded collect of the top
-    CAND_FACTOR·batch ranked pairs, then the greedy-disjoint scan runs in
-    the driver over those ≤32 rows (a training decision is a driver
-    decision — the _bpe_train precedent). The word table re-checkpoints
-    at every round END with the accepted replaces applied (r14 — see the
-    inline comment), so each round's pair-count job reads a
-    vocabulary-sized materialization, never a cumulative replace chain.
+def _bpe_train_batched(spark, sf_dir, rounds: int, batch: int):
+    """Batched _bpe_train: _merge_loop over one collected char word table.
     Returns [(round, cand_rank, a, b, merged, pair_count), ...];
     pair_count is the start-of-round count (exact for every accepted pair
     — disjointness means no earlier merge in the round changed it)."""
-    words = share(
-        _bpe_words(spark, sf_dir).withColumn(
-            "seq", (seq0 or _bpe_seq0)(F.col("word"))
-        ),
-        eager=True,
-    )
-    cand = BPE_BATCH_CAND_FACTOR * batch
-    merges = []
-    seq = F.col("seq")
-    try:
-        for r in range(1, rounds + 1):
-            top = (
-                _bpe_pair_counts(words, seq)
-                .orderBy(F.col("pc").desc(), "a", "b")
-                .limit(cand)
-                .collect()
-            )
-            if not top:  # degenerate corpus: no adjacent pairs left
-                break
-            taken: set[str] = set()
-            n_acc = 0
-            for rk, row in enumerate(top, start=1):
-                if n_acc >= batch:
-                    break
-                a, b = row["a"], row["b"]
-                if a in taken or b in taken:
-                    continue
-                # taken also holds each accepted OUTPUT a+b (r13 ADVICE):
-                # a merged string can collide with a pre-existing symbol
-                # spelled identically (possible from round 2 on), and a
-                # later-rank replace touching that symbol would then also
-                # consume occurrences the earlier merge just created —
-                # making its recorded round-start pair_count stale. Adding
-                # a+b to taken blocks exactly those candidates, restoring
-                # the strict disjointness/commute invariant the batching
-                # argument rests on. (No fixture knob hits the collision —
-                # verified at all 3 SFs — so outputs are unchanged here.)
-                taken.update((a, b, a + b))
-                n_acc += 1
-                merges.append((r, rk, a, b, a + b, int(row["pc"])))
-                seq = F.replace(
-                    seq, F.lit(f" {a}  {b} "), F.lit(f" {a}{b} ")
-                )
-            if n_acc:
-                # Re-materialize the word table with this round's
-                # replaces APPLIED (r14 scale fix, output-neutral): the
-                # chained-expression alternative re-evaluates every prior
-                # round's replaces in every later round's pair-count job
-                # — O(rounds²·batch) replace work and a Catalyst tree
-                # that passes ~1k nodes around round 10 at production
-                # knobs (B=256). One eager vocabulary-sized checkpoint
-                # per round keeps the expression ≤ batch deep and each
-                # pair-count pass O(batch). Measured on the 280k-word
-                # scale corpus: round walls flat (~1.3 s/round) instead
-                # of growing with the cumulative chain (tools/scale_r14).
-                prev = words
-                words = share(words.withColumn("seq", seq), eager=True)
-                release(prev)
-                seq = F.col("seq")
-    finally:
-        release(words)
-    return merges
+    return _merge_loop(_word_table(spark, sf_dir, _bpe_seq0), rounds, batch)
 
 
-def _bpe_batched_cte_chain(
-    rounds: int,
-    batch: int,
-    seq0_sql: str | None = None,
-    ns: str = "",
-) -> str:
+def _bpe_batched_cte_chain(rounds: int, batch: int) -> str:
     """DuckDB replay of _bpe_train_batched. Per round: pair counts →
     ranked top-CAND_FACTOR·batch candidates → the greedy-disjoint scan as
     a recursive CTE carrying the accepted-symbol LIST (the pack_bestfit
@@ -1390,43 +1397,21 @@ def _bpe_batched_cte_chain(
     DuckDB's inliner otherwise duplicates the subtree per round —
     measured 142.7 s -> ~13 s on the 10x-fixture oracle check (the
     established chained-CTE trap, SCALING.md round-12 note)."""
-    seq0_sql = seq0_sql or (
-        "' ' || array_to_string("
-        "list_transform(generate_series(1, length(word)), "
-        "i -> substring(word, i, 1)), '  ') || ' '"
-    )
     cand = BPE_BATCH_CAND_FACTOR * batch
-    parts = [
-        f"""
-    WITH RECURSIVE {ns}w0 AS MATERIALIZED (
-        SELECT word, count(*) AS cnt,
-               {seq0_sql} AS seq
-        FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        WHERE word <> '' GROUP BY word
-    )"""
-    ]
-    for r in range(1, rounds + 1):
-        blocked = (
-            f"list_contains(g.taken, c.a) OR list_contains(g.taken, c.b)"
-        )
-        parts.append(f""",
-    {ns}p{r} AS (
-        SELECT s[i] AS a, s[i + 1] AS b, sum(cnt) AS pc
-        FROM (SELECT cnt, string_split(trim(seq), '  ') AS s
-              FROM {ns}w{r - 1}),
-             unnest(generate_series(1, len(s) - 1)) AS t(i)
-        GROUP BY 1, 2
-    ),
-    {ns}c{r} AS (
+    blocked = "list_contains(g.taken, c.a) OR list_contains(g.taken, c.b)"
+
+    def step(r):
+        return f"""
+    c{r} AS (
         SELECT a, b, CAST(pc AS BIGINT) AS pc,
                CAST(row_number() OVER (ORDER BY pc DESC, a, b)
                     AS BIGINT) AS rk
-        FROM {ns}p{r}
+        FROM p{r}
         QUALIFY row_number() OVER (ORDER BY pc DESC, a, b) <= {cand}
     ),
-    {ns}g{r}(rk, a, b, pc, acc, n_acc, taken) AS (
+    g{r}(rk, a, b, pc, acc, n_acc, taken) AS (
         SELECT rk, a, b, pc, TRUE, CAST(1 AS BIGINT), [a, b, a || b]
-        FROM {ns}c{r} WHERE rk = 1
+        FROM c{r} WHERE rk = 1
         UNION ALL
         SELECT c.rk, c.a, c.b, c.pc,
                NOT ({blocked}),
@@ -1435,64 +1420,41 @@ def _bpe_batched_cte_chain(
                     ELSE list_append(list_append(
                              list_append(g.taken, c.a), c.b), c.a || c.b)
                END
-        FROM {ns}g{r} g JOIN {ns}c{r} c ON c.rk = g.rk + 1
+        FROM g{r} g JOIN c{r} c ON c.rk = g.rk + 1
         WHERE g.n_acc < {batch}
     ),
-    {ns}m{r} AS (
+    m{r} AS (
         SELECT CAST({r} AS INTEGER) AS merge_round,
                CAST(rk AS INTEGER) AS cand_rank,
                a AS pair_a, b AS pair_b, a || b AS merged,
                pc AS pair_count
-        FROM {ns}g{r} WHERE acc
+        FROM g{r} WHERE acc
     ),
-    {ns}mm{r} AS (
+    mm{r} AS (
         SELECT COALESCE(list(' ' || pair_a || '  ' || pair_b || ' '
                              || chr(1) || ' ' || merged || ' '
                              ORDER BY cand_rank), []) AS prs
-        FROM {ns}m{r}
+        FROM m{r}
     ),
-    {ns}w{r} AS MATERIALIZED (
+    w{r} AS MATERIALIZED (
         SELECT word, cnt,
                list_reduce(list_prepend(seq, prs),
                    (s2, x) -> replace(s2, string_split(x, chr(1))[1],
                                           string_split(x, chr(1))[2]))
                    AS seq
-        FROM {ns}w{r - 1}, {ns}mm{r}
+        FROM w{r - 1}, mm{r}
     )"""
-        )
-    return "".join(parts)
 
-
-_VOCAB_BPE_BATCHED_ORACLE = (
-    _bpe_batched_cte_chain(BPE_BATCH_ROUNDS, BPE_BATCH)
-    + "\n    SELECT * FROM ("
-    + "\n    UNION ALL ".join(
-        f"SELECT * FROM m{r}" for r in range(1, BPE_BATCH_ROUNDS + 1)
+    return _merge_cte_chain(
+        rounds, _BPE_SEQ0_SQL, step, mat=" MATERIALIZED", recursive=True
     )
-    + ") ORDER BY merge_round, cand_rank"
+
+
+@register(
+    "tokenize_bpe_batched",
+    oracle=_bpe_batched_cte_chain(BPE_BATCH_ROUNDS, BPE_BATCH)
+    + _doc_rollup_sql(_n_bpe_sql(f"w{BPE_BATCH_ROUNDS}"), _BPE_DOC_AGGS),
 )
-
-
-_TOKENIZE_BPE_BATCHED_ORACLE = (
-    _bpe_batched_cte_chain(BPE_BATCH_ROUNDS, BPE_BATCH)
-    + f""",
-    wt AS (
-        SELECT word, len(string_split(trim(seq), '  ')) AS n_bpe,
-               length(word) AS n_chars
-        FROM w{BPE_BATCH_ROUNDS}
-    )
-    SELECT doc_id, count(*) AS n_words,
-           CAST(sum(n_chars) AS BIGINT) AS n_char_tokens,
-           CAST(sum(n_bpe) AS BIGINT) AS n_bpe_tokens
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          FROM documents) dw
-    JOIN wt USING (word)
-    GROUP BY doc_id
-"""
-)
-
-
-@register("tokenize_bpe_batched", oracle=_TOKENIZE_BPE_BATCHED_ORACLE)
 def tokenize_bpe_batched(spark, sf_dir):
     """Encode with the BATCHED trainer's merges — the encoder that makes
     vocab_bpe_batched a usable tokenizer, not just a merge table: merges
@@ -1502,33 +1464,17 @@ def tokenize_bpe_batched(spark, sf_dir):
     DISTINCT words, broadcast-joined back to the corpus (the tokenize_bpe
     plan shape verbatim). Per document: word count, character token
     count, post-merge BPE token count."""
-    merges = _bpe_train_batched(
-        spark, sf_dir, BPE_BATCH_ROUNDS, BPE_BATCH
-    )
-    seq = _bpe_seq0(F.col("word"))
-    for _r, _rk, a, b, m, _c in merges:
-        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    wtok = _bpe_words(spark, sf_dir).select(
-        "word",
-        F.size(F.split(F.trim(seq), "  ")).alias("n_bpe"),
-        F.length("word").alias("n_chars"),
-    )
-    d = load_table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docs.join(F.broadcast(wtok), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_chars").cast("long").alias("n_char_tokens"),
-            F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
-        )
+    merges = _bpe_train_batched(spark, sf_dir, BPE_BATCH_ROUNDS, BPE_BATCH)
+    return _bpe_doc_tokens(
+        spark, sf_dir, [(r, a, b, m) for r, _rk, a, b, m, _c in merges]
     )
 
 
-@register("vocab_bpe_batched", oracle=_VOCAB_BPE_BATCHED_ORACLE)
+@register(
+    "vocab_bpe_batched",
+    oracle=_bpe_batched_cte_chain(BPE_BATCH_ROUNDS, BPE_BATCH)
+    + _merge_table_sql(BPE_BATCH_ROUNDS, "*", "merge_round, cand_rank"),
+)
 def vocab_bpe_batched(spark, sf_dir):
     """Batched-merge BPE trainer — the production-vocabulary shape of
     vocab_bpe (r12 VERDICT #3, retiring the r11 watch item): each round
@@ -1537,7 +1483,7 @@ def vocab_bpe_batched(spark, sf_dir):
     skipped if either symbol was already consumed OR produced by a merge
     this round — the output block closes the string-collision edge where
     a merged a+b is spelled like a pre-existing symbol), so a 32k-
-    merge vocabulary needs ~32k/B driver syncs instead of 32k. Disjoint
+    merge vocabulary needs ~32k/B rounds instead of 32k. Disjoint
     symbol sets per round make the batch's replaces commute — each
     accepted pair's recorded count is its exact corpus count when the
     round started. The quality tradeoff vs one-at-a-time Sennrich BPE is
@@ -1548,16 +1494,12 @@ def vocab_bpe_batched(spark, sf_dir):
     candidate rank each merge was accepted at — so the selection is
     auditable.
 
-    Scale shape: identical to vocab_bpe (ONE corpus scan, vocabulary-
-    sized rounds); the collect per round is ≤ 8·B rows instead of 1. The
-    oracle replays the greedy-disjoint scan as a per-round recursive CTE
-    over the ranked candidates, carrying the accepted-symbol list — the
-    pack_bestfit list-state discipline."""
-    merges = _bpe_train_batched(
-        spark, sf_dir, BPE_BATCH_ROUNDS, BPE_BATCH
-    )
+    Scale shape: identical to vocab_bpe (ONE corpus scan, one word-table
+    collect, driver-side rounds). The oracle replays the greedy-disjoint
+    scan as a per-round recursive CTE over the ranked candidates, carrying
+    the accepted-symbol list — the pack_bestfit list-state discipline."""
     return spark.createDataFrame(
-        merges,
+        _bpe_train_batched(spark, sf_dir, BPE_BATCH_ROUNDS, BPE_BATCH),
         "merge_round int, cand_rank int, pair_a string, pair_b string, "
         "merged string, pair_count long",
     )
@@ -1634,70 +1576,37 @@ def _uni_segment_frame(words, cost: dict):
     return words.mapInPandas(seg, "word string, cnt long, path string")
 
 
+def _top(counts, k: int) -> dict:
+    """The k largest counts, ties by key — ORDER BY count DESC, key LIMIT k."""
+    return dict(heapq.nsmallest(k, counts.items(), key=lambda kc: (-kc[1], kc[0])))
+
+
 def _uni_train(spark, sf_dir):
-    """Run the seed + UNI_ROUNDS hard-EM rounds; returns (usage, cost)
-    dicts for the final vocabulary. Scale shape = the _bpe_train
-    contract: ONE corpus scan builds the word-frequency table
-    (localCheckpoint; vocabulary-sized from then on); each round is one
-    distributed segmentation pass + a vocab-sized usage aggregate whose
-    collect (<= UNI_SEED + alphabet rows) is the per-round driver sync —
-    the same bounded decision collect as BPE's 1-row merge pick."""
-    words = share(_bpe_words(spark, sf_dir), eager=True)
-    try:
-        pos = words.select(
-            "word", "cnt",
-            F.explode(F.sequence(F.lit(1), F.length("word"))).alias("i"),
-        )
-        sub = pos.select(
-            "cnt",
-            F.explode(
-                F.sequence(
-                    F.lit(1),
-                    F.least(
-                        F.lit(UNI_MAXLEN), F.length("word") - F.col("i") + 1
-                    ),
-                )
-            ).alias("L"),
-            "word",
-            "i",
-        ).select(
-            F.expr("substring(word, i, L)").alias("piece"), "cnt"
-        )
-        counts = sub.groupBy("piece").agg(
-            F.sum("cnt").cast("long").alias("c")
-        )
-        cand = counts.orderBy(F.col("c").desc(), "piece").limit(
-            UNI_SEED
-        ).collect()
-        char_rows = counts.filter(F.length("piece") == 1).collect()
-        chars = {r["piece"]: int(r["c"]) for r in char_rows}
-        vocab = {r["piece"]: int(r["c"]) for r in cand}
-        for p, c in chars.items():
-            vocab.setdefault(p, c)
-        cost = _uni_costs(vocab)
-        usage_final: dict = vocab
-        for _r in range(1, UNI_ROUNDS + 1):
-            seg = _uni_segment_frame(words, cost)
-            urows = (
-                seg.select(
-                    "cnt", F.explode(F.split("path", " ")).alias("piece")
-                )
-                .groupBy("piece")
-                .agg(F.sum("cnt").cast("long").alias("u"))
-                .collect()
-            )
-            usage = {r["piece"]: int(r["u"]) for r in urows}
-            keep = sorted(usage.items(), key=lambda kv: (-kv[1], kv[0]))[
-                :UNI_KEEP
-            ]
-            v = dict(keep)
-            for p in chars:
-                v.setdefault(p, usage.get(p, 0))
-            cost = _uni_costs(v)
-            usage_final = v
-        return usage_final, cost
-    finally:
-        release(words)
+    """Run the seed + UNI_ROUNDS hard-EM rounds in Python over one
+    collected word table; returns (usage, cost) dicts for the final
+    vocabulary. Words, pieces and lengths are code-point strings, as
+    Spark's and DuckDB's length/substring are."""
+    table = _word_table(spark, sf_dir, _bpe_seq0)
+    counts = Counter()
+    for word, cnt, _seq in table:
+        for i in range(len(word)):
+            for length in range(1, min(UNI_MAXLEN, len(word) - i) + 1):
+                counts[word[i : i + length]] += cnt
+    chars = {p: c for p, c in counts.items() if len(p) == 1}
+    usage = _top(counts, UNI_SEED)
+    for p, c in chars.items():
+        usage.setdefault(p, c)
+    cost = _uni_costs(usage)
+    for _r in range(UNI_ROUNDS):
+        used = Counter()
+        for word, cnt, _seq in table:
+            for p in _uni_viterbi(word, cost)[2].split(" "):
+                used[p] += cnt
+        usage = _top(used, UNI_KEEP)
+        for p in chars:
+            usage.setdefault(p, used.get(p, 0))
+        cost = _uni_costs(usage)
+    return usage, cost
 
 
 def _uni_round_cte(r: int, ns: str = "") -> str:
@@ -1799,16 +1708,14 @@ def vocab_unigram_lm(spark, sf_dir):
     Exactness: see the block comment above the constants — integer
     usage, micronat costs via the bit-verified libm-on-integers idiom,
     Viterbi ties broken on the space-joined path (DP order ==
-    enumeration order, so Spark's per-position DP and the oracle's
+    enumeration order, so the driver's per-position DP and the oracle's
     full-enumeration recursive CTE select identical segmentations).
 
-    Scale shape: one corpus scan -> word-frequency table; each round is
-    a distributed segmentation pass over DISTINCT words + a vocab-sized
-    usage aggregate; driver sync per round is the <= (UNI_SEED+alphabet)
-    row usage collect (the _bpe_train bounded-decision contract).
-    Production SentencePiece likewise trains on a word-frequency table
-    (or a capped sample); serving is the same broadcast-vocab join as
-    tokenize_vocab."""
+    Scale shape: one corpus scan -> word-frequency table, collected once;
+    the seed substring counts and every segmentation round run in Python
+    on the driver over the DISTINCT words. Production SentencePiece
+    likewise trains on a word-frequency table (or a capped sample);
+    serving is the same broadcast-vocab join as tokenize_vocab."""
     usage, cost = _uni_train(spark, sf_dir)
     return spark.createDataFrame(
         [(p, usage[p], cost[p]) for p in usage],
@@ -1819,20 +1726,13 @@ def vocab_unigram_lm(spark, sf_dir):
 @register(
     "tokenize_unigram_lm",
     oracle=_uni_cte_chain(UNI_ROUNDS + 1)
-    + f""",
-    wt AS (
-        SELECT word, len(string_split(path, ' ')) AS n_pieces,
-               length(word) AS n_chars
-        FROM best{UNI_ROUNDS + 1}
-    )
-    SELECT doc_id, count(*) AS n_words,
+    + _doc_rollup_sql(
+        "SELECT word, len(string_split(path, ' ')) AS n_pieces, "
+        f"length(word) AS n_chars FROM best{UNI_ROUNDS + 1}",
+        """count(*) AS n_words,
            CAST(sum(n_chars) AS BIGINT) AS n_char_tokens,
-           CAST(sum(n_pieces) AS BIGINT) AS n_piece_tokens
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          FROM documents) dw
-    JOIN wt USING (word)
-    GROUP BY doc_id
-""",
+           CAST(sum(n_pieces) AS BIGINT) AS n_piece_tokens""",
+    ),
 )
 def tokenize_unigram_lm(spark, sf_dir):
     """Encode with the trained unigram-LM: Viterbi-segment every DISTINCT
@@ -1847,43 +1747,40 @@ def tokenize_unigram_lm(spark, sf_dir):
     reuse the round template; only its best-segmentation CTE feeds the
     output, so the key's vocabulary IS vocab_unigram_lm's."""
     _usage, cost = _uni_train(spark, sf_dir)
-    words = _bpe_words(spark, sf_dir)
-    wt = _uni_segment_frame(words, cost).select(
+    wt = _uni_segment_frame(_bpe_words(spark, sf_dir), cost).select(
         "word",
         F.size(F.split("path", " ")).alias("n_pieces"),
         F.length("word").alias("n_chars"),
     )
-    d = load_table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docs.join(F.broadcast(wt), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_chars").cast("long").alias("n_char_tokens"),
-            F.sum("n_pieces").cast("long").alias("n_piece_tokens"),
-        )
+    return _doc_rollup(
+        spark,
+        sf_dir,
+        wt,
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_chars").cast("long").alias("n_char_tokens"),
+        F.sum("n_pieces").cast("long").alias("n_piece_tokens"),
     )
 
 
 # ---------------------------------------------------------------------------
 # WordPiece — the third production tokenizer family (BERT lineage:
 # Schuster & Nakajima 2012; Wu et al. 2016). Same merge MACHINERY as BPE
-# (space-delimited symbol layout, literal-replace rounds, driver-decided
-# top-1), different SELECTION: the merged pair maximizes the likelihood
-# score count(ab) / (count(a) * count(b)) instead of raw count(ab) — the
-# pair whose fusion most increases corpus likelihood under a unigram
-# symbol model. Scores are integer micro-units: pc * 10^12 // (ca * cb)
-# (BIGINT floor division in both engines; pc < 9.2e6 keeps the product
-# in int64 — true by orders of magnitude at every fixture SF; a 100 TB
-# run would drop the scale to 10^6 or widen to DECIMAL(38,0)). Ties
-# after quantization break lexicographically on (a, b) — deterministic
-# in any engine. Measured on this fixture the two families genuinely
-# diverge: WordPiece's first pick is (q, ##u) — 871 of 871 q's precede
-# u, the canonical exclusivity pair — while BPE's is the raw-frequency
-# (e, r); no merge round picks the same pair (gold-test-pinned).
+# (space-delimited symbol layout, _merge_loop, literal-replace encoding),
+# different SELECTION: the merged pair maximizes the likelihood score
+# count(ab) / (count(a) * count(b)) instead of raw count(ab) — the pair
+# whose fusion most increases corpus likelihood under a unigram symbol
+# model. Scores are integer micro-units: pc * 10^12 // (ca * cb) (BIGINT
+# floor division in both engines; pc < 9.2e6 keeps the product in int64 —
+# true by orders of magnitude at every fixture SF). Past int64 Spark's
+# ANSI arithmetic and DuckDB both raise, so the driver loop raises
+# WordPieceScoreOverflow rather than return a score neither engine can
+# produce; a 100 TB run would drop the scale to 10^6 or widen to
+# DECIMAL(38,0). Ties after quantization break lexicographically on
+# (a, b) — deterministic in any engine. Measured on this fixture the two
+# families genuinely diverge: WordPiece's first pick is (q, ##u) — 871 of
+# 871 q's precede u, the canonical exclusivity pair — while BPE's is the
+# raw-frequency (e, r); no merge round picks the same pair
+# (gold-test-pinned).
 
 WP_ROUNDS = BPE_ROUNDS  # same bounded-unroll budget as the BPE oracles
 WP_SCORE_SCALE = 10**12
@@ -1912,79 +1809,42 @@ def _wp_seq0(word_col):
     )
 
 
-def _wp_symbol_counts(words, seq):
-    """Corpus-weighted occurrence count of every CURRENT symbol — the
-    score's denominator terms. Same explode discipline as
-    _bpe_pair_counts; the frame is vocabulary-sized."""
-    return (
-        words.select("cnt", F.explode(F.split(F.trim(seq), "  ")).alias("sym"))
-        .groupBy("sym")
-        .agg(F.sum("cnt").alias("sc"))
-    )
-
-
 def _wp_merged(a: str, b: str) -> str:
     return a + (b[2:] if b.startswith("##") else b)
 
 
+def _wp_score(pairs, seqs):
+    """WordPiece selection for _merge_loop: each pair's stats are
+    (pc, ca, cb, score_u), ca/cb the corpus-weighted counts of its two
+    symbols."""
+    sc = Counter()
+    for cnt, syms in seqs:
+        for x in syms:
+            sc[x] += cnt
+    stats = {}
+    for (a, b), pc in pairs.items():
+        num, den = pc * WP_SCORE_SCALE, sc[a] * sc[b]
+        if max(num, den) > _INT64_MAX:
+            raise WordPieceScoreOverflow(
+                f"WordPiece score of ({a!r}, {b!r}): pc * WP_SCORE_SCALE = "
+                f"{num} or ca * cb = {den} exceeds int64"
+            )
+        stats[a, b] = (pc, sc[a], sc[b], num // den)
+    return stats
+
+
+def _wp_fit(table, rounds: int = WP_ROUNDS):
+    """WordPiece merges over a _wp_seq0 word table: _merge_loop with the
+    likelihood score. Returns [(round, a, b, merged, pc, ca, cb,
+    score_u), ...] as plain literals."""
+    loop = _merge_loop(table, rounds, score=_wp_score, merged=_wp_merged)
+    return [(r, a, b, m, *stats) for r, _rk, a, b, m, *stats in loop]
+
+
 def _wp_train(spark, sf_dir, rounds: int = WP_ROUNDS):
-    """Learn ``rounds`` WordPiece merges deterministically — the _bpe_train
-    loop with likelihood selection. Per round: pair counts + symbol counts
-    (both vocabulary-sized aggregates over the checkpointed word table),
-    score join, 1-row argmax collect (a training decision is a driver
-    decision — the vocab_bpe precedent), literal replace. Returns
-    [(round, a, b, merged, pc, ca, cb, score_u), ...] as plain literals."""
-    words = share(
-        _bpe_words(spark, sf_dir).withColumn("seq", _wp_seq0(F.col("word"))),
-        eager=True,
-    )
-    merges = []
-    seq = F.col("seq")
-    try:
-        for r in range(1, rounds + 1):
-            pairs = _bpe_pair_counts(words, seq)
-            syms = _wp_symbol_counts(words, seq)
-            sa = syms.select(F.col("sym").alias("a"), F.col("sc").alias("ca"))
-            sb = syms.select(F.col("sym").alias("b"), F.col("sc").alias("cb"))
-            top = (
-                pairs.join(sa, "a")
-                .join(sb, "b")
-                .select(
-                    "a",
-                    "b",
-                    "pc",
-                    "ca",
-                    "cb",
-                    F.expr(f"pc * {WP_SCORE_SCALE} DIV (ca * cb)").alias(
-                        "score_u"
-                    ),
-                )
-                .orderBy(F.col("score_u").desc(), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not top:
-                break
-            t = top[0]
-            a, b = t["a"], t["b"]
-            merges.append(
-                (
-                    r,
-                    a,
-                    b,
-                    _wp_merged(a, b),
-                    int(t["pc"]),
-                    int(t["ca"]),
-                    int(t["cb"]),
-                    int(t["score_u"]),
-                )
-            )
-            seq = F.replace(
-                seq, F.lit(f" {a}  {b} "), F.lit(f" {_wp_merged(a, b)} ")
-            )
-    finally:
-        release(words)
-    return merges
+    """Learn ``rounds`` WordPiece merges deterministically over one
+    collected word table (see _wp_fit)."""
+    return _wp_fit(_word_table(spark, sf_dir, _wp_seq0), rounds)
 
 
 _WP_SEQ0_SQL = (
@@ -2000,33 +1860,18 @@ def _wp_cte_chain(rounds: int, ns: str = "") -> str:
     argmax of the BIGINT-quantized score, replace. w/m CTEs are
     MATERIALIZED: each round reads w{r-1} THREE times (pairs, symbols,
     replace), so un-materialized inlining re-expands the chain 3^rounds
-    ways (the tokenize_bakeoff lesson, worse by the extra branch).
-    ``ns`` prefixes every CTE name so the chain composes into the
-    bakeoff query, exactly like _bpe_cte_chain's namespaces."""
-    parts = [
-        f"""
-    WITH {ns}w0 AS MATERIALIZED (
-        SELECT word, count(*) AS cnt, {_WP_SEQ0_SQL} AS seq
-        FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-        WHERE word <> '' GROUP BY word
-    )"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(f""",
-    {ns}p{r} AS (
-        SELECT s[i] AS a, s[i + 1] AS b, sum(cnt) AS pc
-        FROM (SELECT cnt, string_split(trim(seq), '  ') AS s
-              FROM {ns}w{r - 1}),
-             unnest(generate_series(1, len(s) - 1)) AS t(i)
-        GROUP BY 1, 2
-    ),
+    ways (the tokenize_bakeoff lesson, worse by the extra branch)."""
+    mat = " MATERIALIZED"
+
+    def step(r):
+        return f"""
     {ns}y{r} AS (
         SELECT sym, sum(cnt) AS sc
         FROM (SELECT cnt, unnest(string_split(trim(seq), '  ')) AS sym
               FROM {ns}w{r - 1})
         GROUP BY 1
     ),
-    {ns}m{r} AS MATERIALIZED (
+    {ns}m{r} AS{mat} (
         SELECT CAST({r} AS INTEGER) AS merge_round, a, b,
                a || CASE WHEN b LIKE '##%' THEN substring(b, 3) ELSE b END
                    AS merged,
@@ -2039,47 +1884,18 @@ def _wp_cte_chain(rounds: int, ns: str = "") -> str:
         FROM {ns}p{r} pp JOIN {ns}y{r} sa ON pp.a = sa.sym
                   JOIN {ns}y{r} sb ON pp.b = sb.sym
         ORDER BY score_u DESC, a, b LIMIT 1
+    ),{_replace_cte(r, ns, mat)}"""
+
+    return _merge_cte_chain(rounds, _WP_SEQ0_SQL, step, ns, mat)
+
+
+@register(
+    "vocab_wordpiece",
+    oracle=_wp_cte_chain(WP_ROUNDS)
+    + _merge_table_sql(
+        WP_ROUNDS, _BPE_MERGE_COLS + ", count_a, count_b, score_u"
     ),
-    {ns}w{r} AS MATERIALIZED (
-        SELECT word, cnt,
-               replace(seq, ' ' || a || '  ' || b || ' ',
-                       ' ' || merged || ' ') AS seq
-        FROM {ns}w{r - 1}, {ns}m{r}
-    )""")
-    return "".join(parts)
-
-
-_VOCAB_WP_ORACLE = (
-    _wp_cte_chain(WP_ROUNDS)
-    + "\n    SELECT * FROM ("
-    + "\n    UNION ALL ".join(
-        f"SELECT merge_round, a AS pair_a, b AS pair_b, merged, pair_count, "
-        f"count_a, count_b, score_u FROM m{r}"
-        for r in range(1, WP_ROUNDS + 1)
-    )
-    + ") ORDER BY merge_round"
 )
-
-_TOKENIZE_WP_ORACLE = (
-    _wp_cte_chain(WP_ROUNDS)
-    + f""",
-    wt AS (
-        SELECT word, len(string_split(trim(seq), '  ')) AS n_wp,
-               length(word) AS n_chars
-        FROM w{WP_ROUNDS}
-    )
-    SELECT doc_id, count(*) AS n_words,
-           CAST(sum(n_chars) AS BIGINT) AS n_char_tokens,
-           CAST(sum(n_wp) AS BIGINT) AS n_wp_tokens
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          FROM documents) dw
-    JOIN wt USING (word)
-    GROUP BY doc_id
-"""
-)
-
-
-@register("vocab_wordpiece", oracle=_VOCAB_WP_ORACLE)
 def vocab_wordpiece(spark, sf_dir):
     """WordPiece trainer — the BERT-family tokenizer (Schuster & Nakajima
     2012; Wu et al. 2016), completing the production trio next to BPE
@@ -2093,21 +1909,28 @@ def vocab_wordpiece(spark, sf_dir):
     count_b, score_u).
 
     Scale shape: identical to vocab_bpe — ONE corpus scan builds the
-    word-frequency table; each round is two vocabulary-sized aggregates
-    (pairs + symbols), a broadcast-sized score join, a 1-row argmax
-    collect, and a literal replace. At 100 TB rounds cost O(vocab); the
-    batched-acceptance upgrade (vocab_bpe_batched) applies unchanged if
-    ever needed since accepted pairs are symbol-disjoint under either
-    scoring."""
-    merges = _wp_train(spark, sf_dir)
+    word-frequency table, collected once; each driver-side round counts
+    pairs and symbols over it. The batched acceptance of vocab_bpe_batched
+    applies unchanged if ever needed (_merge_loop's batch), since accepted
+    pairs are symbol-disjoint under either scoring."""
     return spark.createDataFrame(
-        merges,
+        _wp_train(spark, sf_dir),
         "merge_round int, pair_a string, pair_b string, merged string, "
         "pair_count long, count_a long, count_b long, score_u long",
     )
 
 
-@register("tokenize_wordpiece", oracle=_TOKENIZE_WP_ORACLE)
+@register(
+    "tokenize_wordpiece",
+    oracle=_wp_cte_chain(WP_ROUNDS)
+    + _doc_rollup_sql(
+        "SELECT word, len(string_split(trim(seq), '  ')) AS n_wp, "
+        f"length(word) AS n_chars FROM w{WP_ROUNDS}",
+        """count(*) AS n_words,
+           CAST(sum(n_chars) AS BIGINT) AS n_char_tokens,
+           CAST(sum(n_wp) AS BIGINT) AS n_wp_tokens""",
+    ),
+)
 def tokenize_wordpiece(spark, sf_dir):
     """Segment the corpus with the learned WordPiece merges applied in
     learned order — the TRAINING-STATE segmentation (what the trainer's
@@ -2123,27 +1946,17 @@ def tokenize_wordpiece(spark, sf_dir):
     chain over DISTINCT words + one broadcast join against the exploded
     corpus (the tokenize_vocab pattern) — no corpus shuffle beyond the
     per-doc rollup."""
-    merges = _wp_train(spark, sf_dir)
-    seq = _wp_seq0(F.col("word"))
-    for _r, a, b, m, *_rest in merges:
-        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+    seq = _replay(_wp_seq0(F.col("word")), _wp_train(spark, sf_dir))
     wtok = _bpe_words(spark, sf_dir).select(
-        "word",
-        F.size(F.split(F.trim(seq), "  ")).alias("n_wp"),
-        F.length("word").alias("n_chars"),
+        "word", _n_symbols(seq).alias("n_wp"), F.length("word").alias("n_chars")
     )
-    d = load_table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docs.join(F.broadcast(wtok), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_chars").cast("long").alias("n_char_tokens"),
-            F.sum("n_wp").cast("long").alias("n_wp_tokens"),
-        )
+    return _doc_rollup(
+        spark,
+        sf_dir,
+        wtok,
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_chars").cast("long").alias("n_char_tokens"),
+        F.sum("n_wp").cast("long").alias("n_wp_tokens"),
     )
 
 
@@ -2235,24 +2048,20 @@ _TOKENIZE_WP_INFER_ORACLE = (
     )"""
         for s in range(1, WP_INFER_MAX_STEPS + 1)
     )
-    + f""",
-    wt AS (
+    + _doc_rollup_sql(
+        f"""
         SELECT word, cnt,
                len(string_split(trim(seq), '  ')) AS n_replay,
                len(string_split(trim(iseq), '  ')) AS n_infer,
                iseq <> seq AS diverged
         FROM t{WP_INFER_MAX_STEPS}
-    )
-    SELECT doc_id, count(*) AS n_words,
+    """,
+        """count(*) AS n_words,
            CAST(sum(n_replay) AS BIGINT) AS n_wp_tokens_replay,
            CAST(sum(n_infer) AS BIGINT) AS n_wp_tokens_infer,
            CAST(sum(CASE WHEN diverged THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_diverged_words
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-          FROM documents) dw
-    JOIN wt USING (word)
-    GROUP BY doc_id
-"""
+               AS n_diverged_words""",
+    )
 )
 
 
@@ -2272,55 +2081,38 @@ def tokenize_wordpiece_infer(spark, sf_dir):
     is pinned by a property test on a synthetic corpus built to diverge
     (the text_heaps_curve posture).
 
-    Scale shape: training as in vocab_wordpiece; inference is a
-    doc-local fold over DISTINCT words against two broadcast-literal
-    piece arrays (O(len·|vocab|) JVM Column arithmetic, no Python, no
-    shuffle) + the same broadcast join / per-doc rollup as every
-    tokenize twin. The oracle unrolls the greedy loop
-    WP_INFER_MAX_STEPS=16 bounded steps (ml_kmeans_1d pattern)."""
-    merges = _wp_train(spark, sf_dir)
-    words = _bpe_words(spark, sf_dir)
-    alpha = [
-        r["p"]
-        for r in words.select(
-            F.explode(
-                F.split(F.trim(_wp_seq0(F.col("word"))), "  ")
-            ).alias("p")
-        )
-        .distinct()
-        .collect()
-    ]
-    vocab = set(alpha) | {m[3] for m in merges}
+    Scale shape: training as in vocab_wordpiece, and the alphabet is read
+    off the same collected word table; inference is a doc-local fold over
+    DISTINCT words against two broadcast-literal piece arrays
+    (O(len·|vocab|) JVM Column arithmetic, no Python, no shuffle) + the
+    same broadcast join / per-doc rollup as every tokenize twin. The
+    oracle unrolls the greedy loop WP_INFER_MAX_STEPS=16 bounded steps
+    (ml_kmeans_1d pattern)."""
+    table = _word_table(spark, sf_dir, _wp_seq0)
+    merges = _wp_fit(table)
+    vocab = {p for _w, _c, seq in table for p in _symbols(seq)}
+    vocab |= {m[3] for m in merges}
     unmarked = [p for p in vocab if not p.startswith("##")]
     marked_bodies = [p[2:] for p in vocab if p.startswith("##")]
-    replay = _wp_seq0(F.col("word"))
-    for _r, a, b, m, *_rest in merges:
-        replay = F.replace(replay, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    wtok = words.select(
+    replay = _replay(_wp_seq0(F.col("word")), merges)
+    wtok = _bpe_words(spark, sf_dir).select(
         "word",
         replay.alias("rseq"),
         _wp_infer_seq(F.col("word"), unmarked, marked_bodies).alias("iseq"),
     ).select(
         "word",
-        F.size(F.split(F.trim("rseq"), "  ")).alias("n_replay"),
-        F.size(F.split(F.trim("iseq"), "  ")).alias("n_infer"),
+        _n_symbols(F.col("rseq")).alias("n_replay"),
+        _n_symbols(F.col("iseq")).alias("n_infer"),
         (F.col("iseq") != F.col("rseq")).alias("diverged"),
     )
-    d = load_table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docs.join(F.broadcast(wtok), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_replay").cast("long").alias("n_wp_tokens_replay"),
-            F.sum("n_infer").cast("long").alias("n_wp_tokens_infer"),
-            F.sum(F.col("diverged").cast("long"))
-            .cast("long")
-            .alias("n_diverged_words"),
-        )
+    return _doc_rollup(
+        spark,
+        sf_dir,
+        wtok,
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_replay").cast("long").alias("n_wp_tokens_replay"),
+        F.sum("n_infer").cast("long").alias("n_wp_tokens_infer"),
+        F.sum(F.col("diverged").cast("long")).cast("long").alias("n_diverged_words"),
     )
 
 
@@ -2392,8 +2184,7 @@ def tokenize_bakeoff(spark, sf_dir):
     tokenizer family (what sim_ann_recall_curve is for ANN): train all
     FOUR learned tokenizers on the same corpus (char BPE, byte BPE,
     unigram LM, WordPiece — their exact registered trainers, shared
-    code; wordpiece joined `_CHANGED_IN_ROUND=14` when the trainer
-    landed) and report corpus-level fertility side by side: total
+    code) and report corpus-level fertility side by side: total
     tokens, tokens-per-word and tokens-per-char in round-half-up
     micro-units, with 'whitespace' (words) and 'char' (characters) as
     the bracketing baselines. per_char_u of the 'char' row is exactly
@@ -2401,24 +2192,18 @@ def tokenize_bakeoff(spark, sf_dir):
     strictly between the brackets. This is the table a pipeline owner
     reads before picking the tokenizer for a 100 TB run.
 
-    Scale: the four trainers share the one-scan word-frequency
-    contract; the rollup is a vocabulary-sized 4-way join. Oracle: the
-    four oracle chains composed into one query under CTE namespaces
-    (default/y/u/p), totals from the joined final segmentations."""
-    merges_c = _bpe_train(spark, sf_dir)
-    merges_b = _bpe_train(spark, sf_dir, seq0=_bpe_seq0_bytes)
+    Scale: each of the four trainers collects the word table once and
+    fits on the driver; the rollup is a vocabulary-sized 4-way join.
+    Oracle: the four oracle chains composed into one query under CTE
+    namespaces (default/y/u/p), totals from the joined final
+    segmentations."""
+    seq_c = _replay(_bpe_seq0(F.col("word")), _bpe_train(spark, sf_dir))
+    seq_b = _replay(
+        _bpe_seq0_bytes(F.col("word")),
+        _bpe_train(spark, sf_dir, seq0=_bpe_seq0_bytes),
+    )
     _usage, cost = _uni_train(spark, sf_dir)
-    merges_w = _wp_train(spark, sf_dir)
-
-    seq_c = _bpe_seq0(F.col("word"))
-    for _r, a, b, m, _c in merges_c:
-        seq_c = F.replace(seq_c, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    seq_w = _wp_seq0(F.col("word"))
-    for _r, a, b, m, *_rest in merges_w:
-        seq_w = F.replace(seq_w, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    seq_b = _bpe_seq0_bytes(F.col("word"))
-    for _r, a, b, m, _c in merges_b:
-        seq_b = F.replace(seq_b, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+    seq_w = _replay(_wp_seq0(F.col("word")), _wp_train(spark, sf_dir))
 
     words = _bpe_words(spark, sf_dir)
     per = _uni_segment_frame(words, cost).select(
@@ -2429,9 +2214,9 @@ def tokenize_bakeoff(spark, sf_dir):
         words.select(
             "word",
             F.length("word").alias("nch_w"),
-            F.size(F.split(F.trim(seq_c), "  ")).alias("t_bpe_w"),
-            F.size(F.split(F.trim(seq_b), "  ")).alias("t_bytes_w"),
-            F.size(F.split(F.trim(seq_w), "  ")).alias("t_wp_w"),
+            _n_symbols(seq_c).alias("t_bpe_w"),
+            _n_symbols(seq_b).alias("t_bytes_w"),
+            _n_symbols(seq_w).alias("t_wp_w"),
         ),
         "word",
     )
@@ -2476,26 +2261,17 @@ def tokenize_bakeoff(spark, sf_dir):
 
 @register(
     "bpe_fertility",
-    oracle=_bpe_cte_chain(BPE_ROUNDS) + f""",
-    wt AS (
-        SELECT word, len(string_split(trim(seq), '  ')) AS n_bpe,
-               length(word) AS n_chars
-        FROM w{BPE_ROUNDS}
-    ),
-    dw AS (
-        SELECT doc_id, source, unnest(string_split(text, ' ')) AS word
-        FROM documents
-    )
-    SELECT source,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+    oracle=_bpe_cte_chain(BPE_ROUNDS)
+    + _doc_rollup_sql(
+        _n_bpe_sql(f"w{BPE_ROUNDS}"),
+        """CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
            CAST(count(*) AS BIGINT) AS n_words,
            CAST(sum(n_bpe) AS BIGINT) AS n_bpe_tokens,
            ROUND(CAST(sum(n_bpe) AS DOUBLE) / count(*), 6) AS fertility,
            ROUND(CAST(sum(n_bpe) AS DOUBLE) / sum(n_chars), 6)
-               AS tokens_per_char
-    FROM dw JOIN wt USING (word)
-    GROUP BY source
-    """,
+               AS tokens_per_char""",
+        by="source",
+    ),
 )
 def bpe_fertility(spark, sf_dir):
     """Tokenizer fertility audit — the number every tokenizer change is
@@ -2511,31 +2287,18 @@ def bpe_fertility(spark, sf_dir):
     rollup. Integer sums and two exact divisions — deterministic in both
     engines; the DuckDB twin replays the merge rounds with the same
     chained CTEs as vocab_bpe."""
-    merges = _bpe_train(spark, sf_dir)
-    seq = _bpe_seq0(F.col("word"))
-    for _r, a, b, m, _c in merges:
-        seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
-    wtok = _bpe_words(spark, sf_dir).select(
-        "word",
-        F.size(F.split(F.trim(seq), "  ")).alias("n_bpe"),
-        F.length("word").alias("n_chars"),
-    )
-    d = load_table(spark, sf_dir, "documents")
-    dw = d.select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        dw.join(F.broadcast(wtok), "word")
-        .groupBy("source")
-        .agg(
-            F.countDistinct("doc_id").cast("long").alias("n_docs"),
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
-            F.round(
-                F.sum("n_bpe").cast("double") / F.count(F.lit(1)), 6
-            ).alias("fertility"),
-            F.round(
-                F.sum("n_bpe").cast("double") / F.sum("n_chars"), 6
-            ).alias("tokens_per_char"),
-        )
+    return _doc_rollup(
+        spark,
+        sf_dir,
+        _bpe_word_tokens(spark, sf_dir, _bpe_train(spark, sf_dir)),
+        F.countDistinct("doc_id").cast("long").alias("n_docs"),
+        F.count(F.lit(1)).alias("n_words"),
+        F.sum("n_bpe").cast("long").alias("n_bpe_tokens"),
+        F.round(F.sum("n_bpe").cast("double") / F.count(F.lit(1)), 6).alias(
+            "fertility"
+        ),
+        F.round(F.sum("n_bpe").cast("double") / F.sum("n_chars"), 6).alias(
+            "tokens_per_char"
+        ),
+        by="source",
     )

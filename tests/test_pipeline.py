@@ -3627,3 +3627,30 @@ class TestSimAnnGraph:
         hit_seed = len(seeds_only & exact)
         assert hit_full > hit_seed, (hit_full, hit_seed)
         assert full - seeds_only, "expansion surfaced nothing new"
+
+
+# Build jobs per dispatch of the tokenizer keys at sf0.001. Each trainer
+# run is one word-table collect (a shuffle-map job and its result job);
+# the merge rounds run on the driver, so no job scales with the rounds.
+# tokenize_bakeoff trains four tokenizers. Before the trainers moved to
+# the driver these keys ran 18, 18, 11, 35, 12, 38 and 82 build jobs.
+_TOKENIZER_BUILD_JOBS = {
+    "vocab_bpe": 2,
+    "vocab_bpe_bytes": 2,
+    "vocab_bpe_batched": 2,
+    "vocab_wordpiece": 2,
+    "vocab_unigram_lm": 2,
+    "tokenize_wordpiece_infer": 2,
+    "tokenize_bakeoff": 8,
+}
+
+
+@pytest.mark.parametrize("key", list(_TOKENIZER_BUILD_JOBS))
+def test_tokenizer_build_job_counts(spark, sf_dir, key):
+    """Jobs a warm dispatch launches before its action, counted by job-id
+    difference."""
+    QUERIES[key](spark, sf_dir).collect()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = int(dag.nextJobId())
+    QUERIES[key](spark, sf_dir)
+    assert int(dag.nextJobId()) - before <= _TOKENIZER_BUILD_JOBS[key]

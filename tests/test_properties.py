@@ -7,6 +7,7 @@ Small example counts: each property round-trips through the JVM.
 
 import duckdb
 import pandas as pd
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -562,46 +563,166 @@ def test_substring_dedup_matches_bruteforce_on_random_corpora(
     assert got == expected, f"{got} != {expected} on {texts}"
 
 
+def _word_counts(sf_dir):
+    """Word -> count over a fixture's documents, read by DuckDB."""
+    from collections import Counter
+
+    rows = duckdb.sql(f"select text from '{sf_dir}/documents.parquet'").fetchall()
+    return Counter(w for (t,) in rows for w in t.split(" ") if w)
+
+
+def _greedy_merge(syms, a, b, m):
+    """Greedy-leftmost fusion of every adjacent (a, b) in ``syms`` into m."""
+    out, i = [], 0
+    while i < len(syms):
+        if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
+            out.append(m)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
+
+
+def _canonical_bpe(wc, words, rounds, batch=1, cand=None, block_outputs=True):
+    """From-the-paper python BPE (Sennrich 2016) over symbol lists: each
+    round counts adjacent pairs weighted by ``wc``, ranks them (count DESC,
+    a, b), and scans the top ``cand`` greedily, accepting up to ``batch``
+    pairs whose symbols no pair accepted earlier in the round consumed
+    (or, with ``block_outputs``, produced — the batched trainer's rule);
+    each accepted pair is merged greedy-leftmost in rank order. batch=1 is
+    sequential BPE. Mutates ``words``; returns
+    [(round, cand_rank, a, b, a + b, count), ...]."""
+    from collections import Counter
+
+    want = []
+    for r in range(1, rounds + 1):
+        pc = Counter()
+        for w, syms in words.items():
+            for i in range(len(syms) - 1):
+                pc[(syms[i], syms[i + 1])] += wc[w]
+        if not pc:
+            break
+        ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))[:cand]
+        taken: set = set()
+        n_acc = 0
+        for rk, ((a, b), cnt) in enumerate(ranked, start=1):
+            if n_acc >= batch:
+                break
+            if a in taken or b in taken:
+                continue
+            taken.update((a, b, a + b) if block_outputs else (a, b))
+            n_acc += 1
+            want.append((r, rk, a, b, a + b, cnt))
+            for w in words:
+                words[w] = _greedy_merge(words[w], a, b, a + b)
+    return want
+
+
+class TestMergeLoop:
+    """The driver-side merge loop over plain word tables, against the
+    canonical python BPE — no Spark involved."""
+
+    @given(
+        corpus=st.lists(
+            st.tuples(
+                st.lists(st.sampled_from(["a", "b", "ab"]), min_size=1, max_size=6),
+                st.integers(min_value=1, max_value=5),
+            ),
+            max_size=6,
+        ),
+        rounds=st.integers(min_value=0, max_value=5),
+        batch=st.integers(min_value=1, max_value=3),
+    )
+    @example(corpus=[], rounds=3, batch=1)  # empty input
+    @example(corpus=[(["a"] * 5, 2), (["b"], 3)], rounds=3, batch=1)  # a==b run
+    # the output block: rank 1 (a, b) produces 'ab', spelled like the
+    # pre-existing symbol of rank 2 (ab, ab), which therefore waits a round
+    @example(corpus=[(["a", "b"], 4), (["ab", "ab"], 3)], rounds=1, batch=2)
+    @settings(deadline=None, max_examples=300, derandomize=True)
+    def test_matches_canonical_bpe(self, corpus, rounds, batch):
+        from data_transform_spark.pipeline.training import (
+            BPE_BATCH_CAND_FACTOR,
+            _merge_loop,
+        )
+
+        table = [("".join(s), c, " " + "  ".join(s) + " ") for s, c in corpus]
+        want = _canonical_bpe(
+            {i: c for i, (_s, c) in enumerate(corpus)},
+            {i: list(s) for i, (s, _c) in enumerate(corpus)},
+            rounds,
+            batch,
+            BPE_BATCH_CAND_FACTOR * batch,
+        )
+        assert _merge_loop(table, rounds, batch) == want
+
+    def test_output_block_changes_the_round(self):
+        """The @example above really exercises the output block: without
+        it the round would also accept (ab, ab)."""
+        wc = {0: 4, 1: 3}
+        words = {0: ["a", "b"], 1: ["ab", "ab"]}
+        blocked = _canonical_bpe(wc, dict(words), 1, 2)
+        assert blocked == [(1, 1, "a", "b", "ab", 4)]
+        assert _canonical_bpe(wc, dict(words), 1, 2, block_outputs=False) != blocked
+
+
+class TestTrainerErrors:
+    def test_word_table_over_cap_raises(self, spark, sf_dir, monkeypatch):
+        """The fixtures hold 31 distinct words; a cap below that must
+        raise the named error, never train on a truncated table."""
+        from data_transform_spark.pipeline import training
+
+        monkeypatch.setattr(training, "WORD_TABLE_CAP", 30)
+        with pytest.raises(training.WordTableTooLarge):
+            training._bpe_train(spark, sf_dir)
+
+    @pytest.mark.parametrize(
+        "table",
+        [
+            # pc * WP_SCORE_SCALE = 1e19 > int64
+            [("ab", 10**7, " a  ##b ")],
+            # ca * cb = 1.6e19 > int64 while pc * WP_SCORE_SCALE fits
+            [
+                ("ab", 1, " a  ##b "),
+                ("a", 4 * 10**9, " a "),
+                ("bb", 4 * 10**9, " b  ##b "),
+            ],
+        ],
+        ids=["numerator", "denominator"],
+    )
+    def test_wordpiece_score_past_int64_raises(self, table):
+        from data_transform_spark.pipeline.training import (
+            WordPieceScoreOverflow,
+            _wp_fit,
+        )
+
+        with pytest.raises(WordPieceScoreOverflow):
+            _wp_fit(table, 1)
+
+    def test_wordpiece_score_at_int64_edge_is_exact(self):
+        from data_transform_spark.pipeline.training import WP_SCORE_SCALE, _wp_fit
+
+        pc = 9 * 10**6  # pc * WP_SCORE_SCALE = 9e18 < int64
+        assert _wp_fit([("ab", pc, " a  ##b ")], 1) == [
+            (1, "a", "##b", "ab", pc, pc, pc, pc * WP_SCORE_SCALE // (pc * pc))
+        ]
+
+
 class TestBpe:
     def test_merge_table_matches_canonical_python_bpe(self, spark, sf_dir):
         """The whole trainer — word counts, pair counts, tie-breaks, greedy
         leftmost merging including a==b runs — must equal a from-the-paper
         python BPE (Sennrich 2016) on the live fixture."""
-        from collections import Counter
-
-        import duckdb
-
         from data_transform_spark.pipeline.training import BPE_ROUNDS
         from data_transform_spark.registry import QUERIES
 
-        rows = duckdb.sql(
-            f"select text from '{sf_dir}/documents.parquet'"
-        ).fetchall()
-        wc = Counter(
-            w for (t,) in rows for w in t.split(" ") if w
-        )
-        words = {w: list(w) for w in wc}
-        want = []
-        for r in range(1, BPE_ROUNDS + 1):
-            pc = Counter()
-            for w, syms in words.items():
-                for i in range(len(syms) - 1):
-                    pc[(syms[i], syms[i + 1])] += wc[w]
-            if not pc:
-                break
-            (a, b), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-            want.append((r, a, b, a + b, cnt))
-            for w, syms in words.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                words[w] = out
-
+        wc = _word_counts(sf_dir)
+        want = [
+            (r, a, b, m, cnt)
+            for r, _rk, a, b, m, cnt in _canonical_bpe(
+                wc, {w: list(w) for w in wc}, BPE_ROUNDS
+            )
+        ]
         got = [
             (r.merge_round, r.pair_a, r.pair_b, r.merged, r.pair_count)
             for r in QUERIES["vocab_bpe"](spark, sf_dir).collect()
@@ -618,13 +739,12 @@ class TestBpe:
             _bpe_seq0,
             _bpe_train,
             _bpe_words,
+            _replay,
         )
 
         merges = _bpe_train(spark, sf_dir)
         assert len(merges) > 0
-        seq = _bpe_seq0(F.col("word"))
-        for _r, a, b, m, _c in merges:
-            seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+        seq = _replay(_bpe_seq0(F.col("word")), merges)
         enc = (
             _bpe_words(spark, sf_dir)
             .select(
@@ -641,26 +761,10 @@ class TestBpe:
         for r in enc:
             assert r.rejoined == r.word, f"round-trip lost chars: {r}"
         # independent canonical check of token counts on a sample of words
-        from collections import Counter
-
-        import duckdb
-
-        rows = duckdb.sql(
-            f"select text from '{sf_dir}/documents.parquet'"
-        ).fetchall()
-        wc = Counter(w for (t,) in rows for w in t.split(" ") if w)
-        words = {w: list(w) for w in wc}
+        words = {w: list(w) for w in _word_counts(sf_dir)}
         for _r, a, b, m, _c in merges:
-            for w, syms in words.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        out.append(m)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                words[w] = out
+            for w in words:
+                words[w] = _greedy_merge(words[w], a, b, m)
         got = {r.word: r.n_bpe for r in enc}
         assert got == {w: len(s) for w, s in words.items()}
 
@@ -747,10 +851,6 @@ class TestBpeBatched:
         live fixture: word counts, per-round pair counts, (count DESC,
         pair) ranking over the top 8·B candidates, the greedy-disjoint
         scan, and greedy-leftmost merge application in rank order."""
-        from collections import Counter
-
-        import duckdb
-
         from data_transform_spark.pipeline.training import (
             BPE_BATCH,
             BPE_BATCH_CAND_FACTOR,
@@ -758,46 +858,14 @@ class TestBpeBatched:
         )
         from data_transform_spark.registry import QUERIES
 
-        rows = duckdb.sql(
-            f"select text from '{sf_dir}/documents.parquet'"
-        ).fetchall()
-        wc = Counter(w for (t,) in rows for w in t.split(" ") if w)
-        words = {w: list(w) for w in wc}
-        cand = BPE_BATCH_CAND_FACTOR * BPE_BATCH
-        want = []
-        for r in range(1, BPE_BATCH_ROUNDS + 1):
-            pc = Counter()
-            for w, syms in words.items():
-                for i in range(len(syms) - 1):
-                    pc[(syms[i], syms[i + 1])] += wc[w]
-            if not pc:
-                break
-            ranked = sorted(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-            taken: set = set()
-            n_acc = 0
-            for rk, ((a, b), cnt) in enumerate(ranked[:cand], start=1):
-                if n_acc >= BPE_BATCH:
-                    break
-                if a in taken or b in taken:
-                    continue
-                # outputs join taken too (r13 ADVICE string-collision edge)
-                taken.update((a, b, a + b))
-                n_acc += 1
-                want.append((r, rk, a, b, a + b, cnt))
-                for w, syms in words.items():
-                    out, i = [], 0
-                    while i < len(syms):
-                        if (
-                            i + 1 < len(syms)
-                            and syms[i] == a
-                            and syms[i + 1] == b
-                        ):
-                            out.append(a + b)
-                            i += 2
-                        else:
-                            out.append(syms[i])
-                            i += 1
-                    words[w] = out
+        wc = _word_counts(sf_dir)
+        want = _canonical_bpe(
+            wc,
+            {w: list(w) for w in wc},
+            BPE_BATCH_ROUNDS,
+            BPE_BATCH,
+            BPE_BATCH_CAND_FACTOR * BPE_BATCH,
+        )
 
         got = [
             (
@@ -818,9 +886,6 @@ class TestBpeBatched:
         """The batched encoder must (a) never lose characters — a word's
         BPE tokens concatenate back to the word — and (b) match a python
         greedy-leftmost application of the batched merge table."""
-        from collections import Counter
-
-        import duckdb
         from pyspark.sql import functions as F
 
         from data_transform_spark.pipeline.training import (
@@ -829,15 +894,17 @@ class TestBpeBatched:
             _bpe_seq0,
             _bpe_train_batched,
             _bpe_words,
+            _replay,
         )
 
         merges = _bpe_train_batched(
             spark, sf_dir, BPE_BATCH_ROUNDS, BPE_BATCH
         )
         assert len(merges) > 0
-        seq = _bpe_seq0(F.col("word"))
-        for _r, _rk, a, b, m, _c in merges:
-            seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+        seq = _replay(
+            _bpe_seq0(F.col("word")),
+            [(r, a, b, m) for r, _rk, a, b, m, _c in merges],
+        )
         enc = (
             _bpe_words(spark, sf_dir)
             .select("word", F.split(F.trim(seq), "  ").alias("toks"))
@@ -850,22 +917,10 @@ class TestBpeBatched:
         )
         for r in enc:
             assert r.rejoined == r.word, f"round-trip lost chars: {r}"
-        rows = duckdb.sql(
-            f"select text from '{sf_dir}/documents.parquet'"
-        ).fetchall()
-        wc = Counter(w for (t,) in rows for w in t.split(" ") if w)
-        words = {w: list(w) for w in wc}
+        words = {w: list(w) for w in _word_counts(sf_dir)}
         for _r, _rk, a, b, m, _c in merges:
-            for w, syms in words.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        out.append(m)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                words[w] = out
+            for w in words:
+                words[w] = _greedy_merge(words[w], a, b, m)
         got = {r.word: r.n_bpe for r in enc}
         assert got == {w: len(s) for w, s in words.items()}
 
@@ -895,40 +950,17 @@ class TestBpeBytes:
         """Trainer parity with a from-the-paper python BPE run over hex
         byte symbols on the live fixture (the byte twin of the char
         canonical test)."""
-        from collections import Counter
-
-        import duckdb
-
         from data_transform_spark.pipeline.training import BPE_ROUNDS
         from data_transform_spark.registry import QUERIES
 
-        rows = duckdb.sql(
-            f"select text from '{sf_dir}/documents.parquet'"
-        ).fetchall()
-        wc = Counter(w for (t,) in rows for w in t.split(" ") if w)
+        wc = _word_counts(sf_dir)
         words = {
             w: [f"{b:02x}" for b in w.encode("utf-8")] for w in wc
         }
-        want = []
-        for r in range(1, BPE_ROUNDS + 1):
-            pc = Counter()
-            for w, syms in words.items():
-                for i in range(len(syms) - 1):
-                    pc[(syms[i], syms[i + 1])] += wc[w]
-            if not pc:
-                break
-            (a, b), cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-            want.append((r, a, b, a + b, cnt))
-            for w, syms in words.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                words[w] = out
+        want = [
+            (r, a, b, m, cnt)
+            for r, _rk, a, b, m, cnt in _canonical_bpe(wc, words, BPE_ROUNDS)
+        ]
         got = [
             (r.merge_round, r.pair_a, r.pair_b, r.merged, r.pair_count)
             for r in QUERIES["vocab_bpe_bytes"](spark, sf_dir).collect()
@@ -950,6 +982,7 @@ class TestBpeBytes:
             _bpe_seq0_bytes,
             _bpe_train,
             _bpe_words,
+            _replay,
         )
 
         zh = [
@@ -966,9 +999,7 @@ class TestBpeBytes:
 
         merges = _bpe_train(spark, str(tmp_path), seq0=_bpe_seq0_bytes)
         assert merges, "trainer learned nothing on the zh corpus"
-        seq = _bpe_seq0_bytes(F.col("word"))
-        for _r, a, b, m, _c in merges:
-            seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+        seq = _replay(_bpe_seq0_bytes(F.col("word")), merges)
         enc = (
             _bpe_words(spark, str(tmp_path))
             .select("word", F.split(F.trim(seq), "  ").alias("toks"))
@@ -1493,18 +1524,13 @@ class TestWordPiece:
         ever coincide the likelihood scoring is not doing anything)."""
         from collections import Counter
 
-        import duckdb
-
         from data_transform_spark.pipeline.training import (
             WP_ROUNDS,
             WP_SCORE_SCALE,
         )
         from data_transform_spark.registry import QUERIES
 
-        rows = duckdb.sql(
-            f"select text from '{sf_dir}/documents.parquet'"
-        ).fetchall()
-        wc = Counter(w for (t,) in rows for w in t.split(" ") if w)
+        wc = _word_counts(sf_dir)
 
         seqs = {w: [w[0]] + ["##" + c for c in w[1:]] for w in wc}
         want = []
@@ -1527,16 +1553,8 @@ class TestWordPiece:
             _, a, b, c, ca, cb, score = best
             merged = a + (b[2:] if b.startswith("##") else b)
             want.append((r, a, b, merged, c, ca, cb, score))
-            for w, s in seqs.items():
-                out, i = [], 0
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                        out.append(merged)
-                        i += 2
-                    else:
-                        out.append(s[i])
-                        i += 1
-                seqs[w] = out
+            for w in seqs:
+                seqs[w] = _greedy_merge(seqs[w], a, b, merged)
 
         got = [
             (
@@ -1555,27 +1573,12 @@ class TestWordPiece:
 
         # BPE divergence: replay raw-frequency BPE in python (cheap) and
         # require zero common (a, b) pairs modulo the '##' marks.
-        bseqs = {w: list(w) for w in wc}
-        bpe_pairs = set()
-        for _r in range(WP_ROUNDS):
-            pc = Counter()
-            for w, s in bseqs.items():
-                for i in range(len(s) - 1):
-                    pc[(s[i], s[i + 1])] += wc[w]
-            if not pc:
-                break
-            (a, b), _c = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-            bpe_pairs.add((a, b))
-            for w, s in bseqs.items():
-                out, i = [], 0
-                while i < len(s):
-                    if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(s[i])
-                        i += 1
-                bseqs[w] = out
+        bpe_pairs = {
+            (a, b)
+            for _r, _rk, a, b, _m, _c in _canonical_bpe(
+                wc, {w: list(w) for w in wc}, WP_ROUNDS
+            )
+        }
         wp_pairs = {(a, b.lstrip("#")) for _r, a, b, *_x in want}
         assert not (wp_pairs & bpe_pairs)
 
@@ -1590,15 +1593,14 @@ class TestWordPiece:
 
         from data_transform_spark.pipeline.training import (
             _bpe_words,
+            _replay,
             _wp_seq0,
             _wp_train,
         )
 
         merges = _wp_train(spark, sf_dir)
         assert len(merges) > 0
-        seq = _wp_seq0(F.col("word"))
-        for _r, a, b, m, *_rest in merges:
-            seq = F.replace(seq, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+        seq = _replay(_wp_seq0(F.col("word")), merges)
         enc = (
             _bpe_words(spark, sf_dir)
             .select("word", F.split(F.trim(seq), "  ").alias("pieces"))
@@ -1628,6 +1630,7 @@ class TestWordPieceInference:
 
         from data_transform_spark.pipeline.training import (
             _bpe_words,
+            _replay,
             _wp_infer_seq,
             _wp_seq0,
             _wp_train,
@@ -1658,9 +1661,7 @@ class TestWordPieceInference:
         vocab = alpha | {m[3] for m in merges}
         unmarked = [p for p in vocab if not p.startswith("##")]
         bodies = [p[2:] for p in vocab if p.startswith("##")]
-        replay = _wp_seq0(F.col("word"))
-        for _r, a, b, m, *_rest in merges:
-            replay = F.replace(replay, F.lit(f" {a}  {b} "), F.lit(f" {m} "))
+        replay = _replay(_wp_seq0(F.col("word")), merges)
         got = {
             r["word"]: (r["rseq"], r["iseq"])
             for r in _bpe_words(spark, str(base))
